@@ -2,12 +2,14 @@
 metrics, the end-to-end metric and workload it should move.
 
 ``END_TO_END`` is what ``--trace 0`` prints; every workload reports every
-one of them. ``round_rel`` is the median round (one roundtrip-and-read
-cycle, or one pass over the query mix) divided by the run's own engine
-probe, which cancels host-speed drift between runs; the raw ``round_s``
-and the per-op medians are in ``DETAIL``, because across ten seeds they
-spread by 17-33% on a drifting host while ``round_rel`` spread by 6-9%. The workload-specific figures (``DETAIL``) are printed on the
-line before the result. ``PER_LAYER`` is what ``--trace 1`` prints; a
+one of them. ``round_rel`` is the median round (the session's first
+roundtrip-and-read cycle, or one warm pass over the query mix) divided
+by the median engine probe taken between the round's stages, which
+cancels host-speed drift between runs: on the 4-core VM used for sizing,
+whole runs ran 1.8x faster in one hour than in another while
+``round_rel`` moved by 2-3% (README.md). The raw ``round_s``
+and the workload-specific figures (``DETAIL``) are printed on the line
+before the result. ``PER_LAYER`` is what ``--trace 1`` prints; a
 layer a workload does not reach reads 0, and the prediction for that
 workload is no change. BENCHMARK.json lists the same names.
 """
@@ -18,8 +20,8 @@ ALL = ("seismic_roundtrip", "curation_queries")
 
 # name: (unit, better, bound)
 # Bounds are wide because host speed itself drifted on the 4-core VM used
-# for sizing: CPU steal rose from 1% to 18% within an hour and slowed whole
-# runs by up to 1.8x (README.md).
+# for sizing (README.md). peak_rss_mb spreads by 4-17% across seeds: the
+# Python processes stay within 1%, the JVM's heap growth does not.
 END_TO_END = {
     "setup_s": ("s", "lower", 0.25),
     "round_rel": ("ratio", "lower", 0.25),
@@ -30,6 +32,7 @@ END_TO_END = {
 DETAIL = {
     "setup_s": ("s", ALL),
     "round_s": ("s", ALL),
+    "round_rel": ("ratio", ALL),
     "peak_rss_mb": ("MB", ALL),
     "error_rate": ("ratio", ALL),
     "roundtrip_s": ("s", ("seismic_roundtrip",)),
@@ -93,7 +96,7 @@ for _m in ("queries", "llm_queries", "pipeline_queries", "qc_queries"):
 PER_LAYER["session.core_busy"] = (
     "ratio", "round_rel (low = cores idle while the driver plans)", "all")
 PER_LAYER["trace_overhead"] = (
-    "ratio", "none: traced / untraced op wall - 1, paired ops", "all")
+    "ratio", "none: tracer hook time / the rest of the op time", "all")
 
 
 def fill_end_to_end(values: dict[str, float]) -> dict:

@@ -4,11 +4,14 @@
 
 Runs one workload of ``workloads.py`` in this process on ``local[nproc]``
 with one closed-loop client. With ``--trace 0`` it prints the end-to-end
-metrics; with ``--trace 1`` each op runs twice back to back, untraced then
-traced, and it prints the per-layer metrics plus the gap between the two
-(``trace_overhead``). The last stdout line is the result object; the line
-before it holds the detail metrics, environment and host stamps, and a
-sidecar JSON with every op row is written under ``.perfbench_out/``.
+metrics; with ``--trace 1`` every op runs traced, and it prints the
+per-layer metrics plus the tracer's own share of the op time
+(``trace_overhead``). Both modes put ``round_rel`` on the detail line, so
+a traced run compares with an untraced one of the same seed. Engine probes
+taken between the timed stages of every op (``Ctx.between``) give
+``round_rel`` its denominator. The last stdout line is the result object;
+the line before it holds the detail metrics, environment and host stamps,
+and a sidecar JSON with every op row is written under ``.perfbench_out/``.
 """
 
 from __future__ import annotations
@@ -39,6 +42,12 @@ class Ctx:
         self.work = work
         self.nproc = nproc
         self.spark = None
+        self.probes: list[float] = []
+
+    def between(self) -> None:
+        """Take one engine probe between two timed stages of an op, so the
+        probes sample the host while the ops run."""
+        self.probes.append(engine_probe_s(self.spark, self.nproc))
 
 
 # ------------------------------------------------------------ environment
@@ -100,8 +109,9 @@ def mem_touch_mb_s(n_bytes: int = 1 << 28) -> float:
     return n_bytes / 1e6 / dt
 
 
-def _tree_rss_kb(root_pid: int) -> int:
-    """Resident set of ``root_pid`` and all its descendants, in KiB."""
+def _tree_memory_kb(root_pid: int) -> dict[int, tuple[str, int, int]]:
+    """``pid: (name, VmRSS, VmHWM)`` in KiB for ``root_pid`` and all its
+    descendants."""
     children: dict[int, list[int]] = {}
     for d in os.listdir("/proc"):
         if not d.isdigit():
@@ -112,41 +122,59 @@ def _tree_rss_kb(root_pid: int) -> int:
         except (OSError, IndexError, ValueError):
             continue
         children.setdefault(ppid, []).append(int(d))
-    total, todo = 0, [root_pid]
+    out, todo = {}, [root_pid]
     while todo:
         pid = todo.pop()
         todo += children.get(pid, [])
+        fields = {}
         try:
             with open(f"/proc/{pid}/status") as f:
                 for line in f:
-                    if line.startswith("VmRSS:"):
-                        total += int(line.split()[1])
-                        break
+                    key, _, value = line.partition(":")
+                    if key in ("Name", "VmRSS", "VmHWM"):
+                        fields[key] = value.split()
         except OSError:
             continue
-    return total
+        if "VmRSS" in fields:
+            out[pid] = (fields["Name"][0], int(fields["VmRSS"][0]), int(fields["VmHWM"][0]))
+    return out
 
 
 class HostSampler(threading.Thread):
-    """Samples the benchmark's process-tree RSS and the 1-minute loadavg."""
+    """Samples the benchmark's process-tree memory and the 1-minute
+    loadavg. ``peak_rss_kb`` is the largest summed RSS seen at one sample;
+    ``hwm_kb`` keeps each process's own high-water mark, which the kernel
+    records between samples too."""
 
     def __init__(self, period_s: float = 0.25):
         super().__init__(daemon=True)
         self.period_s = period_s
         self.stop_event = threading.Event()
         self.peak_rss_kb = 0
+        self.hwm_kb: dict[int, tuple[str, int]] = {}
         self.loads: list[float] = []
 
+    def sample(self) -> None:
+        tree = _tree_memory_kb(os.getpid())
+        self.peak_rss_kb = max(self.peak_rss_kb, sum(rss for _, rss, _ in tree.values()))
+        for pid, (name, _, hwm) in tree.items():
+            self.hwm_kb[pid] = (name, max(hwm, self.hwm_kb.get(pid, (name, 0))[1]))
+        self.loads.append(os.getloadavg()[0])
+
     def run(self) -> None:
-        pid = os.getpid()
         while not self.stop_event.is_set():
-            self.peak_rss_kb = max(self.peak_rss_kb, _tree_rss_kb(pid))
-            self.loads.append(os.getloadavg()[0])
+            self.sample()
             self.stop_event.wait(self.period_s)
 
     def stop(self) -> None:
         self.stop_event.set()
         self.join()
+
+    def hwm_by_name_mb(self) -> dict[str, float]:
+        out: dict[str, float] = {}
+        for name, hwm in self.hwm_kb.values():
+            out[name] = out.get(name, 0.0) + hwm / 1024
+        return out
 
 
 def _identity_batches(batches):
@@ -195,41 +223,32 @@ def stop_session(spark) -> None:
 # ------------------------------------------------------------ measuring
 
 
-def timed_loop(wl, seconds: float, seed: int, traced: bool, tracer) -> dict:
+def timed_loop(wl, seconds: float, seed: int, tracer) -> dict:
     """Closed loop, one client: run whole rounds until ``seconds`` pass.
-    In traced mode every op runs untraced, then traced."""
+    With a tracer every op runs traced."""
     rng = np.random.default_rng([seed, 1])
-    rows, traced_rows, pairs, errors = [], [], [], []
+    rows, errors = [], []
     attempted = failed = 0
     t_start = time.perf_counter()
     for n_round, batch in enumerate(wl.rounds(rng)):
         for param in batch:
-            modes = (None, tracer) if traced else (None,)
-            walls = []
-            for tr in modes:
-                attempted += 1
-                t0 = time.perf_counter()
-                try:
-                    row = wl.run_op(param, tr)
-                except workloads.CheckFailed as e:
-                    failed += 1
-                    errors.append(f"check: {e}")
-                    continue
-                except Exception:  # noqa: BLE001 - count, report, continue
-                    failed += 1
-                    errors.append(traceback.format_exc(limit=4))
-                    continue
-                walls.append(time.perf_counter() - t0)
-                row["round"] = n_round
-                (traced_rows if tr is not None else rows).append(row)
-            if len(walls) == 2:
-                pairs.append(walls[1] / walls[0])
+            attempted += 1
+            try:
+                row = wl.run_op(param, tracer)
+            except workloads.CheckFailed as e:
+                failed += 1
+                errors.append(f"check: {e}")
+                continue
+            except Exception:  # noqa: BLE001 - count, report, continue
+                failed += 1
+                errors.append(traceback.format_exc(limit=4))
+                continue
+            row["round"] = n_round
+            rows.append(row)
         if time.perf_counter() - t_start >= seconds:
             break
     return {
         "rows": rows,
-        "traced_rows": traced_rows,
-        "pairs": pairs,
         "attempted": attempted,
         "failed": failed,
         "errors": errors,
@@ -268,27 +287,24 @@ def run(args) -> int:
         input_reps = [_phase(wl.make_inputs)[0] for _ in range(3)]
         setup["inputs_s"] = float(np.median(input_reps))
         setup["prepare_s"], _ = _phase(wl.prepare)
-        # a wrong check or warm-up output fails the run's correctness and
-        # counts as a failed op, but the timed ops still run
+        # the first probe starts the Python workers, outside every op; it is
+        # kept as a stamp, not as a probe
+        host["worker_start_s"] = engine_probe_s(ctx.spark, ctx.nproc)
+        # a wrong check fails the run's correctness and counts as a failed
+        # op, but the timed ops still run
         early_errors = []
         try:
             check_s, check = _phase(wl.check)
         except workloads.CheckFailed as e:
             check_s, check = 0.0, None
             early_errors.append(f"check: {e}")
-        try:
-            setup["warm_up_s"], warm_rows = _phase(wl.warm_up)
-            warm_attempts = len(warm_rows)
-        except workloads.CheckFailed as e:
-            setup["warm_up_s"], warm_rows, warm_attempts = 0.0, [], 1
-            early_errors.append(f"warm-up: {e}")
 
-        probes = [engine_probe_s(ctx.spark, ctx.nproc) for _ in range(3)]
         tracer = spans.Tracer(ctx.spark) if args.trace else None
-        loop = timed_loop(wl, args.seconds, args.seed, bool(args.trace), tracer)
-        probes += [engine_probe_s(ctx.spark, ctx.nproc) for _ in range(3)]
-        host["engine_probe_s"] = probes
-        loop["attempted"] += 1 + warm_attempts  # the check and the warm-up
+        loop = timed_loop(wl, args.seconds, args.seed, tracer)
+        host["engine_probe_s"] = ctx.probes
+        sampler.sample()  # every high-water mark, before the session stops
+        host["hwm_by_process_mb"] = sampler.hwm_by_name_mb()
+        loop["attempted"] += 1  # the check
         loop["failed"] += len(early_errors)
         loop["errors"] = early_errors + loop["errors"]
         host["mem_touch_end_mb_s"] = mem_touch_mb_s()
@@ -302,39 +318,42 @@ def run(args) -> int:
         shutil.rmtree(work, ignore_errors=True)
     if loop is None:
         return 1
-    if not loop["rows"] or (args.trace and not loop["traced_rows"]):
+    if not loop["rows"]:
         print("perfbench: every timed op failed:", *loop["errors"][:3], sep="\n", file=sys.stderr)
         return 1
 
     host["loadavg_1m_min"] = min(sampler.loads)
     host["loadavg_1m_max"] = max(sampler.loads)
 
-    untraced = loop["rows"]
+    rows = loop["rows"]
     setup_s = sum(setup.values())
     rounds: dict[int, float] = {}
-    for r in untraced:
+    for r in rows:
         rounds[r["round"]] = rounds.get(r["round"], 0.0) + r["latency_s"]
     round_s = float(np.median(list(rounds.values())))
+    round_rel = round_s / float(np.median(host["engine_probe_s"]))
     detail = {
         "setup_s": (setup_s, "s"),
         "round_s": (round_s, "s"),
+        "round_rel": (round_rel, "ratio"),
         "peak_rss_mb": (sampler.peak_rss_kb / 1024, "MB"),
         "error_rate": (loop["failed"] / loop["attempted"], "ratio"),
-        **wl.summarize(untraced),
+        **wl.summarize(rows),
     }
     e2e = {
         "setup_s": setup_s,
-        "round_rel": round_s / float(np.median(host["engine_probe_s"])),
+        "round_rel": round_rel,
         "peak_rss_mb": sampler.peak_rss_kb / 1024,
     }
     if args.trace:
-        traced = loop["traced_rows"]
-        layer = wl.layer_metrics(traced)
-        all_spans = [s for r in traced for s in wl.spans_of(r)]
+        layer = wl.layer_metrics(rows)
+        all_spans = [s for r in rows for s in wl.spans_of(r)]
         busy = sum(s["executor_run_s"] for s in all_spans)
         span_wall = sum(s["wall_s"] for s in all_spans)
         layer["session.core_busy"] = busy / (span_wall * ctx.nproc) if span_wall else 0.0
-        layer["trace_overhead"] = float(np.median(loop["pairs"])) - 1.0
+        # the tracer's own work runs inside the ops' clocks
+        op_s = sum(r["latency_s"] for r in rows)
+        layer["trace_overhead"] = tracer.overhead_s / (op_s - tracer.overhead_s)
         reported = metrics.fill_layers(layer)
     else:
         reported = metrics.fill_end_to_end(e2e)
@@ -349,7 +368,7 @@ def run(args) -> int:
         "setup": setup,
         "check_s": check_s,
         "measure_wall_s": loop["wall_s"],
-        "ops": len(untraced),
+        "ops": len(rows),
         "detail": {k: {"value": v, "unit": u} for k, (v, u) in detail.items()},
         "errors": loop["errors"][:5],
     }
@@ -361,9 +380,7 @@ def run(args) -> int:
                 "check": check,
                 "end_to_end": e2e,
                 "per_layer": reported if args.trace else None,
-                "warm_up_rows": warm_rows,
-                "rows": untraced,
-                "traced_rows": loop["traced_rows"],
+                "rows": rows,
             },
             indent=1,
             default=str,

@@ -103,15 +103,19 @@ class Tracer:
     def __init__(self, spark):
         self.probe = SparkProbe(spark)
         self.spans: list[dict] = []
+        # seconds spent in the hooks below, which run inside the ops' clocks
+        self.overhead_s = 0.0
 
     @contextmanager
     def span(self, layer: str, **attrs):
+        t_hook = time.perf_counter()
         group = f"perfbench-{len(self.spans)}"
         self.probe.drain()
         before = self.probe.totals()
         self.probe.sc.setJobGroup(group, layer)
         rec = {"layer": layer, **attrs}
         t0 = time.perf_counter()
+        self.overhead_s += t0 - t_hook
         try:
             yield rec
         finally:
@@ -124,3 +128,4 @@ class Tracer:
             rec.update({k: after[k] - before[k] for k in after})
             rec["group_jobs"], rec["group_stages"] = group_jobs, group_stages
             self.spans.append(rec)
+            self.overhead_s += time.perf_counter() - t1

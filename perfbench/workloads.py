@@ -6,11 +6,12 @@ A workload object has:
 - ``make_inputs()``: generates its inputs from the seed (setup);
 - ``prepare()``: builds any state the ops read (setup);
 - ``check()``: one correctness pass outside the timed ops;
-- ``warm_up()``: runs ops at the timed size until they are steady (setup);
 - ``rounds(rng)``: yields lists of op parameters; the runner executes
   whole rounds until the measuring time is used up;
 - ``run_op(param, tracer)``: one timed op; returns its sidecar row and
-  raises ``CheckFailed`` when the op's own output is wrong.
+  raises ``CheckFailed`` when the op's own output is wrong. Between its
+  timed stages it calls ``ctx.between()``, which takes an engine probe
+  outside the op's clocks.
 """
 
 from __future__ import annotations
@@ -97,13 +98,6 @@ class SeismicRoundtrip:
 
         self.template = default_registry().get("PostStack3DTime")
 
-    def warm_up(self) -> list[dict]:
-        # two ops at the timed size: the first ingest in a JVM pays ~20 s of
-        # class loading, code generation and Python worker start, the second
-        # still runs ~20% slow, the third is within a few percent of later ops
-        rng = np.random.default_rng([self.ctx.seed, 17])
-        return [self.run_op(self._draw(rng), None) for _ in range(2)]
-
     def check(self) -> dict:
         self.expected = cubegen.expected_stats(self.cube)
         return {"expected_stats": self.expected}
@@ -140,18 +134,21 @@ class SeismicRoundtrip:
                 spark, self.segy, self.store_path, self.template, stage_clock=ingest_clock
             )
         t1 = time.perf_counter()
+        self.ctx.between()
+        t2 = time.perf_counter()
         with _span(tracer, "pipelines.export") as s_out:
             n = store_to_segy(spark, self.store_path, self.out, stage_clock=export_clock)
-        t2 = time.perf_counter()
-        same = _same_bytes(self.segy, self.out)
         t3 = time.perf_counter()
+        same = _same_bytes(self.segy, self.out)
+        t4 = time.perf_counter()
         if not same or n != self.cube.n_traces:
             raise CheckFailed(f"export differs from input ({n} traces)")
+        self.ctx.between()
         opened = store.open_store(spark, self.store_path)
         read_rows = [
             self._read(opened, kind, reads[kind], tracer) for kind in self.KINDS
         ]
-        t4 = time.perf_counter()
+        roundtrip_s = (t1 - t0) + (t4 - t2)
         store_bytes, files = _dir_bytes(self.store_path)
         expected = getattr(self, "expected", None)
         if expected is not None:
@@ -161,12 +158,11 @@ class SeismicRoundtrip:
             if got != expected:
                 raise CheckFailed(f"statsV1 {got} != numpy {expected}")
         return {
-            "latency_s": (t3 - t0) + sum(r["latency_s"] for r in read_rows),
-            "roundtrip_s": t3 - t0,
+            "latency_s": roundtrip_s + sum(r["latency_s"] for r in read_rows),
+            "roundtrip_s": roundtrip_s,
             "ingest_s": t1 - t0,
-            "export_s": t2 - t1,
-            "compare_s": t3 - t2,
-            "reads_wall_s": t4 - t3,
+            "export_s": t3 - t2,
+            "compare_s": t4 - t3,
             "traces": n,
             "store_bytes": store_bytes,
             "files_written": files,
@@ -195,6 +191,8 @@ class SeismicRoundtrip:
             rows = df.collect()
         t2 = time.perf_counter()
         self._verify(kind, pred, rows)
+        scan = spans.scan_metrics(df, "/traces") if tracer is not None else None
+        self.ctx.between()
         return {
             "kind": kind,
             "predicate": {k: list(v) for k, v in pred.items()},
@@ -202,7 +200,7 @@ class SeismicRoundtrip:
             "plan_s": t1 - t0,
             "exec_s": t2 - t1,
             "rows": len(rows),
-            "scan": spans.scan_metrics(df, "/traces") if tracer is not None else None,
+            "scan": scan,
             "spans": [s for s in (s_plan, s_exec) if s],
         }
 
@@ -299,7 +297,7 @@ class SeismicRoundtrip:
 
 # Frozen query mix: one builder call plus noop sink per op, one pass per
 # round. Each run pays a cold check pass with DuckDB oracles (which is also
-# the warm-up) and a timed pass, so the mix is sized to ~6 s per warm pass
+# the warm-up) and a timed pass, so the mix is sized to 3-6 s per warm pass
 # on four cores. It holds the ROADMAP's Arrow and single-task kernel
 # targets whose oracles run in about a second, and one query from each
 # other plans module; README.md lists what was left out and why.
@@ -371,11 +369,6 @@ class CurationQueries:
         reg = registry()
         self.specs = [reg[n] for n in self.mix]
 
-    def warm_up(self) -> list[dict]:
-        # the cold check pass has already run every query once; the next
-        # pass is within the pass-to-pass noise of later ones
-        return []
-
     def check(self) -> dict:
         """Run every query to pandas and compare with its DuckDB oracle."""
         import duckdb
@@ -419,6 +412,7 @@ class CurationQueries:
             df.write.format("noop").mode("overwrite").save()
         t2 = time.perf_counter()
         self.ctx.spark.catalog.clearCache()
+        self.ctx.between()
         return {
             "query": spec.name,
             "module": module,
@@ -473,8 +467,8 @@ SIZES = {
 # One line each, copied into BENCHMARK.json.
 WHY = {
     "seismic_roundtrip": (
-        "the SEG-Y/store pivot: ingest, whole-store export, byte compare, then inline, "
-        "crossline and null-completed rectangle reads of the new store; write, read and space trade"
+        "the SEG-Y/store pivot as a fresh session's first call: ingest, whole-store export, "
+        "byte compare, then inline, crossline and null-completed rectangle reads of the new store"
     ),
     "curation_queries": (
         "declared curation queries, builder plus noop sink, over generated tables: "

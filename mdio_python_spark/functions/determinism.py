@@ -47,13 +47,6 @@ def dsum_sq(col: Column | str, scale: int = 4) -> Column:
     return F.sum((d * d).cast("decimal(38,8)")).cast("double")
 
 
-def dmean(col: Column | str, scale: int = 4) -> Column:
-    """Deterministic mean: exact decimal sum, then one double divide."""
-    return (dsum(col, scale) / F.count(F.col(col) if isinstance(col, str) else col)).alias(
-        "mean"
-    )
-
-
 # --- matching DuckDB SQL fragments (keep in sync with the helpers above) ---
 
 

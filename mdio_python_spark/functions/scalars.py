@@ -24,15 +24,6 @@ def apply_coordinate_scalar(value: Column, scalar: Column) -> Column:
     )
 
 
-def normalize_sample_labels(label_us: Column) -> Column:
-    """Sample-label normalization (F2): microvalue / 1000, downcast to
-    long when exact. Reference: ``src/mdio/ingestion/segy/reader.py:85-87``.
-
-    Returns a double; callers that know divisibility downcast themselves.
-    """
-    return (label_us / F.lit(1000.0)).cast("double")
-
-
 def hash64(col: Column | str) -> Column:
     """Deterministic 60-bit hash shared bit-for-bit with DuckDB.
 

@@ -35,7 +35,7 @@ right ASC).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 SEP = "\x1f"
@@ -45,8 +45,8 @@ WORD_END = "</w>"
 # Word-count gate for the single-task trainer kernel (round 11, VERDICT
 # r10 item 4 — the cc-union-find gating precedent): the gate is the
 # OBSERVED size of the (word, n) vocabulary table — vocab-bounded input
-# (Heaps-law sublinear in the corpus), NOT the corpus — known free from
-# the entry checkpoint's observe. At the cap the kernel holds ~500k
+# (Heaps-law sublinear in the corpus), NOT the corpus — measured by
+# caching.size_gated. At the cap the kernel holds ~500k
 # short strings (~50 MB) and runs n_merges Python passes over ~5M symbol
 # positions (~1-2 s) on one task; above it the distributed M-step chain
 # earns its per-step vocab shuffles. Module-level so tests can force the
@@ -217,7 +217,7 @@ def _train_merges_kernel(
     vocab_cp: DataFrame, n_merges: int
 ) -> tuple[DataFrame, DataFrame]:
     """Single-task trainer for SMALL vocabularies (caller gates on
-    :data:`_BPE_KERNEL_WORD_LIMIT`): coalesce the checkpointed (word, n)
+    :data:`_BPE_KERNEL_WORD_LIMIT`): coalesce the materialized (word, n)
     table onto one task and run all ``n_merges`` steps in Python —
     zero per-step shuffles, zero persists, one lazy MapInArrow node per
     returned frame (a consumer of only ``merges`` or only ``final``
@@ -285,26 +285,29 @@ def train_merges(
     chain executes each pair-count aggregation once. Cache handles ride
     on both returned frames (`release_cached`).
 
-    Small vocabularies (word count known free from the entry
-    checkpoint's observe, gate :data:`_BPE_KERNEL_WORD_LIMIT`) skip the
-    M-step chain entirely: a single-task kernel
-    (:func:`_train_merges_kernel`) computes the identical merges and
-    final vocab LAZILY over the checkpointed word counts — zero
-    per-step jobs. The gate is the vocabulary-table size (sublinear in
-    the corpus), observed at run time — not a local[32] constant; large
-    vocabularies keep the distributed chain."""
+    Small vocabularies (gate :data:`_BPE_KERNEL_WORD_LIMIT`) run the
+    single-task :func:`_train_merges_kernel` instead of the M-step
+    chain; the gate contract is :func:`caching.size_gated`'s."""
+    from mdio_python_spark.operators.caching import size_gated
+
+    return size_gated(
+        vocab.select("word", "n"),
+        _BPE_KERNEL_WORD_LIMIT,
+        lambda base: _train_merges_kernel(base, n_merges),
+        lambda base: _train_merges_chain(base, n_merges),
+        scope,
+    )
+
+
+def _train_merges_chain(
+    base: DataFrame, n_merges: int
+) -> tuple[DataFrame, DataFrame]:
+    """The distributed M-step chain of :func:`train_merges` over its
+    materialized (word, n) table."""
     from pyspark import StorageLevel
 
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
+    from mdio_python_spark.operators.caching import attach_cached
 
-    obs = Observation()
-    base = (
-        vocab.select("word", "n")
-        .observe(obs, F.count(F.lit(1)).alias("n_words"))
-        .localCheckpoint()
-    )
-    if obs.get["n_words"] <= _BPE_KERNEL_WORD_LIMIT:
-        return _train_merges_kernel(base, n_merges)
     cur = base.select("word", symbolize(F.col("word")).alias("sym"), "n")
     cached: list[DataFrame] = []
     steps: list[DataFrame] = []
@@ -320,7 +323,6 @@ def train_merges(
             merge_expr(F.col("sym"), F.col("left"), F.col("right")).alias("sym"),
             "n",
         )
-    rotate_scoped(scope, *cached)
     merges = steps[0]
     for s in steps[1:]:
         merges = merges.unionByName(s)
@@ -338,12 +340,20 @@ def bpe_fit(
     DESC, word ASC — deterministic), for the large-M production regime
     where M chained cluster jobs would be silly. Driver traffic is
     bounded at max_words rows; the corpus never moves. Returns the merge
-    list ``merge_all_expr``/``bpe_segment`` consume."""
-    rows = (
-        vocab.orderBy(F.col(n_col).desc(), F.col(word_col))
-        .limit(max_words)
-        .select(word_col, n_col)
-        .collect()
+    list ``merge_all_expr``/``bpe_segment`` consume.
+
+    The rows stream from a global sort and stop at ``max_words``: an
+    ``orderBy().limit(max_words)`` top-k allocates a buffer of
+    2 x max_words rows in every task, whatever the vocabulary size."""
+    from itertools import islice
+
+    rows = list(
+        islice(
+            vocab.orderBy(F.col(n_col).desc(), F.col(word_col))
+            .select(word_col, n_col)
+            .toLocalIterator(),
+            max_words,
+        )
     )
     words: list[tuple[list[str], int]] = [
         (list(r[0]) + [WORD_END], int(r[1])) for r in rows

@@ -19,6 +19,9 @@ every other cached relation in the session.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import TypeVar
+
 from pyspark.sql import DataFrame
 
 CACHE_ATTR = "_mdio_cached_stages"
@@ -93,6 +96,67 @@ def rotate_scoped(scope: str, *cached: DataFrame) -> None:
             continue
         handle.unpersist(False)
     _SCOPED_PREV[scope] = list(cached)
+
+
+R = TypeVar("R")
+
+
+def size_gated(
+    df: DataFrame,
+    limit: int,
+    kernel: Callable[[DataFrame], R],
+    fallback: Callable[[DataFrame], R],
+    scope: str,
+    long_cols: tuple[str, ...] = (),
+) -> R:
+    """The one place an operator chooses between a single-task kernel
+    and its distributed path. ``kernel`` and ``fallback`` each take the
+    materialized input and return a DataFrame or a tuple of them.
+
+    1. **Materialize**: ``df`` is persisted (MEMORY_AND_DISK) as
+       ``base``, so its upstream derivation runs once whichever path
+       reads it.
+    2. **Measure**: one aggregate job fills that cache and returns the
+       row count and the non-null count of every ``long_cols`` column.
+    3. **Choose**: ``kernel(base)`` when the count is ``<= limit`` and
+       every ``long_cols`` column is ``LongType`` with no nulls (the
+       kernels read ids as int64 arrays); ``fallback(base)`` otherwise.
+       Callers keep ``limit`` in a module constant, so tests force the
+       fallback by patching it to -1.
+    4. **Attach and rotate**: ``base`` rides on every returned frame
+       (:func:`release_cached`), and it is registered under ``scope``
+       with :func:`rotate_scoped` together with every stage the chosen
+       path attached, so a caller that never releases holds one
+       generation per scope.
+    5. **Recompute on release**: ``base`` is a plain persist, not a
+       ``localCheckpoint``. A lazy frame still built on a released
+       ``base`` recomputes it from ``df``'s lineage instead of failing on
+       a missing checkpoint block.
+    """
+    from pyspark import StorageLevel
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
+
+    base = df.persist(StorageLevel.MEMORY_AND_DISK)
+    n, *non_null = base.agg(
+        F.count(F.lit(1)), *[F.count(c) for c in long_cols]
+    ).first()
+    fits = n <= limit and all(
+        isinstance(base.schema[c].dataType, LongType) and m == n
+        for c, m in zip(long_cols, non_null)
+    )
+    try:
+        out = (kernel if fits else fallback)(base)
+    except BaseException:
+        base.unpersist(False)
+        raise
+    frames = out if isinstance(out, tuple) else (out,)
+    rotate_scoped(
+        scope, base, *[h for f in frames for h in getattr(f, CACHE_ATTR, [])]
+    )
+    for f in frames:
+        attach_cached(f, base)
+    return out
 
 
 def _same_plan(a: DataFrame, b: DataFrame) -> bool:

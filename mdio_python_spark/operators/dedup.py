@@ -1050,7 +1050,7 @@ def _cc_union_find(edges: DataFrame, id_col: str) -> DataFrame:
     which runs both paths).
 
     The whole computation is LAZY (one MapInArrow node over a narrow
-    coalesce of the checkpointed edges), so a consumer that reads the
+    coalesce of the materialized edges), so a consumer that reads the
     cluster table k times pays k cheap kernel re-runs instead of the
     loop's round-count x job-latency wall every build."""
     import numpy as np
@@ -1128,23 +1128,29 @@ def connected_components(
     it only when ``pairs`` is already a distinct ``id_a < id_b`` set
     (the :func:`bucket_pairs` output contract every LSH caller uses).
 
-    Small graphs (edge count known free from the entry checkpoint's
-    observe, gate :data:`_UNIONFIND_EDGE_LIMIT`) skip the loop entirely:
-    a single-task vectorized union-find kernel
-    (:func:`_cc_union_find`) computes the identical min-id labeling
-    LAZILY — zero per-round jobs, zero session-conf churn (``max_iter``
-    does not apply there: the kernel always converges). Large graphs
-    run the distributed star rounds with AQE on — skew handling and
-    partition coalescing matter at that size — so the choice is
-    edge-count-adaptive, not a local[32] constant.
+    Small graphs (gate :data:`_UNIONFIND_EDGE_LIMIT`, long ids) run the
+    single-task :func:`_cc_union_find` instead of the star rounds
+    (``max_iter`` does not apply there: the kernel always converges);
+    the gate contract is :func:`caching.size_gated`'s.
     """
-    obs0 = Observation()
+    from mdio_python_spark.operators.caching import size_gated
+
     edges = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
     if not assume_distinct:
         edges = edges.where(F.col("u") != F.col("v")).distinct()
-    edges = edges.observe(obs0, F.count(F.lit(1)).alias("n")).localCheckpoint()
-    if obs0.get["n"] <= _UNIONFIND_EDGE_LIMIT:
-        return _cc_union_find(edges, id_col)
+    return size_gated(
+        edges,
+        _UNIONFIND_EDGE_LIMIT,
+        lambda base: _cc_union_find(base, id_col),
+        lambda base: _cc_star_rounds(base, id_col, max_iter),
+        "dedup.connected_components",
+        long_cols=("u", "v"),
+    )
+
+
+def _cc_star_rounds(edges: DataFrame, id_col: str, max_iter: int) -> DataFrame:
+    """The distributed large-star / small-star loop of
+    :func:`connected_components` over its materialized edge list."""
     converged = False
     fingerprint = None
     for _ in range(max_iter):

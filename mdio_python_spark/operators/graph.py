@@ -9,7 +9,7 @@ propagation.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Edge-count gate for the single-task PageRank kernel (round 11, VERDICT
@@ -27,7 +27,7 @@ def _pagerank_kernel(
     edges: DataFrame, iters: int, damping: float, src: str, dst: str
 ) -> DataFrame:
     """Single-task PageRank for SMALL edge sets (caller gates on
-    :data:`_PAGERANK_EDGE_LIMIT`): coalesce the checkpointed edge rows
+    :data:`_PAGERANK_EDGE_LIMIT`): coalesce the materialized edge rows
     onto one task and run the ``iters`` synchronous updates in Python —
     zero joins, zero per-iteration exchanges, one lazy MapInArrow node.
 
@@ -137,36 +137,37 @@ def pagerank(
     iterations to cut the growing lineage; with a fixed small ``iters``
     the unrolled plan is fine as-is.
 
-    Small graphs (edge count known free from the entry checkpoint's
-    observe, gate :data:`_PAGERANK_EDGE_LIMIT`) skip the per-iteration
-    joins entirely: a single-task kernel (:func:`_pagerank_kernel`)
-    computes the identical ranks LAZILY over the checkpointed edges —
-    zero joins, and the upstream edge derivation (for the similarity
-    graph, the whole shingle->minhash->LSH pipeline) runs exactly once
-    into the checkpoint. Large graphs keep the distributed iterations
-    (AQE skew handling matters at that size) — the choice is
-    edge-count-adaptive, not a local[32] constant.
+    Small graphs (gate :data:`_PAGERANK_EDGE_LIMIT`, long ids) run the
+    single-task :func:`_pagerank_kernel` instead of the iterations; the
+    gate contract is :func:`caching.size_gated`'s.
     """
+    from mdio_python_spark.operators.caching import size_gated
+
+    return size_gated(
+        edges.select(src, dst),
+        _PAGERANK_EDGE_LIMIT,
+        lambda base: _pagerank_kernel(base, iters, damping, src, dst),
+        lambda base: _pagerank_loop(base, iters, damping, src, dst),
+        "graph.pagerank",
+        long_cols=(src, dst),
+    )
+
+
+def _pagerank_loop(
+    base: DataFrame, iters: int, damping: float, src: str, dst: str
+) -> DataFrame:
+    """The distributed iterations of :func:`pagerank` over its
+    materialized edge list."""
     from pyspark import StorageLevel
 
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
+    from mdio_python_spark.operators.caching import attach_cached
 
-    obs = Observation()
-    base = (
-        edges.select(src, dst)
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
-    )
-    if obs.get["n"] <= _PAGERANK_EDGE_LIMIT:
-        return _pagerank_kernel(base, iters, damping, src, dst)
     # The edge list is referenced 1 + iters times (degrees + every
     # iteration's join). Identical-subtree exchange reuse does NOT fire
     # across the unrolled iterations (each join sits under a different
-    # aggregate), so without a persist the upstream edge derivation — for
-    # the similarity graph, the whole shingle->minhash->LSH pipeline —
-    # recomputes per iteration (measured 6.0s -> 0.9s at sf0.01). Edges
-    # are id-pairs (16 bytes/row), far smaller than the corpus that
-    # produced them; cache release follows the caching.py contract.
+    # aggregate), so the src-partitioned copy is persisted once and every
+    # iteration reads it. Edges are id-pairs (16 bytes/row); cache
+    # release follows the caching.py contract.
     edges = (
         base.repartition(F.col(src))
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -186,7 +187,6 @@ def pagerank(
                 ).cast("double")
             ).alias("r")
         )
-    rotate_scoped("graph.pagerank", edges)
     return attach_cached(ranks, edges)
 
 

@@ -18,11 +18,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def regular_grid(df: DataFrame) -> DataFrame:
-    """W1 — identity (``index_strategies.py:108-113``)."""
-    return df
-
-
 def wrap_channels(
     df: DataFrame, cable_col: str = "cable", channel_col: str = "channel"
 ) -> DataFrame:

@@ -20,6 +20,17 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# Query-sample gate for the Arrow IVF kernels (vector_arrow's
+# ivf_local_topk, ivf_recall_local_topk and ivfpq_local_topk). They
+# collect the sample to the driver and score each Arrow batch of up to
+# 10k candidates (Spark's default maxRecordsPerBatch) against every query
+# as dense float64 matrices: ~40 MB per queries x batch matrix at 512
+# queries, with a few alive per task. Larger samples take the
+# declarative broadcast probe join, which scores pairs row by row. The
+# declared queries sample 50 rows. Module-level so tests can force the
+# declarative path.
+_IVF_QUERY_LIMIT = 512
+
 
 def dot(a: Column, b: Column) -> Column:
     """Left-fold double dot product: deterministic evaluation order."""
@@ -415,7 +426,6 @@ def ivf_topk(
     vec_col: str = "embedding",
     centroids: list[tuple[int, list[float]]] | None = None,
     candidate_cells: DataFrame | None = None,
-    arrow: bool = True,
 ) -> DataFrame:
     """IVF-flat ANN: partition the corpus into ``n_centroids`` Voronoi
     cells, probe the ``nprobe`` nearest cells per query, exact-rank inside.
@@ -443,87 +453,97 @@ def ivf_topk(
     multi-configuration sweep path (that path stays declarative: the
     prebuilt stage already carries the assignment).
 
-    ``arrow=True`` (round 11, default) computes every task's local
-    top-k in one vectorized Arrow map pass over the corpus
-    (:func:`vector_arrow.ivf_local_topk` — the query sample is
-    collected at construction, so consumers are eager) and ranks the
-    bounded survivors with one JVM window; the corpus-sized interpreted
-    cell projection and the broadcast probe join of interpreted
-    zip_with folds disappear. Bit-identical rows (pinned in
-    tests/test_vector_arrow.py).
+    Query samples up to :data:`_IVF_QUERY_LIMIT` rows score in one
+    vectorized Arrow map pass over the corpus
+    (:func:`vector_arrow.ivf_local_topk`, bit-identical rows pinned in
+    tests/test_vector_arrow.py) and rank the bounded survivors with one
+    JVM window; larger samples take the broadcast probe join. Either
+    way construction runs the gate's measuring job
+    (:func:`caching.size_gated`).
     """
+    from mdio_python_spark.operators.caching import size_gated
+
     cents, cnorms = _resolve_centroids(
         candidates, n_centroids, id_col, vec_col, centroids
     )
-    if arrow and candidate_cells is None:
-        from mdio_python_spark.operators.vector_arrow import ivf_local_topk
 
-        local = ivf_local_topk(
-            queries,
-            candidates,
-            k=k,
-            centroids=cents,
-            nprobe=nprobe,
-            id_col=id_col,
-            vec_col=vec_col,
-        )
-        w_rank = Window.partitionBy("query_id").orderBy(
+    def ranked(scored: DataFrame) -> DataFrame:
+        w = Window.partitionBy("query_id").orderBy(
             F.col("cosine").desc(), F.col("candidate_id")
         )
         return (
-            local.withColumn("rank", F.row_number().over(w_rank))
+            scored.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
             .select("query_id", "candidate_id", "cell", "cosine", "rank")
         )
 
-    def cell_structs(vnorm_sql: str) -> Column:
+    def local_topk(qs: DataFrame) -> DataFrame:
+        from mdio_python_spark.operators.vector_arrow import ivf_local_topk
+
+        return ranked(
+            ivf_local_topk(
+                qs,
+                candidates,
+                k=k,
+                centroids=cents,
+                nprobe=nprobe,
+                id_col=id_col,
+                vec_col=vec_col,
+            )
+        )
+
+    def probe_join(qs: DataFrame) -> DataFrame:
+        c = (
+            candidate_cells
+            if candidate_cells is not None
+            else ivf_candidate_cells(
+                candidates, n_centroids, id_col, vec_col, centroids
+            )
+        )
         # cosine vs each centroid: dot / (vec_norm * centroid_norm), the
         # centroid norm folded to a Python double at plan-build time.
-        return _cell_structs(_q(vec_col), vnorm_sql, cents, cnorms)
+        q = (
+            qs.select(
+                F.col(id_col).alias("query_id"),
+                F.col(vec_col),
+                F.expr(_sql_norm(_q(vec_col))).alias("q_norm"),
+            )
+            .withColumn(
+                "_cells", _cell_structs(_q(vec_col), "`q_norm`", cents, cnorms)
+            )
+            .select(
+                F.col("query_id"),
+                F.col(vec_col).alias("q_vec"),
+                "q_norm",
+                F.explode(
+                    F.slice(F.sort_array("_cells", asc=False), 1, nprobe)
+                ).alias("_p"),
+            )
+            .select(
+                "query_id", "q_vec", "q_norm", (-F.col("_p")["ncid"]).alias("cell")
+            )
+        )
+        return ranked(
+            c.join(F.broadcast(q), "cell")
+            .where(F.col("query_id") != F.col("candidate_id"))
+            .select(
+                "query_id",
+                "candidate_id",
+                "cell",
+                F.expr(
+                    f"({_sql_dot('`q_vec`', '`c_vec`')}) / (`q_norm` * `c_norm`)"
+                ).alias("cosine"),
+            )
+        )
 
-    c = (
-        candidate_cells
-        if candidate_cells is not None
-        else ivf_candidate_cells(
-            candidates, n_centroids, id_col, vec_col, centroids
-        )
-    )
-    q = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col),
-            F.expr(_sql_norm(_q(vec_col))).alias("q_norm"),
-        )
-        .withColumn("_cells", cell_structs("`q_norm`"))
-        .select(
-            F.col("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            "q_norm",
-            F.explode(
-                F.slice(F.sort_array("_cells", asc=False), 1, nprobe)
-            ).alias("_p"),
-        )
-        .select("query_id", "q_vec", "q_norm", (-F.col("_p")["ncid"]).alias("cell"))
-    )
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .where(F.col("query_id") != F.col("candidate_id"))
-        .select(
-            "query_id",
-            "candidate_id",
-            "cell",
-            F.expr(
-                f"({_sql_dot('`q_vec`', '`c_vec`')}) / (`q_norm` * `c_norm`)"
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("candidate_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "candidate_id", "cell", "cosine", "rank")
+    if candidate_cells is not None:
+        return probe_join(queries)
+    return size_gated(
+        queries.select(id_col, vec_col),
+        _IVF_QUERY_LIMIT,
+        local_topk,
+        probe_join,
+        "similarity.ivf_topk",
     )
 
 
@@ -536,21 +556,18 @@ def ivf_recall_curve(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids: list[tuple[int, list[float]]] | None = None,
-    arrow: bool = True,
 ) -> DataFrame:
     """Aggregate recall@k of the IVF index at every ``probes`` setting
     against the exact top-k — the whole tuning curve as ONE declarative
     pipeline (round 9, VERDICT r8 item 5).
 
-    ``arrow=True`` (round 10, default) computes every leg's local
-    top-k in one vectorized Arrow map pass over the corpus
-    (:func:`vector_arrow.ivf_recall_local_topk` — the query sample is
-    collected at construction, so consumers are eager) and ranks the
-    bounded survivors with one JVM window; the leg-exploded broadcast
-    cell join of interpreted zip_with folds and its corpus-sized rank
-    exchange disappear. Bit-identical rows (pinned in
-    tests/test_vector_arrow.py); the rollup below is shared by both
-    paths.
+    Query samples up to :data:`_IVF_QUERY_LIMIT` rows compute every
+    leg's local top-k in one vectorized Arrow map pass over the corpus
+    (:func:`vector_arrow.ivf_recall_local_topk`, bit-identical rows
+    pinned in tests/test_vector_arrow.py); larger samples take the
+    leg-tagged broadcast cell join below. The gate is
+    :func:`caching.size_gated`; the rank window and the rollup are shared
+    by both paths.
 
     The nprobe legs are NESTED (the cells probed at p are the first p of
     the same descending probe order), and the exhaustive truth is the
@@ -561,111 +578,125 @@ def ivf_recall_curve(
     p; ONE broadcast cell join scores every leg's candidates in a single
     pass over the corpus; ONE window ranks per (leg, query); a
     (query, candidate) window marks which top-k rows appear in the
-    leg-0 truth. No persist, no cache race, no per-configuration
-    rebuild: the corpus is scanned once, where the previous shape
-    re-derived the candidate assignment and re-ran a separate
-    probe-join + window + aggregate job chain per configuration (the 8
-    bounded-but-serial SinglePartition joins the round-8 plan audit
-    called out).
+    leg-0 truth. No corpus persist, no per-configuration rebuild: the
+    corpus is scanned once, where the previous shape re-derived the
+    candidate assignment and re-ran a separate probe-join + window +
+    aggregate job chain per configuration (the 8 bounded-but-serial
+    SinglePartition joins the round-8 plan audit called out).
 
     Identical numbers by construction: the cell/probe expressions are
     the shared :func:`_cell_structs` tree, the scoring expression and
     the (cosine DESC, candidate_id) tie order are :func:`cosine_topk` /
     :func:`ivf_topk`'s own, and zero-norm NaN cosines rank first under
     DESC in both engines exactly as before."""
+    from mdio_python_spark.operators.caching import size_gated
+
     cents, cnorms = _resolve_centroids(
         candidates, n_centroids, id_col, vec_col, centroids
     )
-    if arrow:
+
+    def local_topk(qs: DataFrame) -> DataFrame:
         from mdio_python_spark.operators.vector_arrow import (
             ivf_recall_local_topk,
         )
 
-        local = ivf_recall_local_topk(
-            queries,
-            candidates,
-            k=k,
-            centroids=cents,
-            probes=probes,
-            id_col=id_col,
-            vec_col=vec_col,
+        return _recall_curve_rollup(
+            ivf_recall_local_topk(
+                qs,
+                candidates,
+                k=k,
+                centroids=cents,
+                probes=probes,
+                id_col=id_col,
+                vec_col=vec_col,
+            ),
+            k,
         )
-        w_rank = Window.partitionBy("leg", "query_id").orderBy(
-            F.col("cosine").desc(), F.col("candidate_id")
+
+    def leg_join(qs: DataFrame) -> DataFrame:
+        c = ivf_candidate_cells(candidates, n_centroids, id_col, vec_col, cents)
+        q0 = qs.select(
+            F.col(id_col).alias("query_id"),
+            F.col(vec_col).alias("q_vec"),
+            F.expr(_sql_norm(_q(vec_col))).alias("q_norm"),
+        ).withColumn(
+            "_probes",
+            F.sort_array(
+                _cell_structs("`q_vec`", "`q_norm`", cents, cnorms),
+                asc=False,
+            ),
         )
-        top = (
-            local.withColumn("rank", F.row_number().over(w_rank))
-            .where(F.col("rank") <= k)
-            .select("leg", "query_id", "candidate_id")
-        )
-        return _recall_curve_rollup(top)
-    c = ivf_candidate_cells(candidates, n_centroids, id_col, vec_col, cents)
-    q0 = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.expr(_sql_norm(_q(vec_col))).alias("q_norm"),
-    ).withColumn(
-        "_probes",
-        F.sort_array(
-            _cell_structs("`q_vec`", "`q_norm`", cents, cnorms),
-            asc=False,
-        ),
-    )
-    q_legs = []
-    for leg in (0, *probes):
-        if leg == 0:
-            # the truth leg: every cell — the join then scores the
-            # whole corpus per query, exactly cosine_topk's cross join
-            probe = F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(0.0).alias("cos"),
-                            F.lit(-cid).cast("long").alias("ncid"),
-                        )
-                        for cid, _ in cents
-                    ]
+        q_legs = []
+        for leg in (0, *probes):
+            if leg == 0:
+                # the truth leg: every cell — the join then scores the
+                # whole corpus per query, exactly cosine_topk's cross join
+                probe = F.explode(
+                    F.array(
+                        *[
+                            F.struct(
+                                F.lit(0.0).alias("cos"),
+                                F.lit(-cid).cast("long").alias("ncid"),
+                            )
+                            for cid, _ in cents
+                        ]
+                    )
+                )
+            else:
+                probe = F.explode(F.slice("_probes", 1, leg))
+            q_legs.append(
+                q0.select(
+                    F.lit(leg).cast("long").alias("leg"),
+                    "query_id",
+                    "q_vec",
+                    "q_norm",
+                    probe.alias("_p"),
+                ).select(
+                    "leg",
+                    "query_id",
+                    "q_vec",
+                    "q_norm",
+                    (-F.col("_p")["ncid"]).alias("cell"),
                 )
             )
-        else:
-            probe = F.explode(F.slice("_probes", 1, leg))
-        q_legs.append(
-            q0.select(
-                F.lit(leg).cast("long").alias("leg"),
-                "query_id",
-                "q_vec",
-                "q_norm",
-                probe.alias("_p"),
-            ).select(
+        q_all = q_legs[0]
+        for ql in q_legs[1:]:
+            q_all = q_all.unionByName(ql)
+        scored = (
+            c.join(F.broadcast(q_all), "cell")
+            .where(F.col("query_id") != F.col("candidate_id"))
+            .select(
                 "leg",
                 "query_id",
-                "q_vec",
-                "q_norm",
-                (-F.col("_p")["ncid"]).alias("cell"),
+                "candidate_id",
+                F.expr(
+                    f"({_sql_dot('`q_vec`', '`c_vec`')}) / (`q_norm` * `c_norm`)"
+                ).alias("cosine"),
             )
         )
-    q_all = q_legs[0]
-    for ql in q_legs[1:]:
-        q_all = q_all.unionByName(ql)
-    scored = (
-        c.join(F.broadcast(q_all), "cell")
-        .where(F.col("query_id") != F.col("candidate_id"))
-        .select(
-            "leg",
-            "query_id",
-            "candidate_id",
-            F.expr(
-                f"({_sql_dot('`q_vec`', '`c_vec`')}) / (`q_norm` * `c_norm`)"
-            ).alias("cosine"),
-        )
+        # ONE exchange serves both windows: hashpartitioning(query_id) is
+        # a subset of both the (leg, query) rank clustering and the
+        # (query, candidate) truth-mark clustering, so the explicit
+        # repartition is the plan's only corpus-sized shuffle (each
+        # window adds just a partition-local sort). Parallelism is
+        # bounded by the query-sample size — the audit's contract, not
+        # the corpus's.
+        return _recall_curve_rollup(scored.repartition("query_id"), k)
+
+    return size_gated(
+        queries.select(id_col, vec_col),
+        _IVF_QUERY_LIMIT,
+        local_topk,
+        leg_join,
+        "similarity.ivf_recall_curve",
     )
-    # ONE exchange serves both windows: hashpartitioning(query_id) is a
-    # subset of both the (leg, query) rank clustering and the
-    # (query, candidate) truth-mark clustering, so the explicit
-    # repartition is the plan's only corpus-sized shuffle (each window
-    # adds just a partition-local sort). Parallelism is bounded by the
-    # query-sample size — the audit's contract, not the corpus's.
-    scored = scored.repartition("query_id")
+
+
+def _recall_curve_rollup(scored: DataFrame, k: int) -> DataFrame:
+    """Shared tail of :func:`ivf_recall_curve`: rank each (leg, query)'s
+    scored candidates to its top-k, mark each top-k row that also
+    appears in the leg-0 truth, roll up hits per leg, ride the truth
+    size to every row over the tiny agg."""
     w = Window.partitionBy("leg", "query_id").orderBy(
         F.col("cosine").desc(), F.col("candidate_id")
     )
@@ -674,13 +705,6 @@ def ivf_recall_curve(
         .where(F.col("rank") <= k)
         .select("leg", "query_id", "candidate_id")
     )
-    return _recall_curve_rollup(top)
-
-
-def _recall_curve_rollup(top: DataFrame) -> DataFrame:
-    """Shared tail of :func:`ivf_recall_curve`: mark each (leg, query,
-    candidate) top-k row that also appears in the leg-0 truth, roll up
-    hits per leg, ride the truth size to every row over the tiny agg."""
     w_pair = Window.partitionBy("query_id", "candidate_id")
     marked = top.withColumn(
         "_t",
@@ -1431,7 +1455,6 @@ def ivfpq_topk(
     vec_col: str = "embedding",
     centroids: list[tuple[int, list[float]]] | None = None,
     codebooks: tuple[list[list[list[float]]], int] | None = None,
-    arrow: bool = True,
 ) -> DataFrame:
     """IVF-PQ ANN (Jegou et al. TPAMI 2011, the full system): coarse
     Voronoi cells bound WHICH candidates a query scores, PQ codes bound
@@ -1452,7 +1475,15 @@ def ivfpq_topk(
     (:func:`ivf_fit_centroids` / :func:`fit_pq_codebooks`); defaults are
     the deterministic id-prefix stand-ins so the full plan stays
     SQL-expressible for the oracle.
+
+    Query samples up to :data:`_IVF_QUERY_LIMIT` rows run cell
+    assignment, PQ encode and ADC scoring in one vectorized Arrow map
+    pass over the corpus (:func:`vector_arrow.ivfpq_local_topk`,
+    bit-identical doubles); larger samples take the broadcast probe join
+    below. The gate is :func:`caching.size_gated`.
     """
+    from mdio_python_spark.operators.caching import size_gated
+
     if codebooks is None:
         books, sub = pq_codebooks(candidates, n_subspaces, n_codes, id_col, vec_col)
     else:
@@ -1460,97 +1491,98 @@ def ivfpq_topk(
     cents, cnorms = _resolve_centroids(
         candidates, n_centroids, id_col, vec_col, centroids
     )
-    if arrow:
-        # round 10: cell assignment, PQ encode, and the ADC scoring run
-        # in one vectorized Arrow map pass over the corpus
-        # (vector_arrow.ivfpq_local_topk, bit-identical doubles); one
-        # bounded JVM window assigns the global ranks. The query sample
-        # is collected at construction — consumers are eager.
-        from mdio_python_spark.operators.vector_arrow import ivfpq_local_topk
 
-        local = ivfpq_local_topk(
-            queries,
-            candidates,
-            k=k,
-            centroids=cents,
-            codebooks=books,
-            sub_dim=sub,
-            nprobe=nprobe,
-            id_col=id_col,
-            vec_col=vec_col,
-        )
-        w_rank = Window.partitionBy("query_id").orderBy(
-            "adc_dist", "candidate_id"
-        )
+    def ranked(scored: DataFrame) -> DataFrame:
+        w = Window.partitionBy("query_id").orderBy("adc_dist", "candidate_id")
         return (
-            local.withColumn("rank", F.row_number().over(w_rank))
+            scored.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
             .select("query_id", "candidate_id", "cell", "adc_dist", "rank")
         )
 
-    # argmax via array_max over (cos, -cid) structs, as in ivf_topk
-    c = (
-        candidates.select(
-            F.col(id_col).alias("candidate_id"),
-            F.col(vec_col),
-            F.expr(_sql_norm(_q(vec_col))).alias("_n"),
+    def local_topk(qs: DataFrame) -> DataFrame:
+        from mdio_python_spark.operators.vector_arrow import ivfpq_local_topk
+
+        return ranked(
+            ivfpq_local_topk(
+                qs,
+                candidates,
+                k=k,
+                centroids=cents,
+                codebooks=books,
+                sub_dim=sub,
+                nprobe=nprobe,
+                id_col=id_col,
+                vec_col=vec_col,
+            )
         )
-        .withColumn(
-            "_cells", _cell_structs(_q(vec_col), "`_n`", cents, cnorms)
+
+    def probe_join(qs: DataFrame) -> DataFrame:
+        # argmax via array_max over (cos, -cid) structs, as in ivf_topk
+        c = (
+            candidates.select(
+                F.col(id_col).alias("candidate_id"),
+                F.col(vec_col),
+                F.expr(_sql_norm(_q(vec_col))).alias("_n"),
+            )
+            .withColumn(
+                "_cells", _cell_structs(_q(vec_col), "`_n`", cents, cnorms)
+            )
+            .withColumn("cell", -F.array_max("_cells")["ncid"])
+            .drop("_cells", "_n")
         )
-        .withColumn("cell", -F.array_max("_cells")["ncid"])
-        .drop("_cells", "_n")
-    )
-    c = pq_encode(c, books, sub, id_col="candidate_id", vec_col=vec_col).select(
-        "candidate_id", "cell", *[f"code_{m}" for m in range(len(books))]
-    )
-    # per-query ADC tables (K distances per subspace) are projected
-    # BEFORE the probe explode so each table is computed once per query
-    # row, not once per probe; scoring a candidate is M element_at adds
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_q_vec"),
-        F.expr(_sql_norm(_q(vec_col))).alias("_qn"),
-    ).withColumn(
-        "_cells", _cell_structs("`_q_vec`", "`_qn`", cents, cnorms)
-    )
-    for m, cb in enumerate(books):
-        q_sub = f"slice(`_q_vec`, {m * sub + 1}, {sub})"
-        q = q.withColumn(
-            f"_tab_{m}",
-            F.expr(
-                "array("
-                + ",".join(_sql_l2sq(q_sub, _sql_vec(cw)) for cw in cb)
-                + ")"
-            ),
+        c = pq_encode(c, books, sub, id_col="candidate_id", vec_col=vec_col).select(
+            "candidate_id", "cell", *[f"code_{m}" for m in range(len(books))]
         )
-    q = (
-        q.select(
-            "query_id",
-            *[f"_tab_{m}" for m in range(len(books))],
-            F.explode(
-                F.slice(F.sort_array("_cells", asc=False), 1, nprobe)
-            ).alias("_p"),
+        # per-query ADC tables (K distances per subspace) are projected
+        # BEFORE the probe explode so each table is computed once per query
+        # row, not once per probe; scoring a candidate is M element_at adds
+        q = qs.select(
+            F.col(id_col).alias("query_id"),
+            F.col(vec_col).alias("_q_vec"),
+            F.expr(_sql_norm(_q(vec_col))).alias("_qn"),
+        ).withColumn(
+            "_cells", _cell_structs("`_q_vec`", "`_qn`", cents, cnorms)
         )
-        .withColumn("cell", -F.col("_p")["ncid"])
-        .drop("_p")
-    )
-    adc = None
-    for m in range(len(books)):
-        term = F.element_at(
-            F.col(f"_tab_{m}"), (F.col(f"code_{m}") + 1).cast("int")
+        for m, cb in enumerate(books):
+            q_sub = f"slice(`_q_vec`, {m * sub + 1}, {sub})"
+            q = q.withColumn(
+                f"_tab_{m}",
+                F.expr(
+                    "array("
+                    + ",".join(_sql_l2sq(q_sub, _sql_vec(cw)) for cw in cb)
+                    + ")"
+                ),
+            )
+        q = (
+            q.select(
+                "query_id",
+                *[f"_tab_{m}" for m in range(len(books))],
+                F.explode(
+                    F.slice(F.sort_array("_cells", asc=False), 1, nprobe)
+                ).alias("_p"),
+            )
+            .withColumn("cell", -F.col("_p")["ncid"])
+            .drop("_p")
         )
-        adc = term if adc is None else adc + term
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .where(F.col("query_id") != F.col("candidate_id"))
-        .select("query_id", "candidate_id", "cell", adc.alias("adc_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "candidate_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "candidate_id", "cell", "adc_dist", "rank")
+        adc = None
+        for m in range(len(books)):
+            term = F.element_at(
+                F.col(f"_tab_{m}"), (F.col(f"code_{m}") + 1).cast("int")
+            )
+            adc = term if adc is None else adc + term
+        return ranked(
+            c.join(F.broadcast(q), "cell")
+            .where(F.col("query_id") != F.col("candidate_id"))
+            .select("query_id", "candidate_id", "cell", adc.alias("adc_dist"))
+        )
+
+    return size_gated(
+        queries.select(id_col, vec_col),
+        _IVF_QUERY_LIMIT,
+        local_topk,
+        probe_join,
+        "similarity.ivfpq_topk",
     )
 
 

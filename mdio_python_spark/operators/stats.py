@@ -53,19 +53,6 @@ def summary_statistics(
     )
 
 
-def samples_statistics(
-    df: DataFrame, samples_col: str = "samples", scale: int = 4
-) -> DataFrame:
-    """statsV1 over an ``array<float>`` sample-vector column.
-
-    The explode stays inside whole-stage codegen (Generate node); at 100 TB
-    the partial agg collapses each task's samples to 5 numbers before the
-    single-stage reduce — no shuffle of sample data.
-    """
-    exploded = df.select(F.explode(F.col(samples_col)).alias("sample"))
-    return summary_statistics(exploded, "sample", nonzero_only=True, scale=scale)
-
-
 def grid_sparsity(df: DataFrame, dims: list[str]) -> DataFrame:
     """Grid sparsity QC (A6): cells(grid) / live traces.
 

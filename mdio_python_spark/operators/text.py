@@ -77,18 +77,6 @@ def language_scores(text: Column) -> dict[str, Column]:
     return {lang: stopword_count(text, marks) for lang, marks in LANG_MARKERS.items()}
 
 
-def predict_language(text: Column) -> Column:
-    """Argmax over language scores with a fixed lexicographic tie-break —
-    identical CASE chain in the oracle keeps it deterministic.
-
-    Single-Column form; prefer :func:`language_id` on DataFrames — it stages
-    tokenization and the per-language scores as materialized projections so
-    each is computed once per row instead of re-expanded per comparison.
-    """
-    scores = language_scores(text)
-    return _argmax_lang({lang: scores[lang] for lang in scores})
-
-
 def _argmax_lang(scores: dict[str, Column]) -> Column:
     """CASE chain: lang wins iff strictly greater than every earlier
     (sorted) lang — earliest lang wins ties, matching the oracle."""

@@ -883,7 +883,7 @@ def gram_multiset_arrow(
     (bigram LM, top n-grams, Zipf head share, vocab diversity, DSIR
     buckets). Replaces ``word_shingles(distinct=False)``'s explode +
     the per-(key, gram) count exchange: each input row's grams are
-    counted INSIDE the kernel (pyarrow C++ hash aggregation per 256-doc
+    counted INSIDE the kernel (pyarrow C++ hash aggregation per 2048-doc
     chunk — exact string grouping, no hashing shortcut), so only the
     chunk-distinct (key, gram, c) partials cross back to the JVM.
 
@@ -940,7 +940,8 @@ def gram_multiset_arrow(
         gbytes = norm[np.repeat(starts, lens) + _ragged_arange(lens)]
         goff = np.zeros(len(lens) + 1, dtype=np.int64)
         np.cumsum(lens, dtype=np.int64, out=goff[1:])
-        # 256-doc chunks keep gram bytes far under the int32 offset cap
+        # int32 offsets: a 2048-doc chunk fits only while its gram bytes
+        # stay under 2 GiB (about 1 MB of grams per doc on average)
         grams = pa.Array.from_buffers(
             pa.utf8(),
             len(lens),

@@ -53,7 +53,7 @@ from typing import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -224,6 +224,93 @@ def _cap_by_id(ids: np.ndarray, max_cell: int) -> np.ndarray:
     return order[:max_cell]
 
 
+def _group_ranks(sel_r: np.ndarray) -> np.ndarray:
+    """1-based position of each entry within its run of equal ``sel_r``
+    values (``sel_r`` sorted) — the per-query rank of lexsorted
+    survivors."""
+    if not len(sel_r):
+        return np.array([], dtype=np.int64)
+    starts = np.flatnonzero(np.r_[True, sel_r[1:] != sel_r[:-1]])
+    counts = np.diff(np.r_[starts, len(sel_r)])
+    return np.arange(len(sel_r), dtype=np.int64) - np.repeat(starts, counts) + 1
+
+
+def _local_topk(
+    key: np.ndarray, c_ids: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """(row, column) indices of each query row's top-``k`` keys in
+    (row, key DESC, candidate id) order. ``np.partition`` finds each
+    row's k-th largest key in O(nc) and one small lexsort orders the
+    survivors (k + ties per row). ``-inf`` keys are masked pairs and
+    never survive; callers map NaN cosines to ``+inf`` first (Spark
+    orders NaN as the largest double)."""
+    nq, nc = key.shape
+    if nc > k:
+        thr = np.partition(key, nc - k, axis=1)[:, nc - k]
+    else:
+        thr = np.full(nq, -np.inf)
+    sel_r, sel_c = np.nonzero((key >= thr[:, None]) & (key > -np.inf))
+    order = np.lexsort((c_ids[sel_c], -key[sel_r, sel_c], sel_r))
+    sel_r, sel_c = sel_r[order], sel_c[order]
+    keep = _group_ranks(sel_r) <= k
+    return sel_r[keep], sel_c[keep]
+
+
+def _query_sample(
+    queries: DataFrame, id_col: str, vec_col: str
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``(q_ids, Q, q_norm)`` of the collected query sample, ascending
+    id."""
+    rows = sorted(
+        (int(r[0]), [float(x) for x in r[1]])
+        for r in queries.select(id_col, vec_col).collect()
+    )
+    q_ids = np.array([r[0] for r in rows], dtype=np.int64)
+    Q = (
+        np.array([r[1] for r in rows], dtype=np.float64)
+        if rows
+        else np.zeros((0, 1), dtype=np.float64)
+    )
+    return q_ids, Q, fold_norm(Q)
+
+
+def _candidate_source(
+    candidates: DataFrame, id_col: str, vec_col: str, *extra: Column
+) -> DataFrame:
+    """``(candidate_id, _v, *extra)`` over at least the core budget's
+    partitions: the scoring pass is compute-bound."""
+    source = candidates.select(
+        F.col(id_col).alias("candidate_id"), F.col(vec_col).alias("_v"), *extra
+    )
+    n_parts = candidates.sparkSession.sparkContext.defaultParallelism
+    if source.rdd.getNumPartitions() < n_parts:
+        source = source.repartition(n_parts)
+    return source
+
+
+def _probe_order(
+    Q: np.ndarray, q_norm: np.ndarray, C: np.ndarray, cnorms: np.ndarray
+) -> np.ndarray:
+    """Each query's cell indices nearest first, ties to the smallest cid
+    (stable argsort of -cosine over ascending-cid columns, NaN as the
+    largest) — the sort_array(struct(cos, ncid)) DESC semantics of the
+    declarative query side."""
+    with np.errstate(invalid="ignore", divide="ignore"):
+        qcos = fold_dot_matrix(Q, C) / (q_norm[:, None] * cnorms[None, :])
+    qkey = np.where(np.isnan(qcos), np.inf, qcos)
+    return np.argsort(-qkey, axis=1, kind="stable")
+
+
+def _cell_index(
+    Cv: np.ndarray, c_norm: np.ndarray, C: np.ndarray, cnorms: np.ndarray
+) -> np.ndarray:
+    """Each candidate's nearest-centroid index: argmax fold-cosine, NaN
+    as the largest, first max = smallest cid."""
+    with np.errstate(invalid="ignore", divide="ignore"):
+        ckey = fold_dot_matrix(Cv, C) / (c_norm[:, None] * cnorms[None, :])
+    return np.argmax(np.where(np.isnan(ckey), np.inf, ckey), axis=1)
+
+
 def _topk_rows(
     q_ids: np.ndarray,
     Q: np.ndarray,
@@ -267,15 +354,7 @@ def _topk_rows(
         sel_cos = cos[sel_r, sel_c]
         order = np.lexsort((c_ids[sel_c], -sel_cos, sel_r))
         sel_r, sel_c, sel_cos = sel_r[order], sel_c[order], sel_cos[order]
-        starts = np.flatnonzero(
-            np.r_[True, sel_r[1:] != sel_r[:-1]]
-        ) if len(sel_r) else np.array([], dtype=np.int64)
-        counts = np.diff(np.r_[starts, len(sel_r)])
-        rank = (
-            np.arange(len(sel_r), dtype=np.int64)
-            - np.repeat(starts, counts)
-            + 1
-        )
+        rank = _group_ranks(sel_r)
         keep = rank <= k
         out_q.append(q_ids[lo:hi][sel_r[keep]])
         out_c.append(c_ids[sel_c[keep]])
@@ -510,93 +589,43 @@ def ivf_recall_local_topk(
     same (cosine DESC, candidate_id) tie order, same self-exclusion,
     same NaN ordering as the declarative legs — pinned equal in
     tests/test_vector_arrow.py."""
-    rows = sorted(
-        (int(r[0]), [float(x) for x in r[1]])
-        for r in queries.select(id_col, vec_col).collect()
-    )
-    q_ids = np.array([r[0] for r in rows], dtype=np.int64)
-    Q = (
-        np.array([r[1] for r in rows], dtype=np.float64)
-        if rows
-        else np.zeros((0, 1), dtype=np.float64)
-    )
-    q_norm = fold_norm(Q)
+    q_ids, Q, q_norm = _query_sample(queries, id_col, vec_col)
     cids, C, cnorms = _centroid_arrays(centroids)
     nq, ncent = len(q_ids), len(cids)
     legs = np.array([0, *probes], dtype=np.int64)
-    with np.errstate(invalid="ignore", divide="ignore"):
-        qcos = fold_dot_matrix(Q, C) / (q_norm[:, None] * cnorms[None, :])
-    qkey = np.where(np.isnan(qcos), np.inf, qcos)
-    # probe order: cosine DESC, ties to the smallest cid (stable argsort
-    # of -key over ascending-cid columns) — sort_array(struct(cos,ncid))
-    # DESC semantics
-    order = np.argsort(-qkey, axis=1, kind="stable")
+    order = _probe_order(Q, q_norm, C, cnorms)
     # allowed[leg_idx, q, cell_idx]: leg 0 probes every cell (the
     # exhaustive-truth limit), leg p the first p of the probe order
     allowed = np.zeros((len(legs), nq, ncent), dtype=bool)
     allowed[0] = True
     for li, p in enumerate(probes, 1):
         np.put_along_axis(allowed[li], order[:, :p], True, axis=1)
-    source = candidates.select(
-        F.col(id_col).alias("candidate_id"), F.col(vec_col).alias("_v")
-    )
-    n_parts = candidates.sparkSession.sparkContext.defaultParallelism
-    if source.rdd.getNumPartitions() < n_parts:
-        source = source.repartition(n_parts)
+    source = _candidate_source(candidates, id_col, vec_col)
     out_schema = "leg long, query_id long, candidate_id long, cosine double"
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        neg_inf = -np.inf
         for pdf in batches:
             if not len(pdf) or not nq:
                 continue
             c_ids = pdf["candidate_id"].to_numpy(dtype=np.int64)
             Cv = _stack(pdf["_v"])
             c_norm = fold_norm(Cv)
-            nc = len(c_ids)
+            cell_idx = _cell_index(Cv, c_norm, C, cnorms)
             with np.errstate(invalid="ignore", divide="ignore"):
-                ckey = fold_dot_matrix(Cv, C) / (
-                    c_norm[:, None] * cnorms[None, :]
-                )
                 cos = fold_dot_matrix(Q, Cv) / (
                     q_norm[:, None] * c_norm[None, :]
                 )
-            ckey = np.where(np.isnan(ckey), np.inf, ckey)
-            cell_idx = np.argmax(ckey, axis=1)  # first max = smallest cid
             key0 = np.where(np.isnan(cos), np.inf, cos)
-            key0[q_ids[:, None] == c_ids[None, :]] = neg_inf
+            key0[q_ids[:, None] == c_ids[None, :]] = -np.inf
             for li, leg in enumerate(legs):
-                key = np.where(
-                    allowed[li][:, cell_idx], key0, neg_inf
-                )
-                if nc > k:
-                    thr = np.partition(key, nc - k, axis=1)[:, nc - k]
-                else:
-                    thr = np.full(nq, neg_inf)
-                sel_r, sel_c = np.nonzero(
-                    (key >= thr[:, None]) & (key > neg_inf)
-                )
-                sel_key = key[sel_r, sel_c]
-                ordr = np.lexsort((c_ids[sel_c], -sel_key, sel_r))
-                sel_r, sel_c = sel_r[ordr], sel_c[ordr]
-                starts = (
-                    np.flatnonzero(np.r_[True, sel_r[1:] != sel_r[:-1]])
-                    if len(sel_r)
-                    else np.array([], dtype=np.int64)
-                )
-                counts = np.diff(np.r_[starts, len(sel_r)])
-                rank = (
-                    np.arange(len(sel_r), dtype=np.int64)
-                    - np.repeat(starts, counts)
-                    + 1
-                )
-                keep = rank <= k
+                key = np.where(allowed[li][:, cell_idx], key0, -np.inf)
+                r, c = _local_topk(key, c_ids, k)
                 yield pd.DataFrame(
                     {
-                        "leg": np.full(int(keep.sum()), leg, dtype=np.int64),
-                        "query_id": q_ids[sel_r[keep]],
-                        "candidate_id": c_ids[sel_c[keep]],
-                        "cosine": cos[sel_r[keep], sel_c[keep]],
+                        "leg": np.full(len(r), leg, dtype=np.int64),
+                        "query_id": q_ids[r],
+                        "candidate_id": c_ids[c],
+                        "cosine": cos[r, c],
                     }
                 )
 
@@ -628,83 +657,36 @@ def ivf_local_topk(
     engines — the ordering key maps NaN to +inf while the true NaN
     double is emitted. Same left-fold doubles as the declarative path —
     pinned equal in tests/test_vector_arrow.py."""
-    rows = sorted(
-        (int(r[0]), [float(x) for x in r[1]])
-        for r in queries.select(id_col, vec_col).collect()
-    )
-    q_ids = np.array([r[0] for r in rows], dtype=np.int64)
-    Q = (
-        np.array([r[1] for r in rows], dtype=np.float64)
-        if rows
-        else np.zeros((0, 1), dtype=np.float64)
-    )
-    q_norm = fold_norm(Q)
+    q_ids, Q, q_norm = _query_sample(queries, id_col, vec_col)
     cids, C, cnorms = _centroid_arrays(centroids)
-    nq, ncent = len(q_ids), len(cids)
-    with np.errstate(invalid="ignore", divide="ignore"):
-        qcos = fold_dot_matrix(Q, C) / (q_norm[:, None] * cnorms[None, :])
-    qkey = np.where(np.isnan(qcos), np.inf, qcos)
-    # probe order: cosine DESC, ties to the smallest cid (stable argsort
-    # of -key over ascending-cid columns) — the sort_array(struct(cos,
-    # ncid)) DESC semantics of the declarative query side
-    order = np.argsort(-qkey, axis=1, kind="stable")[:, :nprobe]
-    allowed = np.zeros((nq, ncent), dtype=bool)
-    np.put_along_axis(allowed, order, True, axis=1)
-    source = candidates.select(
-        F.col(id_col).alias("candidate_id"), F.col(vec_col).alias("_v")
+    allowed = np.zeros((len(q_ids), len(cids)), dtype=bool)
+    np.put_along_axis(
+        allowed, _probe_order(Q, q_norm, C, cnorms)[:, :nprobe], True, axis=1
     )
-    n_parts = candidates.sparkSession.sparkContext.defaultParallelism
-    if source.rdd.getNumPartitions() < n_parts:
-        source = source.repartition(n_parts)
+    source = _candidate_source(candidates, id_col, vec_col)
     out_schema = "query_id long, candidate_id long, cell long, cosine double"
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        neg_inf = -np.inf
         for pdf in batches:
-            if not len(pdf) or not nq:
+            if not len(pdf) or not len(q_ids):
                 continue
             c_ids = pdf["candidate_id"].to_numpy(dtype=np.int64)
             Cv = _stack(pdf["_v"])
             c_norm = fold_norm(Cv)
-            nc = len(c_ids)
+            cell_idx = _cell_index(Cv, c_norm, C, cnorms)
             with np.errstate(invalid="ignore", divide="ignore"):
-                ckey = fold_dot_matrix(Cv, C) / (
-                    c_norm[:, None] * cnorms[None, :]
-                )
                 cos = fold_dot_matrix(Q, Cv) / (
                     q_norm[:, None] * c_norm[None, :]
                 )
-            ckey = np.where(np.isnan(ckey), np.inf, ckey)
-            cell_idx = np.argmax(ckey, axis=1)  # first max = smallest cid
-            key = np.where(np.isnan(cos), np.inf, cos)
             mask = allowed[:, cell_idx] & (q_ids[:, None] != c_ids[None, :])
-            key = np.where(mask, key, neg_inf)
-            if nc > k:
-                thr = np.partition(key, nc - k, axis=1)[:, nc - k]
-            else:
-                thr = np.full(nq, neg_inf)
-            sel_r, sel_c = np.nonzero((key >= thr[:, None]) & mask)
-            sel_key = key[sel_r, sel_c]
-            ordr = np.lexsort((c_ids[sel_c], -sel_key, sel_r))
-            sel_r, sel_c = sel_r[ordr], sel_c[ordr]
-            starts = (
-                np.flatnonzero(np.r_[True, sel_r[1:] != sel_r[:-1]])
-                if len(sel_r)
-                else np.array([], dtype=np.int64)
-            )
-            counts = np.diff(np.r_[starts, len(sel_r)])
-            rank = (
-                np.arange(len(sel_r), dtype=np.int64)
-                - np.repeat(starts, counts)
-                + 1
-            )
-            keep = rank <= k
+            key = np.where(mask, np.where(np.isnan(cos), np.inf, cos), -np.inf)
+            r, c = _local_topk(key, c_ids, k)
             yield pd.DataFrame(
                 {
-                    "query_id": q_ids[sel_r[keep]],
-                    "candidate_id": c_ids[sel_c[keep]],
-                    "cell": cids[cell_idx[sel_c[keep]]],
-                    "cosine": cos[sel_r[keep], sel_c[keep]],
+                    "query_id": q_ids[r],
+                    "candidate_id": c_ids[c],
+                    "cell": cids[cell_idx[c]],
+                    "cosine": cos[r, c],
                 }
             )
 
@@ -736,26 +718,14 @@ def ivfpq_local_topk(
     finite (no division), so no NaN-ordering special case. Same
     left-fold doubles as the declarative path — pinned equal in
     tests/test_vector_arrow.py."""
-    rows = sorted(
-        (int(r[0]), [float(x) for x in r[1]])
-        for r in queries.select(id_col, vec_col).collect()
-    )
-    q_ids = np.array([r[0] for r in rows], dtype=np.int64)
-    Q = (
-        np.array([r[1] for r in rows], dtype=np.float64)
-        if rows
-        else np.zeros((0, 1), dtype=np.float64)
-    )
-    q_norm = fold_norm(Q)
+    q_ids, Q, q_norm = _query_sample(queries, id_col, vec_col)
     cids, C, cnorms = _centroid_arrays(centroids)
-    nq, ncent = len(q_ids), len(cids)
+    nq = len(q_ids)
     books = [np.array(cb, dtype=np.float64) for cb in codebooks]
-    with np.errstate(invalid="ignore", divide="ignore"):
-        qcos = fold_dot_matrix(Q, C) / (q_norm[:, None] * cnorms[None, :])
-    qkey = np.where(np.isnan(qcos), np.inf, qcos)
-    order = np.argsort(-qkey, axis=1, kind="stable")[:, :nprobe]
-    allowed = np.zeros((nq, ncent), dtype=bool)
-    np.put_along_axis(allowed, order, True, axis=1)
+    allowed = np.zeros((nq, len(cids)), dtype=bool)
+    np.put_along_axis(
+        allowed, _probe_order(Q, q_norm, C, cnorms)[:, :nprobe], True, axis=1
+    )
     # per-query ADC tables: tab[m][q, code] = left-fold L2^2 of the
     # query's m-th subvector against codeword `code`
     tabs = [
@@ -764,12 +734,7 @@ def ivfpq_local_topk(
         else np.zeros((0, len(cb)))
         for m, cb in enumerate(books)
     ]
-    source = candidates.select(
-        F.col(id_col).alias("candidate_id"), F.col(vec_col).alias("_v")
-    )
-    n_parts = candidates.sparkSession.sparkContext.defaultParallelism
-    if source.rdd.getNumPartitions() < n_parts:
-        source = source.repartition(n_parts)
+    source = _candidate_source(candidates, id_col, vec_col)
     out_schema = "query_id long, candidate_id long, cell long, adc_dist double"
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -778,14 +743,7 @@ def ivfpq_local_topk(
                 continue
             c_ids = pdf["candidate_id"].to_numpy(dtype=np.int64)
             Cv = _stack(pdf["_v"])
-            c_norm = fold_norm(Cv)
-            nc = len(c_ids)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                ckey = fold_dot_matrix(Cv, C) / (
-                    c_norm[:, None] * cnorms[None, :]
-                )
-            ckey = np.where(np.isnan(ckey), np.inf, ckey)
-            cell_idx = np.argmax(ckey, axis=1)  # first max = smallest cid
+            cell_idx = _cell_index(Cv, fold_norm(Cv), C, cnorms)
             adc = None
             for m, cb in enumerate(books):
                 dmat = fold_l2sq_matrix(
@@ -796,36 +754,15 @@ def ivfpq_local_topk(
                 )  # first min = smallest code
                 term = tabs[m][:, codes]  # (nq, nc)
                 adc = term.copy() if adc is None else adc + term
-            mask = allowed[:, cell_idx] & (
-                q_ids[:, None] != c_ids[None, :]
-            )
-            key = np.where(mask, adc, np.inf)
-            if nc > k:
-                thr = np.partition(key, k - 1, axis=1)[:, k - 1]
-            else:
-                thr = np.full(nq, np.inf)
-            sel_r, sel_c = np.nonzero((key <= thr[:, None]) & mask)
-            sel_key = key[sel_r, sel_c]
-            ordr = np.lexsort((c_ids[sel_c], sel_key, sel_r))
-            sel_r, sel_c = sel_r[ordr], sel_c[ordr]
-            starts = (
-                np.flatnonzero(np.r_[True, sel_r[1:] != sel_r[:-1]])
-                if len(sel_r)
-                else np.array([], dtype=np.int64)
-            )
-            counts = np.diff(np.r_[starts, len(sel_r)])
-            rank = (
-                np.arange(len(sel_r), dtype=np.int64)
-                - np.repeat(starts, counts)
-                + 1
-            )
-            keep = rank <= k
+            mask = allowed[:, cell_idx] & (q_ids[:, None] != c_ids[None, :])
+            # ascending finite ADC == descending negated ADC, exactly
+            r, c = _local_topk(np.where(mask, -adc, -np.inf), c_ids, k)
             yield pd.DataFrame(
                 {
-                    "query_id": q_ids[sel_r[keep]],
-                    "candidate_id": c_ids[sel_c[keep]],
-                    "cell": cids[cell_idx[sel_c[keep]]],
-                    "adc_dist": adc[sel_r[keep], sel_c[keep]],
+                    "query_id": q_ids[r],
+                    "candidate_id": c_ids[c],
+                    "cell": cids[cell_idx[c]],
+                    "adc_dist": adc[r, c],
                 }
             )
 
@@ -863,21 +800,15 @@ def hard_negatives_arrow(
         else np.zeros((0, 1), dtype=np.float64)
     )
     q_norm = fold_norm(Q)
-    source = candidates.select(
-        F.col(id_col).alias("candidate_id"),
-        F.col(vec_col).alias("_v"),
-        F.col(label_col).alias("candidate_label"),
+    source = _candidate_source(
+        candidates, id_col, vec_col, F.col(label_col).alias("candidate_label")
     )
-    n_parts = candidates.sparkSession.sparkContext.defaultParallelism
-    if source.rdd.getNumPartitions() < n_parts:
-        source = source.repartition(n_parts)
     out_schema = (
         "query_id long, query_label int, candidate_id long, "
         "candidate_label int, cosine double"
     )
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        neg_inf = -np.inf
         for pdf in batches:
             if not len(pdf) or not len(q_ids):
                 continue
@@ -890,35 +821,15 @@ def hard_negatives_arrow(
             drop = (q_ids[:, None] == c_ids[None, :]) | (
                 q_labels[:, None] == c_labels[None, :]
             )
-            key[drop] = neg_inf
-            nc = len(c_ids)
-            if nc > k:
-                thr = np.partition(key, nc - k, axis=1)[:, nc - k]
-            else:
-                thr = np.full(len(q_ids), neg_inf)
-            sel_r, sel_c = np.nonzero((key >= thr[:, None]) & (key > neg_inf))
-            sel_key = key[sel_r, sel_c]
-            order = np.lexsort((c_ids[sel_c], -sel_key, sel_r))
-            sel_r, sel_c = sel_r[order], sel_c[order]
-            starts = (
-                np.flatnonzero(np.r_[True, sel_r[1:] != sel_r[:-1]])
-                if len(sel_r)
-                else np.array([], dtype=np.int64)
-            )
-            counts = np.diff(np.r_[starts, len(sel_r)])
-            rank = (
-                np.arange(len(sel_r), dtype=np.int64)
-                - np.repeat(starts, counts)
-                + 1
-            )
-            keep = rank <= k
+            key[drop] = -np.inf
+            r, c = _local_topk(key, c_ids, k)
             yield pd.DataFrame(
                 {
-                    "query_id": q_ids[sel_r[keep]],
-                    "query_label": q_labels[sel_r[keep]].astype(np.int32),
-                    "candidate_id": c_ids[sel_c[keep]],
-                    "candidate_label": c_labels[sel_c[keep]].astype(np.int32),
-                    "cosine": cos[sel_r[keep], sel_c[keep]],
+                    "query_id": q_ids[r],
+                    "query_label": q_labels[r].astype(np.int32),
+                    "candidate_id": c_ids[c],
+                    "candidate_label": c_labels[c].astype(np.int32),
+                    "cosine": cos[r, c],
                 }
             )
 
@@ -963,27 +874,11 @@ def cosine_topk_arrow(
     map pass."""
     from pyspark.sql import Window
 
-    rows = sorted(
-        (int(r[0]), [float(x) for x in r[1]])
-        for r in queries.select(id_col, vec_col).collect()
-    )
-    q_ids = np.array([r[0] for r in rows], dtype=np.int64)
-    Q = (
-        np.array([r[1] for r in rows], dtype=np.float64)
-        if rows
-        else np.zeros((0, 1), dtype=np.float64)
-    )
-    q_norm = fold_norm(Q)
-    source = candidates.select(
-        F.col(id_col).alias("candidate_id"), F.col(vec_col).alias("_v")
-    )
-    n_parts = candidates.sparkSession.sparkContext.defaultParallelism
-    if source.rdd.getNumPartitions() < n_parts:
-        source = source.repartition(n_parts)
+    q_ids, Q, q_norm = _query_sample(queries, id_col, vec_col)
+    source = _candidate_source(candidates, id_col, vec_col)
     out_schema = "query_id long, candidate_id long, cosine double"
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        neg_inf = -np.inf
         for pdf in batches:
             if not len(pdf) or not len(q_ids):
                 continue
@@ -992,36 +887,13 @@ def cosine_topk_arrow(
             c_norm = fold_norm(Cv)
             cos = fold_dot_matrix(Q, Cv) / (q_norm[:, None] * c_norm[None, :])
             key = np.where(np.isnan(cos), np.inf, cos)
-            self_mask = q_ids[:, None] == c_ids[None, :]
-            key[self_mask] = neg_inf
-            nc = len(c_ids)
-            if nc > k:
-                thr = np.partition(key, nc - k, axis=1)[:, nc - k]
-            else:
-                thr = np.full(len(q_ids), neg_inf)
-            sel_r, sel_c = np.nonzero(
-                (key >= thr[:, None]) & (key > neg_inf)
-            )
-            sel_key = key[sel_r, sel_c]
-            order = np.lexsort((c_ids[sel_c], -sel_key, sel_r))
-            sel_r, sel_c = sel_r[order], sel_c[order]
-            starts = (
-                np.flatnonzero(np.r_[True, sel_r[1:] != sel_r[:-1]])
-                if len(sel_r)
-                else np.array([], dtype=np.int64)
-            )
-            counts = np.diff(np.r_[starts, len(sel_r)])
-            rank = (
-                np.arange(len(sel_r), dtype=np.int64)
-                - np.repeat(starts, counts)
-                + 1
-            )
-            keep = rank <= k
+            key[q_ids[:, None] == c_ids[None, :]] = -np.inf
+            r, c = _local_topk(key, c_ids, k)
             yield pd.DataFrame(
                 {
-                    "query_id": q_ids[sel_r[keep]],
-                    "candidate_id": c_ids[sel_c[keep]],
-                    "cosine": cos[sel_r[keep], sel_c[keep]],
+                    "query_id": q_ids[r],
+                    "candidate_id": c_ids[c],
+                    "cosine": cos[r, c],
                 }
             )
 

@@ -2547,8 +2547,8 @@ def q_similarity_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     representatives and to spot template farms. Three synchronous
     iterations (`operators.graph.pagerank`); neighbor sums run in exact
     decimal so the chained-CTE oracle matches bit-for-bit. Round 11:
-    small graphs (edge-count-gated via the entry checkpoint's observe —
-    eager=True, the cc precedent) run in a single-task kernel with zero
+    small graphs (edge-count-gated by caching.size_gated — eager=True,
+    the cc precedent) run in a single-task kernel with zero
     joins; large graphs keep the distributed iterations (edges
     hash-partitioned on src once, each iteration one edge⨝rank join +
     one combinable groupBy)."""
@@ -5504,7 +5504,7 @@ def q_tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame
     argmax broadcasts); apply joins token occurrences to the
     vocab-bounded symbol counts; the lang join rides doc_id before the
     final combinable groupBy(lang). eager=True — construction
-    checkpoints the word-count table (the observe gate)."""
+    materializes the word-count table (caching.size_gated)."""
     from mdio_python_spark.operators import bpe
     from mdio_python_spark.operators.text import tokens as _tokens
 

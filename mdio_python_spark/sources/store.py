@@ -124,19 +124,6 @@ def write_manifest(dataset: Dataset, path: str, chunks: dict[str, int]) -> None:
         json.dump(manifest, f, indent=2, default=str)
 
 
-def write_store(
-    traces: DataFrame,
-    dim_tables: dict[str, DataFrame],
-    dataset: Dataset,
-    path: str,
-    chunks: dict[str, int],
-    codec: str = "zstd",
-) -> None:
-    """K1/K2: data + manifest in one call (the simple-caller API)."""
-    write_data(traces, dim_tables, path, chunks, codec)
-    write_manifest(dataset, path, chunks)
-
-
 def open_store(spark: SparkSession, path: str) -> OpenedStore:
     """``open_mdio`` analog (S4): lazy DataFrame + manifest round-trip."""
     with open(os.path.join(path, MANIFEST)) as f:

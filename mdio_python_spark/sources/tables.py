@@ -68,19 +68,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         return normalize_nanos_ts(spark.read.parquet(table_path(sf_dir, name)))
     return spark.read.parquet(table_path(sf_dir, name))
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES
-) -> dict[str, DataFrame]:
-    """Load the named tables and register them as temp views.
-
-    Registering views lets operator code mix DataFrame API and SQL freely;
-    Catalyst produces the same plan for either.
-    """
-    out: dict[str, DataFrame] = {}
-    for name in names:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

@@ -144,12 +144,16 @@ def test_segment_consistent_with_reference(spark):
 
 def test_bpe_train_plan_shape(spark):
     """Trainer plan (round 11, kernel path at smoke scale): no joins, no
-    windows, no exchanges downstream of the checkpointed word counts —
+    windows, no exchanges downstream of the materialized word counts —
     the whole M-step chain is one MapInArrow over a single-task
-    coalesce. The distributed chain's shape is pinned separately by the
-    kernel-vs-chain bit-equality test."""
+    coalesce. The plan string prints the persisted word counts' own
+    derivation under their InMemoryRelation; only the part above it is
+    the trainer's. The distributed chain's shape is pinned separately by
+    the kernel-vs-chain bit-equality test."""
     df = queries()["bpe_train_merges"](spark, SF_SMOKE)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    full = df._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryRelation" in full, full
+    plan = full.split("InMemoryRelation")[0]
     assert "SortMergeJoin" not in plan, plan
     assert "Window" not in plan, plan
     assert "MapInArrow" in plan, plan
@@ -212,3 +216,24 @@ def test_train_merges_kernel_empty_top_pair_edge(spark, monkeypatch):
     m_new, f_new = bpe.train_merges(wc, 4, scope="test.bpe_edge_kern")
     assert sorted(tuple(r) for r in m_new.collect()) == want_m
     assert sorted(tuple(r) for r in f_new.collect()) == want_f
+
+
+def test_train_merges_kernel_results_survive_rotation(spark):
+    """Two kernel-path calls under one scope with different
+    vocabularies: the second rotates the first's materialized word
+    counts out of the cache, and the first result must still collect
+    its rows (a released persist recomputes where a released
+    localCheckpoint would raise)."""
+    from mdio_python_spark.operators import bpe
+    from mdio_python_spark.operators.caching import CACHE_ATTR
+
+    first = spark.createDataFrame([(1, "aa ab ab ba")], "doc_id long, text string")
+    other = spark.createDataFrame([(1, "zz zy yy")], "doc_id long, text string")
+    m1, _ = bpe.train_merges(bpe.word_counts(first), 3, scope="test.bpe_rotate")
+    want = sorted(tuple(r) for r in m1.collect())
+    bpe.train_merges(bpe.word_counts(other), 3, scope="test.bpe_rotate")
+    handles = getattr(m1, CACHE_ATTR, [])
+    assert handles and not any(
+        h.storageLevel.useMemory or h.storageLevel.useDisk for h in handles
+    )
+    assert sorted(tuple(r) for r in m1.collect()) == want and len(want) == 3

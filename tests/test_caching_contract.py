@@ -49,7 +49,9 @@ def test_release_is_noop_without_attachment(spark):
 def test_rotation_bounds_repeat_callers_to_one_generation(spark):
     """Regression (r4 review): a caller that never release_cached()s —
     the declared-query harness pattern — must not accumulate one
-    persisted relation per call."""
+    persisted relation per call, on a persisting operator's path or on
+    a size-gated kernel path."""
+    from mdio_python_spark.operators import bpe
     from mdio_python_spark.operators.grid import ordered_export
 
     spark.catalog.clearCache()  # isolate from other tests' cached relations
@@ -60,21 +62,25 @@ def test_rotation_bounds_repeat_callers_to_one_generation(spark):
             for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()
         }
 
-    # earlier tests' localCheckpoint RDDs (the round-11 kernel gates)
-    # are RDD-level persists that clearCache() does not drop and whose
-    # cleanup is GC-driven — measure the DELTA this test creates, not
-    # the session-global count
-    before = jvm_ids()
     df = spark.range(100).selectExpr("id AS a", "id % 7 AS b")
+    vocab = bpe.word_counts(
+        spark.createDataFrame([(1, "aa ab ab ba")], "doc_id long, text string")
+    )
     for _ in range(4):
         ordered_export(df, ["a", "b"]).write.format("noop").mode(
             "overwrite"
         ).save()
-    assert len(jvm_ids() - before) <= 1  # only the latest generation survives
+        merges, _ = bpe.train_merges(vocab, 2, scope="test.rotation")
+        merges.collect()
+    # only the latest generation of each survives
+    assert len(jvm_ids()) <= 2
     # explicit release still works on the final generation
     out = ordered_export(df, ["a", "b"])
     out.write.format("noop").mode("overwrite").save()
+    merges, _ = bpe.train_merges(vocab, 2, scope="test.rotation")
+    merges.collect()
     from mdio_python_spark.operators.caching import release_cached
 
     release_cached(out)
-    assert jvm_ids() - before == set()
+    release_cached(merges)
+    assert jvm_ids() == set()

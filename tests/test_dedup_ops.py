@@ -259,6 +259,37 @@ def test_connected_components_unionfind_matches_star_rounds(
         dedup.connected_components(chain, max_iter=1)
 
 
+def test_connected_components_non_long_ids_take_the_loop(spark, monkeypatch):
+    """The union-find kernel reads ids as int64 arrays, so string ids and
+    long ids with a null must take the star rounds at the default gate
+    and return exactly their schema and rows. The null case passes
+    assume_distinct so the null reaches the gate."""
+    from mdio_python_spark.operators import dedup as dd
+
+    cases = [
+        (
+            spark.createDataFrame(
+                [("a", "b"), ("b", "c"), ("x", "y")], "doc_a string, doc_b string"
+            ),
+            False,
+        ),
+        (
+            spark.createDataFrame(
+                [(1, 2), (2, 3), (None, 4), (7, 8)], "doc_a long, doc_b long"
+            ),
+            True,
+        ),
+    ]
+    for df, distinct in cases:
+        out = dedup.connected_components(df, assume_distinct=distinct)
+        got = (out.schema, sorted(map(tuple, out.collect()), key=repr))
+        monkeypatch.setattr(dd, "_UNIONFIND_EDGE_LIMIT", -1)
+        loop = dedup.connected_components(df, assume_distinct=distinct)
+        want = (loop.schema, sorted(map(tuple, loop.collect()), key=repr))
+        monkeypatch.undo()
+        assert got == want and len(got[1]) > 0
+
+
 def test_connected_components_handles_reversed_and_duplicate_edges(spark):
     df = spark.createDataFrame(
         [(5, 3), (3, 5), (3, 1), (9, 7), (9, 7)], "doc_a long, doc_b long"

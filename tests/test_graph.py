@@ -120,3 +120,30 @@ def test_pagerank_kernel_bit_equal_on_lsh_graph(spark, monkeypatch):
     monkeypatch.setattr(graph, "_PAGERANK_EDGE_LIMIT", 500_000)
     got = sorted(tuple(r) for r in pagerank(edges, iters=3).collect())
     assert got == want and len(got) > 0
+
+
+def test_pagerank_non_long_ids_take_the_loop(spark, monkeypatch):
+    """The kernel reads ids as int64 arrays, so string ids and long ids
+    with a null must take the distributed loop at the default gate and
+    return exactly its schema and rows."""
+    from mdio_python_spark.operators import graph
+    from mdio_python_spark.operators.graph import pagerank
+
+    und = [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d")]
+    cases = [
+        spark.createDataFrame(
+            und + [(b, a) for a, b in und], "src string, dst string"
+        ),
+        spark.createDataFrame(
+            [(1, 2), (2, 1), (2, 3), (3, 2), (None, 1), (1, None)],
+            "src long, dst long",
+        ),
+    ]
+    for df in cases:
+        out = pagerank(df, iters=3)
+        got = (out.schema, sorted(map(tuple, out.collect()), key=repr))
+        monkeypatch.setattr(graph, "_PAGERANK_EDGE_LIMIT", -1)
+        loop = pagerank(df, iters=3)
+        want = (loop.schema, sorted(map(tuple, loop.collect()), key=repr))
+        monkeypatch.undo()
+        assert got == want and len(got[1]) > 0

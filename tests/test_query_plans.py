@@ -141,13 +141,16 @@ def test_random_projection_is_pure_scan(spark):
 
 def test_pagerank_caches_edges_no_cartesian(spark):
     """Round 11: at test scale the edge set is small, so the plan must
-    be the single-task kernel over the checkpointed edges — zero joins
-    and zero exchanges (the LSH subtree ran exactly once INTO the
-    checkpoint at construction). The distributed loop's shape (persisted
-    edges, equi-joins only) is pinned by
+    be the single-task kernel over the materialized edges — zero joins
+    and zero exchanges above them (the LSH subtree ran exactly once INTO
+    the persisted edges at construction; the plan string prints that
+    subtree under their InMemoryRelation). The distributed loop's shape
+    (persisted edges, equi-joins only) is pinned by
     tests/test_graph.py::test_pagerank_kernel_bit_equal_* which forces
     both paths."""
-    plan = _plan(spark, "similarity_graph_pagerank")
+    full = _plan(spark, "similarity_graph_pagerank")
+    assert "InMemoryRelation" in full, full
+    plan = full.split("InMemoryRelation")[0]
     assert "MapInArrow" in plan, plan
     for bad in (
         "BroadcastNestedLoopJoin",

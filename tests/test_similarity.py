@@ -89,8 +89,8 @@ def test_ivf_results_only_from_probed_cells_and_exact_cosine(spark, emb):
         assert sorted(per_query_ranks[q]) == list(range(1, len(per_query_ranks[q]) + 1))
 
 
-def test_ivf_plan_shape(spark, emb):
-    """Round 11 (arrow default): scoring is one MapInPandas kernel pass —
+def test_ivf_plan_shape(spark, emb, monkeypatch):
+    """Round 11 (Arrow kernel): scoring is one MapInPandas kernel pass —
     join-free; the only hash exchange is the final per-query top-k
     window. The declarative path's shape (projection assignment +
     broadcast probe join) is checked separately below."""
@@ -103,9 +103,9 @@ def test_ivf_plan_shape(spark, emb):
     for bad in ("SortMergeJoin", "BroadcastHashJoin", "BroadcastNestedLoopJoin"):
         assert bad not in plan, plan
 
+    monkeypatch.setattr(sim, "_IVF_QUERY_LIMIT", -1)
     df_decl = sim.ivf_topk(
-        emb.where(F.col("vec_id") < 50), emb, k=3, n_centroids=16, nprobe=4,
-        arrow=False,
+        emb.where(F.col("vec_id") < 50), emb, k=3, n_centroids=16, nprobe=4
     )
     plan_decl = df_decl._jdf.queryExecution().executedPlan().toString()
     assert plan_decl.count("Exchange hashpartitioning") == 1, plan_decl
@@ -229,15 +229,17 @@ def test_ivfpq_fitted_path_runs_and_ranks(spark, emb):
         assert len(rs) <= 3
 
 
-def test_ivfpq_candidate_vector_never_crosses_probe_join(spark, emb):
+def test_ivfpq_candidate_vector_never_crosses_probe_join(
+    spark, emb, monkeypatch
+):
     """The point of PQ at scale: the corpus embedding never crosses a
     shuffle. Declarative path: the embedding column must be pruned
     before the cell join — only (id, cell, codes) shuffle. Arrow path
     (the round-10 default): no join at all — only the bounded local
     top-k rows (id, cell, adc_dist) leave the scoring map pass."""
+    monkeypatch.setattr(sim, "_IVF_QUERY_LIMIT", -1)
     out = sim.ivfpq_topk(
-        emb.where(F.col("vec_id") < 10), emb, k=3, n_centroids=16,
-        nprobe=4, arrow=False,
+        emb.where(F.col("vec_id") < 10), emb, k=3, n_centroids=16, nprobe=4
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     join_at = plan.find("BroadcastHashJoin")
@@ -245,6 +247,7 @@ def test_ivfpq_candidate_vector_never_crosses_probe_join(spark, emb):
     # above the join (output side) no embedding attribute may remain
     assert "embedding#" not in plan[:join_at]
 
+    monkeypatch.undo()
     out = sim.ivfpq_topk(
         emb.where(F.col("vec_id") < 10), emb, k=3, n_centroids=16, nprobe=4
     )

@@ -19,6 +19,16 @@ def _sorted_rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _declarative(op, *args, **kwargs):
+    """Sorted rows of an IVF operator forced onto its declarative path
+    (query-sample gate shut)."""
+    from mdio_python_spark.operators import similarity
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(similarity, "_IVF_QUERY_LIMIT", -1)
+        return _sorted_rows(op(*args, **kwargs))
+
+
 @pytest.fixture(scope="module")
 def emb(spark):
     df = spark.read.parquet(f"{SF_CORRECT}/embeddings.parquet")
@@ -241,7 +251,7 @@ def test_hard_negatives_arrow_bit_equal(spark):
 
 
 def test_ivf_recall_curve_arrow_bit_equal(spark):
-    """ivf_recall_curve(arrow=True) == the declarative leg-join path:
+    """ivf_recall_curve's Arrow kernel == the declarative leg-join path:
     identical curve rows on the smoke corpus and on a tie-heavy
     synthetic (colinear vectors force cosine ties through both the
     probe order and the rank window). Zero-norm vectors are NOT in the
@@ -253,18 +263,8 @@ def test_ivf_recall_curve_arrow_bit_equal(spark):
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     qs = emb.where(F.col("vec_id") < 50)
-    old = sorted(
-        tuple(r)
-        for r in ivf_recall_curve(
-            qs, emb, k=10, n_centroids=16, arrow=False
-        ).collect()
-    )
-    new = sorted(
-        tuple(r)
-        for r in ivf_recall_curve(
-            qs, emb, k=10, n_centroids=16, arrow=True
-        ).collect()
-    )
+    old = _declarative(ivf_recall_curve, qs, emb, k=10, n_centroids=16)
+    new = _sorted_rows(ivf_recall_curve(qs, emb, k=10, n_centroids=16))
     assert old == new and len(new) == 4
 
     rows = [
@@ -274,23 +274,17 @@ def test_ivf_recall_curve_arrow_bit_equal(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = df.where(F.col("vec_id") < 5)
-    old = sorted(
-        tuple(r)
-        for r in ivf_recall_curve(
-            q, df, k=3, n_centroids=4, probes=(1, 2), arrow=False
-        ).collect()
+    old = _declarative(
+        ivf_recall_curve, q, df, k=3, n_centroids=4, probes=(1, 2)
     )
-    new = sorted(
-        tuple(r)
-        for r in ivf_recall_curve(
-            q, df, k=3, n_centroids=4, probes=(1, 2), arrow=True
-        ).collect()
+    new = _sorted_rows(
+        ivf_recall_curve(q, df, k=3, n_centroids=4, probes=(1, 2))
     )
     assert old == new and len(new) == 2
 
 
 def test_ivfpq_topk_arrow_bit_equal(spark):
-    """ivfpq_topk(arrow=True) == the declarative cell/encode/ADC path:
+    """ivfpq_topk's Arrow kernel == the declarative cell/encode/ADC path:
     identical (query_id, candidate_id, cell, adc_dist, rank) rows on the
     smoke corpus with the committed fitted model, with the id-prefix
     default model, and on a tie-heavy synthetic (colinear vectors force
@@ -309,17 +303,11 @@ def test_ivfpq_topk_arrow_bit_equal(spark):
         dict(centroids=load_ivf_centroids(), codebooks=load_pq_codebooks()),
         dict(),
     ):
-        old = sorted(
-            tuple(r)
-            for r in ivfpq_topk(
-                qs, emb, k=3, n_centroids=16, nprobe=4, arrow=False, **kwargs
-            ).collect()
+        old = _declarative(
+            ivfpq_topk, qs, emb, k=3, n_centroids=16, nprobe=4, **kwargs
         )
-        new = sorted(
-            tuple(r)
-            for r in ivfpq_topk(
-                qs, emb, k=3, n_centroids=16, nprobe=4, arrow=True, **kwargs
-            ).collect()
+        new = _sorted_rows(
+            ivfpq_topk(qs, emb, k=3, n_centroids=16, nprobe=4, **kwargs)
         )
         assert old == new and len(new) > 0, kwargs.keys()
 
@@ -332,25 +320,14 @@ def test_ivfpq_topk_arrow_bit_equal(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = df.where(F.col("vec_id") < 4)
-    old = sorted(
-        tuple(r)
-        for r in ivfpq_topk(
-            q, df, k=3, n_centroids=4, nprobe=2, n_subspaces=2,
-            n_codes=4, arrow=False,
-        ).collect()
-    )
-    new = sorted(
-        tuple(r)
-        for r in ivfpq_topk(
-            q, df, k=3, n_centroids=4, nprobe=2, n_subspaces=2,
-            n_codes=4, arrow=True,
-        ).collect()
-    )
+    pq_args = dict(k=3, n_centroids=4, nprobe=2, n_subspaces=2, n_codes=4)
+    old = _declarative(ivfpq_topk, q, df, **pq_args)
+    new = _sorted_rows(ivfpq_topk(q, df, **pq_args))
     assert old == new and len(new) > 0
 
 
 def test_ivf_topk_arrow_bit_equal(spark):
-    """ivf_topk(arrow=True) == the declarative cell/probe-join path
+    """ivf_topk's Arrow kernel == the declarative cell/probe-join path
     (round 11, VERDICT r10 item 1): identical (query_id, candidate_id,
     cell, cosine, rank) rows on the smoke corpus with the id-prefix
     centroids AND with the committed fitted model, and on a tie-heavy
@@ -364,32 +341,16 @@ def test_ivf_topk_arrow_bit_equal(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     qs = emb.where(F.col("vec_id") < 50)
     for kwargs in (dict(), dict(centroids=load_ivf_centroids())):
-        old = sorted(
-            tuple(r)
-            for r in ivf_topk(
-                qs, emb, k=3, n_centroids=16, nprobe=4, arrow=False, **kwargs
-            ).collect()
+        old = _declarative(
+            ivf_topk, qs, emb, k=3, n_centroids=16, nprobe=4, **kwargs
         )
-        new = sorted(
-            tuple(r)
-            for r in ivf_topk(
-                qs, emb, k=3, n_centroids=16, nprobe=4, arrow=True, **kwargs
-            ).collect()
+        new = _sorted_rows(
+            ivf_topk(qs, emb, k=3, n_centroids=16, nprobe=4, **kwargs)
         )
         assert old == new and len(new) > 0, kwargs.keys()
     # the k=10 shape ann_recall_at_k / ann_method_shootout consume
-    old = sorted(
-        tuple(r)
-        for r in ivf_topk(
-            qs, emb, k=10, n_centroids=16, nprobe=4, arrow=False
-        ).collect()
-    )
-    new = sorted(
-        tuple(r)
-        for r in ivf_topk(
-            qs, emb, k=10, n_centroids=16, nprobe=4, arrow=True
-        ).collect()
-    )
+    old = _declarative(ivf_topk, qs, emb, k=10, n_centroids=16, nprobe=4)
+    new = _sorted_rows(ivf_topk(qs, emb, k=10, n_centroids=16, nprobe=4))
     assert old == new and len(new) > 0
 
     rows = [
@@ -399,16 +360,6 @@ def test_ivf_topk_arrow_bit_equal(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = df.where(F.col("vec_id") < 5)
-    old = sorted(
-        tuple(r)
-        for r in ivf_topk(
-            q, df, k=3, n_centroids=4, nprobe=2, arrow=False
-        ).collect()
-    )
-    new = sorted(
-        tuple(r)
-        for r in ivf_topk(
-            q, df, k=3, n_centroids=4, nprobe=2, arrow=True
-        ).collect()
-    )
+    old = _declarative(ivf_topk, q, df, k=3, n_centroids=4, nprobe=2)
+    new = _sorted_rows(ivf_topk(q, df, k=3, n_centroids=4, nprobe=2))
     assert old == new and len(new) > 0

@@ -3,8 +3,13 @@
 passes mirroring the reference's two passes:
 
 1. header pass — ONE cached pruned scan of dims/coords; geometry detection
-   (A3/A4) + index strategies (W1-W7) as broadcast-pure transforms; dim
-   tables collected to tiny driver-side literals; grid QC (A6/A7)
+   (A3/A4) + index strategies (W1-W7) as broadcast-pure transforms; then
+   ONE aggregate over the cached headers (trace count, distinct dim-tuple
+   count, each spatial dim's sorted distinct values) that yields grid QC
+   (A6/A7), the dim sizes and the dim tables (A2, built on the driver as
+   Arrow literals) together; then the write-plan job (max chunk keys per
+   scan block). The duplicate-tuple query runs only when the aggregate
+   reports fewer distinct tuples than traces, to name the offender.
 2. trace pass — full read with the SAME dim fields decoded in the scan,
    strategies re-applied per-row from the broadcast plan, cell indices via
    broadcast joins against the literal dim tables, ONE exchange (the
@@ -28,14 +33,16 @@ stay plain Python, exactly like the reference's analyzer stages.
 from __future__ import annotations
 
 import base64
+import math
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from mdio_python_spark.functions.determinism import dsum
 from mdio_python_spark.functions.scalars import apply_coordinate_scalar
-from mdio_python_spark.operators import geometry, grid, index_transforms, stats
+from mdio_python_spark.operators import geometry, grid, index_transforms
 from mdio_python_spark.schemas.dataset import (
     Coordinate,
     Dataset,
@@ -71,9 +78,11 @@ SPARSITY_WARN = 2.0
 SPARSITY_ERROR = 10.0
 
 # Above this many distinct (shot_line, shot_point) pairs the Type-A dense
-# shot map is NOT collected into a driver literal (py4j row conversion on
-# a multi-million-row dim table is a driver stall at 100x) — it stays a
-# distributed dense-rank table that the trace scan broadcast-joins.
+# shot map is NOT collected into a driver literal: a literal lives whole in
+# driver memory (the Arrow batches in Python, then the LocalRelation rows
+# in the JVM) and is re-shipped with every plan that broadcasts it, so a
+# multi-million-row map stays a distributed dense-rank table that the
+# trace scan broadcast-joins.
 SHOT_DENSE_LITERAL_MAX = 1_000_000
 
 # Pivot-write mode gate: when no scan block's rows span more than this
@@ -108,10 +117,34 @@ class _StrategyPlan:
 
 
 def _literal(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Collect a tiny DataFrame and rebuild it as an in-memory literal with
-    the same schema — later joins against it never re-trigger the source
-    scan, and broadcasting it ships the collected rows, nothing more."""
-    return spark.createDataFrame(df.collect(), schema=df.schema)
+    """Collect a tiny DataFrame as Arrow and rebuild it as a ``LocalRelation``
+    with the same schema (nullability included).
+
+    Later joins against it never re-trigger the source scan, and the rows
+    live in JVM driver memory: counting, collecting or broadcasting it runs
+    no Spark job over it. ``createDataFrame`` from a Python row list would
+    instead ``parallelize`` into a multi-partition ``LogicalRDD``, so every
+    such use would launch jobs over the literal."""
+    return spark.createDataFrame(df.toArrow(), schema=df.schema)
+
+
+def _dim_table(spark: SparkSession, dim: StructField, values: list) -> DataFrame:
+    """A2 dim table (value, 0-based ``<dim>_idx``) from a dim's sorted
+    distinct values, as an Arrow ``LocalRelation``: the rows of
+    ``grid.dim_values`` without a Spark job. The value column keeps the
+    header column's type."""
+    import pyarrow as pa
+
+    schema = StructType(
+        [dim, StructField(f"{dim.name}_idx", LongType(), nullable=False)]
+    )
+    table = pa.table(
+        {
+            dim.name: pa.array(values),
+            f"{dim.name}_idx": pa.array(range(len(values)), pa.int64()),
+        }
+    )
+    return spark.createDataFrame(table, schema=schema)
 
 
 def _build_strategy_plan(
@@ -135,12 +168,16 @@ def _build_strategy_plan(
     """
     plan = _StrategyPlan()
     if overrides.auto_channel_wrap:
-        ranges = geometry.channel_ranges(headers, "cable", "channel").collect()
-        if geometry.detect_channel_geometry(ranges) == "B":
-            plan.cable_min = spark.createDataFrame(
-                [(int(r["cable"]), int(r["chan_min"])) for r in ranges],
-                "cable long, chan_min long",
-            )
+        ranges = _literal(
+            spark,
+            geometry.channel_ranges(headers, "cable", "channel").select(
+                F.col("cable").cast("long"),
+                F.col("chan_min").cast("long"),
+                "chan_max",
+            ),
+        )
+        if geometry.detect_channel_geometry(ranges.collect()) == "B":
+            plan.cable_min = ranges.drop("chan_max")
     if overrides.auto_shot_wrap or overrides.calculate_shot_index:
         analysis_df = geometry.gun_geometry_analysis(
             headers, "shot_line", "gun", "shot_point"
@@ -392,23 +429,38 @@ def segy_to_store(
         spatial = schema.spatial_dims
         t0 = _mark("strategies_s", t0)
 
-        # grid QC (A6/A7) on the transformed headers
-        qc = stats.grid_sparsity(headers, spatial).collect()[0]
-        if qc["sparsity_ratio"] > SPARSITY_ERROR:
+        # grid QC (A6/A7) and the A2 dim values from ONE aggregate over the
+        # transformed headers (a batch of aggregates sharing one input,
+        # as in LMFAO): the trace count, the distinct-tuple count and each
+        # dim's sorted distinct values — the quantities of
+        # stats.grid_sparsity, grid.duplicate_cells and grid.dim_values.
+        # Each value set is bounded by its dim's cardinality, not by the
+        # trace count.
+        qc = headers.agg(
+            F.count(F.lit(1)).alias("num_traces"),
+            F.count_distinct(*spatial).alias("num_cells"),
+            *[F.array_sort(F.collect_set(d)).alias(d) for d in spatial],
+        ).collect()[0]
+        num_traces = qc["num_traces"]
+        dim_sizes = {d: len(qc[d]) for d in spatial}
+        grid_cells = math.prod(dim_sizes.values())
+        if grid_cells > SPARSITY_ERROR * num_traces:
             raise GridTraceSparsityError(
-                f"grid cells {qc['grid_cells']} vs traces {qc['num_traces']}"
+                f"grid cells {grid_cells} vs traces {num_traces}"
             )
-        dupes = grid.duplicate_cells(headers, spatial).limit(1).collect()
-        if dupes:
-            raise GridTraceCountError(f"duplicate dim tuple: {dupes[0].asDict()}")
+        if qc["num_cells"] != num_traces:
+            dupes = grid.duplicate_cells(headers, spatial).limit(1).collect()
+            if dupes:
+                raise GridTraceCountError(
+                    f"duplicate dim tuple: {dupes[0].asDict()}"
+                )
         t0 = _mark("grid_qc_s", t0)
 
-        # A2: dim tables, collected once to tiny literals — pass 2 joins
-        # broadcast against these, and the store write re-uses them.
+        # A2: dim tables built on the driver from the sorted values — pass
+        # 2 joins broadcast against these, and the store write re-uses them.
         dim_tables = {
-            d: _literal(spark, grid.dim_values(headers, d)) for d in spatial
+            d: _dim_table(spark, headers.schema[d], qc[d]) for d in spatial
         }
-        dim_sizes = {d: dim_tables[d].count() for d in spatial}
         header_cols = headers.columns
         t0 = _mark("dim_tables_s", t0)
 

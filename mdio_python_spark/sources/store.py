@@ -20,6 +20,8 @@ import json
 import os
 from dataclasses import dataclass
 
+import numpy as np
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,6 +38,8 @@ class OpenedStore:
     dataset: Dataset
     path: str
     chunks: dict[str, int]
+    # the dims/<dim> tables held on the driver: (values, <dim>_idx) arrays
+    dim_index: dict[str, tuple[np.ndarray, np.ndarray]]
 
     @property
     def spatial_dims(self) -> list[str]:
@@ -125,21 +129,35 @@ def write_manifest(dataset: Dataset, path: str, chunks: dict[str, int]) -> None:
 
 
 def open_store(spark: SparkSession, path: str) -> OpenedStore:
-    """``open_mdio`` analog (S4): lazy DataFrame + manifest round-trip."""
+    """``open_mdio`` analog (S4): lazy trace DataFrame + manifest round-trip.
+
+    The tiny ``dims/<dim>`` tables (one row per dim value) are read once,
+    with pyarrow on the driver, and kept in memory: ``dims`` serves them
+    as Arrow ``LocalRelation`` DataFrames (joins and collects against them
+    run no Spark job over them), and ``dim_index`` holds their columns as
+    numpy arrays for ``slice_traces``' value -> index lookup. Opening a
+    store launches no Spark job for the dims."""
+    import pyarrow.parquet as pq
+
     with open(os.path.join(path, MANIFEST)) as f:
         manifest = json.load(f)
     dataset = Dataset.model_validate(manifest["dataset"])
     traces = spark.read.parquet(os.path.join(path, "traces"))
-    dims = {
-        d: spark.read.parquet(os.path.join(path, "dims", d))
-        for d in os.listdir(os.path.join(path, "dims"))
-    }
+    dims, dim_index = {}, {}
+    for d in os.listdir(os.path.join(path, "dims")):
+        table = pq.read_table(os.path.join(path, "dims", d))
+        dims[d] = spark.createDataFrame(table)
+        dim_index[d] = (
+            table.column(d).to_numpy(),
+            table.column(f"{d}_idx").to_numpy(),
+        )
     return OpenedStore(
         traces=traces,
         dims=dims,
         dataset=dataset,
         path=path,
         chunks={k: int(v) for k, v in manifest.get("chunks", {}).items()},
+        dim_index=dim_index,
     )
 
 
@@ -152,30 +170,26 @@ def slice_traces(
     A plain ``WHERE dim BETWEEN lo AND hi`` cannot prune the store's
     ``<dim>_chunk=`` partition directories (Catalyst can't know chunk ids
     are a function of dim values), so every chunk's footers would be
-    opened at 100 TB. Here the value range is translated driver-side to
-    an index range via the tiny sorted dim table, the index range to a
+    opened at 100 TB. Here the value range is translated to an index range
+    (min/max ``<dim>_idx`` over the dim values inside it) from the
+    driver-resident dim table ``open_store`` loaded, the index range to a
     chunk range, and BOTH predicates are applied — the scan's
     ``PartitionFilters`` then skip whole chunk directories (asserted by
-    ``tests/test_store_pruning.py``). An empty value range short-circuits
-    to an empty frame with the same schema.
+    ``tests/test_store_pruning.py``). Building the slice runs no Spark
+    job. An empty value range short-circuits to an empty frame with the
+    same schema.
     """
     sel = store.traces
     for dim, (lo, hi) in predicates.items():
         chunk = store.chunks.get(dim, 1)
-        bounds = (
-            store.dims[dim]
-            .where(F.col(dim).between(lo, hi))
-            .agg(
-                F.min(f"{dim}_idx").alias("lo"), F.max(f"{dim}_idx").alias("hi")
-            )
-            .collect()[0]
-        )
-        if bounds["lo"] is None:
+        values, idx = store.dim_index[dim]
+        inside = idx[(values >= lo) & (values <= hi)]
+        if inside.size == 0:
             return store.traces.where(F.lit(False))
         sel = sel.where(
             F.col(dim).between(lo, hi)
             & F.col(f"{dim}_chunk").between(
-                bounds["lo"] // chunk, bounds["hi"] // chunk
+                int(inside.min()) // chunk, int(inside.max()) // chunk
             )
         )
     return sel

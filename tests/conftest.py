@@ -27,6 +27,12 @@ def spark():
     yield get_spark("mdio-spark-tests")
 
 
+def next_job_id(spark) -> int:
+    """The id the DAG scheduler gives the next Spark job: the difference
+    of two readings is the number of jobs launched between them."""
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

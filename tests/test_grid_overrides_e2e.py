@@ -14,6 +14,7 @@ from tests.segy_factory import FIELD_OFFSETS, write_segy_file
 
 from mdio_python_spark.pipelines.ingest import (
     GridTraceCountError,
+    GridTraceSparsityError,
     segy_to_store,
 )
 from mdio_python_spark.schemas import GridOverrides, default_registry
@@ -97,8 +98,33 @@ def test_duplicate_tuples_raise_without_override(tmp_path, spark, streamer_templ
     path = str(tmp_path / "dup.sgy")
     _make_streamer(path, "A", duplicate=True)
     template = _streamer_template_no_coords(streamer_template)
-    with pytest.raises(GridTraceCountError):
+    with pytest.raises(GridTraceCountError) as err:
         segy_to_store(spark, path, str(tmp_path / "store"), template, header_spec=SPEC)
+    # the message names the duplicated tuple (headers[0]) and its count
+    msg = str(err.value)
+    for part in ("'shot_point': 1", "'cable': 101", "'channel': 1", "'n_traces': 2"):
+        assert part in msg, msg
+
+
+def test_sparse_grid_raises_with_counts(tmp_path, spark):
+    """Grid QC (A6) errors above 10 grid cells per live trace: 11 traces
+    on the diagonal of an 11 x 11 grid (ratio 11) raise with both
+    counts; 10 traces on a 10 x 10 diagonal (ratio 10) are accepted."""
+    template = default_registry().get("PostStack3DTime").model_copy(
+        update={"coordinates": []}
+    )
+    for n in (11, 10):
+        path = str(tmp_path / f"diag{n}.sgy")
+        headers = [{"inline": i, "crossline": i} for i in range(1, n + 1)]
+        write_segy_file(path, headers, np.ones((n, NS), dtype=np.float32))
+        store_path = str(tmp_path / f"store{n}")
+        if n == 11:
+            with pytest.raises(GridTraceSparsityError, match="grid cells 121 vs traces 11"):
+                segy_to_store(spark, path, store_path, template, header_spec=SPEC)
+        else:
+            segy_to_store(spark, path, store_path, template, header_spec=SPEC)
+            st = open_store(spark, store_path)
+            assert st.traces.count() == n
 
 
 def test_duplicates_override_adds_trace_dim(tmp_path, spark, streamer_template):

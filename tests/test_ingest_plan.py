@@ -13,6 +13,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from tests.conftest import next_job_id
 from tests.segy_factory import FIELD_OFFSETS, write_segy_file
 
 from mdio_python_spark.operators import grid as grid_mod
@@ -40,13 +41,9 @@ def poststack_file(tmp_path):
     return path, samples
 
 
-def test_trace_pass_single_hash_exchange(tmp_path, spark, poststack_file, monkeypatch):
-    """The trace-pass payload plan never sort-merge-joins or windows the
-    payload, and carries AT MOST the one chunk-key hash exchange — ZERO
-    when the header stats prove the file grid-ordered (round-8 direct
-    write: each scan task lands in O(1) chunk dirs, so the consolidation
-    shuffle is skipped; a scrambled file keeps exactly one)."""
-    path, samples = poststack_file
+def _capture_write_plan(monkeypatch) -> dict:
+    """Spy on store.write_data: records the executed plan of the trace
+    write (chunk keys + optional exchange) and the write mode."""
     captured = {}
     orig = store_mod.write_data
 
@@ -66,12 +63,26 @@ def test_trace_pass_single_hash_exchange(tmp_path, spark, poststack_file, monkey
 
     monkeypatch.setattr(store_mod, "write_data", spy)
     monkeypatch.setattr(ing.store, "write_data", spy)
+    return captured
 
-    tmpl = default_registry().get("PostStack3DTime").model_copy(
+
+def _poststack_template():
+    return default_registry().get("PostStack3DTime").model_copy(
         update={"coordinates": []}
     )
+
+
+def test_trace_pass_single_hash_exchange(tmp_path, spark, poststack_file, monkeypatch):
+    """The trace-pass payload plan never sort-merge-joins or windows the
+    payload, and carries AT MOST the one chunk-key hash exchange — ZERO
+    when the header stats prove the file grid-ordered (round-8 direct
+    write: each scan task lands in O(1) chunk dirs, so the consolidation
+    shuffle is skipped; a scrambled file keeps exactly one)."""
+    path, samples = poststack_file
+    captured = _capture_write_plan(monkeypatch)
     ds = ing.segy_to_store(
-        spark, path, str(tmp_path / "store"), tmpl, header_spec=SPEC
+        spark, path, str(tmp_path / "store"), _poststack_template(),
+        header_spec=SPEC,
     )
 
     plan = captured["plan"]
@@ -82,6 +93,17 @@ def test_trace_pass_single_hash_exchange(tmp_path, spark, poststack_file, monkey
     assert plan.count("Exchange hashpartitioning") == 0, plan
     assert "SortMergeJoin" not in plan, plan
     assert "WindowExec" not in plan, plan
+    # every broadcast side is a driver-side LocalTableScan (the Arrow dim
+    # tables): no parallelized literal whose broadcast launches jobs
+    lines = plan.splitlines()
+    build_sides = [
+        lines[i + 1].lstrip(" :+-")
+        for i, line in enumerate(lines)
+        if "BroadcastExchange" in line
+    ]
+    assert len(build_sides) == 2, plan  # the inline and crossline dims
+    assert all(side.startswith("LocalTableScan") for side in build_sides), plan
+    assert "ExistingRDD" not in plan and "LogicalRDD" not in plan, plan
 
     # statsV1 folded into the write action: compare to a direct numpy pass
     s = samples.astype(np.float64)
@@ -94,14 +116,76 @@ def test_trace_pass_single_hash_exchange(tmp_path, spark, poststack_file, monkey
     assert st.sum_squares == pytest.approx((nz * nz).sum(), abs=1e-5)
 
 
+def test_ingest_job_count(tmp_path, spark, poststack_file):
+    """The 10 x 10 ingest launches at most 9 Spark jobs: header cache,
+    ONE QC/dim aggregate, the write-plan aggregate, the trace write and
+    the two dim-table writes. It launched 20 when QC, duplicates and
+    each dim table were separate jobs over parallelized literals."""
+    path, _ = poststack_file
+    before = next_job_id(spark)
+    ing.segy_to_store(
+        spark, path, str(tmp_path / "store"), _poststack_template(),
+        header_spec=SPEC,
+    )
+    assert next_job_id(spark) - before <= 9
+
+
+def test_strategy_literals_are_local_relations(spark):
+    """The strategy aux tables built on the driver (Type-B channel minima,
+    Type-B per-line floor minima, the small Type-A dense shot map) are
+    Arrow LocalRelations, and the applying join still rebases channels
+    and shots."""
+    from mdio_python_spark.schemas.overrides import GridOverrides
+
+    class _SchemaStub:
+        dimensions = ()
+        spatial_dims = ["shot_line", "cable", "channel", "shot_index"]
+
+    def is_local(df) -> bool:
+        return df._jdf.queryExecution().optimizedPlan().toString().startswith(
+            "LocalRelation"
+        )
+
+    # Type B channels (sequential across cables), Type B shots (guns
+    # interleaved: gun = 1 + shot % 2)
+    data = [
+        (line, cable, (cable - 101) * 4 + ch, 1 + sp % 2, sp)
+        for line in (1, 2)
+        for sp in range(10, 20)
+        for cable in (101, 102)
+        for ch in range(1, 5)
+    ]
+    headers = spark.createDataFrame(
+        data, "shot_line long, cable long, channel long, gun long, shot_point long"
+    )
+    ov = GridOverrides(auto_channel_wrap=True, auto_shot_wrap=True)
+    plan = ing._build_strategy_plan(spark, headers, _SchemaStub(), ov)
+    assert plan.shot_mode == "floor" and plan.num_guns == 2
+    assert is_local(plan.cable_min) and is_local(plan.line_floor_min)
+    assert plan.cable_min.schema.simpleString() == "struct<cable:bigint,chan_min:bigint>"
+    out = ing._apply_plan(headers, plan)
+    assert {r["channel"] for r in out.select("channel").collect()} == {1, 2, 3, 4}
+    assert {r["shot_index"] for r in out.select("shot_index").collect()} == {0, 1, 2, 3, 4}
+
+    # Type A shots (both guns fire the same shot points) + calculate
+    type_a = spark.createDataFrame(
+        [(line, gun, sp) for line in (1, 2) for gun in (1, 2) for sp in range(10, 15)],
+        "shot_line long, gun long, shot_point long",
+    )
+    dense = ing._build_strategy_plan(
+        spark, type_a, _SchemaStub(), GridOverrides(calculate_shot_index=True)
+    )
+    assert dense.shot_mode == "dense" and is_local(dense.shot_dense)
+
+
 def test_store_roundtrip_values_after_rewrite(tmp_path, spark, poststack_file):
     """Cell assignment via broadcast literals matches the header values:
     every (inline, crossline) cell holds its original trace samples."""
     path, samples = poststack_file
-    tmpl = default_registry().get("PostStack3DTime").model_copy(
-        update={"coordinates": []}
+    ing.segy_to_store(
+        spark, path, str(tmp_path / "store"), _poststack_template(),
+        header_spec=SPEC,
     )
-    ing.segy_to_store(spark, path, str(tmp_path / "store"), tmpl, header_spec=SPEC)
     st = store_mod.open_store(spark, str(tmp_path / "store"))
     rows = st.traces.select(
         "inline", "crossline", "inline_idx", "crossline_idx", "src_trace_idx", "samples"
@@ -181,22 +265,11 @@ def test_scrambled_file_keeps_consolidation_shuffle(tmp_path, spark, monkeypatch
     path = str(tmp_path / "scrambled.sgy")
     write_segy_file(path, cells, samples)
 
-    captured = {}
-    orig = store_mod.write_data
-
-    def spy(traces, dim_tables, store_path, chunks, codec="zstd", direct=False):
-        captured["direct"] = direct
-        return orig(traces, dim_tables, store_path, chunks, codec, direct)
-
-    monkeypatch.setattr(store_mod, "write_data", spy)
-    monkeypatch.setattr(ing.store, "write_data", spy)
-    tmpl = default_registry().get("PostStack3DTime").model_copy(
-        update={"coordinates": []}
-    )
+    captured = _capture_write_plan(monkeypatch)
     sc = {}
     ing.segy_to_store(
-        spark, path, str(tmp_path / "store"), tmpl, header_spec=SPEC,
-        block_size=10, stage_clock=sc,
+        spark, path, str(tmp_path / "store"), _poststack_template(),
+        header_spec=SPEC, block_size=10, stage_clock=sc,
     )
     assert captured["direct"] is False
     assert sc["write_mode"] == "shuffle"

@@ -18,7 +18,10 @@ The e2e correctness of this path is pinned by tests/test_segy_roundtrip.py
 (byte-identical roundtrip at small size); this harness re-asserts the
 byte-identical roundtrip at BOTH sizes. Usage:
 
-    python tools/stress_seismic.py --scales 10,30 --out BENCH_seismic_r08.json
+    python tools/stress_seismic.py --scales 10,30 --out stress_seismic.json
+
+``--out`` defaults to ``stress_seismic.json`` under ``--workdir``, so a
+plain run never overwrites a record checked into the repository.
 
 The synthetic cube is generated with an independent vectorized writer
 against the public SEG-Y rev1 layout (same field offsets as
@@ -282,7 +285,11 @@ def main() -> None:
         default=1_000_000,
         help="base cube trace count (rounded down to a whole inline)",
     )
-    ap.add_argument("--out", default="BENCH_seismic_r08.json")
+    ap.add_argument(
+        "--out",
+        default=None,
+        help="result JSON path (default: <workdir>/stress_seismic.json)",
+    )
     ap.add_argument("--workdir", default="/tmp/mdio_seismic_stress")
     ap.add_argument(
         "--keep-cubes",
@@ -372,9 +379,8 @@ def main() -> None:
         "points": points,
         "superlinear": superlinear,
     }
-    Path(__file__).resolve().parents[1].joinpath(ns.out).write_text(
-        json.dumps(out, indent=1)
-    )
+    out_path = Path(ns.out) if ns.out else work / "stress_seismic.json"
+    out_path.write_text(json.dumps(out, indent=1))
     print(json.dumps(out))
 
 

@@ -141,7 +141,7 @@ def main(argv: list[str] | None = None) -> int:
         import os
         import shutil
 
-        from mdio_python_spark.sources.store import open_store
+        from mdio_python_spark.sources.store import open_store, write_dim_table
 
         if os.path.exists(args.dest):
             if not args.overwrite:
@@ -177,9 +177,7 @@ def main(argv: list[str] | None = None) -> int:
             writer = writer.partitionBy(*chunk_cols)
         writer.parquet(f"{args.dest}/traces")
         for d in st.dims:
-            st.dims[d].coalesce(1).write.mode("overwrite").parquet(
-                f"{args.dest}/dims/{d}"
-            )
+            write_dim_table(st.dims[d], f"{args.dest}/dims/{d}")
         with open(f"{args.src}/manifest.json") as f:
             manifest = json.load(f)
         if args.with_traces:

@@ -2,19 +2,23 @@
 
 Reading (S1/S2/S3, ``src/mdio/segy/file.py:152-186``, ``parsers.py:23-76``,
 ``_raw_trace_wrapper.py:14-49``): the driver scans the 3600-byte file header
-once; trace blocks are then read by executor tasks, each seeking its own
-byte range — the Spark analog of the reference's 10k-trace process-pool
-fan-out, except partitioning is declarative (one input partition per block)
-and decode happens in Arrow-batched numpy, not per row.
+once; each executor task then seeks its own trace block's byte range — the
+Spark analog of the reference's 10k-trace process-pool fan-out, decoded
+per block in numpy, not per row. One decoder, :func:`decode_trace_block`,
+serves :func:`read_traces` (the engine's entry point: it takes a
+header-spec object) and ``format("segy")`` (``segy_datasource``).
 
 Writing (K3/K4, ``segy/blocked_io.py:214-302``, ``creation.py:61-125``):
 ``repartitionByRange(dims) + sortWithinPartitions`` gives totally-ordered
 part files (range partition i holds keys < partition i+1), so the driver's
-in-order concat replaces the reference's hierarchical merge tree.
+in-order concat replaces the reference's hierarchical merge tree; a
+whole-store export in dim order needs no shuffle at all
+(:func:`write_segy_store_aligned`). Both feed ``_encode_trace_block``.
 
+Trace blocks cross the Spark boundary as Arrow only, through
+:mod:`~mdio_python_spark.sources.trace_arrow`; no pandas on any path.
 Scale: at 100 TB the read path is embarrassingly parallel byte-range scans
-(no shuffle); the write path shuffles once on the export sort key — the
-minimum any globally-ordered output requires.
+(no shuffle); the write path shuffles at most once, on the export sort key.
 """
 
 from __future__ import annotations
@@ -22,17 +26,18 @@ from __future__ import annotations
 import io
 import math
 import os
-import shutil
 import time
 from collections.abc import Iterator
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from mdio_python_spark.sources import segy_codec as codec
 from mdio_python_spark.sources import staging as staging_mod
+from mdio_python_spark.sources import trace_arrow
 
 
 @dataclass
@@ -66,11 +71,6 @@ class SegyFileInfo:
     def data_offset(self) -> int:
         """Byte offset of the first trace: 3600 + extended text headers."""
         return codec.FILE_HEADER_BYTES + self.extended_headers * codec.TEXT_HEADER_BYTES
-
-    def sample_labels_us(self) -> np.ndarray:
-        """Sample labels in microvalue units; /1000 normalization (F2)
-        happens in the ingest pipeline."""
-        return np.arange(self.samples_per_trace, dtype=np.int64) * self.sample_interval
 
 
 def segy_file_info(path: str, text_encoding: str = "cp037") -> SegyFileInfo:
@@ -123,6 +123,69 @@ def segy_file_info(path: str, text_encoding: str = "cp037") -> SegyFileInfo:
     )
 
 
+def trace_schema(
+    fields: list[str],
+    raw_header: bool = False,
+    samples: bool = True,
+    sample_stats: bool = False,
+) -> str:
+    """DDL schema of a decoded trace block (see :func:`decode_trace_block`)."""
+    parts = ["src_trace_idx long", *[f"{f} long" for f in fields]]
+    if raw_header:
+        parts.append("raw_header binary")
+    if samples:
+        parts.append("samples array<float>")
+        if sample_stats:
+            parts.append(
+                "n_nz long, s_sum double, s_ssq double, s_min double, s_max double"
+            )
+    return ", ".join(parts)
+
+
+def decode_trace_block(
+    f,
+    info: SegyFileInfo,
+    start: int,
+    n: int,
+    fields: list[str],
+    spec: dict[str, tuple[int, str]] | None = None,
+    raw_header: bool = False,
+    samples: bool = True,
+    sample_stats: bool = False,
+) -> pa.RecordBatch:
+    """The SEG-Y block decoder: traces ``[start, start + n)`` of the open
+    file ``f`` -> one Arrow batch of :func:`trace_schema`. Only ``fields``
+    are decoded (P1 column pruning, ``ingestion/segy/reader.py:48-57``).
+    ``sample_stats`` adds per-trace nonzero-sample partials, the statsV1
+    accumulation the reference folds into its trace workers
+    (``segy/_workers.py:179-194``); a trace with no nonzero sample gets
+    +-inf in ``s_min``/``s_max`` (NaN would poison Spark's min/max)."""
+    f.seek(info.data_offset + start * info.trace_bytes)
+    raw = np.frombuffer(f.read(n * info.trace_bytes), dtype=np.uint8).reshape(
+        n, info.trace_bytes
+    )
+    headers = raw[:, : codec.TRACE_HEADER_BYTES]
+    cols = {"src_trace_idx": np.arange(start, start + n, dtype=np.int64)}
+    cols.update(codec.decode_trace_headers(headers, fields, spec))
+    if raw_header:
+        cols["raw_header"] = trace_arrow.headers_to_arrow(headers)
+    if samples:
+        block = codec.decode_samples(
+            raw[:, codec.TRACE_HEADER_BYTES :], info.data_format
+        ).reshape(n, info.samples_per_trace)
+        cols["samples"] = trace_arrow.samples_to_arrow(block)
+        if sample_stats:
+            s = block.astype(np.float64)
+            nz = s != 0.0
+            masked = np.where(nz, s, 0.0)
+            cols["n_nz"] = nz.sum(axis=1).astype(np.int64)
+            cols["s_sum"] = masked.sum(axis=1)
+            cols["s_ssq"] = (masked * masked).sum(axis=1)
+            cols["s_min"] = np.where(nz, s, np.inf).min(axis=1)
+            cols["s_max"] = np.where(nz, s, -np.inf).max(axis=1)
+    return pa.RecordBatch.from_pydict(cols)
+
+
 def read_traces(
     spark: SparkSession,
     info: SegyFileInfo,
@@ -133,91 +196,40 @@ def read_traces(
     block_size: int = 10_000,
     spec: dict[str, tuple[int, str]] | None = None,
 ) -> DataFrame:
-    """S2/S3 — distributed trace scan: one input partition per trace block.
+    """S2/S3 — distributed trace scan: one input block per ``block_size``
+    traces, each decoded by :func:`decode_trace_block` in a
+    ``mapInArrow`` task. Output schema: :func:`trace_schema`.
 
-    Column pruning is explicit: only ``fields`` are decoded (P1,
-    ``ingestion/segy/reader.py:48-57``). Output schema:
-    ``src_trace_idx long, <field> long ..., [raw_header binary,]
-    [samples array<float>]``.
-
-    ``include_sample_stats`` appends per-trace nonzero-sample partials
-    (``n_nz, s_sum, s_ssq, s_min, s_max``) computed vectorized in numpy at
-    decode time — the statsV1 accumulation the reference folds into its
-    trace workers (``segy/_workers.py:179-194``). Downstream an
-    ``observe()`` over these five longs/doubles yields the dataset summary
-    during the write action with zero extra payload passes. Traces with no
-    nonzero samples carry ±inf sentinels in ``s_min``/``s_max`` (Spark
-    min/max would otherwise be poisoned by NaN ordering).
+    ``include_sample_stats`` appends the per-trace statsV1 partials;
+    downstream an ``observe()`` over them yields the dataset summary
+    during the write action with zero extra payload passes.
     """
-    path = info.path
-    trace_bytes = info.trace_bytes
-    data_offset = info.data_offset
-    ns = info.samples_per_trace
-    data_format = info.data_format
     n_blocks = max(1, math.ceil(info.num_traces / block_size))
-    num_traces = info.num_traces
 
-    parts = [
-        "src_trace_idx long",
-        *[f"{f} long" for f in fields],
-    ]
-    if include_raw_header:
-        parts.append("raw_header binary")
-    if include_samples:
-        parts.append("samples array<float>")
-    if include_sample_stats:
-        parts.append(
-            "n_nz long, s_sum double, s_ssq double, s_min double, s_max double"
-        )
-    schema = ", ".join(parts)
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        with open(path, "rb") as f:
-            for pdf in batches:
-                for block_id in pdf["id"]:
+    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        with open(info.path, "rb") as f:
+            for batch in batches:
+                for block_id in batch.column(0).to_numpy():
                     start = int(block_id) * block_size
-                    n = min(block_size, num_traces - start)
-                    if n <= 0:
-                        continue
-                    f.seek(data_offset + start * trace_bytes)
-                    raw = np.frombuffer(
-                        f.read(n * trace_bytes), dtype=np.uint8
-                    ).reshape(n, trace_bytes)
-                    headers = raw[:, : codec.TRACE_HEADER_BYTES]
-                    cols: dict[str, object] = {
-                        "src_trace_idx": np.arange(start, start + n, dtype=np.int64)
-                    }
-                    cols.update(codec.decode_trace_headers(headers, fields, spec))
-                    if include_raw_header:
-                        hdr_bytes = headers.tobytes()
-                        hb = codec.TRACE_HEADER_BYTES
-                        cols["raw_header"] = [
-                            hdr_bytes[i * hb : (i + 1) * hb] for i in range(n)
-                        ]
-                    if include_samples:
-                        samples = codec.decode_samples(
-                            raw[:, codec.TRACE_HEADER_BYTES :].reshape(n, -1),
-                            data_format,
-                        ).reshape(n, ns)
-                        cols["samples"] = list(samples)
-                        if include_sample_stats:
-                            s = samples.astype(np.float64)
-                            nz = s != 0.0
-                            masked = np.where(nz, s, 0.0)
-                            cols["n_nz"] = nz.sum(axis=1).astype(np.int64)
-                            cols["s_sum"] = masked.sum(axis=1)
-                            cols["s_ssq"] = (masked * masked).sum(axis=1)
-                            cols["s_min"] = np.where(nz, s, np.inf).min(axis=1)
-                            cols["s_max"] = np.where(nz, s, -np.inf).max(axis=1)
-                    yield pd.DataFrame(cols)
+                    n = min(block_size, info.num_traces - start)
+                    if n > 0:
+                        yield decode_trace_block(
+                            f, info, start, n, fields, spec,
+                            raw_header=include_raw_header,
+                            samples=include_samples,
+                            sample_stats=include_sample_stats,
+                        )
 
+    schema = trace_schema(
+        fields, include_raw_header, include_samples, include_sample_stats
+    )
     # contiguous block ranges per partition (spark.range's native
     # slicing — NO round-robin repartition): a task's traces are a
     # contiguous file range, so direct-mode ingest writes each chunk
     # directory from O(1) tasks instead of scattering every task across
     # every directory (measured: ~3.7k tiny store files -> ~1 per chunk)
     blocks = spark.range(0, n_blocks, numPartitions=min(n_blocks, 256))
-    return blocks.mapInPandas(scan, schema=schema)
+    return blocks.mapInArrow(scan, schema=schema)
 
 
 @dataclass
@@ -254,30 +266,25 @@ class SegyWriteSpec:
 
 
 def _encode_trace_block(
-    pdf: pd.DataFrame,
-    use_raw: bool,
-    header_fields: list[str],
-    hdr_spec,
+    samples: np.ndarray,
     data_format: int,
+    raw_header: np.ndarray | None = None,
+    header_fields: dict[str, np.ndarray] | None = None,
+    hdr_spec=None,
 ) -> bytes:
-    """One batch of trace rows -> contiguous SEG-Y trace bytes (verbatim
-    ``raw_header`` when present, re-encoded fields otherwise; samples
-    through the format codec). Shared by the range-shuffle export and
-    the chunk-aligned export so the two paths cannot drift."""
-    n = len(pdf)
-    if use_raw:
-        headers = np.frombuffer(
-            b"".join(pdf["raw_header"]), dtype=np.uint8
-        ).reshape(n, codec.TRACE_HEADER_BYTES)
-    else:
-        headers = codec.encode_trace_headers(
-            {fname: pdf[fname].to_numpy() for fname in header_fields},
-            n,
-            hdr_spec,
+    """One block of traces -> contiguous SEG-Y trace bytes: the verbatim
+    ``[n, 240]`` ``raw_header`` when given, else ``header_fields``
+    re-encoded per ``hdr_spec`` (blank headers when empty); ``samples``
+    ``[n, ns]`` through the format codec. Shared by the range-shuffle
+    export and the chunk-aligned export so the two paths cannot drift."""
+    if raw_header is None:
+        raw_header = codec.encode_trace_headers(
+            header_fields or {}, len(samples), hdr_spec
         )
-    samples = np.stack(pdf["samples"].to_numpy()).astype(np.float32)
-    raw_samples = codec.encode_samples(samples, data_format)
-    return np.concatenate([headers, raw_samples], axis=1).tobytes()
+    raw_samples = codec.encode_samples(
+        samples.astype(np.float32, copy=False), data_format
+    )
+    return np.concatenate([raw_header, raw_samples], axis=1).tobytes()
 
 
 def _export_skeleton(write_spec: SegyWriteSpec, text_encoding: str) -> bytes:
@@ -394,32 +401,37 @@ def write_segy(
         *order_by
     )
 
-    def write_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def write_partition(
+        batches: Iterator[pa.RecordBatch],
+    ) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
-        part_name = f"part-{pid:06d}"
+        part_name = f"part-{TaskContext.get().partitionId():06d}"
         n_written = 0
         with store.open_write(part_name) as f:
-            for pdf in batches:
-                n = len(pdf)
-                if n == 0:
+            for batch in batches:
+                if batch.num_rows == 0:
                     continue
-                f.write(
-                    _encode_trace_block(
-                        pdf, use_raw, header_fields, hdr_spec, data_format
-                    )
+                samples = trace_arrow.samples_from_arrow(batch["samples"])
+                raw = (
+                    trace_arrow.headers_from_arrow(batch["raw_header"])
+                    if use_raw
+                    else None
                 )
-                n_written += n
+                fields = {
+                    name: batch[name].to_numpy(zero_copy_only=False)
+                    for name in header_fields
+                }
+                f.write(
+                    _encode_trace_block(samples, data_format, raw, fields, hdr_spec)
+                )
+                n_written += batch.num_rows
         if n_written == 0:
             store.delete(part_name)
-        yield pd.DataFrame({"partition": [pid], "n_traces": [n_written]})
+        yield pa.RecordBatch.from_pydict({"n_traces": [n_written]})
 
     _t0 = time.perf_counter()
-    counts = ordered.mapInPandas(
-        write_partition, schema="partition int, n_traces long"
-    ).collect()
-    del counts
+    ordered.mapInArrow(write_partition, schema="n_traces long").collect()
     if stage_clock is not None:
         stage_clock["export_encode_s"] = round(time.perf_counter() - _t0, 3)
 
@@ -463,18 +475,13 @@ def write_segy_store_aligned(
     shuffle path streams instead."""
     prefix = f"{dims[0]}_chunk="
     try:
-        entries = [
-            e for e in os.listdir(traces_root) if e.startswith(prefix)
-        ]
+        entries = [e for e in os.listdir(traces_root) if e.startswith(prefix)]
     except OSError:
-        return None
-    if not entries:
         return None
     chunk_dirs = sorted(
         (int(e[len(prefix):]), os.path.join(traces_root, e)) for e in entries
     )
     files_by_chunk: list[tuple[int, list[str]]] = []
-    total_bytes = 0
     for pos, (_, d) in enumerate(chunk_dirs):
         files = sorted(
             os.path.join(root, f)
@@ -485,7 +492,6 @@ def write_segy_store_aligned(
         if not files:
             continue
         files_by_chunk.append((pos, files))
-        total_bytes += sum(os.path.getsize(f) for f in files)
     if not files_by_chunk:
         return None
     # Per-task memory gate on the EXACT decoded size — row counts from
@@ -495,19 +501,13 @@ def write_segy_store_aligned(
     # decodes past 3x, and an over-admitted chunk OOMs the encode task
     # instead of falling back to the streaming shuffle path (ADVICE r8).
     # The exact row basis carries a x3 COPY-HEADROOM factor (ADVICE r9):
-    # encode_chunk holds ~3-4 concurrent copies of the decoded bytes
-    # (concatenated Arrow table, flat numpy array, the flat[order]
-    # reorder copy, the encoded output block — the Arrow table drops
-    # before the output block materializes), so admitting up to
-    # max_part_bytes of DECODED data would peak the task at several
-    # times the budget on incompressible cubes — exactly the OOM the
-    # gate exists to route to the streaming shuffle path instead.
-    import pyarrow.parquet as _pq
-
+    # encode_chunk holds ~3-4 concurrent copies of the decoded bytes (the
+    # concatenated Arrow table, its combined samples, the [order] reorder
+    # copy, the encoded block — the table drops before the block exists).
     ns = write_spec.samples_per_trace
     trace_bytes = 240 + ns * 4
     max_chunk_rows = max(
-        sum(_pq.ParquetFile(f).metadata.num_rows for f in fs)
+        sum(pq.ParquetFile(f).metadata.num_rows for f in fs)
         for _, fs in files_by_chunk
     )
     if max_chunk_rows * trace_bytes * 3 > max_part_bytes:
@@ -516,51 +516,34 @@ def write_segy_store_aligned(
     store = staging_mod.staging_for(
         staging if staging is not None else out_path + ".parts"
     )
-    hdr_spec = codec.DEFAULT_TRACE_HEADER_SPEC
 
-    manifest = spark.createDataFrame(
-        [(pos, fs) for pos, fs in files_by_chunk],
-        "pos int, files array<string>",
-    ).repartition(min(len(files_by_chunk), 512))
-
-    def encode_chunk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
-
-        for bdf in batches:
-            for pos, files in zip(bdf["pos"], bdf["files"]):
-                tables = [pq.read_table(f) for f in files]
-                import pyarrow as pa
-
-                table = pa.concat_tables(tables)
-                use_raw = "raw_header" in table.column_names
-                cols = {d: table.column(d).to_numpy() for d in dims}
-                order = np.lexsort(tuple(cols[d] for d in reversed(dims)))
-                n = len(order)
-                flat = (
-                    table.column("samples")
-                    .combine_chunks()
-                    .flatten()
-                    .to_numpy(zero_copy_only=False)
-                    .reshape(n, ns)
-                )
-                pdf = pd.DataFrame({d: cols[d][order] for d in dims})
-                pdf["samples"] = list(flat[order])
-                if use_raw:
-                    raw = table.column("raw_header").to_pylist()
-                    pdf["raw_header"] = [raw[i] for i in order]
-                # header_fields=[] mirrors store_to_segy -> write_segy
-                # exactly: verbatim raw_header when the store has it,
-                # blank re-encoded headers otherwise
-                block = _encode_trace_block(
-                    pdf, use_raw, [], hdr_spec, data_format
-                )
-                with store.open_write(f"part-{int(pos):06d}") as f:
-                    f.write(block)
-                yield pd.DataFrame({"pos": [int(pos)], "n": [n]})
+    def encode_chunk(task: tuple[int, list[str]]) -> int:
+        pos, files = task
+        table = pa.concat_tables([pq.read_table(f) for f in files])
+        order = np.lexsort(
+            tuple(table.column(d).to_numpy() for d in reversed(dims))
+        )
+        samples = trace_arrow.samples_from_arrow(table["samples"])[order]
+        # blank re-encoded headers when the store has no raw_header,
+        # exactly what store_to_segy -> write_segy writes
+        raw = (
+            trace_arrow.headers_from_arrow(table["raw_header"])[order]
+            if "raw_header" in table.column_names
+            else None
+        )
+        del table
+        with store.open_write(f"part-{pos:06d}") as f:
+            f.write(_encode_trace_block(samples, data_format, raw))
+        return len(order)
 
     _t0 = time.perf_counter()
-    counts = manifest.mapInPandas(encode_chunk, schema="pos int, n long").collect()
-    n_total = int(sum(r["n"] for r in counts))
+    # one task per major chunk, straight from the driver's list (the
+    # compose_parts_ranged shape): no shuffle stage in front of the encode
+    n_total = sum(
+        spark.sparkContext.parallelize(files_by_chunk, len(files_by_chunk))
+        .map(encode_chunk)
+        .collect()
+    )
     if stage_clock is not None:
         stage_clock["export_encode_s"] = round(time.perf_counter() - _t0, 3)
         stage_clock["export_encode_mode"] = "chunk_aligned"

@@ -1,6 +1,6 @@
 """SEG-Y binary codecs: IBM32 floats, EBCDIC text headers, header layouts.
 
-Pure numpy, vectorized — used inside Arrow-batched mapInPandas tasks, never
+Pure numpy, vectorized — used inside Arrow-batched mapInArrow tasks, never
 row-at-a-time. Layouts follow the public SEG-Y rev1 standard; the reference
 delegates this to the external TGSAI/segy library (``src/mdio/segy/file.py``),
 we implement it directly.

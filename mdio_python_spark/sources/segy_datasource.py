@@ -1,18 +1,20 @@
 """SEG-Y as a first-class PySpark DataSource: ``spark.read.format("segy")``.
 
-The Python DataSource API (Spark 4) is the idiomatic packaging of the
-distributed trace scan in :mod:`mdio_python_spark.sources.segy` (SURVEY §7.2:
-"PySpark DataSource with header-only and full-trace modes"): the driver does
-the S1 file-info scan, ``partitions()`` declares one InputPartition per
-trace block (the reference's 10k-trace task unit,
-``src/mdio/segy/parsers.py:27,55``), and each task seeks its own byte range
-and yields Arrow batches — no shuffle, embarrassingly parallel at any file
-size.
+The Python DataSource API (Spark 4) packages the distributed trace scan
+of :mod:`mdio_python_spark.sources.segy` (SURVEY §7.2: "PySpark
+DataSource with header-only and full-trace modes"): the driver does the
+S1 file-info scan, ``partitions()`` declares one InputPartition per trace
+block (the reference's 10k-trace task unit,
+``src/mdio/segy/parsers.py:27,55``), and each task decodes its block with
+the same :func:`~mdio_python_spark.sources.segy.decode_trace_block` that
+``segy.read_traces`` runs — one decoder, one Arrow batch per block, no
+shuffle at any file size.
 
 Column pruning is option-driven (``fields``): only requested header fields
-are decoded (P1, ``ingestion/segy/reader.py:48-57``). The plain-function
-path (``segy.read_traces``) remains for callers that need a custom header
-spec object; both share the same codec.
+are decoded (P1, ``ingestion/segy/reader.py:48-57``) with the default
+header spec. Options carry strings only, so callers that need a custom
+header-spec object or a per-file trace-ordinal offset (ingest) call
+``segy.read_traces`` instead.
 
 Usage::
 
@@ -29,36 +31,10 @@ from __future__ import annotations
 import math
 from collections.abc import Iterator
 
-import numpy as np
+import pyarrow as pa
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-try:  # pragma: no cover - import surface depends on pyspark build
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-    HAVE_DATASOURCE_API = True
-except ImportError:  # pragma: no cover
-    HAVE_DATASOURCE_API = False
-
-    class DataSource:  # type: ignore[no-redef]
-        def __init__(self, options=None):
-            self.options = options or {}
-
-    class DataSourceReader:  # type: ignore[no-redef]
-        pass
-
-    class InputPartition:  # type: ignore[no-redef]
-        def __init__(self, value):
-            self.value = value
-
-
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    FloatType,
-    LongType,
-    StructField,
-    StructType,
-)
-
+from mdio_python_spark.sources import segy
 from mdio_python_spark.sources import segy_codec as codec
 
 DEFAULT_FIELDS = "inline,crossline"
@@ -90,16 +66,6 @@ def _parse_options(options) -> dict:
     }
 
 
-def _build_schema(opts: dict) -> StructType:
-    fields = [StructField("src_trace_idx", LongType())]
-    fields += [StructField(f, LongType()) for f in opts["fields"]]
-    if opts["raw_header"]:
-        fields.append(StructField("raw_header", BinaryType()))
-    if opts["samples"]:
-        fields.append(StructField("samples", ArrayType(FloatType())))
-    return StructType(fields)
-
-
 class SegyDataSource(DataSource):
     """``format("segy")`` — batch reader over a SEG-Y file."""
 
@@ -107,78 +73,37 @@ class SegyDataSource(DataSource):
     def name(cls) -> str:
         return "segy"
 
-    def schema(self) -> StructType:
-        return _build_schema(_parse_options(self.options))
+    def schema(self) -> str:
+        opts = _parse_options(self.options)
+        return segy.trace_schema(opts["fields"], opts["raw_header"], opts["samples"])
 
-    def reader(self, schema: StructType) -> "SegyReader":
+    def reader(self, schema) -> "SegyReader":
         return SegyReader(self.options)
 
 
 class SegyReader(DataSourceReader):
     def __init__(self, options) -> None:
         self.opts = _parse_options(options)
-        # S1 driver-side scan; the small info dict ships to every task.
-        from mdio_python_spark.sources.segy import segy_file_info
-
-        info = segy_file_info(self.opts["path"], self.opts["text_encoding"])
-        self.num_traces = info.num_traces
-        self.trace_bytes = info.trace_bytes
-        self.samples_per_trace = info.samples_per_trace
-        self.data_format = info.data_format
-        self.data_offset = info.data_offset
+        # S1 driver-side scan; the small info record ships to every task
+        self.info = segy.segy_file_info(self.opts["path"], self.opts["text_encoding"])
 
     def partitions(self) -> list[InputPartition]:
-        n_blocks = max(1, math.ceil(self.num_traces / self.opts["block_size"]))
+        n_blocks = max(1, math.ceil(self.info.num_traces / self.opts["block_size"]))
         return [InputPartition(i) for i in range(n_blocks)]
 
-    def read(self, partition: InputPartition) -> Iterator:
-        import pyarrow as pa
-
+    def read(self, partition: InputPartition) -> Iterator[pa.RecordBatch]:
         opts = self.opts
-        block = partition.value
-        start = block * opts["block_size"]
-        n = min(opts["block_size"], self.num_traces - start)
+        start = partition.value * opts["block_size"]
+        n = min(opts["block_size"], self.info.num_traces - start)
         if n <= 0:
             return
         with open(opts["path"], "rb") as f:
-            f.seek(self.data_offset + start * self.trace_bytes)
-            raw = np.frombuffer(
-                f.read(n * self.trace_bytes), dtype=np.uint8
-            ).reshape(n, self.trace_bytes)
-        headers = raw[:, : codec.TRACE_HEADER_BYTES]
-        arrays = [pa.array(np.arange(start, start + n, dtype=np.int64))]
-        names = ["src_trace_idx"]
-        decoded = codec.decode_trace_headers(headers, opts["fields"])
-        for fname in opts["fields"]:
-            arrays.append(pa.array(decoded[fname]))
-            names.append(fname)
-        if opts["raw_header"]:
-            hdr_bytes = headers.tobytes()
-            hb = codec.TRACE_HEADER_BYTES
-            arrays.append(
-                pa.array(
-                    [hdr_bytes[i * hb : (i + 1) * hb] for i in range(n)],
-                    type=pa.binary(),
-                )
+            yield segy.decode_trace_block(
+                f, self.info, start, n, opts["fields"],
+                raw_header=opts["raw_header"], samples=opts["samples"],
             )
-            names.append("raw_header")
-        if opts["samples"]:
-            samples = codec.decode_samples(
-                raw[:, codec.TRACE_HEADER_BYTES :].reshape(n, -1), self.data_format
-            ).reshape(n, self.samples_per_trace)
-            flat = pa.array(samples.reshape(-1), type=pa.float32())
-            offsets = pa.array(
-                np.arange(0, (n + 1) * self.samples_per_trace, self.samples_per_trace, dtype=np.int32)
-            )
-            arrays.append(pa.ListArray.from_arrays(offsets, flat))
-            names.append("samples")
-        yield pa.RecordBatch.from_arrays(arrays, names=names)
 
 
-def register(spark) -> bool:
-    """Register ``format("segy")`` on this session; False if the running
-    pyspark lacks the Python DataSource API."""
-    if not HAVE_DATASOURCE_API:
-        return False
+def register(spark) -> None:
+    """Register ``format("segy")`` on this session."""
     spark.dataSource.register(SegyDataSource)
-    return True

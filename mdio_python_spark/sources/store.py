@@ -5,7 +5,8 @@ Layout (replacing ``src/mdio/api/io.py:38-107`` open/to_mdio):
     <store>/
       manifest.json      Dataset document (schemas.dataset) + chunk config
       traces/            long-format Parquet, partitioned by <dim>_chunk
-      dims/<dim>/        tiny Parquet dim tables (value, 0-based idx)
+      dims/<dim>/        tiny Parquet dim tables (value, 0-based idx),
+                         written and read with pyarrow on the driver
 
 One row per live trace (sparse storage — dead cells simply absent; the
 live mask is row existence). Chunk-key partition columns give Catalyst
@@ -18,6 +19,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 from dataclasses import dataclass
 
 import numpy as np
@@ -93,9 +95,25 @@ def write_data(
         .parquet(os.path.join(path, "traces"))
     )
     for dim, table in dim_tables.items():
-        table.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(path, "dims", dim)
-        )
+        write_dim_table(table, os.path.join(path, "dims", dim))
+
+
+def write_dim_table(table: DataFrame, out_dir: str) -> None:
+    """Write one tiny dim table as ``<out_dir>/part-00000.parquet`` with
+    pyarrow, replacing ``out_dir``. The dim tables ingest builds and
+    ``open_store`` serves are Arrow ``LocalRelation``s, whose ``collect``
+    runs no Spark job; column types and nullability are the table's."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    rows = [r.asDict() for r in table.collect()]
+    shutil.rmtree(out_dir, ignore_errors=True)
+    os.makedirs(out_dir)
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=to_arrow_schema(table.schema)),
+        os.path.join(out_dir, "part-00000.parquet"),
+    )
 
 
 def write_manifest(dataset: Dataset, path: str, chunks: dict[str, int]) -> None:

@@ -30,10 +30,12 @@ an explicit error naming the feature rather than misparsed;
 
 Scale shape: reading is one Spark task per *spatial chunk column* (all
 vertical chunks of one spatial chunk tuple), each task touching only its
-own chunk files — embarrassingly parallel, zero shuffle. Writing reuses
-the store's chunk-key partitioning: ``applyInPandas`` over chunk-key
-groups, one group = one set of chunk files, no extra exchange beyond the
-groupBy's (which matches the store's existing layout).
+own chunk files — embarrassingly parallel, zero shuffle (``mapInArrow``).
+Writing reuses the store's chunk-key partitioning: ``applyInArrow`` over
+chunk-key groups, one group = one set of chunk files, no extra exchange
+beyond the groupBy's (which matches the store's existing layout). Trace
+blocks cross the Spark boundary through
+:mod:`~mdio_python_spark.sources.trace_arrow`, never through pandas.
 """
 
 from __future__ import annotations
@@ -41,13 +43,16 @@ from __future__ import annotations
 import json
 import math
 import os
+import struct
 import zlib
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from mdio_python_spark.sources import trace_arrow
 
 
 class UnsupportedCodecError(ValueError):
@@ -80,17 +85,10 @@ def _decode_chunk(
         except blosc1.UnsupportedBloscError as exc:
             raise UnsupportedCodecError(str(exc)) from exc
     if cid == "zstd":
-        import pyarrow as pa
-
-        buf = pa.Codec("zstd").decompress(raw, out_size)
-        return buf.to_pybytes()
+        return pa.Codec("zstd").decompress(raw, out_size).to_pybytes()
     if cid == "lz4":
         # numcodecs LZ4 framing: int32-LE original size + LZ4 block data
-        import struct as _struct
-
-        import pyarrow as pa
-
-        (n,) = _struct.unpack_from("<i", raw, 0)
+        (n,) = struct.unpack_from("<i", raw, 0)
         return pa.Codec("lz4_raw").decompress(raw[4:], n).to_pybytes()
     if cid in ("zfpy", "zfp"):
         # The reference's opt-in lossy path (builder/schemas/
@@ -142,16 +140,10 @@ def _encode_chunk(raw: bytes, compressor: dict | None) -> bytes:
         except blosc1.UnsupportedBloscError as exc:
             raise UnsupportedCodecError(str(exc)) from exc
     if cid == "zstd":
-        import pyarrow as pa
-
         codec = pa.Codec("zstd", compression_level=compressor.get("level", 5))
         return codec.compress(raw).to_pybytes()
     if cid == "lz4":
-        import struct as _struct
-
-        import pyarrow as pa
-
-        return _struct.pack("<i", len(raw)) + pa.Codec("lz4_raw").compress(
+        return struct.pack("<i", len(raw)) + pa.Codec("lz4_raw").compress(
             raw
         ).to_pybytes()
     raise UnsupportedCodecError(f"cannot encode with compressor {cid!r}")
@@ -834,8 +826,8 @@ def zarr_cube_to_df(
     )
 
     def scan(batches):
-        for pdf in batches:
-            for task_id in pdf["id"]:
+        for batch in batches:
+            for task_id in batch.column(0).to_numpy():
                 cidx = np.unravel_index(int(task_id), spatial_grid)
                 lo = [i * c for i, c in zip(cidx, var.chunks[:-1])]
                 hi = [
@@ -862,11 +854,11 @@ def zarr_cube_to_df(
                     )
                     cols[f"{d}_idx"] = gidx.astype(np.int64)
                 flat = block.reshape(*nspatial, var.shape[-1])[live]
-                cols["samples"] = list(flat.astype(np.float32))
-                yield pd.DataFrame(cols)
+                cols["samples"] = trace_arrow.samples_to_arrow(flat)
+                yield pa.RecordBatch.from_pydict(cols)
 
     blocks = spark.range(n_tasks).repartition(min(n_tasks, 256))
-    return blocks.mapInPandas(scan, schema=schema)
+    return blocks.mapInArrow(scan, schema=schema)
 
 
 def store_to_zarr(
@@ -883,7 +875,7 @@ def store_to_zarr(
     :func:`zarr_cube_to_df`).
 
     Chunk boundaries = the store's chunk keys, so the write is
-    ``applyInPandas`` over the store's existing partition layout — each
+    ``applyInArrow`` over the store's existing partition layout — each
     group materializes its dense block and writes its chunk files.
     Returns the number of traces written.
 
@@ -893,7 +885,7 @@ def store_to_zarr(
     chunk, so read granularity is unchanged while file count drops
     ``shard_factor``^ndim-fold — the object-store listing/IOPS fix
     sharding exists for). The write groups by SHARD key instead of chunk
-    key: still one ``applyInPandas`` pass over one exchange, each task
+    key: still one ``applyInArrow`` pass over one exchange, each task
     holding one shard block in memory — size the factor so
     chunk_bytes * factor^ndim fits the executor.
     """
@@ -942,18 +934,10 @@ def store_to_zarr(
         with open(os.path.join(zarr_path, ".zattrs"), "w") as f:
             json.dump({"attributes": attrs}, f, default=str)
 
-    # dimension coordinates (tiny, driver-side)
-    dim_values: dict[str, np.ndarray] = {}
+    # dimension coordinates: the driver-resident dim tables, in idx order
     for d in spatial:
-        vals = (
-            st.dims[d]
-            .orderBy(f"{d}_idx")
-            .select(d)
-            .toPandas()[d]
-            .to_numpy()
-            .astype(np.int64)
-        )
-        dim_values[d] = vals
+        values, idx = st.dim_index[d]
+        vals = values[np.argsort(idx)].astype(np.int64)
         write_array_meta(
             zarr_path, d, (len(vals),), (len(vals),), np.dtype("<i8"), [d],
             compressor,
@@ -1034,57 +1018,35 @@ def store_to_zarr(
     # each task materializes one shard block instead of one chunk block
     group_spatial = spatial_shard if sf_ is not None else spatial_chunks
 
-    def write_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        if sf_ is not None:
-            cidx = tuple(int(pdf[c].iloc[0]) // sf_ for c in chunk_cols)
+    def put(name, cidx, data, chunks, fill) -> None:
+        """One chunk file, or one shard file of sf_^ndim spatial chunks."""
+        if sf_ is None:
+            write_chunk(
+                zarr_path, name, cidx, data, chunks, compressor, fill,
+                zarr_format=zarr_format,
+            )
         else:
-            cidx = tuple(int(pdf[c].iloc[0]) for c in chunk_cols)
+            shard = (*group_spatial, *chunks[n_spatial:])
+            write_shard(zarr_path, name, cidx, data, shard, chunks, compressor, fill)
+
+    def write_group(table: pa.Table) -> pa.Table:
+        cidx = tuple(table[c][0].as_py() // (sf_ or 1) for c in chunk_cols)
         lo = [i * c for i, c in zip(cidx, group_spatial)]
         block_shape = tuple(
             min(c, s - l) for c, s, l in zip(group_spatial, shape, lo)
         )
         block = np.zeros((*block_shape, ns), dtype=np.float32)
         live = np.zeros(block_shape, dtype=bool)
-        local = tuple(
-            pdf[ic].to_numpy() - l for ic, l in zip(idx_cols, lo)
-        )
-        samples = np.stack(
-            [np.asarray(s, dtype=np.float32) for s in pdf["samples"]]
-        )
-        block[local] = samples
+        local = tuple(table[ic].to_numpy() - l for ic, l in zip(idx_cols, lo))
+        block[local] = trace_arrow.samples_from_arrow(table["samples"])
         live[local] = True
-        if sf_ is not None:
-            write_shard(
-                zarr_path, var_name, (*cidx, 0), block,
-                (*spatial_shard, ns), var_chunks, compressor, 0,
-            )
-            write_shard(
-                zarr_path, "trace_mask", cidx, live,
-                spatial_shard, spatial_chunks, compressor, False,
-            )
-        else:
-            write_chunk(
-                zarr_path, var_name, (*cidx, 0), block, var_chunks,
-                compressor, 0, zarr_format=zarr_format,
-            )
-            write_chunk(
-                zarr_path, "trace_mask", cidx, live, spatial_chunks,
-                compressor, False, zarr_format=zarr_format,
-            )
+        put(var_name, (*cidx, 0), block, var_chunks, 0)
+        put("trace_mask", cidx, live, spatial_chunks, False)
         for cname in coord_names:
             cblock = np.zeros(block_shape, dtype=np.float64)
-            cblock[local] = pdf[cname].to_numpy(dtype=np.float64)
-            if sf_ is not None:
-                write_shard(
-                    zarr_path, cname, cidx, cblock, spatial_shard,
-                    spatial_chunks, compressor, 0,
-                )
-            else:
-                write_chunk(
-                    zarr_path, cname, cidx, cblock, spatial_chunks,
-                    compressor, 0, zarr_format=zarr_format,
-                )
-        return pd.DataFrame({"n": [len(pdf)]})
+            cblock[local] = table[cname].to_numpy().astype(np.float64)
+            put(cname, cidx, cblock, spatial_chunks, 0)
+        return pa.table({"n": [table.num_rows]})
 
     if sf_ is not None:
         group_keys = [
@@ -1094,7 +1056,7 @@ def store_to_zarr(
     else:
         grouped = traces.groupBy(*chunk_cols)
     counts = (
-        grouped.applyInPandas(write_group, schema="n long")
+        grouped.applyInArrow(write_group, schema="n long")
         .agg(F.sum("n").alias("n"))
         .collect()[0]["n"]
     )

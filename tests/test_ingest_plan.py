@@ -117,17 +117,19 @@ def test_trace_pass_single_hash_exchange(tmp_path, spark, poststack_file, monkey
 
 
 def test_ingest_job_count(tmp_path, spark, poststack_file):
-    """The 10 x 10 ingest launches at most 9 Spark jobs: header cache,
-    ONE QC/dim aggregate, the write-plan aggregate, the trace write and
-    the two dim-table writes. It launched 20 when QC, duplicates and
-    each dim table were separate jobs over parallelized literals."""
+    """The 10 x 10 ingest launches at most 7 Spark jobs, among them the
+    header cache, ONE QC/dim aggregate, the write-plan aggregate and the
+    trace write; the dim tables are written with pyarrow on the driver.
+    It launched 20 when QC, duplicates and each dim table were separate
+    jobs over parallelized literals, and 9 while each dim table was a
+    Spark write."""
     path, _ = poststack_file
     before = next_job_id(spark)
     ing.segy_to_store(
         spark, path, str(tmp_path / "store"), _poststack_template(),
         header_spec=SPEC,
     )
-    assert next_job_id(spark) - before <= 9
+    assert next_job_id(spark) - before <= 7
 
 
 def test_strategy_literals_are_local_relations(spark):

@@ -1,4 +1,4 @@
-"""Arrow-batched winnowing fingerprint selection.
+"""Arrow-batched text kernels: winnowing, SimHash, shingle sets and gram counts.
 
 The declarative :func:`operators.text.winnow_fingerprint_set` builds an
 O(chars) posexplode of per-position k-gram hashes, a per-doc window min,
@@ -6,7 +6,7 @@ and a distinct — three corpus-sized stages whose row-materialization
 cost made ``winnowing_dup_pairs`` the top absolute 100x stress row
 (273.6 s; VERDICT r7 item 4 — r7 already proved the HASH was not the
 bottleneck, the explode + window were). This module computes the
-IDENTICAL fingerprint set per document inside one ``mapInPandas`` pass:
+IDENTICAL fingerprint set per document inside one ``mapInArrow`` pass:
 
 - k-gram hashes: Spark's ``xxhash64`` (seed 42, XXH64 over UTF8 bytes)
   re-implemented as vectorized numpy uint64 arithmetic for the 16-byte
@@ -16,13 +16,20 @@ IDENTICAL fingerprint set per document inside one ``mapInPandas`` pass:
   property-tested against ``F.xxhash64`` (tests/test_text_arrow.py).
 - window min: an O(N log w) doubling tournament over the position
   stream (signed-int64 comparisons, matching ``min`` over LONG).
-- distinct: one lexsort per batch — fingerprints never leave the task
+- distinct: one lexsort per chunk — fingerprints never leave the task
   until deduplicated.
 
 The per-document work never crosses rows, so the pass is shuffle-free:
 the downstream pair join (``dedup.bucket_pair_counts``) receives the
 ~2/(w+1)-selected fingerprints directly — the declarative plan's
 O(chars) doc_id exchange and distinct exchange disappear.
+
+Every kernel here is a ``mapInArrow`` pass over ``(id, text-or-tokens)``
+batches, cut by the one doc chunker :func:`_chunked`: at most a fixed
+doc count per chunk and, past :data:`DOC_BYTE_ALLOWANCE` input bytes per
+doc on average, fewer — a doc is never split, so per-doc output does not
+depend on the cut. Kernels that build int32 Arrow offsets raise
+``trace_arrow.OffsetOverflowError`` rather than wrap.
 
 Bit-identity with the declarative path (same (doc_id, n_kgrams, wmin)
 set) is pinned by tests/test_text_arrow.py at sf0.001/sf0.01 plus a
@@ -32,11 +39,13 @@ unchanged.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
+
+from mdio_python_spark.sources.trace_arrow import int32_offsets
 
 _M64 = (1 << 64) - 1
 _P1 = 0x9E3779B185EBCA87
@@ -349,20 +358,15 @@ def _winnow_ascii_block(
 
 
 def _winnow_batch(
-    pdf: pd.DataFrame,
-    k: int,
-    w: int,
-    text_col: str,
-    id_col: str,
-    use_md5: bool,
+    chunk: pa.RecordBatch, k: int, w: int, use_md5: bool
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
-    """Distinct (doc_id, n_kgrams, wmin) arrays for one Arrow batch —
-    each document's fingerprint rows contiguous, wmin ascending within
-    a document. ASCII docs at k=16 take the vectorized block kernel;
-    anything else (non-ASCII text, or a non-16 k, for which no
-    16-byte-specialized vector hash applies) takes the per-doc scalar
-    loop over the same character-sliced, UTF8-hashed k-grams Spark
-    evaluates. ``use_md5`` selects the hash64/md5 contract hash
+    """Distinct (doc_id, n_kgrams, wmin) arrays for one ``(id, text)``
+    doc chunk — each document's fingerprint rows contiguous, wmin
+    ascending within a document. ASCII docs at k=16 take the vectorized
+    block kernel; anything else (non-ASCII text, or a non-16 k, for
+    which no 16-byte-specialized vector hash applies) takes the per-doc
+    scalar loop over the same character-sliced, UTF8-hashed k-grams
+    Spark evaluates. ``use_md5`` selects the hash64/md5 contract hash
     (published wmin/fp_xor digests) over Spark-native XXH64."""
     scalar_hash = hash64_py if use_md5 else xxh64_bytes
     ids_out: list[np.ndarray] = []
@@ -370,7 +374,7 @@ def _winnow_batch(
     min_out: list[np.ndarray] = []
     texts: list[bytes] = []
     text_ids: list[int] = []
-    for doc_id, raw in zip(pdf[id_col], pdf[text_col]):
+    for doc_id, raw in zip(chunk.column(0).to_pylist(), chunk.column(1).to_pylist()):
         t = (raw or "").strip(" ").lower()
         if len(t) < w + k - 1:
             continue
@@ -401,15 +405,83 @@ def _winnow_batch(
     )
 
 
-def _spread(df: DataFrame, cols: list[str]) -> DataFrame:
+# Input bytes one doc may bring into a kernel chunk on average: a chunk
+# closes early once its docs pass ``max_docs * DOC_BYTE_ALLOWANCE``
+# bytes. 4 KiB is 7x the largest doc of the sf0.001-sf0.1 corpora (577
+# bytes) and above every perfbench doc, so there every chunk is a full
+# doc count; a corpus of larger docs gets proportionally fewer docs per
+# chunk, which bounds each chunk's transients and int32 offsets by
+# bytes instead of by doc count alone.
+DOC_BYTE_ALLOWANCE = 4096
+
+
+def _doc_byte_ends(col) -> np.ndarray:
+    """Input bytes before each doc boundary of a ``string`` or
+    ``list<string>`` column (length n + 1, starting at 0), read from the
+    Arrow offsets without touching the text bytes."""
+    if pa.types.is_list(col.type):
+        voff, _ = _var_buffers(col.values)
+        off = np.asarray(col.offsets, dtype=np.int64)
+        off = voff[off] if len(voff) else np.zeros_like(off)
+    else:
+        off, _ = _var_buffers(col)
+    return off - off[0]
+
+
+def _doc_chunks(
+    batch: pa.RecordBatch, max_docs: int, max_bytes: int
+) -> Iterator[pa.RecordBatch]:
+    """Zero-copy slices of ``batch`` holding at most ``max_docs`` docs and
+    at most ``max_bytes`` bytes of column 1 — except a single doc larger
+    than ``max_bytes``, which is a slice of its own. A doc is never
+    split; an empty batch yields nothing."""
+    if not batch.num_rows:
+        return
+    ends = _doc_byte_ends(batch.column(1))
+    lo = 0
+    while lo < batch.num_rows:
+        fit = int(np.searchsorted(ends, ends[lo] + max_bytes, side="right")) - 1
+        hi = min(lo + max_docs, max(fit, lo + 1))
+        yield batch.slice(lo, hi - lo)
+        lo = hi
+
+
+def _chunked(
+    emit: Callable[[pa.RecordBatch], pa.RecordBatch | None], max_docs: int
+) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
+    """The ``mapInArrow`` function of a text kernel: ``emit`` runs on every
+    :func:`_doc_chunks` slice of every input batch (column 0 the key,
+    column 1 the text or token arrays) and may return None for a chunk
+    with no output rows. The byte budget is fixed here, on the driver,
+    and travels to the workers with the closure."""
+    max_bytes = max_docs * DOC_BYTE_ALLOWANCE
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for chunk in _doc_chunks(batch, max_docs, max_bytes):
+                out = emit(chunk)
+                if out is not None:
+                    yield out
+
+    return run
+
+
+def _spread(df: DataFrame, cols: list) -> DataFrame:
     """Compute-bound map pass: spread across the core budget when the
-    source arrives in fewer splits than cores (same rule as
-    vector_arrow.cell_assignments_arrow)."""
+    source arrives in fewer splits than cores. The one copy of this rule
+    for the text and vector kernels."""
     n_parts = df.sparkSession.sparkContext.defaultParallelism
     source = df.select(*cols)
     if source.rdd.getNumPartitions() < n_parts:
         source = source.repartition(n_parts)
     return source
+
+
+# docs per winnow chunk: the md5 path peaks at ~170 bytes of transients
+# per text byte, so on the sf0.1 corpus a 1024-doc chunk peaks at 51 MB
+# where a whole 5,000-doc batch took 246 MB, and a pass is no slower
+# (1.14 s vs 1.31 s single-threaded; 256-doc chunks 1.18 s)
+_WINNOW_DOCS = 1024
 
 
 def winnow_fingerprint_set_arrow(
@@ -438,22 +510,20 @@ def winnow_fingerprint_set_arrow(
     non-ASCII documents — and every document when k != 16, where no
     16-byte-specialized vector hash applies — fall back to a per-doc
     scalar loop over the same character-sliced, UTF8-hashed k-grams."""
-    out_schema = f"{id_col} long, n_kgrams int, wmin long"
-    source = _spread(df, [id_col, text_col])
 
-    def winnow(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            got = _winnow_batch(pdf, k, w, text_col, id_col, not internal_hash)
-            if got is None:
-                continue
-            ids, nkg, wmin = got
-            yield pd.DataFrame(
-                {id_col: ids, "n_kgrams": nkg.astype(np.int32), "wmin": wmin}
-            )
+    def emit(chunk: pa.RecordBatch) -> pa.RecordBatch | None:
+        got = _winnow_batch(chunk, k, w, not internal_hash)
+        if got is None:
+            return None
+        ids, nkg, wmin = got
+        return pa.RecordBatch.from_arrays(
+            [pa.array(ids), pa.array(nkg.astype(np.int32)), pa.array(wmin)],
+            names=[id_col, "n_kgrams", "wmin"],
+        )
 
-    return source.mapInPandas(winnow, out_schema)
+    return _spread(df, [id_col, text_col]).mapInArrow(
+        _chunked(emit, _WINNOW_DOCS), f"{id_col} long, n_kgrams int, wmin long"
+    )
 
 
 def winnow_fingerprints_arrow(
@@ -467,39 +537,34 @@ def winnow_fingerprints_arrow(
     md5/hash64 contract): per-document (id, n_kgrams, n_fingerprints,
     fp_xor). The count and the order-free XOR digest reduce over each
     document's distinct fingerprint set INSIDE the map task — a document
-    never crosses batches, so the whole query is one shuffle-free pass
+    never crosses chunks, so the whole query is one shuffle-free pass
     (the declarative plan's doc_id window exchange, distinct, and final
     aggregate exchange all disappear). Bit-identity with the declarative
     rollup is pinned by tests/test_text_arrow.py."""
-    out_schema = (
-        f"{id_col} long, n_kgrams int, n_fingerprints long, fp_xor long"
+
+    def emit(chunk: pa.RecordBatch) -> pa.RecordBatch | None:
+        got = _winnow_batch(chunk, k, w, use_md5=True)
+        if got is None:
+            return None
+        ids, nkg, wmin = got
+        # each doc's rows are contiguous: reduce count/xor per group
+        bounds = np.flatnonzero(np.concatenate([[True], ids[1:] != ids[:-1]]))
+        counts = np.diff(np.concatenate([bounds, [len(ids)]]))
+        fp_xor = np.bitwise_xor.reduceat(wmin.view(np.uint64), bounds)
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array(ids[bounds]),
+                pa.array(nkg[bounds].astype(np.int32)),
+                pa.array(counts.astype(np.int64)),
+                pa.array(fp_xor.view(np.int64)),
+            ],
+            names=[id_col, "n_kgrams", "n_fingerprints", "fp_xor"],
+        )
+
+    return _spread(df, [id_col, text_col]).mapInArrow(
+        _chunked(emit, _WINNOW_DOCS),
+        f"{id_col} long, n_kgrams int, n_fingerprints long, fp_xor long",
     )
-    source = _spread(df, [id_col, text_col])
-
-    def winnow_agg(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            got = _winnow_batch(pdf, k, w, text_col, id_col, use_md5=True)
-            if got is None:
-                continue
-            ids, nkg, wmin = got
-            # each doc's rows are contiguous: reduce count/xor per group
-            bounds = np.flatnonzero(
-                np.concatenate([[True], ids[1:] != ids[:-1]])
-            )
-            counts = np.diff(np.concatenate([bounds, [len(ids)]]))
-            fp_xor = np.bitwise_xor.reduceat(wmin.view(np.uint64), bounds)
-            yield pd.DataFrame(
-                {
-                    id_col: ids[bounds],
-                    "n_kgrams": nkg[bounds].astype(np.int32),
-                    "n_fingerprints": counts.astype(np.int64),
-                    "fp_xor": fp_xor.view(np.int64),
-                }
-            )
-
-    return source.mapInPandas(winnow_agg, out_schema)
 
 
 # --- Arrow shingle-set builder (round 10) ----------------------------------
@@ -696,8 +761,6 @@ def simhash_arrow(
     docs whose token array is NULL emit no row, exactly like the
     explode path. Per-bit vote sign: ``v_b = 2*c_b - n >= 0`` with
     ``c_b`` the count of token hashes carrying bit ``b``."""
-    import pyarrow as pa
-
     from pyspark.sql import functions as F
 
     from mdio_python_spark.operators.text import tokens
@@ -708,27 +771,16 @@ def simhash_arrow(
         F.col(id_col), tokens(F.lower(F.col(text_col))).alias("_in")
     )
     source = _spread(src, [id_col, "_in"]) if spread else src
-    out_type = pa.schema([(id_col, pa.int64()), ("simhash", pa.int64())])
-    chunk_docs = 256  # same transient-memory bound as shingle_sets_arrow
 
-    def build(batches):
-        for full in batches:
-            for lo in range(0, full.num_rows, chunk_docs):
-                batch = full.slice(lo, chunk_docs)
-                if batch.num_rows:
-                    yield from _emit(batch)
-
-    def _emit(batch):
-        ids = np.asarray(batch.column(0), dtype=np.int64)
-        lst = batch.column(1)
-        D = len(lst)
+    def emit(chunk: pa.RecordBatch) -> pa.RecordBatch | None:
+        ids = np.asarray(chunk.column(0), dtype=np.int64)
+        lst = chunk.column(1)
         off = np.asarray(lst.offsets, dtype=np.int64)
-        valid = _valid_mask(lst)
         voff_raw, data = _var_buffers(lst.values)
-        ntok = np.where(valid, off[1:] - off[:-1], 0)
+        ntok = np.where(_valid_mask(lst), off[1:] - off[:-1], 0)
         sel = ntok > 0
         if not sel.any():
-            return
+            return None
         tok_idx = np.repeat(off[:-1], ntok) + _ragged_arange(ntok)
         starts = voff_raw[tok_idx]
         h = _md5_hash64_vec(data, starts, voff_raw[tok_idx + 1] - starts)
@@ -738,15 +790,12 @@ def simhash_arrow(
         for b in range(bits):
             c_b = np.add.reduceat((h >> b) & 1, doc_start)
             sim += np.where(2 * c_b >= n_sel, np.int64(1) << b, np.int64(0))
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(ids[sel], type=pa.int64()),
-                pa.array(sim, type=pa.int64()),
-            ],
-            schema=out_type,
+        return pa.RecordBatch.from_arrays(
+            [pa.array(ids[sel]), pa.array(sim)], names=[id_col, "simhash"]
         )
 
-    return source.mapInArrow(build, f"{id_col} long, simhash long")
+    # same transient-memory bound as shingle_sets_arrow
+    return source.mapInArrow(_chunked(emit, 256), f"{id_col} long, simhash long")
 
 
 def shingle_sets_arrow(
@@ -786,8 +835,6 @@ def shingle_sets_arrow(
     (measured on corpus_curation_funnel: the exact-dedup window
     executed twice). Shuffle-rooted inputs already carry the shuffle's
     partitioning, which AQE scales with data size."""
-    import pyarrow as pa
-
     from pyspark.sql import functions as F
 
     from mdio_python_spark.operators.dedup import mix_constant
@@ -808,11 +855,6 @@ def shingle_sets_arrow(
     else:
         raise ValueError(f"unit must be 'word' or 'char', got {unit!r}")
     source = _spread(src, [id_col, "_in"]) if spread else src
-    fields = [(id_col, pa.int64())]
-    if emit_sets:
-        fields.append(("_set", pa.list_(pa.int64())))
-    fields += [(f"mh_{k}", pa.int64()) for k in range(minhashes)]
-    out_type = pa.schema(fields)
     mixes = [np.int64(mix_constant(k)) for k in range(minhashes)]
     sql_fields = ", ".join(
         [f"{id_col} long"]
@@ -820,51 +862,65 @@ def shingle_sets_arrow(
         + [f"mh_{k} long" for k in range(minhashes)]
     )
 
-    # Bound per-call transient memory by slicing each Arrow batch to a
-    # fixed doc count: a 10k-row batch of ~2.4k-char docs is ~24M char
-    # shingles, whose hash/sort intermediates would be GBs per task —
-    # per-batch peak must stay O(chunk), not O(batch), or the 100x
-    # stress corpus OOMs 32 concurrent tasks. 256 docs x ~2.4k chars
-    # keeps every intermediate under ~50 MB while staying fully
-    # vectorized.
-    chunk_docs = 256
-
-    def build(batches):
-        for full in batches:
-            for lo in range(0, full.num_rows, chunk_docs):
-                batch = full.slice(lo, chunk_docs)
-                if not batch.num_rows:
-                    continue
-                yield from _emit(batch)
-
-    def _emit(batch):
-        ids = np.asarray(batch.column(0), dtype=np.int64)
-        ids_out, offsets, values = batch_fn(ids, batch.column(1), n)
-        cols = [pa.array(ids_out, type=pa.int64())]
+    def emit(chunk: pa.RecordBatch) -> pa.RecordBatch:
+        ids = np.asarray(chunk.column(0), dtype=np.int64)
+        ids_out, offsets, values = batch_fn(ids, chunk.column(1), n)
+        cols = {id_col: pa.array(ids_out)}
         if emit_sets:
-            cols.append(
-                pa.ListArray.from_arrays(
-                    pa.array(offsets, type=pa.int32()),
-                    pa.array(values, type=pa.int64()),
-                )
+            cols["_set"] = pa.ListArray.from_arrays(
+                pa.array(int32_offsets(offsets)), pa.array(values)
             )
-        if mixes:
-            # per-doc min over the XOR-mixed DISTINCT hashes — the
-            # values are 60-bit non-negative and the mixes < 2^60,
-            # so signed and unsigned mins agree
-            starts = offsets[:-1]
-            for mix in mixes:
-                cols.append(
-                    pa.array(
-                        np.minimum.reduceat(values ^ mix, starts)
-                        if len(values)
-                        else np.zeros(0, dtype=np.int64),
-                        type=pa.int64(),
-                    )
-                )
-        yield pa.RecordBatch.from_arrays(cols, schema=out_type)
+        # per-doc min over the XOR-mixed DISTINCT hashes — the values are
+        # 60-bit non-negative and the mixes < 2^60, so signed and
+        # unsigned mins agree
+        for k, mix in enumerate(mixes):
+            cols[f"mh_{k}"] = pa.array(
+                np.minimum.reduceat(values ^ mix, offsets[:-1])
+                if len(values)
+                else np.zeros(0, dtype=np.int64)
+            )
+        return pa.RecordBatch.from_pydict(cols)
 
-    return source.mapInArrow(build, sql_fields)
+    # Bound per-call transient memory by chunking each Arrow batch: a
+    # 10k-row batch of ~2.4k-char docs is ~24M char shingles, whose
+    # hash/sort intermediates would be GBs per task — per-batch peak
+    # must stay O(chunk), not O(batch), or the 100x stress corpus OOMs
+    # 32 concurrent tasks. 256 docs x ~2.4k chars keeps every
+    # intermediate under ~50 MB while staying fully vectorized.
+    return source.mapInArrow(_chunked(emit, 256), sql_fields)
+
+
+def _gram_counts(
+    chunk: pa.RecordBatch, n: int, drop_empty: bool
+) -> pa.RecordBatch | None:
+    """``(key, gram, c)`` word n-gram counts of one ``(key, tokens)`` doc
+    chunk, grouped by pyarrow's C++ hash aggregation (exact string
+    grouping, no hashing shortcut); None when the chunk has no grams."""
+    norm, starts, lens, sh_doc = _word_gram_slices(chunk.column(1), n)
+    if drop_empty:
+        keep = lens > 0
+        starts, lens, sh_doc = starts[keep], lens[keep], sh_doc[keep]
+    if not len(sh_doc):
+        return None
+    goff = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(lens, dtype=np.int64, out=goff[1:])
+    # checked before the gram bytes are gathered: a chunk's grams are
+    # about n x its token bytes and must fit int32 offsets
+    offsets = int32_offsets(goff)
+    gbytes = norm[np.repeat(starts, lens) + _ragged_arange(lens)]
+    grams = pa.Array.from_buffers(
+        pa.utf8(), len(lens), [None, pa.py_buffer(offsets), pa.py_buffer(gbytes)]
+    )
+    tbl = pa.table({"_k": chunk.column(0).take(sh_doc), "gram": grams})
+    agg = tbl.group_by(["_k", "gram"]).aggregate([("gram", "count")])
+    return pa.RecordBatch.from_arrays(
+        [
+            agg.column("_k").combine_chunks(),
+            agg.column("gram").combine_chunks(),
+            agg.column("gram_count").combine_chunks(),
+        ],
+        names=[chunk.schema.names[0], "gram", "c"],
+    )
 
 
 def gram_multiset_arrow(
@@ -884,9 +940,11 @@ def gram_multiset_arrow(
     diversity and DSIR buckets were measured faster on the explode
     path). Replaces ``word_shingles(distinct=False)``'s explode +
     the per-(key, gram) count exchange: each input row's grams are
-    counted INSIDE the kernel (pyarrow C++ hash aggregation per 2048-doc
-    chunk — exact string grouping, no hashing shortcut), so only the
-    chunk-distinct (key, gram, c) partials cross back to the JVM.
+    counted INSIDE the kernel (pyarrow C++ hash aggregation per doc
+    chunk of at most 2048 docs — exact string grouping, no hashing
+    shortcut), so only the chunk-distinct (key, gram, c) partials cross
+    back to the JVM. A chunk whose gram bytes pass the int32 offset
+    range raises ``trace_arrow.OffsetOverflowError``.
 
     Exactness contract: gram strings are byte slices of the same
     single-space-joined token buffer the set kernel uses — identical to
@@ -902,8 +960,6 @@ def gram_multiset_arrow(
     arrays produce no rows, exactly like the explode path.
 
     ``spread`` follows the :func:`_spread` scan-rooted-only rule."""
-    import pyarrow as pa
-
     from pyspark.sql import functions as F
 
     from mdio_python_spark.operators.text import tokens
@@ -912,56 +968,11 @@ def gram_multiset_arrow(
     src = df.select(F.col(key_col), tokens(F.lower(txt)).alias("_in"))
     source = _spread(src, [key_col, "_in"]) if spread else src
     key_sql = src.schema[key_col].dataType.simpleString()
-    out_schema = f"{key_col} {key_sql}, gram string, c long"
     # larger chunks than the set kernel's 256: word-gram buffers are
     # ~3x text bytes (no char-shingle blowup), so 2048 docs stays ~15 MB
     # of transients per chunk while amortizing the per-chunk C++ hash
     # aggregation setup 8x
-    chunk_docs = 2048
-
-    def build(batches):
-        for full in batches:
-            for lo in range(0, full.num_rows, chunk_docs):
-                batch = full.slice(lo, chunk_docs)
-                if not batch.num_rows:
-                    continue
-                out = _emit(batch)
-                if out is not None:
-                    yield out
-
-    def _emit(batch):
-        keys = batch.column(0)
-        lst = batch.column(1)
-        norm, starts, lens, sh_doc = _word_gram_slices(lst, n)
-        if drop_empty:
-            keep = lens > 0
-            starts, lens, sh_doc = starts[keep], lens[keep], sh_doc[keep]
-        if not len(sh_doc):
-            return None
-        gbytes = norm[np.repeat(starts, lens) + _ragged_arange(lens)]
-        goff = np.zeros(len(lens) + 1, dtype=np.int64)
-        np.cumsum(lens, dtype=np.int64, out=goff[1:])
-        # int32 offsets: a 2048-doc chunk fits only while its gram bytes
-        # stay under 2 GiB (about 1 MB of grams per doc on average)
-        grams = pa.Array.from_buffers(
-            pa.utf8(),
-            len(lens),
-            [None, pa.py_buffer(goff.astype(np.int32)), pa.py_buffer(gbytes)],
-        )
-        tbl = pa.table(
-            {
-                "_k": keys.take(pa.array(sh_doc, type=pa.int64())),
-                "gram": grams,
-            }
-        )
-        agg = tbl.group_by(["_k", "gram"]).aggregate([("gram", "count")])
-        return pa.RecordBatch.from_arrays(
-            [
-                agg.column("_k").combine_chunks(),
-                agg.column("gram").combine_chunks(),
-                agg.column("gram_count").combine_chunks(),
-            ],
-            names=[key_col, "gram", "c"],
-        )
-
-    return source.mapInArrow(build, out_schema)
+    return source.mapInArrow(
+        _chunked(lambda chunk: _gram_counts(chunk, n, drop_empty), 2048),
+        f"{key_col} {key_sql}, gram string, c long",
+    )

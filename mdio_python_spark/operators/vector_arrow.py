@@ -9,9 +9,12 @@ stress scales that per-cosine constant IS the wall clock:
 (VERDICT r7 watch item 1). This module executes the SAME algorithms —
 identical cell assignment, hot-cell cap, tie-breaks, and cosine
 arithmetic — as Arrow-batched numpy kernels inside
-``mapInPandas`` / ``applyInPandas``, cutting the per-cosine cost ~100x
+``mapInArrow`` / ``applyInArrow``, cutting the per-cosine cost ~100x
 while staying bit-identical (pinned by tests/test_vector_arrow.py and
-the unchanged DuckDB oracles).
+the unchanged DuckDB oracles). Embedding columns decode through the
+trace-batch codec ``trace_arrow.samples_from_arrow`` (zero-copy, a
+ragged or null row raises ``RaggedSamplesError``) and pass through to
+the output by Arrow ``filter``/``take``, never as Python objects.
 
 Bit-exactness contract (the whole point — read before editing):
 
@@ -52,9 +55,12 @@ from __future__ import annotations
 from typing import Iterable, Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from mdio_python_spark.operators.text_arrow import _spread
+from mdio_python_spark.sources.trace_arrow import samples_from_arrow
 
 
 def fold_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -105,11 +111,11 @@ def fold_norm(a: np.ndarray) -> np.ndarray:
     return np.sqrt(fold_dot(a, a))
 
 
-def _stack(col: pd.Series) -> np.ndarray:
-    """(n, d) float64 matrix from an Arrow list column. Element values
-    pass through float32 -> float64 exactly (widening is lossless), so
+def _vectors(col) -> np.ndarray:
+    """(n, d) float64 matrix of an embedding column, decoded by
+    ``samples_from_arrow``. float32 values widen to float64 exactly, so
     the fold sees the same doubles ``CAST(x AS DOUBLE)`` produces."""
-    return np.asarray(np.stack(col.to_numpy()), dtype=np.float64)
+    return samples_from_arrow(col).astype(np.float64)
 
 
 def _centroid_arrays(
@@ -154,30 +160,22 @@ def cell_assignments_arrow(
     row per probed cell in nearest-first order with a ``_probe`` rank —
     the multiprobe query-side explode of ``ivf_topk``."""
     cids, C, cnorms = _centroid_arrays(centroids)
+    vec_sql = vectors.schema[vec_col].dataType.simpleString()
+    out_names = [id_col, vec_col, "_norm", "cell"] + (["_probe"] if nprobe > 1 else [])
     out_schema = (
-        f"{id_col} long, {vec_col} array<float>, _norm double, cell long"
+        f"{id_col} long, {vec_col} {vec_sql}, _norm double, cell long"
         + (", _probe int" if nprobe > 1 else "")
     )
-    # the assignment pass is compute-bound (n x kc fold-cosines): spread
-    # it across the core budget when the source arrives in fewer splits
-    # (a 100x stress embeddings table is one ~50 MB parquet split) — the
-    # round-robin exchange moves corpus bytes once, linear and tiny next
-    # to the pair stage it feeds
-    n_parts = vectors.sparkSession.sparkContext.defaultParallelism
-    source = vectors.select(id_col, vec_col)
-    if source.rdd.getNumPartitions() < n_parts:
-        source = source.repartition(n_parts)
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = _stack(pdf[vec_col])
+    def assign(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            V = _vectors(batch.column(1))
             vnorm = fold_norm(V)
             live = vnorm > 0
             if not live.any():
                 continue
-            pdf, V, vnorm = pdf[live], V[live], vnorm[live]
+            if not live.all():
+                batch, V, vnorm = batch.filter(pa.array(live)), V[live], vnorm[live]
             with np.errstate(invalid="ignore", divide="ignore"):
                 cos = fold_dot_matrix(V, C) / (vnorm[:, None] * cnorms[None, :])
             # a zero-norm centroid (kept deliberately — see
@@ -188,33 +186,28 @@ def cell_assignments_arrow(
             # first/smallest-cid NaN, which +inf preserves)
             cos = np.where(np.isnan(cos), np.inf, cos)
             if nprobe == 1:
-                cell = cids[np.argmax(cos, axis=1)]
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col].to_numpy(),
-                        vec_col: pdf[vec_col].to_numpy(),
-                        "_norm": vnorm,
-                        "cell": cell,
-                    }
-                )
+                cells = cids[np.argmax(cos, axis=1)][:, None]
             else:
                 # nearest-first probe order, ties to the smallest cid:
                 # stable argsort of -cos keeps ascending-cid order on ties
-                order = np.argsort(-cos, axis=1, kind="stable")[:, :nprobe]
-                n, p = order.shape
-                yield pd.DataFrame(
-                    {
-                        id_col: np.repeat(pdf[id_col].to_numpy(), p),
-                        vec_col: np.repeat(pdf[vec_col].to_numpy(), p),
-                        "_norm": np.repeat(vnorm, p),
-                        "cell": cids[order].ravel(),
-                        "_probe": np.tile(
-                            np.arange(1, p + 1, dtype=np.int32), n
-                        ),
-                    }
-                )
+                cells = cids[np.argsort(-cos, axis=1, kind="stable")[:, :nprobe]]
+            n, p = cells.shape
+            rows = batch if p == 1 else batch.take(np.repeat(np.arange(n), p))
+            cols = [
+                rows.column(0),
+                rows.column(1),
+                pa.array(np.repeat(vnorm, p)),
+                pa.array(cells.ravel()),
+            ]
+            if nprobe > 1:
+                cols.append(pa.array(np.tile(np.arange(1, p + 1, dtype=np.int32), n)))
+            yield pa.RecordBatch.from_arrays(cols, names=out_names)
 
-    return source.mapInPandas(assign, out_schema)
+    # the assignment pass is compute-bound (n x kc fold-cosines): a 100x
+    # stress embeddings table is one ~50 MB parquet split, and the
+    # round-robin exchange moves corpus bytes once, linear and tiny next
+    # to the pair stage it feeds
+    return _spread(vectors, [id_col, vec_col]).mapInArrow(assign, out_schema)
 
 
 def _cap_by_id(ids: np.ndarray, max_cell: int) -> np.ndarray:
@@ -257,35 +250,46 @@ def _local_topk(
 
 
 def _query_sample(
-    queries: DataFrame, id_col: str, vec_col: str
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """``(q_ids, Q, q_norm)`` of the collected query sample, ascending
-    id."""
-    rows = sorted(
-        (int(r[0]), [float(x) for x in r[1]])
-        for r in queries.select(id_col, vec_col).collect()
+    queries: DataFrame, id_col: str, vec_col: str, *extra: str
+) -> tuple[np.ndarray, ...]:
+    """``(q_ids, Q, q_norm, *extra)`` of the collected query sample in
+    ascending-id order, read as one Arrow table; each ``extra`` column
+    comes back as an int64 array."""
+    tbl = queries.select(id_col, vec_col, *extra).toArrow()
+    q_ids = tbl.column(0).to_numpy().astype(np.int64)
+    order = np.argsort(q_ids, kind="stable")
+    Q = _vectors(tbl.column(1))[order]
+    return (
+        q_ids[order],
+        Q,
+        fold_norm(Q),
+        *(tbl.column(c).to_numpy().astype(np.int64)[order] for c in extra),
     )
-    q_ids = np.array([r[0] for r in rows], dtype=np.int64)
-    Q = (
-        np.array([r[1] for r in rows], dtype=np.float64)
-        if rows
-        else np.zeros((0, 1), dtype=np.float64)
-    )
-    return q_ids, Q, fold_norm(Q)
 
 
 def _candidate_source(
     candidates: DataFrame, id_col: str, vec_col: str, *extra: Column
 ) -> DataFrame:
-    """``(candidate_id, _v, *extra)`` over at least the core budget's
-    partitions: the scoring pass is compute-bound."""
-    source = candidates.select(
-        F.col(id_col).alias("candidate_id"), F.col(vec_col).alias("_v"), *extra
+    """``(candidate_id, _v, *extra)`` under the :func:`_spread` rule: the
+    scoring pass is compute-bound."""
+    return _spread(
+        candidates,
+        [F.col(id_col).alias("candidate_id"), F.col(vec_col).alias("_v"), *extra],
     )
-    n_parts = candidates.sparkSession.sparkContext.defaultParallelism
-    if source.rdd.getNumPartitions() < n_parts:
-        source = source.repartition(n_parts)
-    return source
+
+
+def _candidate_batches(
+    batches: Iterator[pa.RecordBatch], n_queries: int
+) -> Iterator[tuple[pa.RecordBatch, np.ndarray, np.ndarray]]:
+    """``(batch, c_ids, Cv)`` of every non-empty candidate batch; nothing
+    when there are no queries to score against."""
+    for batch in batches:
+        if batch.num_rows and n_queries:
+            yield (
+                batch,
+                batch.column("candidate_id").to_numpy(),
+                _vectors(batch.column("_v")),
+            )
 
 
 def _probe_order(
@@ -320,7 +324,7 @@ def _topk_rows(
     c_norm: np.ndarray,
     k: int,
     block: int = 512,
-) -> pd.DataFrame:
+) -> pa.Table:
     """Per-query top-k over one candidate set: cosine matrix in query
     blocks, self-pairs excluded, ties to the smallest candidate id.
     Candidate arrays MUST already be in ascending-id order.
@@ -360,7 +364,7 @@ def _topk_rows(
         out_c.append(c_ids[sel_c[keep]])
         out_cos.append(sel_cos[keep])
         out_rank.append(rank[keep].astype(np.int32))
-    return pd.DataFrame(
+    return pa.table(
         {
             "query_id": np.concatenate(out_q) if out_q else np.array([], np.int64),
             "candidate_id": np.concatenate(out_c) if out_c else np.array([], np.int64),
@@ -401,20 +405,16 @@ def knn_graph_arrow(
     assigned = cell_assignments_arrow(vectors, centroids, id_col, vec_col)
     out_schema = "query_id long, candidate_id long, cosine double, rank int"
 
-    def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return pd.DataFrame(
-                columns=["query_id", "candidate_id", "cosine", "rank"]
-            )
-        ids = pdf[id_col].to_numpy()
-        V = _stack(pdf[vec_col])
-        norms = pdf["_norm"].to_numpy()
+    def per_cell(cell: pa.Table) -> pa.Table:
+        ids = cell.column(id_col).to_numpy()
+        V = _vectors(cell.column(vec_col))
+        norms = cell.column("_norm").to_numpy()
         cap_idx = _cap_by_id(ids, max_cell)
         return _topk_rows(
             ids, V, norms, ids[cap_idx], V[cap_idx], norms[cap_idx], k
         )
 
-    return assigned.groupBy("cell").applyInPandas(per_cell, out_schema)
+    return assigned.groupBy("cell").applyInArrow(per_cell, out_schema)
 
 
 def knn_graph_multiprobe_arrow(
@@ -481,26 +481,25 @@ def knn_graph_multiprobe_arrow(
     )
     out_schema = "query_id long, candidate_id long, cosine double, rank int"
 
-    def per_cell(qdf: pd.DataFrame, cdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(qdf) or not len(cdf):
-            return pd.DataFrame(
-                columns=["query_id", "candidate_id", "cosine", "rank"]
-            )
-        order = np.argsort(cdf[id_col].to_numpy(), kind="stable")
+    def per_cell(qt: pa.Table, ct: pa.Table) -> pa.Table:
+        if not qt.num_rows or not ct.num_rows:
+            return pa.table({})
+        c_ids = ct.column(id_col).to_numpy()
+        order = np.argsort(c_ids, kind="stable")
         return _topk_rows(
-            qdf[id_col].to_numpy(),
-            _stack(qdf[vec_col]),
-            qdf["_norm"].to_numpy(),
-            cdf[id_col].to_numpy()[order],
-            _stack(cdf[vec_col])[order],
-            cdf["_norm"].to_numpy()[order],
+            qt.column(id_col).to_numpy(),
+            _vectors(qt.column(vec_col)),
+            qt.column("_norm").to_numpy(),
+            c_ids[order],
+            _vectors(ct.column(vec_col))[order],
+            ct.column("_norm").to_numpy()[order],
             k,
         )
 
     local = (
         probes.groupBy("cell", "_qsalt")
         .cogroup(capped.groupBy("cell", "_qsalt"))
-        .applyInPandas(per_cell, out_schema)
+        .applyInArrow(per_cell, out_schema)
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("candidate_id")
@@ -538,31 +537,32 @@ def semantic_dedup_arrow(
     assigned = cell_assignments_arrow(vectors, centroids, id_col, vec_col)
     out_schema = "drop_id long, keep_id long, n_near_dups bigint"
 
-    def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["drop_id", "keep_id", "n_near_dups"]
-        if len(pdf) < 2:
-            return pd.DataFrame(columns=cols)
-        ids = pdf[id_col].to_numpy()
+    def per_cell(cell: pa.Table) -> pa.Table:
+        ids = cell.column(id_col).to_numpy()
         cap_idx = _cap_by_id(ids, max_bucket_size)
         ids = ids[cap_idx]
-        V = _stack(pdf[vec_col])[cap_idx]
-        norms = pdf["_norm"].to_numpy()[cap_idx]
+        V = _vectors(cell.column(vec_col))[cap_idx]
+        norms = cell.column("_norm").to_numpy()[cap_idx]
         # ids are ascending after the cap sort: the strict upper
         # triangle is exactly the vec_a < vec_b pair set
         cos = fold_dot_matrix(V, V) / (norms[:, None] * norms[None, :])
         a_idx, b_idx = np.triu_indices(len(ids), k=1)
         hit = cos[a_idx, b_idx] >= threshold
-        if not hit.any():
-            return pd.DataFrame(columns=cols)
-        a, b = ids[a_idx[hit]], ids[b_idx[hit]]
-        grp = pd.DataFrame({"drop_id": b, "keep_id": a}).groupby(
-            "drop_id", sort=False
-        )["keep_id"]
-        out = grp.agg(["min", "count"]).reset_index()
-        out.columns = cols
-        return out
+        # per drop_id (the larger id of a pair): the smallest keep_id
+        # and the pair count, from one sort by (drop, keep)
+        drop, keep = ids[b_idx[hit]], ids[a_idx[hit]]
+        order = np.lexsort((keep, drop))
+        drop, keep = drop[order], keep[order]
+        first = np.flatnonzero(_group_ranks(drop) == 1)
+        return pa.table(
+            {
+                "drop_id": drop[first],
+                "keep_id": keep[first],
+                "n_near_dups": np.diff(np.r_[first, len(drop)]),
+            }
+        )
 
-    return assigned.groupBy("cell").applyInPandas(per_cell, out_schema)
+    return assigned.groupBy("cell").applyInArrow(per_cell, out_schema)
 
 
 def ivf_recall_local_topk(
@@ -603,12 +603,8 @@ def ivf_recall_local_topk(
     source = _candidate_source(candidates, id_col, vec_col)
     out_schema = "leg long, query_id long, candidate_id long, cosine double"
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf) or not nq:
-                continue
-            c_ids = pdf["candidate_id"].to_numpy(dtype=np.int64)
-            Cv = _stack(pdf["_v"])
+    def score(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for _, c_ids, Cv in _candidate_batches(batches, nq):
             c_norm = fold_norm(Cv)
             cell_idx = _cell_index(Cv, c_norm, C, cnorms)
             with np.errstate(invalid="ignore", divide="ignore"):
@@ -620,7 +616,7 @@ def ivf_recall_local_topk(
             for li, leg in enumerate(legs):
                 key = np.where(allowed[li][:, cell_idx], key0, -np.inf)
                 r, c = _local_topk(key, c_ids, k)
-                yield pd.DataFrame(
+                yield pa.RecordBatch.from_pydict(
                     {
                         "leg": np.full(len(r), leg, dtype=np.int64),
                         "query_id": q_ids[r],
@@ -629,7 +625,7 @@ def ivf_recall_local_topk(
                     }
                 )
 
-    return source.mapInPandas(score, out_schema)
+    return source.mapInArrow(score, out_schema)
 
 
 def ivf_local_topk(
@@ -666,12 +662,8 @@ def ivf_local_topk(
     source = _candidate_source(candidates, id_col, vec_col)
     out_schema = "query_id long, candidate_id long, cell long, cosine double"
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf) or not len(q_ids):
-                continue
-            c_ids = pdf["candidate_id"].to_numpy(dtype=np.int64)
-            Cv = _stack(pdf["_v"])
+    def score(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for _, c_ids, Cv in _candidate_batches(batches, len(q_ids)):
             c_norm = fold_norm(Cv)
             cell_idx = _cell_index(Cv, c_norm, C, cnorms)
             with np.errstate(invalid="ignore", divide="ignore"):
@@ -681,7 +673,7 @@ def ivf_local_topk(
             mask = allowed[:, cell_idx] & (q_ids[:, None] != c_ids[None, :])
             key = np.where(mask, np.where(np.isnan(cos), np.inf, cos), -np.inf)
             r, c = _local_topk(key, c_ids, k)
-            yield pd.DataFrame(
+            yield pa.RecordBatch.from_pydict(
                 {
                     "query_id": q_ids[r],
                     "candidate_id": c_ids[c],
@@ -690,7 +682,7 @@ def ivf_local_topk(
                 }
             )
 
-    return source.mapInPandas(score, out_schema)
+    return source.mapInArrow(score, out_schema)
 
 
 def ivfpq_local_topk(
@@ -737,12 +729,8 @@ def ivfpq_local_topk(
     source = _candidate_source(candidates, id_col, vec_col)
     out_schema = "query_id long, candidate_id long, cell long, adc_dist double"
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf) or not nq:
-                continue
-            c_ids = pdf["candidate_id"].to_numpy(dtype=np.int64)
-            Cv = _stack(pdf["_v"])
+    def score(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for _, c_ids, Cv in _candidate_batches(batches, nq):
             cell_idx = _cell_index(Cv, fold_norm(Cv), C, cnorms)
             adc = None
             for m, cb in enumerate(books):
@@ -757,7 +745,7 @@ def ivfpq_local_topk(
             mask = allowed[:, cell_idx] & (q_ids[:, None] != c_ids[None, :])
             # ascending finite ADC == descending negated ADC, exactly
             r, c = _local_topk(np.where(mask, -adc, -np.inf), c_ids, k)
-            yield pd.DataFrame(
+            yield pa.RecordBatch.from_pydict(
                 {
                     "query_id": q_ids[r],
                     "candidate_id": c_ids[c],
@@ -766,7 +754,7 @@ def ivfpq_local_topk(
                 }
             )
 
-    return source.mapInPandas(score, out_schema)
+    return source.mapInArrow(score, out_schema)
 
 
 def hard_negatives_arrow(
@@ -788,18 +776,7 @@ def hard_negatives_arrow(
     ranks."""
     from pyspark.sql import Window
 
-    rows = sorted(
-        (int(r[0]), [float(x) for x in r[1]], int(r[2]))
-        for r in queries.select(id_col, vec_col, label_col).collect()
-    )
-    q_ids = np.array([r[0] for r in rows], dtype=np.int64)
-    q_labels = np.array([r[2] for r in rows], dtype=np.int64)
-    Q = (
-        np.array([r[1] for r in rows], dtype=np.float64)
-        if rows
-        else np.zeros((0, 1), dtype=np.float64)
-    )
-    q_norm = fold_norm(Q)
+    q_ids, Q, q_norm, q_labels = _query_sample(queries, id_col, vec_col, label_col)
     source = _candidate_source(
         candidates, id_col, vec_col, F.col(label_col).alias("candidate_label")
     )
@@ -808,13 +785,9 @@ def hard_negatives_arrow(
         "candidate_label int, cosine double"
     )
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf) or not len(q_ids):
-                continue
-            c_ids = pdf["candidate_id"].to_numpy(dtype=np.int64)
-            c_labels = pdf["candidate_label"].to_numpy(dtype=np.int64)
-            Cv = _stack(pdf["_v"])
+    def score(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch, c_ids, Cv in _candidate_batches(batches, len(q_ids)):
+            c_labels = batch.column("candidate_label").to_numpy().astype(np.int64)
             c_norm = fold_norm(Cv)
             cos = fold_dot_matrix(Q, Cv) / (q_norm[:, None] * c_norm[None, :])
             key = np.where(np.isnan(cos), np.inf, cos)
@@ -823,7 +796,7 @@ def hard_negatives_arrow(
             )
             key[drop] = -np.inf
             r, c = _local_topk(key, c_ids, k)
-            yield pd.DataFrame(
+            yield pa.RecordBatch.from_pydict(
                 {
                     "query_id": q_ids[r],
                     "query_label": q_labels[r].astype(np.int32),
@@ -833,7 +806,7 @@ def hard_negatives_arrow(
                 }
             )
 
-    local = source.mapInPandas(score, out_schema)
+    local = source.mapInArrow(score, out_schema)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), "candidate_id"
     )
@@ -878,18 +851,14 @@ def cosine_topk_arrow(
     source = _candidate_source(candidates, id_col, vec_col)
     out_schema = "query_id long, candidate_id long, cosine double"
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf) or not len(q_ids):
-                continue
-            c_ids = pdf["candidate_id"].to_numpy(dtype=np.int64)
-            Cv = _stack(pdf["_v"])
+    def score(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for _, c_ids, Cv in _candidate_batches(batches, len(q_ids)):
             c_norm = fold_norm(Cv)
             cos = fold_dot_matrix(Q, Cv) / (q_norm[:, None] * c_norm[None, :])
             key = np.where(np.isnan(cos), np.inf, cos)
             key[q_ids[:, None] == c_ids[None, :]] = -np.inf
             r, c = _local_topk(key, c_ids, k)
-            yield pd.DataFrame(
+            yield pa.RecordBatch.from_pydict(
                 {
                     "query_id": q_ids[r],
                     "candidate_id": c_ids[c],
@@ -897,7 +866,7 @@ def cosine_topk_arrow(
                 }
             )
 
-    local = source.mapInPandas(score, out_schema)
+    local = source.mapInArrow(score, out_schema)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), "candidate_id"
     )

@@ -8,7 +8,9 @@ zero-copy both ways for a C-contiguous block: the block is the Arrow
 values buffer and the offsets are an evenly spaced ramp. A ragged or null
 row, a header that is not 240 bytes, or a block whose offsets would pass
 the int32 range of Spark's Arrow types raises a named
-:class:`TraceBatchError` instead of misaligning rows.
+:class:`TraceBatchError` instead of misaligning rows. The vector kernels
+decode embedding columns with :func:`samples_from_arrow`, and the text
+kernels check the offsets they build with :func:`int32_offsets`.
 """
 
 from __future__ import annotations
@@ -38,13 +40,19 @@ class OffsetOverflowError(TraceBatchError):
     """The block has more values than an int32 offset can address."""
 
 
-def _ramp(n: int, width: int) -> np.ndarray:
-    if n * width > MAX_OFFSET:
+def int32_offsets(offsets: np.ndarray) -> np.ndarray:
+    """Ascending int64 Arrow offsets -> the int32 offsets of Spark's Arrow
+    types, raising :class:`OffsetOverflowError` instead of wrapping."""
+    if len(offsets) and offsets[-1] > MAX_OFFSET:
         raise OffsetOverflowError(
-            f"{n} rows x {width} values pass the int32 offset limit "
+            f"offset {int(offsets[-1])} passes the int32 offset limit "
             f"{MAX_OFFSET}; split the block"
         )
-    return (np.arange(n + 1, dtype=np.int64) * width).astype(np.int32)
+    return offsets.astype(np.int32)
+
+
+def _ramp(n: int, width: int) -> np.ndarray:
+    return int32_offsets(np.arange(n + 1, dtype=np.int64) * width)
 
 
 def _one_array(col) -> pa.Array:
@@ -73,13 +81,16 @@ def samples_to_arrow(block: np.ndarray) -> pa.ListArray:
 
 
 def samples_from_arrow(col) -> np.ndarray:
-    """``samples`` Array or ChunkedArray -> ``[n, ns]`` float32 block."""
+    """``samples`` Array or ChunkedArray -> ``[n, ns]`` block: float64 for
+    an ``array<double>`` column (never narrowed), float32 otherwise."""
     col = _one_array(col)
     offsets = col.offsets.to_numpy()
     ns = int(offsets[1] - offsets[0]) if len(col) else 0
     _check_widths(col, offsets, ns, RaggedSamplesError)
     flat = col.flatten().to_numpy(zero_copy_only=False)
-    return flat.astype(np.float32, copy=False).reshape(len(col), ns)
+    if flat.dtype != np.float64:
+        flat = flat.astype(np.float32, copy=False)
+    return flat.reshape(len(col), ns)
 
 
 def headers_to_arrow(block: np.ndarray) -> pa.BinaryArray:

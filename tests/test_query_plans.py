@@ -310,13 +310,13 @@ def test_knn_graph_no_corpus_broadcast(spark):
     """The all-vectors kNN graph must never broadcast or cross-join the
     corpus. Round 8: the graph executes on the Arrow kernels — cell
     assignment as a map pass, per-cell top-k inside the groupBy(cell)
-    task (FlatMapGroupsInPandas), so the plan carries the one cell
+    task (FlatMapGroupsInArrow), so the plan carries the one cell
     exchange and NO join operator at all; the former WindowGroupLimit
     top-k now happens inside the cell kernel."""
     plan = _plan(spark, "knn_graph_hubness")
     for bad in ("CartesianProduct", "BroadcastNestedLoopJoin", "SortMergeJoin"):
         assert bad not in plan, plan
-    assert "FlatMapGroupsInPandas" in plan, plan
+    assert "FlatMapGroupsInArrow" in plan, plan
 
 
 def test_cell_balance_single_corpus_scan(spark):
@@ -335,7 +335,7 @@ def test_hard_negatives_arrow_pass_topk(spark):
     round-10 vector_arrow.hard_negatives_arrow rewrite) and ranks the
     bounded local-top-k survivors via WindowGroupLimit."""
     plan = _plan(spark, "hard_negative_mining")
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan
     assert "WindowGroupLimit" in plan, plan
     for bad in ("SortMergeJoin", "BroadcastHashJoin", "CartesianProduct",
                 "BroadcastNestedLoopJoin"):

@@ -191,7 +191,7 @@ def test_ann_tuning_curve_plan_one_corpus_pass(spark):
     tasks x legs x queries x k survivors, and the rank window compiles
     to WindowGroupLimit."""
     plan = _plan(spark, "ann_tuning_curve")
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan
     assert "Join" not in plan, plan
     assert "WindowGroupLimit" in plan, plan
 

@@ -90,7 +90,7 @@ def test_ivf_results_only_from_probed_cells_and_exact_cosine(spark, emb):
 
 
 def test_ivf_plan_shape(spark, emb, monkeypatch):
-    """Round 11 (Arrow kernel): scoring is one MapInPandas kernel pass —
+    """Round 11 (Arrow kernel): scoring is one MapInArrow kernel pass —
     join-free; the only hash exchange is the final per-query top-k
     window. The declarative path's shape (projection assignment +
     broadcast probe join) is checked separately below."""
@@ -99,7 +99,7 @@ def test_ivf_plan_shape(spark, emb, monkeypatch):
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan
     for bad in ("SortMergeJoin", "BroadcastHashJoin", "BroadcastNestedLoopJoin"):
         assert bad not in plan, plan
 
@@ -253,8 +253,8 @@ def test_ivfpq_candidate_vector_never_crosses_probe_join(
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan, plan
-    assert "MapInPandas" in plan, plan
-    map_at = plan.find("MapInPandas")
+    assert "MapInArrow" in plan, plan
+    map_at = plan.find("MapInArrow")
     # above the kernel (output side) no embedding attribute may remain
     assert "embedding#" not in plan[:map_at]
 

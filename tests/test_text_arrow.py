@@ -477,3 +477,181 @@ def test_gram_multiset_arrow_matches_explode_counts(spark):
     assert counts_of(news) == counts_of(olds)
     # the empty token from doc 3 must be present (no silent drop)
     assert any(r[1] == "" for r in news.collect())
+
+
+def test_doc_chunks_cut_by_doc_count_and_bytes():
+    """The one doc chunker: at most ``max_docs`` docs and ``max_bytes``
+    input bytes per slice (read from the offsets: string bytes, or the
+    token bytes of a list<string> row), a doc larger than the budget
+    alone, no doc split, zero-copy slices, nothing for an empty batch."""
+    import pyarrow as pa
+
+    from mdio_python_spark.operators.text_arrow import _doc_chunks
+
+    def sizes(batch, max_docs, max_bytes):
+        chunks = list(_doc_chunks(batch, max_docs, max_bytes))
+        if chunks:
+            assert pa.Table.from_batches(chunks).equals(
+                pa.Table.from_batches([batch])
+            )
+        return [c.num_rows for c in chunks]
+
+    # bytes per doc: 2, 0 (null), 0, 6 (non-ASCII), 50, 2, 2
+    texts = ["ab", None, "", "héllo", "x" * 50, "cd", "ef"]
+    batch = pa.RecordBatch.from_pydict({"doc_id": list(range(7)), "text": texts})
+    assert sizes(batch, 256, 10**6) == [7]
+    assert sizes(batch, 3, 10**6) == [3, 3, 1]
+    assert sizes(batch, 256, 8) == [4, 1, 2]
+    assert sizes(batch, 2, 8) == [2, 2, 1, 2]
+    assert sizes(batch.slice(3, 4), 256, 8) == [1, 1, 2]
+    assert sizes(batch.slice(0, 0), 256, 8) == []
+    first = next(_doc_chunks(batch.slice(5, 2), 256, 8))
+    assert first.column(1).buffers()[2].address == batch.column(1).buffers()[2].address
+    # token arrays: bytes 4, 0 (null), 0 ([""]), 20, 1
+    toks = pa.RecordBatch.from_pydict(
+        {
+            "doc_id": list(range(5)),
+            "_in": [["ab", "cd"], None, [""], ["x" * 20], ["e"]],
+        }
+    )
+    assert sizes(toks, 256, 4) == [3, 1, 1]
+    assert sizes(toks.slice(2, 3), 256, 4) == [1, 1, 1]
+
+
+_CHUNK_ROWS = [
+    (1, "the quick brown fox jumps over the lazy dog again and again"),
+    (2, None),
+    (3, "   "),
+    (4, "\t \n"),
+    (5, "héllo wörld — this döc is defînitely nøt ascii at all, ünïcode"),
+    (6, "中文字符串测试，需要走标量回退路径才能保证哈希一致性验证通过"),
+    (7, " ".join(f"w{i % 37}" for i in range(1200))),  # ~5 KB, over every budget
+] + [
+    (
+        100 + i,
+        " ".join(
+            random.Random(i % 23).choice(
+                ["data", "row", "scan", "join", "hash", "key", "part", "spark"]
+            )
+            for _ in range(8 + i % 17)
+        ),
+    )
+    for i in range(40)
+]
+
+
+def test_text_kernels_match_twins_on_tiny_byte_budget(spark, monkeypatch):
+    """All five text kernels with the per-doc byte allowance patched to 1
+    byte — chunks of 256 / 1024 / 2048 bytes, so batches split mid-way
+    and the ~5 KB doc is a chunk of its own — still equal their
+    declarative twins or the explode path, on the edge corpus (null,
+    whitespace-only, non-ASCII, one over-budget doc), on an all-null
+    and on an empty frame. The gram kernel's per-chunk partials prove the workers cut
+    the batch: more partial rows than with the real allowance, same
+    sums."""
+    from mdio_python_spark.operators import dedup, text, text_arrow
+    from mdio_python_spark.functions.scalars import hash64
+
+    one_batch = spark.createDataFrame(
+        _CHUNK_ROWS, "doc_id long, text string"
+    ).coalesce(1)
+
+    def gram_partials(df):
+        return text_arrow.gram_multiset_arrow(
+            df.withColumn("grp", F.col("doc_id") % 2), n=1, key_col="grp", spread=False
+        )
+
+    full_chunk_rows = gram_partials(one_batch).count()
+    monkeypatch.setattr(text_arrow, "DOC_BYTE_ALLOWANCE", 1)
+    assert gram_partials(one_batch).count() > full_chunk_rows
+    assert _sorted_rows(
+        gram_partials(one_batch).groupBy("grp", "gram").agg(F.sum("c"))
+    ) == _sorted_rows(
+        one_batch.withColumn("grp", F.col("doc_id") % 2)
+        .select("grp", F.explode(text.tokens(F.lower(F.col("text")))).alias("gram"))
+        .groupBy("grp", "gram")
+        .count()
+    )
+
+    # an all-null batch: Spark sends its token child with no offsets
+    for docs in (
+        one_batch,
+        one_batch.where(F.col("text").isNull()),
+        one_batch.where(F.lit(False)),
+    ):
+        assert _sorted_rows(
+            text_arrow.winnow_fingerprint_set_arrow(docs)
+        ) == _sorted_rows(text.winnow_fingerprint_set(docs))
+        assert _sorted_rows(
+            text_arrow.winnow_fingerprints_arrow(docs)
+        ) == _sorted_rows(text.winnow_fingerprints(docs))
+        assert _sorted_rows(
+            text_arrow.simhash_arrow(docs, spread=False)
+        ) == _sorted_rows(dedup.simhash_declarative(docs))
+        assert _sorted_rows(
+            text_arrow.shingle_sets_arrow(docs, n=3, spread=False)
+        ) == _sorted_rows(dedup.shingle_sets(dedup.shingle_hashes(docs, n=3)))
+        assert _sorted_rows(
+            text_arrow.shingle_sets_arrow(docs, n=5, unit="char", spread=False)
+        ) == _sorted_rows(
+            dedup.shingle_sets(
+                dedup.char_shingles(docs, n=5).select(
+                    "doc_id", hash64(F.col("shingle")).alias("sh")
+                )
+            )
+        )
+        assert _sorted_rows(
+            text_arrow.gram_multiset_arrow(docs, n=2, spread=False)
+        ) == _sorted_rows(
+            dedup.word_shingles(docs, n=2, distinct=False)
+            .groupBy("doc_id", "shingle")
+            .agg(F.count(F.lit(1)).alias("c"))
+        )
+
+
+def test_gram_multiset_offsets_raise_past_int32(monkeypatch):
+    """A gram chunk whose offsets pass ``trace_arrow.MAX_OFFSET`` raises
+    OffsetOverflowError instead of wrapping the int32 cast (patched
+    limit: no 2 GiB allocation)."""
+    import pyarrow as pa
+    import pytest
+
+    from mdio_python_spark.operators.text_arrow import _gram_counts
+    from mdio_python_spark.sources import trace_arrow
+
+    chunk = pa.RecordBatch.from_pydict(
+        {"doc_id": [1, 2], "_in": [["a", "bb", "a", "bb"], ["ccc", "d"]]}
+    )
+    got = _gram_counts(chunk, 2, drop_empty=False)
+    assert sorted(zip(*(c.to_pylist() for c in got.columns))) == [
+        (1, "a bb", 2),
+        (1, "bb a", 1),
+        (2, "ccc d", 1),
+    ]
+    # gram bytes 4 + 4 + 4 + 5 = 17
+    monkeypatch.setattr(trace_arrow, "MAX_OFFSET", 17)
+    assert _gram_counts(chunk, 2, drop_empty=False).num_rows == 3
+    monkeypatch.setattr(trace_arrow, "MAX_OFFSET", 16)
+    with pytest.raises(trace_arrow.OffsetOverflowError):
+        _gram_counts(chunk, 2, drop_empty=False)
+
+
+def test_kernel_modules_hold_one_arrow_batch_form():
+    """The text and vector kernels run on Arrow batches only: neither
+    module imports pandas or calls a pandas map/apply."""
+    import ast
+    import inspect
+
+    from mdio_python_spark.operators import text_arrow, vector_arrow
+
+    for mod in (text_arrow, vector_arrow):
+        tree = ast.parse(inspect.getsource(mod))
+        imported = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                imported |= {a.name.split(".")[0] for a in node.names}
+            elif isinstance(node, ast.ImportFrom):
+                imported.add((node.module or "").split(".")[0])
+        assert "pandas" not in imported, mod.__name__
+        attrs = {n.attr for n in ast.walk(tree) if isinstance(n, ast.Attribute)}
+        assert not attrs & {"mapInPandas", "applyInPandas"}, mod.__name__

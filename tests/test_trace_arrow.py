@@ -25,6 +25,11 @@ def test_samples_round_trip_zero_copy():
         np.concatenate([block, block[1:2]]),
     )
     assert ta.samples_from_arrow(col.slice(0, 0)).shape[0] == 0
+    # an array<double> column (embeddings) decodes without narrowing
+    doubles = pa.array([[0.1, 4.0], [1.0, 0.3]], pa.list_(pa.float64()))
+    np.testing.assert_array_equal(
+        ta.samples_from_arrow(doubles), np.array([[0.1, 4.0], [1.0, 0.3]])
+    )
 
 
 def test_headers_round_trip_zero_copy():

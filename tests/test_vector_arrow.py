@@ -363,3 +363,32 @@ def test_ivf_topk_arrow_bit_equal(spark):
     old = _declarative(ivf_topk, q, df, k=3, n_centroids=4, nprobe=2)
     new = _sorted_rows(ivf_topk(q, df, k=3, n_centroids=4, nprobe=2))
     assert old == new and len(new) > 0
+
+
+@pytest.mark.parametrize("bad", [[1.0, 2.0, 3.0], None], ids=["ragged", "null"])
+def test_bad_embedding_raises_ragged_samples(spark, bad):
+    """A ragged or null embedding is a named RaggedSamplesError from the
+    trace-batch codec — on the driver for the collected query sample,
+    in the workers for the candidate scan and the cell assignment —
+    not a numpy shape error."""
+    from pyspark.errors import PythonException
+    from pyspark.sql import functions as F
+
+    from mdio_python_spark.operators.vector_arrow import (
+        cosine_topk_arrow,
+        knn_graph_arrow,
+    )
+    from mdio_python_spark.sources.trace_arrow import RaggedSamplesError
+
+    rows = [(i, [float(i % 3) + 1.0, float(i % 5)]) for i in range(40)]
+    df = spark.createDataFrame(
+        rows + [(99, bad)], "vec_id long, embedding array<float>"
+    )
+    with pytest.raises(RaggedSamplesError):
+        cosine_topk_arrow(df.where(F.col("vec_id") >= 38), df, k=3)
+    for out in (
+        cosine_topk_arrow(df.where(F.col("vec_id") < 3), df, k=3),
+        knn_graph_arrow(df, k=3, n_centroids=4),
+    ):
+        with pytest.raises(PythonException, match="RaggedSamplesError"):
+            out.collect()

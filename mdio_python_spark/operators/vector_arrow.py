@@ -60,7 +60,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mdio_python_spark.operators.text_arrow import _spread
-from mdio_python_spark.sources.trace_arrow import samples_from_arrow
+from mdio_python_spark.sources.trace_arrow import (
+    RaggedSamplesError,
+    samples_from_arrow,
+)
+
+# a centroid set: a (cid, vector) Arrow table, or (cid, vector) pairs
+Centroids = pa.Table | Iterable[tuple[int, list[float]]]
 
 
 def fold_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -80,10 +86,21 @@ def fold_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return acc
 
 
+def _same_width(q: np.ndarray, c: np.ndarray) -> None:
+    """Both sides of an all-pairs fold must have one width (an empty side
+    has none): a wider side would be scored on a prefix, a narrower one
+    would index past its end."""
+    if len(q) and len(c) and q.shape[1] != c.shape[1]:
+        raise RaggedSamplesError(
+            f"vectors of width {q.shape[1]} scored against width {c.shape[1]}"
+        )
+
+
 def fold_dot_matrix(q: np.ndarray, c: np.ndarray) -> np.ndarray:
     """All-pairs left-fold dot products: ``q`` (nq, d) x ``c`` (nc, d)
     -> (nq, nc). Same per-pair rounding sequence as :func:`fold_dot`;
     vectorized over the pair grid, looped over dimensions."""
+    _same_width(q, c)
     q = np.ascontiguousarray(q, dtype=np.float64)
     c = np.ascontiguousarray(c, dtype=np.float64)
     acc = np.zeros((q.shape[0], c.shape[0]), dtype=np.float64)
@@ -96,6 +113,7 @@ def fold_l2sq_matrix(q: np.ndarray, c: np.ndarray) -> np.ndarray:
     """All-pairs left-fold squared-L2: ``q`` (nq, d) x ``c`` (nc, d) ->
     (nq, nc), accumulating ``(x - y) * (x - y)`` in dimension order —
     the numpy twin of ``similarity._sql_l2sq`` / ``_py_l2sq``."""
+    _same_width(q, c)
     q = np.ascontiguousarray(q, dtype=np.float64)
     c = np.ascontiguousarray(c, dtype=np.float64)
     acc = np.zeros((q.shape[0], c.shape[0]), dtype=np.float64)
@@ -119,13 +137,26 @@ def _vectors(col) -> np.ndarray:
 
 
 def _centroid_arrays(
-    centroids: Iterable[tuple[int, list[float]]],
+    centroids: Centroids,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(cids, C, cnorms) in ascending-cid order — the argmax tie order."""
-    cents = sorted((int(cid), [float(x) for x in vec]) for cid, vec in centroids)
-    cids = np.array([c[0] for c in cents], dtype=np.int64)
-    C = np.array([c[1] for c in cents], dtype=np.float64)
-    return cids, C, fold_norm(C)
+    """(cids, C, cnorms) in ascending-cid order — the argmax tie order —
+    from a (cid, vector) Arrow table (:func:`collect_prefix_centroids`) or
+    (cid, vector) pairs (a fitted centroid set). Pairs become the same
+    Arrow columns first, so every centroid matrix decodes through
+    :func:`_vectors`: a null or ragged centroid raises
+    ``RaggedSamplesError``."""
+    if not isinstance(centroids, pa.Table):
+        pairs = list(centroids)
+        centroids = pa.table(
+            {
+                "cid": pa.array([int(cid) for cid, _ in pairs], pa.int64()),
+                "vec": pa.array([vec for _, vec in pairs], pa.list_(pa.float64())),
+            }
+        )
+    cids = centroids.column(0).to_numpy().astype(np.int64)
+    order = np.argsort(cids, kind="stable")
+    C = _vectors(centroids.column(1))[order]
+    return cids[order], C, fold_norm(C)
 
 
 def collect_prefix_centroids(
@@ -133,23 +164,21 @@ def collect_prefix_centroids(
     n_centroids: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-) -> list[tuple[int, list[float]]]:
+) -> pa.Table:
     """The id-prefix centroid convention (``vec_id < n_centroids``, NO
     zero-norm filter — mirrors the oracle's ``cent`` CTE and
-    ``ivf_cell_assignments_join``'s cent side) as driver literals.
-    Bounded: kc rows x dim doubles — ~250 KB at the 100x stress point's
-    sqrt(n) sizing."""
-    return [
-        (int(r[0]), list(r[1]))
-        for r in vectors.where(F.col(id_col) < n_centroids)
-        .select(id_col, vec_col)
-        .collect()
-    ]
+    ``ivf_cell_assignments_join``'s cent side) as one driver-side
+    (cid, vector) Arrow table, for :func:`_centroid_arrays`. Bounded:
+    kc rows x dim doubles — ~250 KB at the 100x stress point's sqrt(n)
+    sizing."""
+    return (
+        vectors.where(F.col(id_col) < n_centroids).select(id_col, vec_col).toArrow()
+    )
 
 
 def cell_assignments_arrow(
     vectors: DataFrame,
-    centroids: Iterable[tuple[int, list[float]]],
+    centroids: Centroids,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     nprobe: int = 1,

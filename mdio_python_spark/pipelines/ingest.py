@@ -2,14 +2,22 @@
 ``src/mdio/ingestion/segy/pipeline.py:117-195``), re-expressed as two Spark
 passes mirroring the reference's two passes:
 
-1. header pass — ONE cached pruned scan of dims/coords; geometry detection
-   (A3/A4) + index strategies (W1-W7) as broadcast-pure transforms; then
-   ONE aggregate over the cached headers (trace count, distinct dim-tuple
-   count, each spatial dim's sorted distinct values) that yields grid QC
-   (A6/A7), the dim sizes and the dim tables (A2, built on the driver as
-   Arrow literals) together; then the write-plan job (max chunk keys per
-   scan block). The duplicate-tuple query runs only when the aggregate
-   reports fewer distinct tuples than traces, to name the offender.
+1. header pass — a pruned scan of dims/coords; geometry detection
+   (A3/A4) + index strategies (W1-W7) as broadcast-pure transforms. The
+   trace count, exact from the file sizes before any job, gates the rest:
+   - at or under ``HEADER_DRIVER_MAX_TRACES`` it is ONE job: a
+     ``toArrow`` of the strategy-applied dim keys, then driver numpy
+     (the reference's own shape: ``np.unique`` per index field) for grid
+     QC (A6/A7), the dim sizes, the dim tables (A2, Arrow literals) and
+     the write plan (max chunk keys per scan block);
+   - above it the scan is cached and ONE aggregate (trace count, distinct
+     dim-tuple count, each spatial dim's sorted distinct values) yields
+     grid QC, the dim sizes and the dim tables together; then the
+     write-plan job. The duplicate-tuple query runs only when the
+     aggregate reports fewer distinct tuples than traces, to name the
+     offender.
+   Strategy detection aggregates run in Spark on either side, over the
+   cached scan.
 2. trace pass — full read with the SAME dim fields decoded in the scan,
    strategies re-applied per-row from the broadcast plan, cell indices via
    broadcast joins against the literal dim tables, ONE exchange (the
@@ -36,6 +44,8 @@ import base64
 import math
 from dataclasses import dataclass, field
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
@@ -93,6 +103,23 @@ SHOT_DENSE_LITERAL_MAX = 1_000_000
 # boundary phase shifts of any genuinely grid-ordered file.
 DIRECT_WRITE_MAX_KEYS_PER_BLOCK = 4
 
+# Header-pass gate on the exact trace count (file sizes, no job): at or
+# under it the header keys are collected with ONE toArrow and grid QC, the
+# dim tables and the write plan run in driver numpy. It is a driver-memory
+# gate, not a speed gate. Header pass to the write plan, driver numpy vs
+# the Spark aggregates (4 cores, 4 GB heap at 1M, 6 GB above, int32 dims):
+#   1M traces, 2 dims:  7.8 vs 14.1 s; driver Python +86 MB
+#   1M traces, 4 dims:  7.7 vs 14.8 s; +132 MB
+#   4M traces, 4 dims: 16.8 vs 32.4 s; +529 MB
+#   10M traces, 2 dims: 20.6 vs 174 s; +866 MB (JVM peak 0.8 vs 4.4 GB)
+# The numpy pass is faster at every size measured, but it holds about
+# 40 + 23 x (spatial dims) bytes per trace on the driver (at 2M traces:
+# 193 MB for 2 dims, 335 MB for 6), while the aggregates hold only the
+# distinct dim values there. 2M keeps a 6-dim pass under 384 MiB, the
+# default floor of spark.driver.memoryOverhead, the non-JVM memory the
+# Python driver gets in cluster mode.
+HEADER_DRIVER_MAX_TRACES = 2_000_000
+
 
 @dataclass
 class _StrategyPlan:
@@ -128,13 +155,13 @@ def _literal(spark: SparkSession, df: DataFrame) -> DataFrame:
     return spark.createDataFrame(df.toArrow(), schema=df.schema)
 
 
-def _dim_table(spark: SparkSession, dim: StructField, values: list) -> DataFrame:
+def _dim_table(
+    spark: SparkSession, dim: StructField, values: list | np.ndarray
+) -> DataFrame:
     """A2 dim table (value, 0-based ``<dim>_idx``) from a dim's sorted
     distinct values, as an Arrow ``LocalRelation``: the rows of
     ``grid.dim_values`` without a Spark job. The value column keeps the
     header column's type."""
-    import pyarrow as pa
-
     schema = StructType(
         [dim, StructField(f"{dim.name}_idx", LongType(), nullable=False)]
     )
@@ -145,6 +172,142 @@ def _dim_table(spark: SparkSession, dim: StructField, values: list) -> DataFrame
         }
     )
     return spark.createDataFrame(table, schema=schema)
+
+
+def _check_sparsity(grid_cells: int, num_traces: int) -> None:
+    """A6: more than SPARSITY_ERROR grid cells per trace is an error."""
+    if grid_cells > SPARSITY_ERROR * num_traces:
+        raise GridTraceSparsityError(
+            f"grid cells {grid_cells} vs traces {num_traces}"
+        )
+
+
+def _duplicate_error(cell: dict) -> GridTraceCountError:
+    """A7: the error naming one duplicated dim tuple and its trace count."""
+    return GridTraceCountError(f"duplicate dim tuple: {cell}")
+
+
+def _grid_qc_spark(headers: DataFrame, spatial: list[str]) -> dict[str, list]:
+    """Grid QC (A6/A7) and the A2 dim values from ONE aggregate over the
+    transformed headers (a batch of aggregates sharing one input, as in
+    LMFAO): the trace count, the distinct-tuple count and each dim's
+    sorted distinct values — the quantities of stats.grid_sparsity,
+    grid.duplicate_cells and grid.dim_values. Each value set is bounded
+    by its dim's cardinality, not by the trace count. The duplicate query
+    runs only when the counts differ, to name the smallest offender in
+    dim order, as :func:`_grid_qc_arrow` does."""
+    qc = headers.agg(
+        F.count(F.lit(1)).alias("num_traces"),
+        F.count_distinct(*spatial).alias("num_cells"),
+        *[F.array_sort(F.collect_set(d)).alias(d) for d in spatial],
+    ).collect()[0]
+    values = {d: qc[d] for d in spatial}
+    _check_sparsity(math.prod(len(v) for v in values.values()), qc["num_traces"])
+    if qc["num_cells"] != qc["num_traces"]:
+        dupes = (
+            grid.duplicate_cells(headers, spatial).orderBy(*spatial).limit(1).collect()
+        )
+        if dupes:
+            raise _duplicate_error(dupes[0].asDict())
+    return values
+
+
+def _max_keys_per_block_spark(
+    headers: DataFrame,
+    dim_tables: dict[str, DataFrame],
+    chunks: list[int],
+    block_size: int,
+    trace_offsets: list[int] | None,
+) -> int:
+    """The write-plan statistic as one aggregate over the cached headers:
+    the most distinct chunk keys any scan block's traces fall in.
+    ``trace_offsets`` is given for a multi-file ingest."""
+    spatial = list(dim_tables)
+    hk = headers
+    for d in spatial:
+        hk = hk.join(F.broadcast(dim_tables[d]), on=d, how="inner")
+    hk = grid.chunk_keys(hk, spatial, chunks)
+    # block ids are PER FILE: each file's scan blocks start at its
+    # prefix-sum offset (generally not a block_size multiple), so a
+    # global floor(idx / block_size) would straddle real scan-task
+    # boundaries and mis-measure keys-per-block ~2x (ADVICE r8)
+    file_off = (
+        F.element_at(
+            F.array(*[F.lit(o) for o in trace_offsets]),
+            F.col("source_file").cast("int") + F.lit(1),
+        )
+        if trace_offsets is not None
+        else F.lit(0)
+    )
+    block_id = ((F.col("src_trace_idx") - file_off) / F.lit(block_size)).cast(
+        "long"
+    )
+    group_cols = (
+        [F.col("source_file"), block_id] if trace_offsets is not None else [block_id]
+    )
+    return (
+        hk.groupBy(*group_cols)
+        .agg(F.countDistinct(*[f"{d}_chunk" for d in spatial]).alias("_nk"))
+        .agg(F.max("_nk"))
+        .collect()[0][0]
+    ) or 0
+
+
+def _grid_qc_arrow(
+    keys: pa.Table, spatial: list[str]
+) -> tuple[dict[str, np.ndarray], list[np.ndarray]]:
+    """Grid QC (A6/A7) over the collected header keys in numpy: each dim's
+    sorted distinct values (the distributed path's
+    ``array_sort(collect_set)``, as in the reference's per-field
+    ``np.unique``) and every trace's 0-based index into them.
+
+    Sparsity is checked before the cells are counted, so the flat cell
+    index is at most SPARSITY_ERROR x the trace count and fits int64. A
+    duplicate is named as the smallest duplicated tuple in dim order."""
+    values: dict[str, np.ndarray] = {}
+    idx: list[np.ndarray] = []
+    for d in spatial:
+        values[d], inv = np.unique(keys.column(d).to_numpy(), return_inverse=True)
+        idx.append(inv.reshape(-1))
+    shape = tuple(len(values[d]) for d in spatial)
+    _check_sparsity(math.prod(shape), keys.num_rows)
+    cells, counts = np.unique(np.ravel_multi_index(idx, shape), return_counts=True)
+    if len(cells) != keys.num_rows:
+        i = int(np.argmax(counts > 1))
+        cell = np.unravel_index(cells[i], shape)
+        raise _duplicate_error(
+            {
+                **{d: values[d][j].item() for d, j in zip(spatial, cell)},
+                "n_traces": int(counts[i]),
+            }
+        )
+    return values, idx
+
+
+def _max_keys_per_block_arrow(
+    keys: pa.Table,
+    dim_idx: list[np.ndarray],
+    chunks: list[int],
+    block_size: int,
+    trace_offsets: list[int] | None,
+) -> int:
+    """The write-plan statistic in numpy: the most distinct chunk keys any
+    scan block's traces fall in. Blocks are per file, by the formula of
+    :func:`_max_keys_per_block_spark`."""
+    if keys.num_rows == 0:
+        return 0
+    chunk_idx = [i // c for i, c in zip(dim_idx, chunks)]
+    chunk_shape = tuple(int(c.max()) + 1 for c in chunk_idx)
+    n_keys = math.prod(chunk_shape)
+    src = keys.column("src_trace_idx").to_numpy()
+    if trace_offsets is not None:
+        file_no = keys.column("source_file").to_numpy().astype(np.int64)
+        local = (src - np.asarray(trace_offsets)[file_no]) // block_size
+        block = file_no * (int(local.max()) + 1) + local
+    else:
+        block = src // block_size
+    cell = np.unique(block * n_keys + np.ravel_multi_index(chunk_idx, chunk_shape))
+    return int(np.unique(cell // n_keys, return_counts=True)[1].max())
 
 
 def _build_strategy_plan(
@@ -414,54 +577,51 @@ def segy_to_store(
         return df
 
     # SEG-Y interleaves headers with samples, so every header-pass job is a
-    # full-file read — cache the decoded header table once (~2% of payload)
-    # and run detection/QC/dim jobs against the cache.
-    headers_raw = scan(include_samples=False).persist()
+    # full-file read. The trace count is exact from the file sizes, so the
+    # gate needs no job: at or under HEADER_DRIVER_MAX_TRACES ONE toArrow
+    # of the dim columns feeds driver numpy for grid QC, the dim tables and
+    # the write plan; above it those are Spark aggregates over the cached
+    # headers. The decoded header table (~2% of payload) is cached only
+    # where it is read more than once: on the Spark path, or when the
+    # strategies aggregate it first.
+    driver_grid = sum(fi.num_traces for fi in infos) <= HEADER_DRIVER_MAX_TRACES
+    reread = not driver_grid or bool(strategy_fields)
+    headers_raw = scan(include_samples=False)
+    if reread:
+        headers_raw = headers_raw.persist()
+    if stage_clock is not None:
+        stage_clock["header_mode"] = "driver" if driver_grid else "distributed"
     try:
-        # materialize the cache eagerly: dependent plans (detection aggs,
-        # QC, dim tables) see MEASURED InMemoryRelation stats, and the
-        # header-scan cost lands in its own stage clock
         t0 = _time.perf_counter()
-        headers_raw.count()
-        t0 = _mark("header_scan_s", t0)
+        if reread:
+            # materialize the cache eagerly: dependent plans (detection
+            # aggs, QC, dim tables) see MEASURED InMemoryRelation stats,
+            # and the header-scan cost lands in its own stage clock
+            headers_raw.count()
+            t0 = _mark("header_scan_s", t0)
         plan = _build_strategy_plan(spark, headers_raw, schema, overrides)
         headers = _apply_plan(headers_raw, plan)
         spatial = schema.spatial_dims
+        header_cols = headers.columns
         t0 = _mark("strategies_s", t0)
 
-        # grid QC (A6/A7) and the A2 dim values from ONE aggregate over the
-        # transformed headers (a batch of aggregates sharing one input,
-        # as in LMFAO): the trace count, the distinct-tuple count and each
-        # dim's sorted distinct values — the quantities of
-        # stats.grid_sparsity, grid.duplicate_cells and grid.dim_values.
-        # Each value set is bounded by its dim's cardinality, not by the
-        # trace count.
-        qc = headers.agg(
-            F.count(F.lit(1)).alias("num_traces"),
-            F.count_distinct(*spatial).alias("num_cells"),
-            *[F.array_sort(F.collect_set(d)).alias(d) for d in spatial],
-        ).collect()[0]
-        num_traces = qc["num_traces"]
-        dim_sizes = {d: len(qc[d]) for d in spatial}
-        grid_cells = math.prod(dim_sizes.values())
-        if grid_cells > SPARSITY_ERROR * num_traces:
-            raise GridTraceSparsityError(
-                f"grid cells {grid_cells} vs traces {num_traces}"
-            )
-        if qc["num_cells"] != num_traces:
-            dupes = grid.duplicate_cells(headers, spatial).limit(1).collect()
-            if dupes:
-                raise GridTraceCountError(
-                    f"duplicate dim tuple: {dupes[0].asDict()}"
-                )
+        if driver_grid:
+            keys = headers.select(
+                *spatial, "src_trace_idx", *(["source_file"] if multi else [])
+            ).toArrow()
+            if not reread:
+                t0 = _mark("header_scan_s", t0)  # the toArrow is the scan
+            dim_values, dim_idx = _grid_qc_arrow(keys, spatial)
+        else:
+            dim_values = _grid_qc_spark(headers, spatial)
+        dim_sizes = {d: len(dim_values[d]) for d in spatial}
         t0 = _mark("grid_qc_s", t0)
 
         # A2: dim tables built on the driver from the sorted values — pass
         # 2 joins broadcast against these, and the store write re-uses them.
         dim_tables = {
-            d: _dim_table(spark, headers.schema[d], qc[d]) for d in spatial
+            d: _dim_table(spark, headers.schema[d], dim_values[d]) for d in spatial
         }
-        header_cols = headers.columns
         t0 = _mark("dim_tables_s", t0)
 
         # C2 first (needed by the write-mode decision): template chunks
@@ -477,55 +637,35 @@ def segy_to_store(
             info.samples_per_trace,
         )
 
-        # Pivot-write mode decision (VERDICT r7 item 2): measure, on the
-        # CACHED headers, how many distinct chunk keys each scan block
-        # touches. A grid-ordered file (the poststack acquisition norm)
-        # gives O(1) keys per block, so each scan task can write its
-        # rows straight into the partitioned layout and the entire
-        # sample-payload exchange disappears — the dominant ingest cost
-        # at scale. A shot-scrambled file keeps the consolidation
-        # shuffle (file-count explosion otherwise).
-        hk = headers
-        for d in spatial:
-            hk = hk.join(F.broadcast(dim_tables[d]), on=d, how="inner")
-        hk = grid.chunk_keys(hk, spatial, [chunks[d] for d in spatial])
-        # block ids are PER FILE: each file's scan blocks start at its
-        # prefix-sum offset (generally not a block_size multiple), so a
-        # global floor(idx / block_size) would straddle real scan-task
-        # boundaries and mis-measure keys-per-block ~2x (ADVICE r8)
-        file_off = (
-            F.element_at(
-                F.array(*[F.lit(o) for o in trace_offsets]),
-                F.col("source_file").cast("int") + F.lit(1),
+        # Pivot-write mode decision (VERDICT r7 item 2): measure how many
+        # distinct chunk keys each scan block touches. A grid-ordered file
+        # (the poststack acquisition norm) gives O(1) keys per block, so
+        # each scan task can write its rows straight into the partitioned
+        # layout and the entire sample-payload exchange disappears — the
+        # dominant ingest cost at scale. A shot-scrambled file keeps the
+        # consolidation shuffle (file-count explosion otherwise).
+        chunk_list = [chunks[d] for d in spatial]
+        file_offsets = trace_offsets if multi else None
+        if driver_grid:
+            per_block_keys = _max_keys_per_block_arrow(
+                keys, dim_idx, chunk_list, block_size, file_offsets
             )
-            if multi
-            else F.lit(0)
-        )
-        block_id = ((F.col("src_trace_idx") - file_off) / F.lit(block_size)).cast(
-            "long"
-        )
-        group_cols = (
-            [F.col("source_file"), block_id] if multi else [block_id]
-        )
-        per_block_keys = (
-            hk.groupBy(*group_cols)
-            .agg(
-                F.countDistinct(
-                    *[f"{d}_chunk" for d in spatial]
-                ).alias("_nk")
+            # free the per-trace arrays before the trace pass
+            del keys, dim_idx
+        else:
+            per_block_keys = _max_keys_per_block_spark(
+                headers, dim_tables, chunk_list, block_size, file_offsets
             )
-            .agg(F.max("_nk"))
-            .collect()[0][0]
-        )
-        direct_write = (per_block_keys or 0) <= DIRECT_WRITE_MAX_KEYS_PER_BLOCK
+        direct_write = per_block_keys <= DIRECT_WRITE_MAX_KEYS_PER_BLOCK
         if stage_clock is not None:
             stage_clock["write_mode"] = (
                 "direct" if direct_write else "shuffle"
             )
-            stage_clock["max_chunk_keys_per_block"] = int(per_block_keys or 0)
+            stage_clock["max_chunk_keys_per_block"] = int(per_block_keys)
         t0 = _mark("write_plan_s", t0)
     finally:
-        headers_raw.unpersist()
+        if reread:
+            headers_raw.unpersist()
 
     # pass 2: full trace read with the same dim fields decoded in the scan;
     # strategies replayed per-row; J1 cell assignment via broadcast joins

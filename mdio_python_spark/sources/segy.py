@@ -459,11 +459,13 @@ def write_segy_store_aligned(
     the MAJOR dim's chunks are disjoint RANGES of the export sort order:
     every row with ``dims[0]`` in chunk i precedes every row in chunk
     i+1, whatever the minor-dim chunking. So each major chunk is one
-    contiguous byte range of the output — a Spark task reads that
-    chunk's parquet files directly (pyarrow, the read_traces pattern:
-    executors fetch their own byte ranges), sorts the in-memory slice by
-    the full dim tuple, encodes, and stages ``part-<chunk>``; the ranged
-    compose then lands every part at its exact offset. No
+    contiguous byte range of the output. The driver lists each major
+    chunk's parquet files, and :func:`staging.run_tasks` runs one
+    ``mapInArrow`` task per chunk of that list: the task reads the files
+    directly (pyarrow, the read_traces pattern: executors fetch their
+    own byte ranges), sorts the in-memory slice by the full dim tuple,
+    encodes, and stages ``part-<chunk>``; the ranged compose then lands
+    every part at its exact offset, again one task per part. No
     repartitionByRange sampling pass, no payload exchange, no shuffle
     spill — the export becomes read + encode + positional write, which
     is the disk-bandwidth shape a 22 GB leg needs to fit next to its own
@@ -537,13 +539,9 @@ def write_segy_store_aligned(
         return len(order)
 
     _t0 = time.perf_counter()
-    # one task per major chunk, straight from the driver's list (the
-    # compose_parts_ranged shape): no shuffle stage in front of the encode
-    n_total = sum(
-        spark.sparkContext.parallelize(files_by_chunk, len(files_by_chunk))
-        .map(encode_chunk)
-        .collect()
-    )
+    # one task per major chunk, straight from the driver's list (as in
+    # compose_parts_ranged): no shuffle stage in front of the encode
+    n_total = sum(staging_mod.run_tasks(spark, files_by_chunk, encode_chunk))
     if stage_clock is not None:
         stage_clock["export_encode_s"] = round(time.perf_counter() - _t0, 3)
         stage_clock["export_encode_mode"] = "chunk_aligned"

@@ -201,7 +201,8 @@ def compose_parts_ranged(
 ) -> int:
     """Executor-parallel compose: every staged part is copied to its
     final byte offset (``base_offset`` + prefix sum of part sizes, in
-    part-name order) by a Spark task, so the driver never streams part
+    part-name order) by its own Spark task — the driver's (part, offset)
+    list run through :func:`run_tasks` — so the driver never streams part
     bytes — it only stats sizes (bounded: one per range partition) and
     pre-sizes the sink. Returns the total bytes composed.
 
@@ -229,15 +230,36 @@ def compose_parts_ranged(
     if not names:
         return 0
 
-    def copy_one(task: tuple[str, int]) -> None:
+    def copy_one(task: tuple[str, int]) -> int:
         name, off = task
         with store.open_read(name) as src:
             sink.write_at(off, src, buffer)
         if delete_parts:
             store.delete(name)
+        return 0
 
-    spark.sparkContext.parallelize(offsets, len(offsets)).foreach(copy_one)
+    run_tasks(spark, offsets, copy_one)
     return total
+
+
+def run_tasks(spark, tasks: list, fn: Callable[[object], int]) -> list[int]:
+    """``fn(task)`` for every task of a driver-side list, one Spark task
+    each, returning the results in list order.
+
+    The tasks ride in the closure and each Spark task reads its list index
+    from ``spark.range`` (the ``segy.read_traces`` idiom), so the work runs
+    in ``mapInArrow``, on the Python workers the SQL scans already use: an
+    RDD ``parallelize().map()`` would start a second pool of Python workers
+    and pay their start-up on its first job."""
+    import pyarrow as pa
+
+    def run(batches):
+        for batch in batches:
+            out = [int(fn(tasks[int(i)])) for i in batch.column(0).to_numpy()]
+            yield pa.RecordBatch.from_pydict({"out": pa.array(out, pa.int64())})
+
+    ids = spark.range(0, len(tasks), numPartitions=max(1, len(tasks)))
+    return [r[0] for r in ids.mapInArrow(run, "out long").collect()]
 
 
 def iter_part_chunks(

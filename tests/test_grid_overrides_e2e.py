@@ -1,6 +1,11 @@
 """Grid-override e2e tests, modeled on the reference's mock-4D matrices
 (``tests/integration/test_import_streamer_grid_overrides.py`` and
 ``test_import_obn_grid_overrides.py``) but generated by our own factory.
+
+Every ingest here runs in both header modes (driver numpy, and the Spark
+aggregates that apply above ``HEADER_DRIVER_MAX_TRACES``): both must
+write the same store or raise the same error. The assertions read the
+driver-mode store.
 """
 
 from __future__ import annotations
@@ -10,12 +15,12 @@ import os
 import numpy as np
 import pytest
 
+from tests.header_modes import ingest_both_header_modes as segy_to_store
 from tests.segy_factory import FIELD_OFFSETS, write_segy_file
 
 from mdio_python_spark.pipelines.ingest import (
     GridTraceCountError,
     GridTraceSparsityError,
-    segy_to_store,
 )
 from mdio_python_spark.schemas import GridOverrides, default_registry
 from mdio_python_spark.sources.store import open_store

@@ -14,6 +14,7 @@ import numpy as np
 import pytest
 
 from tests.conftest import next_job_id
+from tests.header_modes import ingest_both_header_modes
 from tests.segy_factory import FIELD_OFFSETS, write_segy_file
 
 from mdio_python_spark.operators import grid as grid_mod
@@ -72,6 +73,20 @@ def _poststack_template():
     )
 
 
+def _scrambled_cells(seed: int, inlines: range) -> list[dict]:
+    import random
+
+    cells = [{"inline": il, "crossline": xl} for il in inlines for xl in (1, 2)]
+    random.Random(seed).shuffle(cells)
+    return cells
+
+
+def _write(path, cells, seed: int = 6) -> str:
+    samples = np.random.default_rng(seed).standard_normal((len(cells), 8))
+    write_segy_file(str(path), cells, samples.astype(np.float32))
+    return str(path)
+
+
 def test_trace_pass_single_hash_exchange(tmp_path, spark, poststack_file, monkeypatch):
     """The trace-pass payload plan never sort-merge-joins or windows the
     payload, and carries AT MOST the one chunk-key hash exchange — ZERO
@@ -117,19 +132,20 @@ def test_trace_pass_single_hash_exchange(tmp_path, spark, poststack_file, monkey
 
 
 def test_ingest_job_count(tmp_path, spark, poststack_file):
-    """The 10 x 10 ingest launches at most 7 Spark jobs, among them the
-    header cache, ONE QC/dim aggregate, the write-plan aggregate and the
-    trace write; the dim tables are written with pyarrow on the driver.
-    It launched 20 when QC, duplicates and each dim table were separate
-    jobs over parallelized literals, and 9 while each dim table was a
-    Spark write."""
+    """The 10 x 10 ingest launches at most 3 Spark jobs: ONE header job
+    (the toArrow of the dim keys, under the trace-count gate; grid QC,
+    the dim tables and the write plan are driver numpy) and the jobs of
+    the trace write. It launched 20 when QC, duplicates and each dim
+    table were separate jobs over parallelized literals, 9 while each dim
+    table was a Spark write, and 7 while the header cache, the QC/dim
+    aggregate and the write-plan aggregate were Spark jobs."""
     path, _ = poststack_file
     before = next_job_id(spark)
     ing.segy_to_store(
         spark, path, str(tmp_path / "store"), _poststack_template(),
         header_spec=SPEC,
     )
-    assert next_job_id(spark) - before <= 7
+    assert next_job_id(spark) - before <= 3
 
 
 def test_strategy_literals_are_local_relations(spark):
@@ -249,34 +265,87 @@ def test_shot_dense_paths_identical(spark, monkeypatch):
 
 def test_scrambled_file_keeps_consolidation_shuffle(tmp_path, spark, monkeypatch):
     """A file whose trace order scatters across the chunk grid must keep
-    the chunk-key exchange (direct write would explode file counts)."""
-    import random
-
-    rng = random.Random(3)
+    the chunk-key exchange (direct write would explode file counts) in
+    both header modes, which write the same store with the same
+    keys-per-block statistic."""
     # the grid must span > DIRECT_WRITE_MAX_KEYS_PER_BLOCK chunk keys
     # (inline chunk = 128) or even a scrambled file fits one chunk and
     # direct is correctly chosen: 640 inlines = 5 inline chunks
-    cells = [
-        {"inline": il, "crossline": xl}
-        for il in range(1, 641)
-        for xl in range(1, 3)
-    ]
-    rng.shuffle(cells)
-    rs = np.random.default_rng(6)
-    samples = rs.standard_normal((len(cells), 8)).astype(np.float32)
-    path = str(tmp_path / "scrambled.sgy")
-    write_segy_file(path, cells, samples)
+    cells = _scrambled_cells(3, range(1, 641))
+    path = _write(tmp_path / "scrambled.sgy", cells)
 
     captured = _capture_write_plan(monkeypatch)
-    sc = {}
-    ing.segy_to_store(
+    driver, _ = ingest_both_header_modes(
         spark, path, str(tmp_path / "store"), _poststack_template(),
-        header_spec=SPEC, block_size=10, stage_clock=sc,
+        header_spec=SPEC, block_size=10,
     )
     assert captured["direct"] is False
-    assert sc["write_mode"] == "shuffle"
+    assert driver["plan"][0] == "shuffle"
+    assert driver["plan"][1] > ing.DIRECT_WRITE_MAX_KEYS_PER_BLOCK
+    assert len(driver["rows"]) == len(cells)
 
-    from mdio_python_spark.sources.store import open_store
 
-    st = open_store(spark, str(tmp_path / "store"))
-    assert st.traces.count() == len(cells)
+def test_header_modes_agree_on_ordered_file(tmp_path, spark, poststack_file):
+    """The driver header pass and the Spark aggregates write the same
+    store from the 10 x 10 grid-ordered file: manifest (dims, chunks,
+    statsV1), dim tables, write plan and every stored row."""
+    path, _ = poststack_file
+    driver, _ = ingest_both_header_modes(
+        spark, path, str(tmp_path / "store"), _poststack_template(), header_spec=SPEC
+    )
+    assert driver["plan"] == ("direct", 1)
+    assert len(driver["rows"]) == 100
+    assert driver["dims"]["inline"] == [(v, v - 1) for v in range(1, 11)]
+
+
+def test_header_modes_agree_on_two_files(tmp_path, spark):
+    """Two scrambled files whose second file starts mid-block (261 traces,
+    block_size 7): both header modes count keys over PER-FILE blocks, and
+    agree with the count taken here from the files' trace order."""
+    first = _scrambled_cells(4, range(1, 131)) + [{"inline": 131, "crossline": 1}]
+    second = [{"inline": 131, "crossline": 2}] + _scrambled_cells(5, range(132, 261))
+    paths = [
+        _write(tmp_path / "a.sgy", first, seed=7),
+        _write(tmp_path / "b.sgy", second, seed=8),
+    ]
+    driver, _ = ingest_both_header_modes(
+        spark, paths, str(tmp_path / "store"), _poststack_template(),
+        header_spec=SPEC, block_size=7,
+    )
+
+    chunks = driver["manifest"]["chunks"]
+    expect = max(
+        len(
+            {
+                ((c["inline"] - 1) // chunks["inline"], (c["crossline"] - 1) // chunks["crossline"])
+                for c in cells[lo : lo + 7]
+            }
+        )
+        for cells in (first, second)
+        for lo in range(0, len(cells), 7)
+    )
+    assert driver["plan"][1] == expect
+
+
+@pytest.mark.parametrize("case", ["sparse", "duplicate"])
+def test_grid_errors_match_across_header_modes(tmp_path, spark, case):
+    """Grid QC raises the same error with the same message in both header
+    modes: the sparsity counts, and the smallest duplicated tuple in dim
+    order with its count."""
+    if case == "sparse":
+        cells = [{"inline": i, "crossline": i} for i in range(1, 12)]
+        err, want = ing.GridTraceSparsityError, "grid cells 121 vs traces 11"
+    else:
+        cells = [{"inline": il, "crossline": xl} for il in range(1, 5) for xl in range(1, 5)]
+        cells.insert(3, {"inline": 3, "crossline": 2})
+        cells.insert(9, {"inline": 2, "crossline": 4})
+        cells.append({"inline": 2, "crossline": 4})
+        err = ing.GridTraceCountError
+        want = "duplicate dim tuple: {'inline': 2, 'crossline': 4, 'n_traces': 3}"
+    path = _write(tmp_path / f"{case}.sgy", cells)
+    with pytest.raises(err) as raised:
+        ingest_both_header_modes(
+            spark, path, str(tmp_path / "store"), _poststack_template(),
+            header_spec=SPEC,
+        )
+    assert str(raised.value) == want

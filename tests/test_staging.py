@@ -192,3 +192,27 @@ def test_aligned_export_matches_shuffle_export(spark, tmp_path):
     out_shuffled = str(tmp_path / "shuffled.sgy")
     store_to_segy(spark, store_path, out_shuffled, num_partitions=3)
     assert filecmp.cmp(out_aligned, out_shuffled, shallow=False)
+
+
+def test_aligned_export_runs_no_rdd_job(spark, tmp_path, monkeypatch):
+    """The chunk-aligned encode and the ranged compose run as ``mapInArrow``
+    tasks on the SQL Python workers: ``store_to_segy`` never calls
+    ``SparkContext.parallelize`` (which would start a second pool of
+    Python workers), and the two-part export stays byte-identical."""
+    from pyspark import SparkContext
+
+    src = str(tmp_path / "cube.sgy")
+    make_poststack_3d(src, n_inline=130, n_crossline=2, n_samples=4)
+    store_path = str(tmp_path / "store.mdio")
+    segy_to_store(spark, src, store_path, default_registry().get("PostStack3DTime"))
+
+    def no_rdd(*_args, **_kwargs):
+        raise AssertionError("export called SparkContext.parallelize")
+
+    monkeypatch.setattr(SparkContext, "parallelize", no_rdd)
+    clock: dict = {}
+    out = str(tmp_path / "roundtrip.sgy")
+    assert store_to_segy(spark, store_path, out, stage_clock=clock) == 130 * 2
+    assert clock["export_encode_mode"] == "chunk_aligned"
+    assert clock["export_concat_mode"] == "ranged_parallel"
+    assert filecmp.cmp(src, out, shallow=False)

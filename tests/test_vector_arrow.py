@@ -392,3 +392,46 @@ def test_bad_embedding_raises_ragged_samples(spark, bad):
     ):
         with pytest.raises(PythonException, match="RaggedSamplesError"):
             out.collect()
+
+
+@pytest.mark.parametrize("widths", [(2, 3), (3, 2)], ids=["wider", "narrower"])
+def test_candidate_width_must_match_query_width(spark, widths):
+    """Candidates wider or narrower than the queries raise a named
+    RaggedSamplesError naming both widths: a wider candidate was scored
+    on a prefix of its dimensions (width-2 query vs [1, 0, 5]: cosine
+    0.196), a narrower one died on a numpy IndexError."""
+    from pyspark.errors import PythonException
+
+    from mdio_python_spark.operators.vector_arrow import cosine_topk_arrow
+
+    q_width, c_width = widths
+    queries = spark.createDataFrame(
+        [(0, [1.0] + [0.0] * (q_width - 1))], "vec_id long, embedding array<double>"
+    )
+    candidates = spark.createDataFrame(
+        [(1, [1.0, 0.0, 5.0][:c_width])], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(
+        PythonException,
+        match=f"RaggedSamplesError: vectors of width {q_width} scored against width {c_width}",
+    ):
+        cosine_topk_arrow(queries, candidates, k=1).collect()
+
+
+@pytest.mark.parametrize("bad", [[1.0, 2.0, 3.0], None], ids=["ragged", "null"])
+def test_bad_centroid_raises_ragged_samples(spark, bad):
+    """A ragged or null centroid is a RaggedSamplesError on the driver, for
+    the id-prefix centroids read from the corpus and for a given centroid
+    set alike — not a TypeError or a numpy shape ValueError."""
+    from mdio_python_spark.operators.vector_arrow import (
+        _centroid_arrays,
+        knn_graph_arrow,
+    )
+    from mdio_python_spark.sources.trace_arrow import RaggedSamplesError
+
+    rows = [(i, [float(i % 3) + 1.0, float(i % 5)]) for i in range(1, 40)]
+    df = spark.createDataFrame(rows + [(0, bad)], "vec_id long, embedding array<float>")
+    with pytest.raises(RaggedSamplesError):
+        knn_graph_arrow(df, k=3, n_centroids=4)
+    with pytest.raises(RaggedSamplesError):
+        _centroid_arrays([(1, [1.0, 0.0]), (0, bad)])

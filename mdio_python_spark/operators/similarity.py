@@ -346,18 +346,51 @@ def _resolve_centroids(
 ) -> tuple[list[tuple[int, list[float]]], dict[int, float]]:
     """Shared by :func:`ivf_topk` / :func:`ivfpq_topk`: the sorted
     centroid literals (fitted when given, id-prefix stand-in otherwise)
-    plus their plan-build-time left-fold norms."""
-    cents = (
-        sorted((int(cid), [float(x) for x in vec]) for cid, vec in centroids)
-        if centroids is not None
-        else sorted(
-            (int(r[0]), list(r[1]))
-            for r in candidates.where(F.col(id_col) < n_centroids)
-            .select(id_col, vec_col)
-            .collect()
-        )
+    plus their plan-build-time left-fold norms.
+
+    The id-prefix rows are read with one ``toArrow`` that observes the
+    corpus's vector widths on the way, and centroids decode through the
+    trace-batch codec: a null or ragged centroid raises
+    ``RaggedSamplesError``, and so do id-prefix centroids in a ragged
+    corpus or of a width other than the rest of the corpus — the SQL dot
+    product would pad the shorter vector with nulls and score nothing. A
+    fitted centroid set is checked for nulls and raggedness only, which
+    keeps that path free of Spark jobs."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql import Observation
+
+    from mdio_python_spark.sources.trace_arrow import (
+        RaggedSamplesError,
+        samples_from_arrow,
     )
-    return cents, {cid: _lfold_norm(vec) for cid, vec in cents}
+
+    if centroids is not None:
+        cids = np.array([int(cid) for cid, _ in centroids], dtype=np.int64)
+        vecs = samples_from_arrow(
+            pa.array([vec for _, vec in centroids], pa.list_(pa.float64()))
+        )
+    else:
+        vec = F.col(vec_col)
+        width = F.when(vec.isNotNull(), F.size(vec))
+        obs = Observation("corpus_widths")
+        prefix = (
+            candidates.observe(obs, F.min(width).alias("lo"), F.max(width).alias("hi"))
+            .where(F.col(id_col) < n_centroids)
+            .select(F.col(id_col).cast("long"), vec)
+            .toArrow()
+        )
+        cids = prefix.column(0).to_numpy()
+        vecs = samples_from_arrow(prefix.column(1))
+        corpus = set(obs.get.values()) - {None}
+        if len(cids) and corpus != {vecs.shape[1]}:
+            raise RaggedSamplesError(
+                f"centroids of width {vecs.shape[1]} for a corpus of vector "
+                f"widths {sorted(corpus)}"
+            )
+    order = np.argsort(cids, kind="stable")
+    cents = [(int(cids[i]), vecs[i].tolist()) for i in order]
+    return cents, {cid: _lfold_norm(v) for cid, v in cents}
 
 
 def _cell_structs(vec_sql: str, vnorm_sql: str, cents, cnorms) -> Column:

@@ -18,21 +18,24 @@ passes mirroring the reference's two passes:
      offender.
    Strategy detection aggregates run in Spark on either side, over the
    cached scan.
-2. trace pass — full read with the SAME dim fields decoded in the scan,
-   strategies re-applied per-row from the broadcast plan, cell indices via
-   broadcast joins against the literal dim tables, ONE exchange (the
-   chunk-key repartition any chunked write needs), statsV1 accumulated via
-   ``observe()`` during the write action — zero extra payload passes.
+2. trace pass — over the cached header table only: strategies re-applied
+   per-row from the broadcast plan, cell indices via broadcast joins
+   against the literal dim tables, the chunk keys, and (shuffle mode only)
+   the chunk-key repartition of the header rows. ONE ``mapInArrow`` store
+   writer (``store.write_data``) then reads each row's samples and raw
+   header from the SEG-Y files and writes the chunk files with pyarrow;
+   statsV1 folds its per-trace partials via ``observe()`` in the same job.
 
-Scale design vs round 1: the old pass 2 joined the full sample payload to
-the header-pass assignment on ``src_trace_idx`` — an equal-cardinality
-sort-merge join that shuffled 100 TB of samples once, then again on the
-chunk keys. Every strategy is now replayed per-row from tiny collected
-aggregates (per-cable channel minima, per-line floor minima, per-line
-dense shot maps), so the payload never shuffles except for the final
-chunk-key exchange. Only the ``has_duplicates``/``non_binned`` ordinal
-genuinely needs a window over the payload (row_number per dim tuple in
-file order) and costs a second exchange in that mode only.
+Scale design: the sample payload never enters the JVM. Round 1 joined the
+full payload to the header-pass assignment on ``src_trace_idx`` (a
+100 TB sort-merge join) and shuffled it again on the chunk keys; later
+rounds replayed every strategy per-row from tiny collected aggregates
+(per-cable channel minima, per-line floor minima, per-line dense shot
+maps) but still pushed the decoded samples through Spark's exchange and
+parquet writer. Now only header rows move through Spark: the
+``has_duplicates``/``non_binned`` ordinal window (row_number per dim tuple
+in file order) and the chunk-key exchange shuffle ~100 bytes per trace,
+and each writer task reads its traces' bytes straight from the files.
 
 Driver stages (validate / file info / unit resolution / schema resolution)
 stay plain Python, exactly like the reference's analyzer stages.
@@ -46,7 +49,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
@@ -97,8 +100,8 @@ SHOT_DENSE_LITERAL_MAX = 1_000_000
 
 # Pivot-write mode gate: when no scan block's rows span more than this
 # many distinct chunk keys (measured on the cached header pass), the
-# trace write skips the chunk-key exchange and writes directly from the
-# scan tasks — see store.write_data(direct=). 4 keeps worst-case files
+# trace write skips the chunk-key exchange and each scan partition writes
+# its own chunk files (see store.write_data). 4 keeps worst-case files
 # per chunk directory at a handful while admitting the block/chunk
 # boundary phase shifts of any genuinely grid-ordered file.
 DIRECT_WRITE_MAX_KEYS_PER_BLOCK = 4
@@ -548,16 +551,14 @@ def segy_to_store(
     if scaled_coords and "coordinate_scalar" not in fields:
         fields = [*fields, "coordinate_scalar"]
 
-    def scan(include_samples: bool) -> DataFrame:
+    def scan() -> DataFrame:
         per_file = []
         for i, (fi, off) in enumerate(zip(infos, trace_offsets)):
             part = segy.read_traces(
                 spark,
                 fi,
                 fields=fields,
-                include_samples=include_samples,
-                include_raw_header=include_samples,
-                include_sample_stats=include_samples,
+                include_samples=False,
                 block_size=block_size,
                 spec=header_spec,
             ).withColumn(
@@ -581,14 +582,11 @@ def segy_to_store(
     # gate needs no job: at or under HEADER_DRIVER_MAX_TRACES ONE toArrow
     # of the dim columns feeds driver numpy for grid QC, the dim tables and
     # the write plan; above it those are Spark aggregates over the cached
-    # headers. The decoded header table (~2% of payload) is cached only
-    # where it is read more than once: on the Spark path, or when the
-    # strategies aggregate it first.
+    # headers. The decoded header table (~2% of payload) is cached in both
+    # modes: pass 2 runs over it, and the store writer reads the samples.
     driver_grid = sum(fi.num_traces for fi in infos) <= HEADER_DRIVER_MAX_TRACES
     reread = not driver_grid or bool(strategy_fields)
-    headers_raw = scan(include_samples=False)
-    if reread:
-        headers_raw = headers_raw.persist()
+    headers_raw = scan().persist()
     if stage_clock is not None:
         stage_clock["header_mode"] = "driver" if driver_grid else "distributed"
     try:
@@ -640,10 +638,9 @@ def segy_to_store(
         # Pivot-write mode decision (VERDICT r7 item 2): measure how many
         # distinct chunk keys each scan block touches. A grid-ordered file
         # (the poststack acquisition norm) gives O(1) keys per block, so
-        # each scan task can write its rows straight into the partitioned
-        # layout and the entire sample-payload exchange disappears — the
-        # dominant ingest cost at scale. A shot-scrambled file keeps the
-        # consolidation shuffle (file-count explosion otherwise).
+        # each scan task writes its rows straight into the chunk layout. A
+        # shot-scrambled file keeps the chunk-key repartition (file-count
+        # explosion otherwise).
         chunk_list = [chunks[d] for d in spatial]
         file_offsets = trace_offsets if multi else None
         if driver_grid:
@@ -663,40 +660,59 @@ def segy_to_store(
             )
             stage_clock["max_chunk_keys_per_block"] = int(per_block_keys)
         t0 = _mark("write_plan_s", t0)
+
+        # pass 2 runs over the cached header rows only: the strategies
+        # replayed from the broadcast plan, J1 cell assignment by broadcast
+        # joins against the literal dim tables, the chunk keys, then (in
+        # shuffle mode) the chunk-key repartition, which moves header rows
+        # only. Sorting each partition by (chunk keys, src_trace_idx) hands
+        # the store writer each chunk's traces as contiguous file runs,
+        # whatever the overrides or the write mode. The writer tasks read
+        # the samples and raw headers from the SEG-Y files themselves and
+        # return per-trace statsV1 partials, folded below by observe() in
+        # the write job — the Spark analog of the reference accumulating
+        # stats in its trace workers (``segy/_workers.py:179-194``).
+        # scale=7: seismic amplitudes are O(1), so 1e-7 quantization keeps
+        # exact-decimal determinism while matching float64 stats to ~1e-8.
+        traces = headers
+        for d in spatial:
+            traces = traces.join(F.broadcast(dim_tables[d]), on=d, how="inner")
+        traces = grid.chunk_keys(traces, spatial, chunk_list)
+        chunk_cols = [f"{d}_chunk" for d in spatial]
+        if not direct_write:
+            # an explicit partition count: AQE would coalesce a by-column
+            # repartition of these small header rows into one writer task
+            n_keys = math.prod(-(-dim_sizes[d] // chunks[d]) for d in spatial)
+            shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+            traces = traces.repartition(min(n_keys, shuffle_parts), *chunk_cols)
+        traces = traces.sortWithinPartitions(*chunk_cols, "src_trace_idx")
+        # stored columns: the header columns, with the payload where the
+        # scan decodes it (after the decoded fields, segy.trace_schema)
+        stored = [c for c in traces.columns if c not in chunk_cols]
+        scanned = {"src_trace_idx", *fields}
+        at = max(i for i, c in enumerate(stored) if c in scanned) + 1
+        stored[at:at] = list(store.PAYLOAD_COLUMNS)
+
+        t0 = _time.perf_counter()
+        srow = store.write_data(
+            traces,
+            dim_tables,
+            store_path,
+            chunks,
+            stored,
+            infos,
+            metrics=[
+                F.sum("n_nz").alias("count"),
+                F.min("s_min").alias("min"),
+                F.max("s_max").alias("max"),
+                dsum("s_sum", 7).alias("sum"),
+                dsum("s_ssq", 7).alias("sum_squares"),
+            ],
+        )
+        _mark("pivot_write_s", t0)
     finally:
-        if reread:
-            headers_raw.unpersist()
+        headers_raw.unpersist()
 
-    # pass 2: full trace read with the same dim fields decoded in the scan;
-    # strategies replayed per-row; J1 cell assignment via broadcast joins
-    # against the literal dim tables — no src_trace_idx join, no payload
-    # shuffle before the single chunk-key exchange in the write.
-    full = _apply_plan(scan(include_samples=True), plan)
-    for d in spatial:
-        full = full.join(F.broadcast(dim_tables[d]), on=d, how="inner")
-
-    # statsV1 (A1): nonzero-masked sample statistics folded into the write
-    # action via observe() over the scan's per-trace partials — the Spark
-    # analog of the reference accumulating stats in its trace workers
-    # (``segy/_workers.py:179-194``). scale=7: seismic amplitudes are O(1),
-    # so 1e-7 quantization keeps exact-decimal determinism while matching
-    # float64 stats to ~1e-8.
-    obs = Observation("ingest_stats")
-    full = full.observe(
-        obs,
-        F.sum("n_nz").alias("count"),
-        F.min("s_min").alias("min"),
-        F.max("s_max").alias("max"),
-        dsum("s_sum", 7).alias("sum"),
-        dsum("s_ssq", 7).alias("sum_squares"),
-    )
-    full = full.drop("n_nz", "s_sum", "s_ssq", "s_min", "s_max")
-
-    t0 = _time.perf_counter()
-    store.write_data(full, dim_tables, store_path, chunks, direct=direct_write)
-    _mark("pivot_write_s", t0)
-
-    srow = obs.get
     count = srow["count"] or 0
     summary = SummaryStatistics(
         count=count,

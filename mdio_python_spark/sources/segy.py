@@ -4,9 +4,11 @@ Reading (S1/S2/S3, ``src/mdio/segy/file.py:152-186``, ``parsers.py:23-76``,
 ``_raw_trace_wrapper.py:14-49``): the driver scans the 3600-byte file header
 once; each executor task then seeks its own trace block's byte range — the
 Spark analog of the reference's 10k-trace process-pool fan-out, decoded
-per block in numpy, not per row. One decoder, :func:`decode_trace_block`,
+per block in numpy, not per row. One decoder, :func:`decode_trace_rows`,
 serves :func:`read_traces` (the engine's entry point: it takes a
-header-spec object) and ``format("segy")`` (``segy_datasource``).
+header-spec object) and ``format("segy")`` (``segy_datasource``) through
+:func:`decode_trace_block`, and the ingest store writer
+(``sources.store``), which gathers its traces with :func:`read_trace_rows`.
 
 Writing (K3/K4, ``segy/blocked_io.py:214-302``, ``creation.py:61-125``):
 ``repartitionByRange(dims) + sortWithinPartitions`` gives totally-ordered
@@ -124,10 +126,7 @@ def segy_file_info(path: str, text_encoding: str = "cp037") -> SegyFileInfo:
 
 
 def trace_schema(
-    fields: list[str],
-    raw_header: bool = False,
-    samples: bool = True,
-    sample_stats: bool = False,
+    fields: list[str], raw_header: bool = False, samples: bool = True
 ) -> str:
     """DDL schema of a decoded trace block (see :func:`decode_trace_block`)."""
     parts = ["src_trace_idx long", *[f"{f} long" for f in fields]]
@@ -135,37 +134,43 @@ def trace_schema(
         parts.append("raw_header binary")
     if samples:
         parts.append("samples array<float>")
-        if sample_stats:
-            parts.append(
-                "n_nz long, s_sum double, s_ssq double, s_min double, s_max double"
-            )
     return ", ".join(parts)
 
 
-def decode_trace_block(
-    f,
+def read_trace_rows(f, info: SegyFileInfo, start: int, out: np.ndarray) -> np.ndarray:
+    """Read traces ``[start, start + len(out))`` of the open file ``f`` into
+    ``out``, a C-contiguous ``[n, trace_bytes]`` uint8 array, and return it.
+    A file that ends early raises instead of leaving rows unwritten."""
+    f.seek(info.data_offset + start * info.trace_bytes)
+    if f.readinto(memoryview(out).cast("B")) != out.size:
+        raise ValueError(
+            f"{info.path}: traces {start}..{start + len(out) - 1} run past the "
+            "end of the file"
+        )
+    return out
+
+
+def decode_trace_rows(
+    raw: np.ndarray,
     info: SegyFileInfo,
-    start: int,
-    n: int,
+    src_idx: np.ndarray,
     fields: list[str],
     spec: dict[str, tuple[int, str]] | None = None,
     raw_header: bool = False,
     samples: bool = True,
     sample_stats: bool = False,
 ) -> pa.RecordBatch:
-    """The SEG-Y block decoder: traces ``[start, start + n)`` of the open
-    file ``f`` -> one Arrow batch of :func:`trace_schema`. Only ``fields``
-    are decoded (P1 column pruning, ``ingestion/segy/reader.py:48-57``).
-    ``sample_stats`` adds per-trace nonzero-sample partials, the statsV1
-    accumulation the reference folds into its trace workers
+    """The SEG-Y decoder: raw ``[n, trace_bytes]`` trace rows (their
+    ordinals in ``src_idx``) -> one Arrow batch of :func:`trace_schema`.
+    Only ``fields`` are decoded (P1 column pruning,
+    ``ingestion/segy/reader.py:48-57``). ``sample_stats`` adds per-trace
+    nonzero-sample partials ``n_nz, s_sum, s_ssq, s_min, s_max``, the
+    statsV1 accumulation the reference folds into its trace workers
     (``segy/_workers.py:179-194``); a trace with no nonzero sample gets
     +-inf in ``s_min``/``s_max`` (NaN would poison Spark's min/max)."""
-    f.seek(info.data_offset + start * info.trace_bytes)
-    raw = np.frombuffer(f.read(n * info.trace_bytes), dtype=np.uint8).reshape(
-        n, info.trace_bytes
-    )
+    n = len(raw)
     headers = raw[:, : codec.TRACE_HEADER_BYTES]
-    cols = {"src_trace_idx": np.arange(start, start + n, dtype=np.int64)}
+    cols = {"src_trace_idx": np.asarray(src_idx, dtype=np.int64)}
     cols.update(codec.decode_trace_headers(headers, fields, spec))
     if raw_header:
         cols["raw_header"] = trace_arrow.headers_to_arrow(headers)
@@ -186,23 +191,36 @@ def decode_trace_block(
     return pa.RecordBatch.from_pydict(cols)
 
 
+def decode_trace_block(
+    f,
+    info: SegyFileInfo,
+    start: int,
+    n: int,
+    fields: list[str],
+    spec: dict[str, tuple[int, str]] | None = None,
+    raw_header: bool = False,
+    samples: bool = True,
+) -> pa.RecordBatch:
+    """Traces ``[start, start + n)`` of the open file ``f`` ->
+    :func:`decode_trace_rows`."""
+    raw = read_trace_rows(f, info, start, np.empty((n, info.trace_bytes), np.uint8))
+    return decode_trace_rows(
+        raw, info, np.arange(start, start + n), fields, spec, raw_header, samples
+    )
+
+
 def read_traces(
     spark: SparkSession,
     info: SegyFileInfo,
     fields: list[str],
     include_samples: bool = True,
     include_raw_header: bool = False,
-    include_sample_stats: bool = False,
     block_size: int = 10_000,
     spec: dict[str, tuple[int, str]] | None = None,
 ) -> DataFrame:
     """S2/S3 — distributed trace scan: one input block per ``block_size``
     traces, each decoded by :func:`decode_trace_block` in a
     ``mapInArrow`` task. Output schema: :func:`trace_schema`.
-
-    ``include_sample_stats`` appends the per-trace statsV1 partials;
-    downstream an ``observe()`` over them yields the dataset summary
-    during the write action with zero extra payload passes.
     """
     n_blocks = max(1, math.ceil(info.num_traces / block_size))
 
@@ -217,12 +235,9 @@ def read_traces(
                             f, info, start, n, fields, spec,
                             raw_header=include_raw_header,
                             samples=include_samples,
-                            sample_stats=include_sample_stats,
                         )
 
-    schema = trace_schema(
-        fields, include_raw_header, include_samples, include_sample_stats
-    )
+    schema = trace_schema(fields, include_raw_header, include_samples)
     # contiguous block ranges per partition (spark.range's native
     # slicing — NO round-robin repartition): a task's traces are a
     # contiguous file range, so direct-mode ingest writes each chunk

@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import IntegerType, StructType
 
 TABLE_NAMES = (
     "region",
@@ -57,6 +58,44 @@ def normalize_nanos_ts(df: DataFrame, col: str = "ts") -> DataFrame:
         # defensive: ISO-8601 strings; UTC session tz keeps parity
         df = df.withColumn(col, F.to_timestamp(F.col(col)))
     return df
+
+
+def declared_schema(path: str) -> StructType | None:
+    """The Spark schema of the parquet table at ``path`` (one file, or a
+    directory with hive ``<col>=<int>`` partitions), declared from ONE
+    footer read with pyarrow on the driver: the file's columns through
+    ``from_arrow_schema``, then the partition columns named in that file's
+    directory path, typed ``int`` as Spark infers small integer values.
+    Files and directories whose names start with ``_`` or ``.`` are skipped,
+    as Spark skips them. ``None`` when there is no data file."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    first, parts = path, []
+    if os.path.isdir(path):
+        first = None
+        for root, dirs, files in os.walk(path):
+            dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+            files = sorted(f for f in files if not f.startswith(("_", ".")))
+            if files:
+                first = os.path.join(root, files[0])
+                parts = os.path.relpath(root, path).split(os.sep)
+                break
+        if first is None:
+            return None
+    schema = from_arrow_schema(pq.read_schema(first))
+    for part in parts:
+        if "=" in part:
+            schema = schema.add(part.split("=", 1)[0], IntegerType())
+    return schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema of :func:`declared_schema`:
+    the read runs no schema-inference job."""
+    schema = declared_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -2,10 +2,11 @@
 
 The round-1 pipeline joined the payload to the header-pass assignment on
 ``src_trace_idx`` (an equal-cardinality sort-merge join: one full payload
-shuffle) and then shuffled again on the chunk keys. The rewrite replays
-strategies per-row from broadcast literals, so the ONLY hash exchange in
-the trace-pass plan must be the chunk-key repartition, and statsV1 must
-fall out of the same action via observe() (no extra payload job).
+shuffle) and then shuffled again on the chunk keys. The trace pass now
+runs over header rows only: strategies replay per-row from broadcast
+literals, the ONLY hash exchange is the chunk-key repartition of header
+rows, the store writer reads the samples from the SEG-Y files itself, and
+statsV1 falls out of the same action via observe() (no extra payload job).
 """
 
 from __future__ import annotations
@@ -17,7 +18,6 @@ from tests.conftest import next_job_id
 from tests.header_modes import ingest_both_header_modes
 from tests.segy_factory import FIELD_OFFSETS, write_segy_file
 
-from mdio_python_spark.operators import grid as grid_mod
 from mdio_python_spark.pipelines import ingest as ing
 from mdio_python_spark.schemas import default_registry
 from mdio_python_spark.sources import store as store_mod
@@ -42,29 +42,48 @@ def poststack_file(tmp_path):
     return path, samples
 
 
+def _seq(scala_seq) -> list:
+    return [scala_seq.apply(i) for i in range(scala_seq.length())]
+
+
+def _node_outputs(node) -> set[str]:
+    """The column names every node of a physical plan outputs, descending
+    into the adaptive plan's current plan and the cached relations' plans."""
+    names = {a.name() for a in _seq(node.output())}
+    kids = _seq(node.children())
+    kind = node.getClass().getSimpleName()
+    if kind == "AdaptiveSparkPlanExec":
+        kids.append(node.executedPlan())
+    elif kind == "InMemoryTableScanExec":
+        kids.append(node.relation().cachedPlan())
+    for kid in kids:
+        names |= _node_outputs(kid)
+    return names
+
+
 def _capture_write_plan(monkeypatch) -> dict:
-    """Spy on store.write_data: records the executed plan of the trace
-    write (chunk keys + optional exchange) and the write mode."""
+    """Spy on store.trace_writer: records the executed plan of the pass-2
+    write (header rows, chunk keys, the optional exchange and the writer)
+    and the columns its nodes output."""
     captured = {}
-    orig = store_mod.write_data
+    orig = store_mod.trace_writer
 
-    def spy(traces, dim_tables, store_path, chunks, codec="zstd", direct=False):
-        spatial = list(chunks)
-        with_keys = grid_mod.chunk_keys(
-            traces, spatial, [chunks[d] for d in spatial]
-        )
-        chunk_cols = [f"{d}_chunk" for d in spatial]
-        if not direct:
-            with_keys = with_keys.repartition(*chunk_cols)
-        captured["plan"] = (
-            with_keys._jdf.queryExecution().executedPlan().toString()
-        )
-        captured["direct"] = direct
-        return orig(traces, dim_tables, store_path, chunks, codec, direct)
+    def spy(*args, **kwargs):
+        out = orig(*args, **kwargs)
+        plan = out._jdf.queryExecution().executedPlan()
+        captured["plan"] = plan.toString()
+        captured["outputs"] = _node_outputs(plan)
+        return out
 
-    monkeypatch.setattr(store_mod, "write_data", spy)
-    monkeypatch.setattr(ing.store, "write_data", spy)
+    monkeypatch.setattr(store_mod, "trace_writer", spy)
     return captured
+
+
+def _assert_header_rows_only(outputs: set[str]) -> None:
+    """No node of the trace-pass plan outputs the payload: the store
+    writer reads ``samples`` and ``raw_header`` from the SEG-Y file."""
+    assert {"src_trace_idx", "inline_chunk", "n_nz"} <= outputs, outputs
+    assert not outputs & set(store_mod.PAYLOAD_COLUMNS), outputs
 
 
 def _poststack_template():
@@ -88,23 +107,25 @@ def _write(path, cells, seed: int = 6) -> str:
 
 
 def test_trace_pass_single_hash_exchange(tmp_path, spark, poststack_file, monkeypatch):
-    """The trace-pass payload plan never sort-merge-joins or windows the
-    payload, and carries AT MOST the one chunk-key hash exchange — ZERO
-    when the header stats prove the file grid-ordered (round-8 direct
-    write: each scan task lands in O(1) chunk dirs, so the consolidation
-    shuffle is skipped; a scrambled file keeps exactly one)."""
+    """The trace-pass plan never sort-merge-joins or windows, no node of
+    it outputs the payload, and it carries AT MOST the one chunk-key hash
+    exchange — ZERO when the header stats prove the file grid-ordered
+    (round-8 direct write: each scan task lands in O(1) chunk dirs, so
+    the consolidation shuffle is skipped; a scrambled file keeps exactly
+    one)."""
     path, samples = poststack_file
     captured = _capture_write_plan(monkeypatch)
+    clock: dict = {}
     ds = ing.segy_to_store(
         spark, path, str(tmp_path / "store"), _poststack_template(),
-        header_spec=SPEC,
+        header_spec=SPEC, stage_clock=clock,
     )
 
     plan = captured["plan"]
     # the factory file is inline/crossline-ordered: the measured header
-    # stats must pick the direct path and the payload plan must be
+    # stats must pick the direct path and the trace-pass plan must be
     # exchange-free
-    assert captured["direct"] is True
+    assert clock["write_mode"] == "direct"
     assert plan.count("Exchange hashpartitioning") == 0, plan
     assert "SortMergeJoin" not in plan, plan
     assert "WindowExec" not in plan, plan
@@ -119,6 +140,7 @@ def test_trace_pass_single_hash_exchange(tmp_path, spark, poststack_file, monkey
     assert len(build_sides) == 2, plan  # the inline and crossline dims
     assert all(side.startswith("LocalTableScan") for side in build_sides), plan
     assert "ExistingRDD" not in plan and "LogicalRDD" not in plan, plan
+    _assert_header_rows_only(captured["outputs"])
 
     # statsV1 folded into the write action: compare to a direct numpy pass
     s = samples.astype(np.float64)
@@ -267,7 +289,7 @@ def test_scrambled_file_keeps_consolidation_shuffle(tmp_path, spark, monkeypatch
     """A file whose trace order scatters across the chunk grid must keep
     the chunk-key exchange (direct write would explode file counts) in
     both header modes, which write the same store with the same
-    keys-per-block statistic."""
+    keys-per-block statistic. The exchange moves header rows only."""
     # the grid must span > DIRECT_WRITE_MAX_KEYS_PER_BLOCK chunk keys
     # (inline chunk = 128) or even a scrambled file fits one chunk and
     # direct is correctly chosen: 640 inlines = 5 inline chunks
@@ -279,7 +301,8 @@ def test_scrambled_file_keeps_consolidation_shuffle(tmp_path, spark, monkeypatch
         spark, path, str(tmp_path / "store"), _poststack_template(),
         header_spec=SPEC, block_size=10,
     )
-    assert captured["direct"] is False
+    assert captured["plan"].count("Exchange hashpartitioning") == 1
+    _assert_header_rows_only(captured["outputs"])
     assert driver["plan"][0] == "shuffle"
     assert driver["plan"][1] > ing.DIRECT_WRITE_MAX_KEYS_PER_BLOCK
     assert len(driver["rows"]) == len(cells)
@@ -301,7 +324,11 @@ def test_header_modes_agree_on_ordered_file(tmp_path, spark, poststack_file):
 def test_header_modes_agree_on_two_files(tmp_path, spark):
     """Two scrambled files whose second file starts mid-block (261 traces,
     block_size 7): both header modes count keys over PER-FILE blocks, and
-    agree with the count taken here from the files' trace order."""
+    agree with the count taken here from the files' trace order. Each
+    ``source_file`` exports byte-identically: the store writer mapped
+    every global trace ordinal back to its own file."""
+    from mdio_python_spark.pipelines.export import store_to_segy
+
     first = _scrambled_cells(4, range(1, 131)) + [{"inline": 131, "crossline": 1}]
     second = [{"inline": 131, "crossline": 2}] + _scrambled_cells(5, range(132, 261))
     paths = [
@@ -325,6 +352,11 @@ def test_header_modes_agree_on_two_files(tmp_path, spark):
         for lo in range(0, len(cells), 7)
     )
     assert driver["plan"][1] == expect
+    for i, (src, cells) in enumerate(zip(paths, (first, second))):
+        out = str(tmp_path / f"out{i}.sgy")
+        assert store_to_segy(spark, str(tmp_path / "store"), out, source_file=i) == len(cells)
+        with open(src, "rb") as a, open(out, "rb") as b:
+            assert a.read() == b.read()
 
 
 @pytest.mark.parametrize("case", ["sparse", "duplicate"])

@@ -314,3 +314,27 @@ def test_assignment_join_matches_literal(spark):
         ).collect()
     )
     assert g_lit == g_join  # bitwise double equality via tuple compare
+
+
+@pytest.mark.parametrize("case", ["null", "wider"])
+def test_resolve_centroids_rejects_bad_centroids(spark, case):
+    """The declarative IVF paths' centroids decode through the trace-batch
+    codec: a null centroid is a RaggedSamplesError (it was a TypeError),
+    id-prefix or fitted, and so is a width-3 id-prefix centroid in a
+    width-2 corpus (it was accepted, and the SQL dot product scored it
+    against null padding)."""
+    from mdio_python_spark.sources.trace_arrow import RaggedSamplesError
+
+    rows = [(i, [float(i % 3) + 1.0, float(i % 5)]) for i in range(4, 40)]
+    if case == "null":
+        prefix = [(i, [1.0, float(i)]) for i in range(1, 4)] + [(0, None)]
+    else:
+        prefix = [(i, [1.0, float(i), 2.0]) for i in range(4)]
+    df = spark.createDataFrame(prefix + rows, "vec_id long, embedding array<double>")
+    with pytest.raises(RaggedSamplesError):
+        sim._resolve_centroids(df, 4, "vec_id", "embedding", None)
+    if case == "null":
+        with pytest.raises(RaggedSamplesError):
+            sim._resolve_centroids(
+                df, 4, "vec_id", "embedding", [(1, [1.0, 0.0]), (0, None)]
+            )

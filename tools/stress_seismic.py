@@ -12,7 +12,9 @@ the scaled leg defaults to 10x that (10M traces, ~7.3 GB), and both
 legs record the PER-STAGE wall breakdown the ingest/export pipelines
 expose via ``stage_clock``: header scan / strategies / grid QC / dim
 tables / pivot write on ingest, encode / concat (+ concat mode) on
-export.
+export. Each leg also records its store's bytes and parquet file count
+(``store_bytes``, ``store_parquet_files``), so the trace encoding's
+footprint shows at scale.
 
 The e2e correctness of this path is pinned by tests/test_segy_roundtrip.py
 (byte-identical roundtrip at small size); this harness re-asserts the
@@ -36,6 +38,7 @@ from __future__ import annotations
 import argparse
 import filecmp
 import json
+import os
 import shutil
 import struct
 import sys
@@ -204,6 +207,17 @@ def _sha256(path: str) -> str:
     return h.hexdigest()
 
 
+def _store_size(store_path: str) -> tuple[int, int]:
+    """(bytes, parquet files) of a store directory: the trace encoding's
+    footprint at this leg's scale."""
+    size = files = 0
+    for root, _, names in os.walk(store_path):
+        for name in names:
+            size += os.path.getsize(os.path.join(root, name))
+            files += name.endswith(".parquet")
+    return size, files
+
+
 def _run_leg(
     spark, segy_path: str, work: Path, tag: str, hash_verify: bool = False
 ) -> dict:
@@ -231,6 +245,7 @@ def _run_leg(
     segy_to_store(spark, segy_path, store_path, template, stage_clock=ingest_stages)
     ingest_s = time.perf_counter() - t0
 
+    store_bytes, store_files = _store_size(store_path)
     if hash_verify:
         Path(segy_path).unlink()
 
@@ -252,6 +267,8 @@ def _run_leg(
         "ingest_s": round(ingest_s, 3),
         "export_s": round(export_s, 3),
         "ingest_stages": ingest_stages,
+        "store_bytes": store_bytes,
+        "store_parquet_files": store_files,
         "export_stages": export_stages,
         "roundtrip_byte_identical": roundtrip_ok,
         "roundtrip_verify_s": round(verify_s, 3),

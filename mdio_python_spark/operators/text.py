@@ -71,12 +71,6 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def language_scores(text: Column) -> dict[str, Column]:
-    """Stopword-hit count per candidate language (the n-gram heuristic's
-    arithmetic core)."""
-    return {lang: stopword_count(text, marks) for lang, marks in LANG_MARKERS.items()}
-
-
 def _argmax_lang(scores: dict[str, Column]) -> Column:
     """CASE chain: lang wins iff strictly greater than every earlier
     (sorted) lang — earliest lang wins ties, matching the oracle."""

@@ -1,10 +1,11 @@
 """Store -> SEG-Y export (SURVEY §3.3, ``src/mdio/converters/mdio.py:32-159``).
 
 Spark shape: ``SELECT ... WHERE mask ORDER BY dims`` with
-``repartitionByRange`` + per-partition encode + ordered concat (the
-flatten leg, K3/K4). Selection-mask semantics (P3) are a semi-join;
-the bounding-box prune happens for free via partition pruning on the
-chunk-key predicates Catalyst derives from dim filters.
+``repartitionByRange`` + per-partition encode + positional write of each
+partition at its final offset (the flatten leg, K3/K4). Selection-mask
+semantics (P3) are a semi-join; the bounding-box prune happens for free
+via partition pruning on the chunk-key predicates Catalyst derives from
+dim filters.
 """
 
 from __future__ import annotations
@@ -28,7 +29,6 @@ def store_to_segy(
     out_path: str,
     selection_mask: DataFrame | None = None,
     num_partitions: int | None = None,
-    staging=None,
     stage_clock: dict | None = None,
     source_file: int | None = None,
 ) -> int:
@@ -36,9 +36,12 @@ def store_to_segy(
 
     Uses the verbatim ``raw_header`` column when present (byte-identical
     roundtrip); otherwise headers are re-encoded from dim/coord columns.
-    ``staging`` (URI or ``sources.staging.StagingStore``) relocates the
-    executor part files off the driver-local filesystem for object-store
-    clusters — see ``segy.write_segy``.
+    A whole-store export in dim order (no mask, no ``source_file``, no
+    ``num_partitions``) encodes each major chunk straight into the output
+    (``segy.write_segy_store_aligned``); any other export range-partitions
+    and composes local parts (``segy.write_segy``). Either way the output
+    is written positionally through a temp file beside ``out_path``, so
+    ``out_path`` must be a path every task can reach, like the store.
 
     ``source_file`` (multi-file stores, VERDICT r7 item 7): export only
     the traces ingested from constituent file ``i``, in that file's
@@ -109,7 +112,6 @@ def store_to_segy(
             dims,
             write_spec,
             out_path,
-            staging=staging,
             stage_clock=stage_clock,
         )
         if n_aligned is not None:
@@ -135,7 +137,6 @@ def store_to_segy(
         write_spec=write_spec,
         num_partitions=num_partitions,
         n_rows=n,
-        staging=staging,
         stage_clock=stage_clock,
     )
     return n

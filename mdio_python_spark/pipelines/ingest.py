@@ -151,10 +151,13 @@ def _literal(spark: SparkSession, df: DataFrame) -> DataFrame:
     with the same schema (nullability included).
 
     Later joins against it never re-trigger the source scan, and the rows
-    live in JVM driver memory: counting, collecting or broadcasting it runs
-    no Spark job over it. ``createDataFrame`` from a Python row list would
-    instead ``parallelize`` into a multi-partition ``LogicalRDD``, so every
-    such use would launch jobs over the literal."""
+    live in JVM driver memory: counting or collecting it runs no Spark job.
+    Broadcast-joining it does not come free: a query that broadcasts such
+    literals runs one extra job of ``defaultParallelism`` tasks (one job
+    for one or for two broadcasts, measured). ``createDataFrame`` from a
+    Python row list would instead ``parallelize`` into a multi-partition
+    ``LogicalRDD``, which every use (count and collect included) scans
+    with jobs of its own."""
     return spark.createDataFrame(df.toArrow(), schema=df.schema)
 
 
@@ -163,8 +166,9 @@ def _dim_table(
 ) -> DataFrame:
     """A2 dim table (value, 0-based ``<dim>_idx``) from a dim's sorted
     distinct values, as an Arrow ``LocalRelation``: the rows of
-    ``grid.dim_values`` without a Spark job. The value column keeps the
-    header column's type."""
+    ``grid.dim_values`` built without a Spark job. A broadcast join against
+    it still costs a job (see :func:`_literal`).
+    The value column keeps the header column's type."""
     schema = StructType(
         [dim, StructField(f"{dim.name}_idx", LongType(), nullable=False)]
     )

@@ -11,11 +11,18 @@ header-spec object) and ``format("segy")`` (``segy_datasource``) through
 (``sources.store``), which gathers its traces with :func:`read_trace_rows`.
 
 Writing (K3/K4, ``segy/blocked_io.py:214-302``, ``creation.py:61-125``):
-``repartitionByRange(dims) + sortWithinPartitions`` gives totally-ordered
-part files (range partition i holds keys < partition i+1), so the driver's
-in-order concat replaces the reference's hierarchical merge tree; a
-whole-store export in dim order needs no shuffle at all
-(:func:`write_segy_store_aligned`). Both feed ``_encode_trace_block``.
+every output goes through one positional writer, :func:`_write_positional`:
+the driver writes the file headers into a hidden, pre-sized temp file
+beside the output, each task ``pwrite``s its trace bytes at their final
+offset, and the temp file replaces the output once every task succeeded.
+A whole-store export in dim order takes each major chunk's offset from the
+parquet footers, so its encode tasks write straight into the file with no
+shuffle (:func:`write_segy_store_aligned`). Any other export
+(:func:`write_segy`) range-partitions on the sort key
+(``repartitionByRange(dims) + sortWithinPartitions``: partition i holds
+keys < partition i+1), encodes each partition into a local part file and
+copies it to the offset its trace count gives; this replaces the
+reference's hierarchical merge tree. Both feed ``_encode_trace_block``.
 
 Trace blocks cross the Spark boundary as Arrow only, through
 :mod:`~mdio_python_spark.sources.trace_arrow`; no pandas on any path.
@@ -25,11 +32,14 @@ Scale: at 100 TB the read path is embarrassingly parallel byte-range scans
 
 from __future__ import annotations
 
-import io
+import contextlib
+import functools
 import math
 import os
+import shutil
 import time
-from collections.abc import Iterator
+import uuid
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -38,7 +48,6 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from mdio_python_spark.sources import segy_codec as codec
-from mdio_python_spark.sources import staging as staging_mod
 from mdio_python_spark.sources import trace_arrow
 
 
@@ -321,41 +330,85 @@ def _export_skeleton(write_spec: SegyWriteSpec, text_encoding: str) -> bytes:
     return skeleton
 
 
-def _compose_export(
+def run_tasks(spark, tasks: list, fn: Callable[[object], int]) -> list[int]:
+    """``fn(task)`` for every task of a driver-side list, one Spark task
+    each, returning the results in list order.
+
+    The tasks ride in the closure and each Spark task reads its list index
+    from ``spark.range`` (the :func:`read_traces` idiom), so the work runs
+    in ``mapInArrow``, on the Python workers the SQL scans already use: an
+    RDD ``parallelize().map()`` would start a second pool of Python workers
+    and pay their start-up on its first job."""
+
+    def run(batches):
+        for batch in batches:
+            out = [int(fn(tasks[int(i)])) for i in batch.column(0).to_numpy()]
+            yield pa.RecordBatch.from_pydict({"out": pa.array(out, pa.int64())})
+
+    ids = spark.range(0, len(tasks), numPartitions=max(1, len(tasks)))
+    return [r[0] for r in ids.mapInArrow(run, "out long").collect()]
+
+
+def _pwrite(path: str, offset: int, chunks) -> None:
+    """Write the buffers ``chunks`` back to back from ``offset`` into the
+    existing file ``path`` (a ``pwrite`` may write less than asked)."""
+    fd = os.open(path, os.O_WRONLY)
+    try:
+        for chunk in chunks:
+            view = memoryview(chunk).cast("B")
+            while view:
+                n = os.pwrite(fd, view, offset)
+                view, offset = view[n:], offset + n
+    finally:
+        os.close(fd)
+
+
+def _write_positional(
     spark,
-    store,
     out_path: str,
     skeleton: bytes,
-    stage_clock: dict | None,
-) -> None:
-    """Merge staged parts behind the skeleton. Preferred: executor-
-    parallel ranged compose — each part lands at its exact final offset
-    in one pass (pwrite locally; multipart upload on object stores), so
-    the driver stream stops being the export ceiling (the reference
-    parallelizes only its INTERMEDIATE merge tree, blocked_io.py:
-    226-251, and still single-streams the final append,
-    creation.concat_files:236-264). Fallback: the driver in-order
-    stream. Both paths drop each part as soon as it is composed
-    (delete_parts): peak disk ~ one output, not parts + output."""
-    _t0 = time.perf_counter()
-    sink = staging_mod.ranged_sink_for(out_path)
-    use_ranged = sink is not None and len(store.list()) > 1
-    if use_ranged:
-        sink.truncate_to(0)  # fresh file: drop any previous contents
-        sink.write_at(0, io.BytesIO(skeleton))
-        staging_mod.compose_parts_ranged(
-            spark, store, sink, len(skeleton), delete_parts=True
+    n_bytes: int,
+    tasks: list,
+    fn: Callable[[str, object], int],
+) -> list[int]:
+    """The SEG-Y output writer: ``skeleton`` (the file headers) goes into a
+    hidden temp file beside ``out_path``, pre-sized to ``n_bytes``, then
+    :func:`run_tasks` runs ``fn(temp_path, task)`` for every task; each
+    task writes its trace bytes at their final offset with :func:`_pwrite`.
+    The temp file replaces ``out_path`` once every task has succeeded. On
+    any failure it is removed, so a failed export leaves ``out_path`` as it
+    was. A positional write is idempotent: a retried task rewrites the same
+    bytes. Tasks open the file by path, so the output, like the store, must
+    sit on a path every task can reach. Returns the tasks' results."""
+    head, name = os.path.split(os.path.abspath(out_path))
+    tmp = os.path.join(head, f".{name}.{uuid.uuid4().hex}.tmp")
+    try:
+        with open(tmp, "wb") as f:
+            f.write(skeleton)
+            f.truncate(n_bytes)
+        out = run_tasks(spark, tasks, functools.partial(fn, tmp)) if tasks else []
+        os.replace(tmp, out_path)
+    except BaseException:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(tmp)
+        raise
+    return out
+
+
+def _copy_part(out: str, task: tuple[str, int, int]) -> int:
+    """Copy one staged part of :func:`write_segy` to its offset in ``out``,
+    then delete it, so peak disk is about one output, not parts + output.
+    A retry that finds its part already deleted fails loudly instead of
+    leaving a hole."""
+    part, offset, n_bytes = task
+    if os.path.getsize(part) != n_bytes:
+        raise ValueError(
+            f"{part}: {os.path.getsize(part)} bytes, its trace count gives {n_bytes}"
         )
-    else:
-        with open(out_path, "wb") as out:
-            out.write(skeleton)
-            staging_mod.concat_parts(store, out, delete_parts=True)
-    store.remove_all()
-    if stage_clock is not None:
-        stage_clock["export_concat_s"] = round(time.perf_counter() - _t0, 3)
-        stage_clock["export_concat_mode"] = (
-            "ranged_parallel" if use_ranged else "driver_stream"
-        )
+    with open(part, "rb") as src:
+        _pwrite(out, offset, iter(functools.partial(src.read, 64 << 20), b""))
+    os.remove(part)
+    return 0
 
 
 def write_segy(
@@ -368,41 +421,33 @@ def write_segy(
     num_partitions: int | None = None,
     n_rows: int | None = None,
     text_encoding: str = "cp037",
-    staging: "str | staging_mod.StagingStore | None" = None,
     stage_clock: dict | None = None,
 ) -> None:
-    """K3/K4 — ordered SEG-Y export. ``n_rows`` (when the caller already
-    knows the trace count — ingest does, export just counted) avoids the
-    extra full count job that sizing partitions otherwise needs.
+    """K3/K4 — ordered SEG-Y export of any DataFrame. ``n_rows`` (when the
+    caller already knows the trace count — ingest does, export just
+    counted) avoids the extra full count job that sizing partitions
+    otherwise needs.
 
     ``df`` columns: the ``order_by`` dims, either ``raw_header`` (binary,
     written verbatim — byte-identical roundtrip path) or the listed
     ``header_fields`` (re-encoded per spec, F4), and ``samples``.
 
-    Physical plan: one range shuffle on the export key; each task streams
-    its ordered slice to ``part-<i>`` in the staging store; the driver
-    concatenates parts in partition order (range partitions are globally
-    ordered, replacing the reference's merge tree,
-    ``blocked_io.py:226-251``).
-
-    ``staging`` is where executors put part files: a URI (``file://...``
-    or a scheme registered via ``sources.staging.register_scheme``) or a
-    ready ``StagingStore``. Default: ``<out_path>.parts`` on the local
-    filesystem — correct for local mode and POSIX-shared clusters; on an
-    object-store cluster pass the store-backed staging URI so executors
-    and driver never need a shared mount (the reference has the same
-    contract: its partial-file merge runs over shared storage,
-    ``blocked_io.py:214-302``).
+    Physical plan: one range shuffle on the export key; each task encodes
+    its ordered slice into the local part ``<out_path>.parts/part-<i>`` and
+    returns its trace count. Range partitions are globally ordered
+    (replacing the reference's merge tree, ``blocked_io.py:226-251``), so
+    part i lands at the skeleton plus the trace bytes of the partitions
+    before it: :func:`_write_positional` copies each part to that offset,
+    one task per part (:func:`_copy_part`). The parts directory, like the
+    output, must be reachable by path from every task.
     """
     ns = write_spec.samples_per_trace
     data_format = write_spec.data_format
+    trace_bytes = codec.TRACE_HEADER_BYTES + ns * codec.SAMPLE_BYTES[data_format]
     use_raw = "raw_header" in df.columns
     header_fields = header_fields or []
     hdr_spec = spec or codec.DEFAULT_TRACE_HEADER_SPEC
-
-    store = staging_mod.staging_for(
-        staging if staging is not None else out_path + ".parts"
-    )
+    parts_dir = out_path + ".parts"
 
     if num_partitions is None:
         # ~300 MB processing chunks, matching the reference's export
@@ -421,9 +466,10 @@ def write_segy(
     ) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
-        part_name = f"part-{TaskContext.get().partitionId():06d}"
+        part = TaskContext.get().partitionId()
         n_written = 0
-        with store.open_write(part_name) as f:
+        os.makedirs(parts_dir, exist_ok=True)
+        with open(os.path.join(parts_dir, f"part-{part:06d}"), "wb") as f:
             for batch in batches:
                 if batch.num_rows == 0:
                     continue
@@ -441,17 +487,31 @@ def write_segy(
                     _encode_trace_block(samples, data_format, raw, fields, hdr_spec)
                 )
                 n_written += batch.num_rows
-        if n_written == 0:
-            store.delete(part_name)
-        yield pa.RecordBatch.from_pydict({"n_traces": [n_written]})
+        yield pa.RecordBatch.from_pydict({"part": [part], "n_traces": [n_written]})
 
-    _t0 = time.perf_counter()
-    ordered.mapInArrow(write_partition, schema="n_traces long").collect()
+    try:
+        _t0 = time.perf_counter()
+        counts = sorted(
+            tuple(r)
+            for r in ordered.mapInArrow(
+                write_partition, schema="part long, n_traces long"
+            ).collect()
+        )
+        _t1 = time.perf_counter()
+        skeleton = _export_skeleton(write_spec, text_encoding)
+        tasks, pos = [], len(skeleton)
+        for part, n in counts:
+            if n:
+                path = os.path.join(parts_dir, f"part-{part:06d}")
+                tasks.append((path, pos, n * trace_bytes))
+                pos += n * trace_bytes
+        _write_positional(df.sparkSession, out_path, skeleton, pos, tasks, _copy_part)
+    finally:
+        shutil.rmtree(parts_dir, ignore_errors=True)
     if stage_clock is not None:
-        stage_clock["export_encode_s"] = round(time.perf_counter() - _t0, 3)
-
-    skeleton = _export_skeleton(write_spec, text_encoding)
-    _compose_export(df.sparkSession, store, out_path, skeleton, stage_clock)
+        stage_clock["export_encode_s"] = round(_t1 - _t0, 3)
+        stage_clock["export_concat_s"] = round(time.perf_counter() - _t1, 3)
+        stage_clock["export_concat_mode"] = "ranged_parallel"
 
 
 def write_segy_store_aligned(
@@ -461,7 +521,6 @@ def write_segy_store_aligned(
     write_spec: SegyWriteSpec,
     out_path: str,
     text_encoding: str = "cp037",
-    staging: "str | staging_mod.StagingStore | None" = None,
     stage_clock: dict | None = None,
     max_part_bytes: int = 1 << 30,
 ) -> int | None:
@@ -474,18 +533,18 @@ def write_segy_store_aligned(
     the MAJOR dim's chunks are disjoint RANGES of the export sort order:
     every row with ``dims[0]`` in chunk i precedes every row in chunk
     i+1, whatever the minor-dim chunking. So each major chunk is one
-    contiguous byte range of the output. The driver lists each major
-    chunk's parquet files, and :func:`staging.run_tasks` runs one
-    ``mapInArrow`` task per chunk of that list: the task reads the files
-    directly (pyarrow, the read_traces pattern: executors fetch their
-    own byte ranges), sorts the in-memory slice by the full dim tuple,
-    encodes, and stages ``part-<chunk>``; the ranged compose then lands
-    every part at its exact offset, again one task per part. No
-    repartitionByRange sampling pass, no payload exchange, no shuffle
-    spill — the export becomes read + encode + positional write, which
-    is the disk-bandwidth shape a 22 GB leg needs to fit next to its own
-    store (the 30x stress point died on shuffle + parts + output disk
-    before this path existed).
+    contiguous byte range of the output, and the driver knows where it
+    starts before any task runs: the skeleton plus the trace bytes of the
+    rows before it, counted from the parquet footers (each read once).
+    :func:`_write_positional` runs one ``mapInArrow`` task per major
+    chunk: the task reads the chunk's files directly (pyarrow, the
+    read_traces pattern: executors fetch their own byte ranges), sorts
+    the in-memory slice by the full dim tuple, encodes it, and writes the
+    block at its offset in the output. One job, no repartitionByRange
+    sampling pass, no payload exchange, no part files and no copy: the
+    export is read + encode + positional write, and its disk peak is the
+    output alone (the 30x stress point died on shuffle + parts + output
+    disk before this path existed).
 
     Memory gate: a major chunk whose encoded size exceeds
     ``max_part_bytes`` (fat minor dims) disqualifies the layout — the
@@ -498,19 +557,19 @@ def write_segy_store_aligned(
     chunk_dirs = sorted(
         (int(e[len(prefix):]), os.path.join(traces_root, e)) for e in entries
     )
-    files_by_chunk: list[tuple[int, list[str]]] = []
-    for pos, (_, d) in enumerate(chunk_dirs):
+    files_by_chunk: list[list[str]] = []
+    for _, d in chunk_dirs:
         files = sorted(
             os.path.join(root, f)
             for root, _dirs, fs in os.walk(d)
             for f in fs
             if f.endswith(".parquet")
         )
-        if not files:
-            continue
-        files_by_chunk.append((pos, files))
+        if files:
+            files_by_chunk.append(files)
     if not files_by_chunk:
         return None
+    rows = [sum(pq.read_metadata(f).num_rows for f in fs) for fs in files_by_chunk]
     # Per-task memory gate on the EXACT decoded size — row counts from
     # the parquet footers x the fixed trace width (240-byte header +
     # ns 4-byte samples). A compressed-size multiple is NOT safe here:
@@ -522,20 +581,18 @@ def write_segy_store_aligned(
     # concatenated Arrow table, its combined samples, the [order] reorder
     # copy, the encoded block — the table drops before the block exists).
     ns = write_spec.samples_per_trace
-    trace_bytes = 240 + ns * 4
-    max_chunk_rows = max(
-        sum(pq.ParquetFile(f).metadata.num_rows for f in fs)
-        for _, fs in files_by_chunk
-    )
-    if max_chunk_rows * trace_bytes * 3 > max_part_bytes:
+    if max(rows) * (240 + ns * 4) * 3 > max_part_bytes:
         return None
     data_format = write_spec.data_format
-    store = staging_mod.staging_for(
-        staging if staging is not None else out_path + ".parts"
-    )
+    trace_bytes = codec.TRACE_HEADER_BYTES + ns * codec.SAMPLE_BYTES[data_format]
+    skeleton = _export_skeleton(write_spec, text_encoding)
+    tasks, pos = [], len(skeleton)
+    for files, n in zip(files_by_chunk, rows):
+        tasks.append((files, pos, n * trace_bytes))
+        pos += n * trace_bytes
 
-    def encode_chunk(task: tuple[int, list[str]]) -> int:
-        pos, files = task
+    def encode_chunk(out: str, task: tuple[list[str], int, int]) -> int:
+        files, offset, n_bytes = task
         table = pa.concat_tables([pq.read_table(f) for f in files])
         order = np.lexsort(
             tuple(table.column(d).to_numpy() for d in reversed(dims))
@@ -549,18 +606,19 @@ def write_segy_store_aligned(
             else None
         )
         del table
-        with store.open_write(f"part-{pos:06d}") as f:
-            f.write(_encode_trace_block(samples, data_format, raw))
+        block = _encode_trace_block(samples, data_format, raw)
+        if len(block) != n_bytes:
+            raise ValueError(
+                f"{os.path.dirname(files[0])}: encoded {len(block)} bytes, "
+                f"the footers planned {n_bytes}"
+            )
+        _pwrite(out, offset, [block])
         return len(order)
 
     _t0 = time.perf_counter()
-    # one task per major chunk, straight from the driver's list (as in
-    # compose_parts_ranged): no shuffle stage in front of the encode
-    n_total = sum(staging_mod.run_tasks(spark, files_by_chunk, encode_chunk))
+    n_total = sum(_write_positional(spark, out_path, skeleton, pos, tasks, encode_chunk))
     if stage_clock is not None:
         stage_clock["export_encode_s"] = round(time.perf_counter() - _t0, 3)
         stage_clock["export_encode_mode"] = "chunk_aligned"
-
-    skeleton = _export_skeleton(write_spec, text_encoding)
-    _compose_export(spark, store, out_path, skeleton, stage_clock)
+        stage_clock["export_concat_mode"] = "positional"
     return n_total

@@ -305,8 +305,8 @@ def open_store(spark: SparkSession, path: str) -> OpenedStore:
 
     The tiny ``dims/<dim>`` tables (one row per dim value) are read once,
     with pyarrow on the driver, and kept in memory: ``dims`` serves them
-    as Arrow ``LocalRelation`` DataFrames (joins and collects against them
-    run no Spark job over them), and ``dim_index`` holds their columns as
+    as Arrow ``LocalRelation`` DataFrames (collecting them runs no Spark
+    job; a query that broadcast-joins them runs one extra job), and ``dim_index`` holds their columns as
     numpy arrays for ``slice_traces``' value -> index lookup. The trace
     table is read with the schema declared from one footer
     (``tables.read_parquet``). Opening a store launches no Spark job."""

@@ -156,8 +156,9 @@ def test_trace_pass_single_hash_exchange(tmp_path, spark, poststack_file, monkey
 def test_ingest_job_count(tmp_path, spark, poststack_file):
     """The 10 x 10 ingest launches at most 3 Spark jobs: ONE header job
     (the toArrow of the dim keys, under the trace-count gate; grid QC,
-    the dim tables and the write plan are driver numpy) and the jobs of
-    the trace write. It launched 20 when QC, duplicates and each dim
+    the dim tables and the write plan are driver numpy), the one job of
+    ``defaultParallelism`` tasks that the pass-2 broadcast joins against
+    the Arrow dim-table literals add, and the trace write. It launched 20 when QC, duplicates and each dim
     table were separate jobs over parallelized literals, 9 while each dim
     table was a Spark write, and 7 while the header cache, the QC/dim
     aggregate and the write-plan aggregate were Spark jobs."""

@@ -1,6 +1,8 @@
-"""Store-URI staging for SEG-Y export (VERDICT r4 item 2): executors stage
-part files through a pluggable StagingStore instead of driver-local paths,
-so exports work on clusters without a POSIX-shared filesystem."""
+"""SEG-Y export output: every export is written positionally into a hidden
+temp file beside the output, which replaces the output only once every
+task has succeeded. The chunk-aligned export encodes each major chunk
+straight into that file; the range-shuffle export stages local parts under
+``<out>.parts`` and copies each to its offset."""
 
 from __future__ import annotations
 
@@ -9,158 +11,30 @@ import os
 
 import pytest
 
+from tests.conftest import next_job_id
 from tests.segy_factory import make_poststack_3d
 
 from mdio_python_spark.pipelines.export import store_to_segy
 from mdio_python_spark.pipelines.ingest import segy_to_store
 from mdio_python_spark.schemas import default_registry
-from mdio_python_spark.sources import staging
+from mdio_python_spark.sources import segy
 
 
-def _fake_remote_class():
-    """Defined inside a function so cloudpickle ships the class BY VALUE
-    to executors — the deployment shape for a user-supplied object-store
-    backend (no executor-side module install needed)."""
-
-    class FakeRemoteStaging(staging.LocalStaging):
-        """A tmpdir posing as an object store: same bytes, but every
-        access goes through the StagingStore interface and records
-        itself, proving write_segy never touches `<out>.parts` or any
-        driver-relative path."""
-
-        def __init__(self, root: str):
-            super().__init__(root)
-            self.log_path = os.path.abspath(os.path.join(root, "..", "oplog"))
-
-        def _log(self, op: str) -> None:
-            os.makedirs(os.path.dirname(os.path.abspath(self.log_path)), exist_ok=True)
-            with open(self.log_path, "a") as f:
-                f.write(op + "\n")
-
-        def open_write(self, name):
-            self._log(f"write:{name}")
-            return super().open_write(name)
-
-        def open_read(self, name):
-            self._log(f"read:{name}")
-            return super().open_read(name)
-
-    return FakeRemoteStaging
-
-
-def test_export_via_remote_staging_byte_identical(spark, tmp_path):
-    FakeRemoteStaging = _fake_remote_class()
+def _two_chunk_store(spark, tmp_path) -> tuple[str, str]:
+    """130 inlines: two inline chunks of the default 128, so the aligned
+    export runs two encode tasks."""
     src = str(tmp_path / "cube.sgy")
-    make_poststack_3d(src, n_inline=8, n_crossline=6, n_samples=15)
+    make_poststack_3d(src, n_inline=130, n_crossline=2, n_samples=4)
     store_path = str(tmp_path / "store.mdio")
     segy_to_store(spark, src, store_path, default_registry().get("PostStack3DTime"))
-
-    remote_root = str(tmp_path / "pretend-bucket" / "stage")
-    store = FakeRemoteStaging(remote_root)
-    out = str(tmp_path / "roundtrip.sgy")
-    n = store_to_segy(spark, store_path, out, staging=store, num_partitions=3)
-    assert n == 8 * 6
-    assert filecmp.cmp(src, out, shallow=False)
-    # all part traffic went through the store interface...
-    ops = open(store.log_path).read().splitlines()
-    writes = [o for o in ops if o.startswith("write:part-")]
-    reads = [o for o in ops if o.startswith("read:part-")]
-    assert len(writes) == 3 and len(reads) == 3
-    # ...staging was cleaned up, and no driver-local .parts dir appeared
-    assert staging.LocalStaging(remote_root).list() == []
-    assert not os.path.exists(out + ".parts")
-
-
-def test_staging_uri_resolution(tmp_path):
-    local = staging.staging_for(str(tmp_path / "a"))
-    assert isinstance(local, staging.LocalStaging)
-    fileuri = staging.staging_for(f"file://{tmp_path}/b")
-    assert isinstance(fileuri, staging.LocalStaging)
-    assert fileuri.root == f"{tmp_path}/b"
-    with pytest.raises(ValueError, match="no staging backend"):
-        staging.staging_for("s3://bucket/prefix")
-    staging.register_scheme("fake", lambda uri: staging.LocalStaging(str(tmp_path / "c")))
-    try:
-        assert isinstance(staging.staging_for("fake://x"), staging.LocalStaging)
-    finally:
-        staging._SCHEMES.pop("fake", None)
-
-
-def test_staging_roundtrip_and_ordering(tmp_path):
-    st = staging.LocalStaging(str(tmp_path / "s"))
-    for i in (2, 0, 1):
-        with st.open_write(f"part-{i:06d}") as f:
-            f.write(bytes([i]) * 3)
-    assert st.list() == ["part-000000", "part-000001", "part-000002"]
-    chunks = b"".join(staging.iter_part_chunks(st))
-    assert chunks == b"\x00\x00\x00\x01\x01\x01\x02\x02\x02"
-    st.delete("part-000001")
-    assert st.list() == ["part-000000", "part-000002"]
-    st.remove_all()
-    assert st.list() == []
-
-
-def test_compose_parts_ranged_matches_concat(spark, tmp_path):
-    """compose_parts_ranged (round 7: executor-parallel positional writes
-    replacing the driver byte-stream as export's final merge) must be
-    byte-identical to concat_parts on the same part set — offsets are
-    prefix sums of measured sizes over the same name-ordered list."""
-    import io
-
-    st = staging.LocalStaging(str(tmp_path / "s"))
-    rng_parts = [b"A" * 7, b"", b"C" * 130_000, b"d" * 3]
-    for i, blob in enumerate(rng_parts):
-        with st.open_write(f"part-{i:06d}") as f:
-            f.write(blob)
-
-    skeleton = b"HDR!" * 10
-    stream = io.BytesIO()
-    stream.write(skeleton)
-    staging.concat_parts(st, stream)
-
-    out_path = str(tmp_path / "ranged.bin")
-    sink = staging.ranged_sink_for(out_path)
-    assert isinstance(sink, staging.LocalRangedSink)
-    sink.truncate_to(0)
-    sink.write_at(0, io.BytesIO(skeleton))
-    total = staging.compose_parts_ranged(spark, st, sink, len(skeleton))
-    assert total == sum(len(b) for b in rng_parts)
-    assert open(out_path, "rb").read() == stream.getvalue()
-
-
-def test_ranged_sink_resolution_and_default_size(tmp_path):
-    # file:// and bare paths resolve to the pwrite sink; unknown object
-    # schemes return None so write_segy falls back to the driver stream
-    assert isinstance(
-        staging.ranged_sink_for(f"file://{tmp_path}/x"), staging.LocalRangedSink
-    )
-    assert staging.ranged_sink_for("s3://bucket/key") is None
-    staging.register_ranged_scheme(
-        "fakero", lambda uri: staging.LocalRangedSink(str(tmp_path / "y"))
-    )
-    try:
-        assert isinstance(
-            staging.ranged_sink_for("fakero://x"), staging.LocalRangedSink
-        )
-    finally:
-        staging._RANGED_SCHEMES.pop("fakero", None)
-
-    # base-class size() (one read pass) serves backends without cheap
-    # metadata; LocalStaging overrides it with stat
-    class MinimalStore(staging.LocalStaging):
-        size = staging.StagingStore.size
-
-    st = MinimalStore(str(tmp_path / "m"))
-    with st.open_write("part-000000") as f:
-        f.write(b"z" * 12345)
-    assert st.size("part-000000") == 12345
-    assert staging.LocalStaging(str(tmp_path / "m")).size("part-000000") == 12345
+    return src, store_path
 
 
 def test_export_concat_mode_recorded(spark, tmp_path):
     """Multi-part local export takes the ranged-parallel merge and says so
     in the stage clock; the output stays byte-identical to the source
-    (the roundtrip asserts the merge, not just the mode label)."""
+    (the roundtrip asserts the merge, not just the mode label), and no
+    ``<out>.parts`` directory is left behind."""
     src = str(tmp_path / "cube.sgy")
     make_poststack_3d(src, n_inline=8, n_crossline=6, n_samples=15)
     store_path = str(tmp_path / "store.mdio")
@@ -171,6 +45,7 @@ def test_export_concat_mode_recorded(spark, tmp_path):
     assert n == 8 * 6
     assert clock["export_concat_mode"] == "ranged_parallel"
     assert filecmp.cmp(src, out, shallow=False)
+    assert not os.path.exists(out + ".parts")
 
 
 def test_aligned_export_matches_shuffle_export(spark, tmp_path):
@@ -195,10 +70,10 @@ def test_aligned_export_matches_shuffle_export(spark, tmp_path):
 
 
 def test_aligned_export_runs_no_rdd_job(spark, tmp_path, monkeypatch):
-    """The chunk-aligned encode and the ranged compose run as ``mapInArrow``
-    tasks on the SQL Python workers: ``store_to_segy`` never calls
+    """The chunk-aligned encode runs as ``mapInArrow`` tasks on the SQL
+    Python workers: ``store_to_segy`` never calls
     ``SparkContext.parallelize`` (which would start a second pool of
-    Python workers), and the two-part export stays byte-identical."""
+    Python workers), and the two-chunk export stays byte-identical."""
     from pyspark import SparkContext
 
     src = str(tmp_path / "cube.sgy")
@@ -214,5 +89,65 @@ def test_aligned_export_runs_no_rdd_job(spark, tmp_path, monkeypatch):
     out = str(tmp_path / "roundtrip.sgy")
     assert store_to_segy(spark, store_path, out, stage_clock=clock) == 130 * 2
     assert clock["export_encode_mode"] == "chunk_aligned"
-    assert clock["export_concat_mode"] == "ranged_parallel"
+    assert clock["export_concat_mode"] == "positional"
     assert filecmp.cmp(src, out, shallow=False)
+
+
+def test_aligned_export_is_one_job_and_leaves_only_the_output(spark, tmp_path):
+    """The aligned export of a two-chunk store is ONE Spark job (the encode
+    tasks write at their offsets; there is no compose job), and its output
+    directory then holds the output alone: no ``.parts`` directory and no
+    temp file."""
+    src, store_path = _two_chunk_store(spark, tmp_path)
+    out_dir = tmp_path / "out"
+    out_dir.mkdir()
+    out = str(out_dir / "roundtrip.sgy")
+    clock: dict = {}
+    before = next_job_id(spark)
+    assert store_to_segy(spark, store_path, out, stage_clock=clock) == 130 * 2
+    assert next_job_id(spark) - before == 1
+    assert clock["export_concat_mode"] == "positional"
+    assert os.listdir(out_dir) == ["roundtrip.sgy"]
+    assert filecmp.cmp(src, out, shallow=False)
+
+
+@pytest.mark.parametrize("num_partitions", [None, 3], ids=["aligned", "shuffle"])
+def test_export_over_a_longer_stale_file(spark, tmp_path, num_partitions):
+    """An export into a path that already holds a longer file is still
+    byte-identical to the source: no stale tail survives."""
+    src, store_path = _two_chunk_store(spark, tmp_path)
+    out = str(tmp_path / "roundtrip.sgy")
+    with open(out, "wb") as f:
+        f.write(b"\xff" * (os.path.getsize(src) + 10_000))
+    store_to_segy(spark, store_path, out, num_partitions=num_partitions)
+    assert filecmp.cmp(src, out, shallow=False)
+
+
+def test_failed_encode_leaves_no_output(spark, tmp_path, monkeypatch):
+    """An aligned export whose encode task fails (one chunk file truncated
+    after the driver read its footer) raises, and leaves neither the
+    output nor a temp file."""
+    _, store_path = _two_chunk_store(spark, tmp_path)
+    chunk_dir = os.path.join(store_path, "traces", "inline_chunk=1")
+    victim = next(
+        os.path.join(root, f)
+        for root, _dirs, fs in os.walk(chunk_dir)
+        for f in fs
+        if f.endswith(".parquet")
+    )
+    real_run_tasks = segy.run_tasks
+    truncated = []
+
+    def truncate_then_run(spark_, tasks, fn):
+        with open(victim, "r+b") as f:
+            f.truncate(os.path.getsize(victim) // 2)
+        truncated.append(victim)
+        return real_run_tasks(spark_, tasks, fn)
+
+    monkeypatch.setattr(segy, "run_tasks", truncate_then_run)
+    out_dir = tmp_path / "out"
+    out_dir.mkdir()
+    with pytest.raises(Exception):
+        store_to_segy(spark, store_path, str(out_dir / "roundtrip.sgy"))
+    assert truncated == [victim]
+    assert os.listdir(out_dir) == []

@@ -168,17 +168,15 @@ def _disk_baseline(work: Path, n_bytes: int = 2 << 30) -> dict:
 
 # Bytes each clocked stage streams, as a multiple of the leg's SEG-Y file
 # size: header_scan reads the cube once; pivot_write reads the cube and
-# writes the (similar-sized, pre-compression) store; export_encode reads
-# the store and writes ~cube-sized encoded parts; export_concat reads the
-# parts AND writes the final file (2x). The stamped mb_s is bytes_moved /
-# stage_s — compare against disk_baseline to classify device-bound vs
-# plan-bound (the r9 50x concat ran at ~375 MB/s combined against a
-# 223 MB/s single-stream disk: device-bound, not a regression).
+# writes the (similar-sized, pre-compression) store; the whole-store
+# export's encode reads the store and writes the final file in place
+# (positional writes, no part files and no second pass). The stamped
+# mb_s is bytes_moved / stage_s — compare against disk_baseline to
+# classify device-bound vs plan-bound.
 _STAGE_IO_MULT = {
     ("ingest_stages", "header_scan_s"): 1.0,
     ("ingest_stages", "pivot_write_s"): 2.0,
     ("export_stages", "export_encode_s"): 2.0,
-    ("export_stages", "export_concat_s"): 2.0,
 }
 
 
@@ -376,7 +374,7 @@ def main() -> None:
             grp: {
                 k: round(scaled[grp][k] / max(base[grp][k], 1e-6), 2)
                 for k in base[grp]
-                if isinstance(base[grp][k], (int, float))
+                if isinstance(base[grp][k], (int, float)) and k in scaled[grp]
             }
             for grp in ("ingest_stages", "export_stages")
         }

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mdio_python_spark.sources.store import MANIFEST, OpenedStore
+from mdio_python_spark.sources.tables import read_parquet
 
 
 def quantize_samples(df: DataFrame, tolerance: float) -> DataFrame:
@@ -88,4 +89,4 @@ def build_access_view(
 
 
 def open_access_view(spark: SparkSession, store: OpenedStore, dim: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(store.path, f"fast_{dim}"))
+    return read_parquet(spark, os.path.join(store.path, f"fast_{dim}"))

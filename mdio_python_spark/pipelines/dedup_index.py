@@ -27,6 +27,7 @@ from mdio_python_spark.operators.dedup import (
     minhash_signatures,
     shingle_hashes,
 )
+from mdio_python_spark.sources.tables import read_parquet
 
 
 def _paths(index_dir: str) -> dict[str, str]:
@@ -104,7 +105,7 @@ def dedup_against_index(
         jaccard_threshold=jaccard_threshold,
         text_col=text_col,
         id_col=id_col,
-        existing_hashes=spark.read.parquet(p["text_hashes"]),
-        existing_shingles=spark.read.parquet(p["shingles"]),
-        existing_signatures=spark.read.parquet(p["signatures"]),
+        existing_hashes=read_parquet(spark, p["text_hashes"]),
+        existing_shingles=read_parquet(spark, p["shingles"]),
+        existing_signatures=read_parquet(spark, p["signatures"]),
     )

@@ -24,10 +24,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from mdio_python_spark.plans.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from mdio_python_spark.sources.tables import load_table
 
 
 def _tmp_artifact(sf_dir: str, fname: str) -> Path:
@@ -53,7 +50,7 @@ def q_ivf_model_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         fit_and_save_ivf,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     path = _tmp_artifact(sf_dir, IVF_CENTROIDS_PATH.name)
     cents = fit_and_save_ivf(emb, path)
     return spark.createDataFrame(
@@ -78,7 +75,7 @@ def q_pq_model_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         fit_and_save_pq,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     path = _tmp_artifact(sf_dir, PQ_CODEBOOKS_PATH.name)
     books, _sub = fit_and_save_pq(emb, path)
     return spark.createDataFrame(

@@ -197,7 +197,13 @@ def decode_trace_rows(
             cols["s_ssq"] = (masked * masked).sum(axis=1)
             cols["s_min"] = np.where(nz, s, np.inf).min(axis=1)
             cols["s_max"] = np.where(nz, s, -np.inf).max(axis=1)
-    return pa.RecordBatch.from_pydict(cols)
+    return pa.RecordBatch.from_arrays(
+        [
+            c if isinstance(c, pa.Array) else trace_arrow.numbers_to_arrow(c)
+            for c in cols.values()
+        ],
+        names=list(cols),
+    )
 
 
 def decode_trace_block(
@@ -236,7 +242,7 @@ def read_traces(
     def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         with open(info.path, "rb") as f:
             for batch in batches:
-                for block_id in batch.column(0).to_numpy():
+                for block_id in trace_arrow.numbers_from_arrow(batch.column(0), "id"):
                     start = int(block_id) * block_size
                     n = min(block_size, info.num_traces - start)
                     if n > 0:
@@ -342,8 +348,11 @@ def run_tasks(spark, tasks: list, fn: Callable[[object], int]) -> list[int]:
 
     def run(batches):
         for batch in batches:
-            out = [int(fn(tasks[int(i)])) for i in batch.column(0).to_numpy()]
-            yield pa.RecordBatch.from_pydict({"out": pa.array(out, pa.int64())})
+            ids = trace_arrow.numbers_from_arrow(batch.column(0), "id")
+            out = np.array([fn(tasks[int(i)]) for i in ids], np.int64)
+            yield pa.RecordBatch.from_arrays(
+                [trace_arrow.numbers_to_arrow(out)], names=["out"]
+            )
 
     ids = spark.range(0, len(tasks), numPartitions=max(1, len(tasks)))
     return [r[0] for r in ids.mapInArrow(run, "out long").collect()]
@@ -480,14 +489,20 @@ def write_segy(
                     else None
                 )
                 fields = {
-                    name: batch[name].to_numpy(zero_copy_only=False)
+                    name: trace_arrow.numbers_from_arrow(batch[name], name)
                     for name in header_fields
                 }
                 f.write(
                     _encode_trace_block(samples, data_format, raw, fields, hdr_spec)
                 )
                 n_written += batch.num_rows
-        yield pa.RecordBatch.from_pydict({"part": [part], "n_traces": [n_written]})
+        yield pa.RecordBatch.from_arrays(
+            [
+                trace_arrow.numbers_to_arrow(np.array([v], np.int64))
+                for v in (part, n_written)
+            ],
+            names=["part", "n_traces"],
+        )
 
     try:
         _t0 = time.perf_counter()
@@ -593,9 +608,12 @@ def write_segy_store_aligned(
 
     def encode_chunk(out: str, task: tuple[list[str], int, int]) -> int:
         files, offset, n_bytes = task
-        table = pa.concat_tables([pq.read_table(f) for f in files])
+        table = pa.concat_tables([pq.ParquetFile(f).read() for f in files])
         order = np.lexsort(
-            tuple(table.column(d).to_numpy() for d in reversed(dims))
+            tuple(
+                trace_arrow.numbers_from_arrow(table.column(d), d)
+                for d in reversed(dims)
+            )
         )
         samples = trace_arrow.samples_from_arrow(table["samples"])[order]
         # blank re-encoded headers when the store has no raw_header,

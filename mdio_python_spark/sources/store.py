@@ -29,6 +29,7 @@ import os
 import shutil
 from collections.abc import Iterator
 from dataclasses import dataclass
+from typing import TYPE_CHECKING
 
 import numpy as np
 import pyarrow as pa
@@ -37,8 +38,12 @@ import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from mdio_python_spark.schemas.dataset import Dataset
-from mdio_python_spark.sources import segy, tables
+from mdio_python_spark.sources import segy, tables, trace_arrow
+
+if TYPE_CHECKING:
+    # imported where it is used: the Python workers unpickle this module's
+    # ChunkFileWriter, and the dataset schema would import pydantic there
+    from mdio_python_spark.schemas.dataset import Dataset
 
 MANIFEST = "manifest.json"
 
@@ -119,7 +124,10 @@ class ChunkFileWriter:
                     [cols[f.name] for f in self.schema], schema=self.schema
                 )
                 keys = np.column_stack(
-                    [batch.column(c).to_numpy() for c in self.chunk_cols]
+                    [
+                        trace_arrow.numbers_from_arrow(batch.column(c), c)
+                        for c in self.chunk_cols
+                    ]
                 )
                 cut = np.flatnonzero((keys[1:] != keys[:-1]).any(axis=1)) + 1
                 for lo, hi in zip([0, *cut], [*cut, len(keys)]):
@@ -142,7 +150,9 @@ class ChunkFileWriter:
                 f.close()
 
     def _decode(self, batch, offsets, handles) -> pa.RecordBatch:
-        src = batch.column("src_trace_idx").to_numpy()
+        src = trace_arrow.numbers_from_arrow(
+            batch.column("src_trace_idx"), "src_trace_idx"
+        )
         file_no = np.searchsorted(offsets, src, side="right") - 1
         local = src - offsets[file_no]
         raw = np.empty((len(src), self.sources[0].trace_bytes), np.uint8)
@@ -310,6 +320,8 @@ def open_store(spark: SparkSession, path: str) -> OpenedStore:
     numpy arrays for ``slice_traces``' value -> index lookup. The trace
     table is read with the schema declared from one footer
     (``tables.read_parquet``). Opening a store launches no Spark job."""
+    from mdio_python_spark.schemas.dataset import Dataset
+
     with open(os.path.join(path, MANIFEST)) as f:
         manifest = json.load(f)
     dataset = Dataset.model_validate(manifest["dataset"])

@@ -2,8 +2,10 @@
 
 Schemas are declared, never inferred — mirroring the reference's
 declared-schema discipline (``src/mdio/builder/schemas/core.py:10-19``:
-pydantic ``extra="forbid"`` validation). Parquet carries its own schema so
-declaration here is a *check*, not inference.
+pydantic ``extra="forbid"`` validation). Parquet carries its own schema, so
+every table read here (:func:`read_parquet`) takes it from one footer read
+on the driver and hands it to Spark: building a plan over a table runs no
+schema-inference job.
 """
 
 from __future__ import annotations
@@ -67,7 +69,18 @@ def declared_schema(path: str) -> StructType | None:
     ``from_arrow_schema``, then the partition columns named in that file's
     directory path, typed ``int`` as Spark infers small integer values.
     Files and directories whose names start with ``_`` or ``.`` are skipped,
-    as Spark skips them. ``None`` when there is no data file."""
+    as Spark skips them. ``None`` when there is no data file.
+
+    The types are the ones Spark infers from the same file. A timestamp's
+    Arrow type does not say how it is stored, so its Spark type is taken
+    from the Parquet column: INT96 (what Spark writes for a ``timestamp``
+    column by default; pyarrow reports it as ``timestamp[ns]``) is
+    ``timestamp``; TIMESTAMP(NANOS), which Spark reads only under
+    ``spark.sql.legacy.parquet.nanosAsLong``, is ``bigint``; any other
+    timestamp without a time zone is ``timestamp_ntz``."""
+    import json
+
+    import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
 
@@ -83,7 +96,18 @@ def declared_schema(path: str) -> StructType | None:
                 break
         if first is None:
             return None
-    schema = from_arrow_schema(pq.read_schema(first))
+    with pq.ParquetFile(first) as footer:
+        arrow, stored = footer.schema_arrow, footer.schema
+    columns = {c.path: c for c in map(stored.column, range(len(stored)))}
+    for i, f in enumerate(list(arrow)):
+        column = columns.get(f.name)  # top-level columns only
+        if column is None or not pa.types.is_timestamp(f.type):
+            continue
+        if column.physical_type == "INT96":
+            arrow = arrow.set(i, f.with_type(pa.timestamp("us", tz="UTC")))
+        elif json.loads(column.logical_type.to_json()).get("timeUnit") == "nanoseconds":
+            arrow = arrow.set(i, f.with_type(pa.int64()))
+    schema = from_arrow_schema(arrow, prefer_timestamp_ntz=True)
     for part in parts:
         if "=" in part:
             schema = schema.add(part.split("=", 1)[0], IntegerType())
@@ -99,11 +123,12 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One of :data:`TABLE_NAMES` through :func:`read_parquet`."""
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     if name == "events":
-        # events.parquet stores TIMESTAMP(NANOS); Spark 4 rejects it unless
-        # read as raw int64.
+        # events.parquet may store TIMESTAMP(NANOS); Spark 4 rejects it
+        # unless read as raw int64.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return normalize_nanos_ts(spark.read.parquet(table_path(sf_dir, name)))
-    return spark.read.parquet(table_path(sf_dir, name))
+        return normalize_nanos_ts(read_parquet(spark, table_path(sf_dir, name)))
+    return read_parquet(spark, table_path(sf_dir, name))

@@ -827,7 +827,7 @@ def zarr_cube_to_df(
 
     def scan(batches):
         for batch in batches:
-            for task_id in batch.column(0).to_numpy():
+            for task_id in trace_arrow.numbers_from_arrow(batch.column(0), "id"):
                 cidx = np.unravel_index(int(task_id), spatial_grid)
                 lo = [i * c for i, c in zip(cidx, var.chunks[:-1])]
                 hi = [
@@ -854,8 +854,9 @@ def zarr_cube_to_df(
                     )
                     cols[f"{d}_idx"] = gidx.astype(np.int64)
                 flat = block.reshape(*nspatial, var.shape[-1])[live]
-                cols["samples"] = trace_arrow.samples_to_arrow(flat)
-                yield pa.RecordBatch.from_pydict(cols)
+                arrays = [trace_arrow.numbers_to_arrow(c) for c in cols.values()]
+                arrays.append(trace_arrow.samples_to_arrow(flat))
+                yield pa.RecordBatch.from_arrays(arrays, names=[*cols, "samples"])
 
     blocks = spark.range(n_tasks).repartition(min(n_tasks, 256))
     return blocks.mapInArrow(scan, schema=schema)

@@ -34,13 +34,12 @@ def stream_events(spark: SparkSession, sf_dir: str, copies: int = 1) -> DataFram
             os.symlink(src, os.path.join(watch_dir, f"events_{i}.parquet"))
     # File streams require a declared schema, but the driver's on-disk `ts`
     # layout has varied across rounds (int64 nanos vs timestamp[us]-NTZ).
-    # Sniff the physical schema from a batch read of the same path so the
-    # stream always sees what's actually on disk, then share the batch
-    # reader's event-time normalizer.
-    physical = spark.read.parquet(src).schema
-    raw = spark.readStream.schema(physical).parquet(watch_dir)
-    from mdio_python_spark.sources.tables import normalize_nanos_ts
+    # Declare the physical schema from the file's footer so the stream
+    # always sees what's actually on disk, then share the batch reader's
+    # event-time normalizer.
+    from mdio_python_spark.sources.tables import declared_schema, normalize_nanos_ts
 
+    raw = spark.readStream.schema(declared_schema(src)).parquet(watch_dir)
     return normalize_nanos_ts(raw)
 
 

@@ -299,3 +299,24 @@ def test_seismic_roundtrip_query_exact(spark):
     assert row["count"] == n == 480
     assert row["mean"] == mean
     assert row["std"] == std
+
+
+def test_null_header_value_export_raises(spark, tmp_path):
+    """A null header value is a named error, not a NaN written as
+    -2147483648; the failed export leaves no output and no parts."""
+    from pyspark.errors import PythonException
+
+    from mdio_python_spark.sources import segy
+
+    df = spark.createDataFrame(
+        [(1, 5, [0.5] * 4), (2, None, [1.5] * 4)],
+        "crossline long, inline long, samples array<float>",
+    )
+    out = str(tmp_path / "nulls.sgy")
+    spec = segy.SegyWriteSpec(samples_per_trace=4, sample_interval=2000)
+    with pytest.raises(PythonException, match="NullValuesError.*'inline'"):
+        segy.write_segy(
+            df, out, order_by=["crossline"], write_spec=spec,
+            header_fields=["inline", "crossline"],
+        )
+    assert os.listdir(tmp_path) == []

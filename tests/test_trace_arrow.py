@@ -69,3 +69,41 @@ def test_int32_offset_limit_raises(monkeypatch):
     ta.samples_to_arrow(np.zeros((3, 240), dtype=np.float32))
     with pytest.raises(ta.OffsetOverflowError):
         ta.samples_to_arrow(np.zeros((4, 240), dtype=np.float32))
+
+
+@pytest.mark.parametrize(
+    "dtype", [np.int32, np.int64, np.uint16, np.float32, np.float64]
+)
+def test_numbers_round_trip_zero_copy(dtype):
+    values = np.arange(7, dtype=dtype) * 3
+    col = ta.numbers_to_arrow(values)
+    assert col.type == pa.from_numpy_dtype(np.dtype(dtype))
+    assert col.buffers()[1].address == values.ctypes.data
+    back = ta.numbers_from_arrow(col, "x")
+    assert back.ctypes.data == values.ctypes.data
+    np.testing.assert_array_equal(back, values)
+    # a sliced array honours its offset; a multi-chunk column concatenates
+    np.testing.assert_array_equal(ta.numbers_from_arrow(col.slice(2, 3), "x"), values[2:5])
+    np.testing.assert_array_equal(
+        ta.numbers_from_arrow(pa.chunked_array([col.slice(5), col.slice(0, 1)]), "x"),
+        np.concatenate([values[5:], values[:1]]),
+    )
+    assert ta.numbers_from_arrow(col.slice(0, 0), "x").dtype == dtype
+    # a strided ndarray is copied once into a contiguous buffer
+    np.testing.assert_array_equal(
+        ta.numbers_from_arrow(ta.numbers_to_arrow(values[::2]), "x"), values[::2]
+    )
+
+
+def test_null_numbers_raise_naming_the_column():
+    col = pa.array([5, None, 7], pa.int64())
+    with pytest.raises(ta.NullValuesError, match="'inline'"):
+        ta.numbers_from_arrow(col, "inline")
+    # the null-free slice decodes
+    np.testing.assert_array_equal(ta.numbers_from_arrow(col.slice(2), "inline"), [7])
+    with pytest.raises(ta.NullValuesError):
+        ta.samples_from_arrow(pa.array([[1.0, None]], pa.list_(pa.float32())))
+    with pytest.raises(TypeError):
+        ta.numbers_from_arrow(pa.array(["a"]), "name")
+    with pytest.raises(TypeError):
+        ta.numbers_to_arrow(np.array([True, False]))

@@ -304,15 +304,13 @@ def _train_merges_chain(
 ) -> tuple[DataFrame, DataFrame]:
     """The distributed M-step chain of :func:`train_merges` over its
     materialized (word, n) table."""
-    from pyspark import StorageLevel
-
-    from mdio_python_spark.operators.caching import attach_cached
+    from mdio_python_spark.operators.caching import attach_cached, persist
 
     cur = base.select("word", symbolize(F.col("word")).alias("sym"), "n")
     cached: list[DataFrame] = []
     steps: list[DataFrame] = []
     for step in range(n_merges):
-        cur = cur.persist(StorageLevel.MEMORY_AND_DISK)
+        cur = persist(cur)
         cached.append(cur)
         tp = top_pair(pair_counts(cur)).select(
             F.lit(step).cast("long").alias("step"), "left", "right", "pair_n"

@@ -1,19 +1,33 @@
-"""Caller-managed release for operators that persist intermediate stages.
+"""The one lifecycle of a persisted intermediate stage.
 
-Some operators (``grid.ordered_export``, ``geometry.gun_geometry_analysis``)
-persist a corpus-sized intermediate because two consuming branches defeat
-exchange reuse (see their docstrings). The cache is part of the returned
-plan, so the operator cannot unpersist it before the caller's terminal
-action — instead the persisted handles ride on the returned DataFrame and
-the caller releases them once the action completes:
+Some operators and queries persist a stage because two consuming
+branches defeat exchange reuse (``grid.ordered_export``,
+``geometry.gun_geometry_analysis``; see their docstrings). Every such
+stage goes through the same three calls:
+
+1. :func:`persist` — the only place a storage level is chosen
+   (``MEMORY_AND_DISK``).
+2. :func:`eager` — only where plans built afterwards must see the
+   cache's MEASURED statistics (a join side that might otherwise be
+   broadcast from a static estimate).
+3. :func:`own` — the builder's last step: ``return own(out, scope,
+   *stages)`` registers the stages as ``scope``'s current generation,
+   unpersisting the previous call's, and attaches them to ``out``.
+
+The cache is part of the returned plan, so the builder cannot unpersist
+it before the caller's terminal action. The handles ride on the
+returned DataFrame and the caller releases them once the action
+completes:
 
     out = ordered_export(df, dims)
     out.write.parquet(...)
     release_cached(out)
 
-Long-lived sessions that skip ``release_cached`` accumulate cached
-relations (and their disk spill); short-lived jobs can rely on session
-teardown. ``spark.catalog.clearCache()`` also drops them, at the cost of
+A caller that never releases (a harness running a declared query in a
+loop) holds at most one generation per scope. A builder that wraps an
+inner result passes that result's handles on with
+:func:`attach_cached`; the inner builder already owns them.
+``spark.catalog.clearCache()`` also drops every stage, at the cost of
 every other cached relation in the session.
 """
 
@@ -22,16 +36,39 @@ from __future__ import annotations
 from collections.abc import Callable
 from typing import TypeVar
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 CACHE_ATTR = "_mdio_cached_stages"
 
 
+def persist(df: DataFrame) -> DataFrame:
+    """Persist ``df`` at the one storage level every stage uses:
+    ``MEMORY_AND_DISK``, so partitions that do not fit in memory spill
+    to disk instead of being recomputed."""
+    return df.persist(StorageLevel.MEMORY_AND_DISK)
+
+
+R = TypeVar("R")
+
+
+def own(out: R, scope: str, *stages: DataFrame) -> R:
+    """Make ``stages`` the current generation under ``scope`` (the
+    previous call's stages are unpersisted) and attach them to ``out``,
+    a DataFrame or a tuple of them; returns ``out``."""
+    _rotate(scope, *stages)
+    for f in out if isinstance(out, tuple) else (out,):
+        attach_cached(f, *stages)
+    return out
+
+
 def attach_cached(result: DataFrame, *cached: DataFrame) -> DataFrame:
     """Record ``cached`` (persisted upstream stages) on ``result`` so
-    :func:`release_cached` can unpersist them after the terminal action."""
+    :func:`release_cached` can unpersist them after the terminal action.
+    A handle already recorded is not recorded twice."""
     existing = list(getattr(result, CACHE_ATTR, []))
-    setattr(result, CACHE_ATTR, existing + list(cached))
+    new = [h for h in cached if all(h is not e for e in existing)]
+    setattr(result, CACHE_ATTR, existing + new)
     return result
 
 
@@ -73,15 +110,15 @@ def eager(df: DataFrame) -> DataFrame:
 _SCOPED_PREV: dict[str, list[DataFrame]] = {}
 
 
-def rotate_scoped(scope: str, *cached: DataFrame) -> None:
+def _rotate(scope: str, *cached: DataFrame) -> None:
     """Self-limiting fallback for callers that never call
     :func:`release_cached` (e.g. a declared query run repeatedly by a
-    correctness harness): each operator invocation unpersists the
-    PREVIOUS invocation's persisted stages under the same ``scope``, so
-    a long-lived session holds at most ONE generation per operator
-    instead of one per call. Unpersist is always semantics-preserving —
-    if some caller still holds an unexecuted plan over the previous
-    stage it recomputes, it never breaks — so rotation trades worst-case
+    correctness harness): each builder call unpersists the PREVIOUS
+    call's persisted stages under the same ``scope``, so a long-lived
+    session holds at most ONE generation per scope instead of one per
+    call. Unpersist is always semantics-preserving — if some caller
+    still holds an unexecuted plan over the previous stage it
+    recomputes, it never breaks — so rotation trades worst-case
     recompute for a bounded memory/disk footprint. Explicit
     ``release_cached`` remains the precise path (double unpersist is a
     no-op)."""
@@ -96,9 +133,6 @@ def rotate_scoped(scope: str, *cached: DataFrame) -> None:
             continue
         handle.unpersist(False)
     _SCOPED_PREV[scope] = list(cached)
-
-
-R = TypeVar("R")
 
 
 def size_gated(
@@ -123,21 +157,19 @@ def size_gated(
        kernels read ids as int64 arrays); ``fallback(base)`` otherwise.
        Callers keep ``limit`` in a module constant, so tests force the
        fallback by patching it to -1.
-    4. **Attach and rotate**: ``base`` rides on every returned frame
-       (:func:`release_cached`), and it is registered under ``scope``
-       with :func:`rotate_scoped` together with every stage the chosen
-       path attached, so a caller that never releases holds one
-       generation per scope.
+    4. **Own**: ``base`` and every stage the chosen path attached go
+       to :func:`own` under ``scope``, so each returned frame carries
+       them and a caller that never releases holds one generation per
+       scope.
     5. **Recompute on release**: ``base`` is a plain persist, not a
        ``localCheckpoint``. A lazy frame still built on a released
        ``base`` recomputes it from ``df``'s lineage instead of failing on
        a missing checkpoint block.
     """
-    from pyspark import StorageLevel
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
-    base = df.persist(StorageLevel.MEMORY_AND_DISK)
+    base = persist(df)
     n, *non_null = base.agg(
         F.count(F.lit(1)), *[F.count(c) for c in long_cols]
     ).first()
@@ -151,12 +183,9 @@ def size_gated(
         base.unpersist(False)
         raise
     frames = out if isinstance(out, tuple) else (out,)
-    rotate_scoped(
-        scope, base, *[h for f in frames for h in getattr(f, CACHE_ATTR, [])]
+    return own(
+        out, scope, base, *[h for f in frames for h in getattr(f, CACHE_ATTR, [])]
     )
-    for f in frames:
-        attach_cached(f, base)
-    return out
 
 
 def _same_plan(a: DataFrame, b: DataFrame) -> bool:

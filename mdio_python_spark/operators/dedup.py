@@ -1346,11 +1346,9 @@ def incremental_dedup(
     explode + hash subtree runs twice per side, and the recompute made
     the 10x stress row unstable (12-42 s; ~8 s persisted). Handles ride
     on the returned DataFrame (``release_cached``), bounded to one
-    generation by ``rotate_scoped``.
+    generation by ``caching.own``.
     """
-    from pyspark import StorageLevel
-
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
+    from mdio_python_spark.operators.caching import eager, own, persist
     if existing_docs is None and (
         existing_hashes is None
         or existing_shingles is None
@@ -1373,8 +1371,6 @@ def incremental_dedup(
     )
     new2 = exact_dedup(new1, text_col, id_col)
 
-    from mdio_python_spark.operators.caching import eager
-
     # Round 10b: the locally-computed shingle stages persist per-doc SET
     # ARRAYS built by the shuffle-free Arrow kernel (explode + JVM md5 +
     # collect_set exchange collapsed into one vectorized-MD5 map pass;
@@ -1385,20 +1381,24 @@ def incremental_dedup(
     from mdio_python_spark.operators.text_arrow import shingle_sets_arrow
 
     cached: list[DataFrame] = []
-    sets_new = shingle_sets_arrow(
-        new2, n, unit="word", text_col=text_col, id_col=id_col,
-        spread=False,  # new2 is shuffle-rooted (anti-join + window)
-        minhashes=num_hashes,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    sets_new = persist(
+        shingle_sets_arrow(
+            new2, n, unit="word", text_col=text_col, id_col=id_col,
+            spread=False,  # new2 is shuffle-rooted (anti-join + window)
+            minhashes=num_hashes,
+        )
+    )
     cached.append(sets_new)
     if existing_shingles is not None:
         sets_old = shingle_sets(existing_shingles, id_col)
         eager(sets_new)
     else:
-        sets_old = shingle_sets_arrow(
-            existing_docs, n, unit="word", text_col=text_col,
-            id_col=id_col, minhashes=num_hashes,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        sets_old = persist(
+            shingle_sets_arrow(
+                existing_docs, n, unit="word", text_col=text_col,
+                id_col=id_col, minhashes=num_hashes,
+            )
+        )
         cached.append(sets_old)
         # the two sides' eager materializations are INDEPENDENT jobs —
         # submit them concurrently so the old side's tasks back-fill the
@@ -1409,7 +1409,6 @@ def incremental_dedup(
 
         with ThreadPoolExecutor(max_workers=2) as pool:
             list(pool.map(eager, (sets_new, sets_old)))
-    rotate_scoped("dedup.incremental_shingles", *cached)
     sig_new = minhash_signatures_from_sets(sets_new, num_hashes, id_col)
     sig_old = (
         existing_signatures
@@ -1490,7 +1489,9 @@ def incremental_dedup(
         .select(F.col("doc_b").alias(id_col))
         .distinct()
     )
-    return attach_cached(new2.join(drops, id_col, "left_anti"), *cached)
+    return own(
+        new2.join(drops, id_col, "left_anti"), "dedup.incremental_shingles", *cached
+    )
 
 
 def ngram_novelty(
@@ -1514,9 +1515,7 @@ def ngram_novelty(
     first-doc aggregate and the membership join co-partitioned
     (ReusedExchange — the fork-sharing fix that needs no cache memory).
     """
-    from pyspark import StorageLevel
-
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
+    from mdio_python_spark.operators.caching import own, persist
 
     grams = word_shingles(df, n, text_col=text_col, id_col=id_col, distinct=False)
     # hash BEFORE the per-doc distinct so the dedup shuffle moves 16-byte
@@ -1528,11 +1527,10 @@ def ngram_novelty(
     # exchange reuse does NOT fire and the tokenize+explode+hash subtree
     # would run twice (the persist-the-fork rule; verified in the plan —
     # two identical REPARTITION_BY_COL(gh) exchanges without the cache).
-    g = (
+    g = persist(
         grams.select(F.col(id_col), F.xxhash64(F.col("shingle")).alias("gh"))
         .repartition("gh")
         .dropDuplicates([id_col, "gh"])
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     first_seen = g.groupBy("gh").agg(F.min(id_col).alias("first_doc"))
     novel = F.sum(
@@ -1549,8 +1547,7 @@ def ngram_novelty(
             ),
         )
     )
-    rotate_scoped("dedup.ngram_novelty", g)
-    return attach_cached(out, g)
+    return own(out, "dedup.ngram_novelty", g)
 
 
 def char_shingles(

@@ -56,8 +56,6 @@ def gun_geometry_analysis(
     over. Two aggs: a tiny per-line gun count broadcast back into one
     (line, gun) agg; no window, map-side combinable.
     """
-    from pyspark import StorageLevel
-
     # dedup to (line, gun, shot) triples FIRST: one map-side-combinable
     # shuffle collapses the trace table (measured 3.0s -> dedup-first at
     # sf0.1), and both the per-line gun count and the mod-shot analysis
@@ -71,15 +69,10 @@ def gun_geometry_analysis(
     # Caching contract: the persisted triples stage rides on the returned
     # DataFrame — callers release it with caching.release_cached after
     # their terminal action (ingest does); repeat callers that never do
-    # are bounded to one generation by rotate_scoped.
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
+    # are bounded to one generation by caching.own.
+    from mdio_python_spark.operators.caching import own, persist
 
-    triples = (
-        df.select(line_col, gun_col, shot_col)
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    rotate_scoped("geometry.gun_geometry_analysis", triples)
+    triples = persist(df.select(line_col, gun_col, shot_col).distinct())
     line_guns = (
         triples.select(line_col, gun_col)
         .distinct()
@@ -97,7 +90,7 @@ def gun_geometry_analysis(
         )
         .orderBy(line_col, gun_col)
     )
-    return attach_cached(out, triples)
+    return own(out, "geometry.gun_geometry_analysis", triples)
 
 
 def detect_gun_geometry(rows: list[tuple]) -> tuple[str, int]:

@@ -158,9 +158,7 @@ def _pagerank_loop(
 ) -> DataFrame:
     """The distributed iterations of :func:`pagerank` over its
     materialized edge list."""
-    from pyspark import StorageLevel
-
-    from mdio_python_spark.operators.caching import attach_cached
+    from mdio_python_spark.operators.caching import attach_cached, persist
 
     # The edge list is referenced 1 + iters times (degrees + every
     # iteration's join). Identical-subtree exchange reuse does NOT fire
@@ -168,10 +166,7 @@ def _pagerank_loop(
     # aggregate), so the src-partitioned copy is persisted once and every
     # iteration reads it. Edges are id-pairs (16 bytes/row); cache
     # release follows the caching.py contract.
-    edges = (
-        base.repartition(F.col(src))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    edges = persist(base.repartition(F.col(src)))
     deg = edges.groupBy(src).agg(F.count(F.lit(1)).alias("_deg"))
     ranks = deg.select(F.col(src).alias("id"), F.lit(1.0).alias("r"))
     for _ in range(iters):

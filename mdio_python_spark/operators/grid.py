@@ -140,7 +140,7 @@ def ordered_export(
     call ``operators.caching.release_cached(result)`` after the terminal
     action for precise release. Callers that never do (a harness running
     the declared query in a loop) are bounded by generation rotation:
-    each call unpersists the previous call's stage (``rotate_scoped``),
+    each call unpersists the previous call's stage (``caching.own``),
     so at most one generation is ever held.
 
     The two-phase machinery now lives in

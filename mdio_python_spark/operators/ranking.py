@@ -27,14 +27,14 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from mdio_python_spark.operators.caching import (
     CACHE_ATTR,
     attach_cached,
-    rotate_scoped,
+    own,
+    persist,
 )
 
 
@@ -75,7 +75,7 @@ def distributed_ordinal(
     2.6 s vs 1.1 s at sf0.1). The persisted handle rides on the returned
     DataFrame — ``operators.caching.release_cached(result)`` after the
     terminal action for precise release; callers that never do are
-    bounded to one generation per ``scope`` by ``rotate_scoped``.
+    bounded to one generation per ``scope`` by ``caching.own``.
     """
     exprs = [F.col(c) if isinstance(c, str) else c for c in order_by]
     parted = (
@@ -85,12 +85,13 @@ def distributed_ordinal(
     ).sortWithinPartitions(*exprs)
 
     mid = F.monotonically_increasing_id()
-    local = parted.select(
-        "*",
-        F.shiftright(mid, 33).cast("int").alias("_pid"),
-        (mid.bitwiseAND(F.lit((1 << 33) - 1))).alias("_local"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    rotate_scoped(scope, local)
+    local = persist(
+        parted.select(
+            "*",
+            F.shiftright(mid, 33).cast("int").alias("_pid"),
+            (mid.bitwiseAND(F.lit((1 << 33) - 1))).alias("_local"),
+        )
+    )
 
     counts = local.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n"))
     # cumulative offsets over the tiny per-partition count table (≤ one
@@ -113,7 +114,7 @@ def distributed_ordinal(
         )
         .drop("_pid", "_local", "_offset")
     )
-    return attach_cached(out, local)
+    return own(out, scope, local)
 
 
 def group_ranked(

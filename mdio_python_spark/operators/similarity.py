@@ -143,23 +143,6 @@ def bucketed_topk(
     )
 
 
-def band_sign_bucket(vec: Column | str, band: int, bits: int) -> Column:
-    """Sign bucket over the ``band``-th block of ``bits`` dimensions —
-    band 0 is :func:`sign_bucket`'s leading block, band b uses dims
-    ``[b*bits, (b+1)*bits)``. Multiple bands give MinHash-LSH-style OR
-    semantics over independent hyperplane sets. ``vec`` as a str builds
-    the chain as one SQL expression (same contract as
-    :func:`sign_bucket`)."""
-    if isinstance(vec, str):
-        return F.expr(_sql_sign_bucket(vec, bits, band=band))
-    b = F.lit(0).cast("long")
-    for i in range(bits):
-        b = b + F.when(
-            F.element_at(vec, band * bits + i + 1) > 0, F.lit(2**i)
-        ).otherwise(F.lit(0))
-    return b
-
-
 def multiband_topk(
     queries: DataFrame,
     candidates: DataFrame,
@@ -244,8 +227,8 @@ def _lit_vec(values) -> Column:
 # iteration; the sf0.1 embeddings table is 2000 rows, so execution is
 # ~0.5 s). The same expression built as ONE ``F.expr`` string parses
 # server-side in ~1 ms. These builders emit SQL that parses to the SAME
-# operations in the SAME fold order as :func:`dot` / :func:`norm` /
-# :func:`l2sq` (zip_with + left-fold aggregate, CAST(x AS DOUBLE)), so
+# operations in the SAME fold order as :func:`dot` / :func:`norm`
+# (zip_with + left-fold aggregate, CAST(x AS DOUBLE)), so
 # every value is bit-identical — pinned by the committed-artifact fit
 # tests and the DuckDB oracle gates. Double literals use Python ``repr``
 # (shortest round-trip decimal; Java's parseDouble is correctly rounded,
@@ -285,7 +268,7 @@ def _sql_cosine(a: str, b: str) -> str:
 
 
 def _sql_sign_bucket(vec_sql: str, bits: int, band: int = 0) -> str:
-    # same tree as the Column chain in sign_bucket/band_sign_bucket:
+    # same tree as the Column chain in sign_bucket:
     # CAST(0 AS BIGINT) + per-bit CASE terms, left-associated
     terms = " + ".join(
         f"(CASE WHEN element_at({vec_sql}, {band * bits + i + 1}) > 0 "
@@ -296,9 +279,9 @@ def _sql_sign_bucket(vec_sql: str, bits: int, band: int = 0) -> str:
 
 
 def _sql_l2sq(a: str, b: str) -> str:
-    # one zip_with computing (x-y)*(x-y) per element: the Column twin
-    # builds diffs then squares via a second zip_with, but each element's
-    # double and the fold order are identical
+    # one zip_with computing (x-y)*(x-y) per element, folded left in dim
+    # order: the same doubles and fold order as _py_l2sq and the oracle's
+    # list_reduce
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> (CAST(x AS DOUBLE) - "
         f"CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
@@ -1267,17 +1250,9 @@ def semantic_dedup_drops(
 # --- Product quantization (Jegou et al., TPAMI 2011 — the PQ part) ---------
 
 
-def l2sq(a: Column, b: Column) -> Column:
-    """Left-fold squared L2 distance: deterministic evaluation order
-    matching the oracle's list_reduce fold bit-for-bit."""
-    diffs = F.zip_with(a, b, lambda x, y: x.cast("double") - y.cast("double"))
-    sq = F.zip_with(diffs, diffs, lambda x, y: x * y)
-    return F.aggregate(sq, F.lit(0.0), lambda acc, v: acc + v)
-
-
 def _py_l2sq(a, b) -> float:
-    """Python twin of :func:`l2sq` with the identical left fold, for
-    plan-build-time constants (ADC lookup tables)."""
+    """Python twin of :func:`_sql_l2sq` with the identical left fold,
+    for plan-build-time constants (ADC lookup tables)."""
     acc = 0.0
     for x, y in zip(a, b):
         acc += (float(x) - float(y)) * (float(x) - float(y))
@@ -1652,7 +1627,7 @@ def random_project(
     shuffle and no Python. The standard pre-step that makes downstream
     ANN (sign buckets, IVF cells) cheaper by in_dim/out_dim. The left
     fold's evaluation order is the cross-engine determinism contract
-    (same as :func:`l2sq`); ``1/sqrt(out_dim)`` is a single exact-input
+    (same as :func:`_sql_l2sq`); ``1/sqrt(out_dim)`` is a single exact-input
     sqrt, correctly rounded identically in the JVM and DuckDB.
     """
     signs = rp_signs(out_dim, in_dim, salt)
@@ -1727,9 +1702,7 @@ def source_centroid_cosine(
     Everything downstream is dimension-table sized (dim-keyed self-join
     bounded at |groups|^2 x dim rows, broadcast norm joins).
     """
-    from pyspark import StorageLevel
-
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
+    from mdio_python_spark.operators.caching import own, persist
 
     j = docs.select(F.col(id_col).alias(vec_id_col), group_col).join(
         emb, vec_id_col
@@ -1743,10 +1716,9 @@ def source_centroid_cosine(
         .cast("decimal(18,0)")
         .alias("_vq"),
     )
-    sums = (
+    sums = persist(
         comp.groupBy(group_col, "dim")
         .agg(F.sum("_vq").cast("decimal(18,0)").alias("s"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     prod = (F.col("sa") * F.col("sb")).cast("decimal(37,0)")
     a = sums.select(
@@ -1781,5 +1753,4 @@ def source_centroid_cosine(
             ).alias("centroid_cosine"),
         )
     )
-    rotate_scoped("similarity.source_centroid_cosine", sums)
-    return attach_cached(out, sums)
+    return own(out, "similarity.source_centroid_cosine", sums)

@@ -344,21 +344,16 @@ def bigram_lm_scores(
     DECIMAL(10,0) first, because decimal(18,8) * bigint overflows
     Spark's precision cap and silently drops to scale 7.
     """
-    from pyspark import StorageLevel
-
     from mdio_python_spark.functions.determinism import dec
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
+    from mdio_python_spark.operators.caching import own, persist
     from mdio_python_spark.operators.text_arrow import gram_multiset_arrow
 
-    dbc = (
+    dbc = persist(
         gram_multiset_arrow(df, n=2, key_col=id_col, text_col=text_col)
         .withColumnRenamed("gram", "bigram")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    bcnt = (
-        dbc.groupBy("bigram")
-        .agg(F.sum("c").cast("bigint").alias("n_big"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    bcnt = persist(
+        dbc.groupBy("bigram").agg(F.sum("c").cast("bigint").alias("n_big"))
     )
     w1 = F.substring_index(F.col("bigram"), " ", 1)
     pcnt = bcnt.groupBy(w1.alias("w1")).agg(
@@ -379,8 +374,7 @@ def bigram_lm_scores(
             ).alias("lm_score"),
         )
     )
-    rotate_scoped("bigram_lm_scores", dbc, bcnt)
-    return attach_cached(out, dbc, bcnt)
+    return own(out, "bigram_lm_scores", dbc, bcnt)
 
 
 def vocab_diversity(

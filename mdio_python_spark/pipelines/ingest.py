@@ -10,12 +10,11 @@ passes mirroring the reference's two passes:
      (the reference's own shape: ``np.unique`` per index field) for grid
      QC (A6/A7), the dim sizes, the dim tables (A2, Arrow literals) and
      the write plan (max chunk keys per scan block);
-   - above it the scan is cached and ONE aggregate (trace count, distinct
-     dim-tuple count, each spatial dim's sorted distinct values) yields
-     grid QC, the dim sizes and the dim tables together; then the
-     write-plan job. The duplicate-tuple query runs only when the
-     aggregate reports fewer distinct tuples than traces, to name the
-     offender.
+   - above it the scan is cached and ONE aggregate (each spatial dim's
+     sorted distinct values) yields the dim sizes and the dim tables;
+     sparsity is checked against the file-size trace count, one
+     duplicate-tuple query names the smallest offender if there is one,
+     then the write-plan job.
    Strategy detection aggregates run in Spark on either side, over the
    cached scan.
 2. trace pass — over the cached header table only: strategies re-applied
@@ -194,28 +193,30 @@ def _duplicate_error(cell: dict) -> GridTraceCountError:
     return GridTraceCountError(f"duplicate dim tuple: {cell}")
 
 
-def _grid_qc_spark(headers: DataFrame, spatial: list[str]) -> dict[str, list]:
-    """Grid QC (A6/A7) and the A2 dim values from ONE aggregate over the
-    transformed headers (a batch of aggregates sharing one input, as in
-    LMFAO): the trace count, the distinct-tuple count and each dim's
-    sorted distinct values — the quantities of stats.grid_sparsity,
-    grid.duplicate_cells and grid.dim_values. Each value set is bounded
-    by its dim's cardinality, not by the trace count. The duplicate query
-    runs only when the counts differ, to name the smallest offender in
-    dim order, as :func:`_grid_qc_arrow` does."""
+def _grid_qc_spark(
+    headers: DataFrame, spatial: list[str], num_traces: int
+) -> dict[str, list]:
+    """Grid QC (A6/A7) and the A2 dim values over the transformed headers:
+    one aggregate of each dim's sorted distinct values (grid.dim_values;
+    each set is bounded by its dim's cardinality, not by the trace count),
+    sparsity checked against ``num_traces`` (exact from the file sizes:
+    strategies never drop a row), then the duplicate query
+    (grid.duplicate_cells), which names the smallest offender in dim
+    order, as :func:`_grid_qc_arrow` does.
+
+    A distinct-tuple count is not folded into the values aggregate: next
+    to the ``collect_set``s, Spark plans that as an ObjectHashAggregate
+    keyed by every distinct dim tuple, carrying set buffers per tuple.
+    At 10M traces (2 dims, 4 cores) grid QC took 14.9 s with a 5.3 GB
+    JVM peak that way, and 9.6 s with 3.3 GB this way."""
     qc = headers.agg(
-        F.count(F.lit(1)).alias("num_traces"),
-        F.count_distinct(*spatial).alias("num_cells"),
-        *[F.array_sort(F.collect_set(d)).alias(d) for d in spatial],
+        *[F.array_sort(F.collect_set(d)).alias(d) for d in spatial]
     ).collect()[0]
     values = {d: qc[d] for d in spatial}
-    _check_sparsity(math.prod(len(v) for v in values.values()), qc["num_traces"])
-    if qc["num_cells"] != qc["num_traces"]:
-        dupes = (
-            grid.duplicate_cells(headers, spatial).orderBy(*spatial).limit(1).collect()
-        )
-        if dupes:
-            raise _duplicate_error(dupes[0].asDict())
+    _check_sparsity(math.prod(len(v) for v in values.values()), num_traces)
+    dupes = grid.duplicate_cells(headers, spatial).orderBy(*spatial).limit(1).collect()
+    if dupes:
+        raise _duplicate_error(dupes[0].asDict())
     return values
 
 
@@ -588,7 +589,8 @@ def segy_to_store(
     # the write plan; above it those are Spark aggregates over the cached
     # headers. The decoded header table (~2% of payload) is cached in both
     # modes: pass 2 runs over it, and the store writer reads the samples.
-    driver_grid = sum(fi.num_traces for fi in infos) <= HEADER_DRIVER_MAX_TRACES
+    num_traces = sum(fi.num_traces for fi in infos)
+    driver_grid = num_traces <= HEADER_DRIVER_MAX_TRACES
     reread = not driver_grid or bool(strategy_fields)
     headers_raw = scan().persist()
     if stage_clock is not None:
@@ -615,7 +617,7 @@ def segy_to_store(
                 t0 = _mark("header_scan_s", t0)  # the toArrow is the scan
             dim_values, dim_idx = _grid_qc_arrow(keys, spatial)
         else:
-            dim_values = _grid_qc_spark(headers, spatial)
+            dim_values = _grid_qc_spark(headers, spatial, num_traces)
         dim_sizes = {d: len(dim_values[d]) for d in spatial}
         t0 = _mark("grid_qc_s", t0)
 

@@ -19,14 +19,10 @@ from mdio_python_spark.functions.scalars import (
     sql_xxhash64_ascii16,
 )
 from mdio_python_spark.operators import curation, dedup, similarity, text
-from mdio_python_spark.operators.caching import eager
+from mdio_python_spark.operators.caching import eager, own, persist
 from mdio_python_spark.operators.text_arrow import shingle_sets_arrow
 from mdio_python_spark.plans.registry import register
 from mdio_python_spark.sources.tables import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # shared oracle CTE fragments ------------------------------------------------
@@ -179,8 +175,8 @@ def _word_shingle_sets(docs: DataFrame) -> DataFrame:
     (``jaccard_pairs_arrays(sets=)``). The cache holds one sorted long
     array per doc (~the same bytes as the distinct hashes, minus the
     per-row doc_id repetition). Eagerly materialized so dependent plans
-    see measured cache stats (round-7 rule). Callers still own
-    rotate_scoped/attach_cached under their query scope.
+    see measured cache stats (round-7 rule). Callers ``caching.own`` the
+    stage under their query scope.
 
     Round 10b: the stage itself now builds through the Arrow kernel
     (``text_arrow.shingle_sets_arrow`` — bit-identical (id, _set) rows,
@@ -189,13 +185,7 @@ def _word_shingle_sets(docs: DataFrame) -> DataFrame:
     vectorized-MD5 map pass (word sets stage 0.72 -> 0.56 s sf0.1
     isolated; the JVM md5+conv per shingle occurrence was the floor).
     """
-    from pyspark import StorageLevel
-
-    return eager(
-        shingle_sets_arrow(docs, n=3, unit="word", minhashes=8).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    )
+    return eager(persist(shingle_sets_arrow(docs, n=3, unit="word", minhashes=8)))
 
 
 # ---------------------------------------------------------------------------
@@ -212,7 +202,7 @@ def _word_shingle_sets(docs: DataFrame) -> DataFrame:
 )
 def q_dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: one hash-groupBy (map-side combinable)."""
-    return dedup.exact_groups(_t(spark, sf_dir, "documents"))
+    return dedup.exact_groups(load_table(spark, sf_dir, "documents"))
 
 
 @register(
@@ -223,7 +213,8 @@ def q_dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_dedup_exact_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.exact_dedup(_t(spark, sf_dir, "documents")).select("doc_id", "n_chars")
+    docs = load_table(spark, sf_dir, "documents")
+    return dedup.exact_dedup(docs).select("doc_id", "n_chars")
 
 
 # ---------------------------------------------------------------------------
@@ -241,7 +232,7 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash is a scan-stage projection, the aggregate only XOR-mins longs."""
     return dedup.minhash_signatures_from_sets(
         shingle_sets_arrow(
-            _t(spark, sf_dir, "documents"),
+            load_table(spark, sf_dir, "documents"),
             n=3,
             unit="word",
             minhashes=8,
@@ -261,7 +252,7 @@ def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join — the scale path that avoids the quadratic all-pairs scan."""
     sig = dedup.minhash_signatures_from_sets(
         shingle_sets_arrow(
-            _t(spark, sf_dir, "documents"),
+            load_table(spark, sf_dir, "documents"),
             n=3,
             unit="word",
             minhashes=8,
@@ -305,9 +296,7 @@ def q_near_dup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     replacing the round-9 shape that re-aggregated a persisted exploded
     shingle fork three times (the measured wall of this family at
     stress scale)."""
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
-
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sets = _word_shingle_sets(docs)
     sig = dedup.minhash_signatures_from_sets(sets, num_hashes=8)
     pairs = dedup.lsh_candidate_pairs(sig, num_hashes=8, rows_per_band=2)
@@ -315,8 +304,7 @@ def q_near_dup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = dedup.jaccard_pairs_arrays(
         gated, None, min_jaccard=0.5, sets=sets
     ).where(F.col("jaccard") >= 0.5)
-    rotate_scoped("near_dup_jaccard", sets)
-    return attach_cached(out, sets)
+    return own(out, "near_dup_jaccard", sets)
 
 
 @register(
@@ -338,7 +326,7 @@ def q_dedup_cluster_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     join-based — no adjacency arrays); the oracle is a recursive-CTE
     min-label propagation, pruned to labels below the receiving node.
     """
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sig = dedup.minhash_signatures_from_sets(
         shingle_sets_arrow(docs, n=3, unit="word", minhashes=8, emit_sets=False),
         num_hashes=8,
@@ -436,7 +424,7 @@ def q_incremental_dedup_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus side is a precomputed signature/shingle index
     (operators/dedup.py:incremental_dedup's existing_* params) and each
     batch costs shingling the delta plus one capped bucket join."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return dedup.incremental_dedup(
         docs.where(F.col("doc_id") % 2 == 1),
         docs.where(F.col("doc_id") % 2 == 0),
@@ -467,7 +455,7 @@ def _simhash_cte(bits: int) -> str:
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash (16-bit) over the token multiset: per-bit votes in one
     groupBy."""
-    return dedup.simhash(_t(spark, sf_dir, "documents"), bits=16)
+    return dedup.simhash(load_table(spark, sf_dir, "documents"), bits=16)
 
 
 @register(
@@ -503,7 +491,7 @@ def q_simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     moved the knee past 250M docs with the OUTPUT bit-identical (same
     pigeonhole recall guarantee, same verify). The oracle is unchanged:
     any correct candidate scheme yields the same verified pair set."""
-    sim = dedup.simhash(_t(spark, sf_dir, "documents"), bits=60)
+    sim = dedup.simhash(load_table(spark, sf_dir, "documents"), bits=60)
     return dedup.simhash_combo_pairs(sim, bits=60, blocks=6, max_hamming=3)
 
 
@@ -531,7 +519,7 @@ def q_simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring: length/punct/stopword features, all codegen'd
     column expressions — shuffle-free scan."""
-    return text.quality_features(_t(spark, sf_dir, "documents")).select(
+    return text.quality_features(load_table(spark, sf_dir, "documents")).select(
         "doc_id",
         "n_chars_computed",
         "n_tokens",
@@ -572,7 +560,7 @@ FROM scored
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID via stopword-marker argmax (fixed lexicographic
     tie-break); staged projections tokenize once per row."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return text.language_id(docs).select("doc_id", "lang", "pred_lang")
 
 
@@ -605,7 +593,7 @@ def q_text_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII redaction pass: count + replace emails/URLs/phone-shaped spans
     with typed placeholders; output the redacted-text hash (the driver
     hash pins the full replacement semantics without shipping text)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return text.redact_pii(docs).select(
         "doc_id", "n_urls", "n_emails", "n_phones", "redacted_hash"
     )
@@ -622,7 +610,7 @@ def q_text_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprinting: 60-bit hash of normalized text."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         text.fingerprint(F.col("text")).alias("fingerprint"),
@@ -672,7 +660,7 @@ def q_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside the timed window)."""
     from mdio_python_spark.operators.vector_arrow import cosine_topk_arrow
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     out = cosine_topk_arrow(emb.where(F.col("vec_id") < 20), emb, k=5)
     return out.withColumn("rank", F.col("rank").cast("int"))
 
@@ -719,7 +707,7 @@ SELECT query_id, candidate_id, bucket, cosine, rank FROM (
 def q_bucketed_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF/LSH-style bucketed ANN (scale path): sign-bucket equi-join prunes
     the cross product; bucket id is the natural partition key at 100 TB."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     out = similarity.bucketed_topk(
         emb.where(F.col("vec_id") < 50), emb, k=3, bits=6
     )
@@ -842,11 +830,7 @@ def q_corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``near_dup_jaccard``; the funnel aggregates are per-lang partials
     joined on a handful of rows (broadcast). Nothing corpus-sized is
     collected or broadcast."""
-    from pyspark import StorageLevel
-
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
-
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     feats = docs.select(
         "doc_id", "lang", "text", text.token_count(F.col("text")).alias("n_tokens")
     )
@@ -867,10 +851,10 @@ def q_corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Arrow kernel (shingle_sets_arrow — vectorized MD5, no explode,
     # no collect_set aggregation), bit-identical rows.
     sets = eager(
-        shingle_sets_arrow(
-        exact_keep, n=3, unit="word", spread=False, minhashes=8
-    ).persist(
-            StorageLevel.MEMORY_AND_DISK
+        persist(
+            shingle_sets_arrow(
+                exact_keep, n=3, unit="word", spread=False, minhashes=8
+            )
         )
     )
     sig = dedup.minhash_signatures_from_sets(sets, num_hashes=8)
@@ -900,8 +884,7 @@ def q_corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("n_kept", zero).alias("n_kept"),
         F.coalesce("tokens_kept", zero).alias("tokens_kept"),
     )
-    rotate_scoped("llm.curation_funnel", sets)
-    return attach_cached(result, sets)
+    return own(result, "llm.curation_funnel", sets)
 
 
 _IVF_COS = (
@@ -953,7 +936,7 @@ def q_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivf_local_topk Arrow kernel (eager=True — construction collects the
     query sample, round-5 rule); the cell id is the storage partition
     key at scale."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return similarity.ivf_topk(
         emb.where(F.col("vec_id") < 50), emb, k=3, n_centroids=16, nprobe=4
     )
@@ -966,7 +949,7 @@ def q_multiband_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     query in ANY of 4 disjoint 6-bit sign bands (OR-amplification,
     MinHash-LSH banding applied to hyperplane LSH). n_bands reports match
     confidence for free."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     out = similarity.multiband_topk(
         emb.where(F.col("vec_id") < 50), emb, k=3, bits=6, bands=4
     )
@@ -1052,7 +1035,7 @@ def q_ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE division of two exact integers — cross-engine deterministic."""
     from mdio_python_spark.operators.vector_arrow import cosine_topk_arrow
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 50)
     # round 10b: exact leg on the vectorized left-fold kernel
     # (bit-identical); eager=True — construction collects the query
@@ -1104,7 +1087,7 @@ def q_binary_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata; here byte length (UTF-8, exercises multi-byte zh docs) and a
     content digest — the schema pattern the image/audio operators build on
     (operators/multimodal.py)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     payload = F.col("text").cast("binary")
     return docs.select(
         "doc_id",
@@ -1152,7 +1135,7 @@ def q_tokenized_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     BROADCAST vocab join -> order-preserving per-doc rebuild. The id
     sequence crosses as a 60-bit hash, never as an array
     (operators/text.py:build_vocab/tokenize_ids)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     vocab = text.build_vocab(docs, vocab_size=256)
     return text.tokenize_ids(docs, vocab, oov_id=256)
 
@@ -1179,7 +1162,7 @@ def q_token_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     min_df=1 flags corpus-unique junk. One (doc, token) distinct
     exchange + combinable df count + token-co-partitioned join back
     (operators/text.py:token_rarity)."""
-    return text.token_rarity(_t(spark, sf_dir, "documents"))
+    return text.token_rarity(load_table(spark, sf_dir, "documents"))
 
 
 @register(
@@ -1198,7 +1181,7 @@ def q_token_count_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus token accounting per language — the budget query every
     training-data pipeline runs first. Map-side combinable: the shuffle
     carries one partial row per (partition, lang)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     t = F.col("text")
     return docs.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1236,7 +1219,7 @@ def q_embedding_near_dup_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
     meet only within a bucket — no all-pairs scan; 8 bits keeps occupancy
     ~corpus/256), exact cosine verify at 0.3, then the greedy keep-min-id
     drop decision."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return similarity.embedding_near_dup_drops(emb, threshold=0.3, bits=8)
 
 
@@ -1265,7 +1248,7 @@ def q_minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     subtree is computed exactly once."""
     sig = dedup.minhash_signatures_from_sets(
         shingle_sets_arrow(
-            _t(spark, sf_dir, "documents"),
+            load_table(spark, sf_dir, "documents"),
             n=3,
             unit="word",
             minhashes=8,
@@ -1371,7 +1354,7 @@ def q_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     Map-side combinable count; the final top-k is TakeOrderedAndProject
     over the aggregated table — per-task local top-20, never a
     single-task sort of the vocab-sized counts."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # round 11 measured-and-rejected: the Arrow multiset kernel was a
     # loss here (0.64 -> 0.98 s bench) — the (bigram, doc_id) partial
     # distinct already collapses map-side, so the kernel saves no
@@ -1435,7 +1418,7 @@ def q_decontamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a deterministic held-out eval split (~5% of the corpus). The eval
     gram set broadcasts; the corpus side is one scan + one combinable
     groupBy, with grams crossing the wire as 8-byte hashes."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     pred = curation.eval_split_pred()
     return curation.contamination(docs.where(~pred), docs.where(pred), n=8)
 
@@ -1474,7 +1457,7 @@ def q_repetition_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition filters: duplicate-bigram fraction and
     top-bigram character mass per doc — two chained combinable groupBys,
     no joins back against the corpus."""
-    return curation.repetition_features(_t(spark, sf_dir, "documents"))
+    return curation.repetition_features(load_table(spark, sf_dir, "documents"))
 
 
 _SAMPLE_RATES = {"src0": 1.0, "src5": 0.5, "src10": 0.25, "src15": 0.1}
@@ -1494,7 +1477,7 @@ def q_stratified_sample_by_source(spark: SparkSession, sf_dir: str) -> DataFrame
     """Deterministic domain mixing: per-source keep rates via a salted id
     hash — reproducible across engines/retries (unlike RNG ``sample``),
     shuffle-free, and filter-pushed to the scan."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return curation.stratified_sample(
         docs, _SAMPLE_RATES, default_rate=0.05
     ).select("doc_id", "source", "lang")
@@ -1535,7 +1518,7 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exactly the single-task plan the operator avoids."""
     from mdio_python_spark.operators.packing import pack_sequences
 
-    return pack_sequences(_t(spark, sf_dir, "documents"), 2048)
+    return pack_sequences(load_table(spark, sf_dir, "documents"), 2048)
 
 
 # ---------------------------------------------------------------------------
@@ -1579,7 +1562,7 @@ def q_quality_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     same plan."""
     from mdio_python_spark.operators.scoring import model_score
 
-    return model_score(_t(spark, sf_dir, "documents"))
+    return model_score(load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -1624,7 +1607,7 @@ def q_kmeans_lloyd_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     this step with a k x dim driver round-trip per iteration."""
     from mdio_python_spark.operators.kmeans import lloyd_step
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     cents = [
         (int(r[0]), [float(x) for x in r[1]])
         for r in sorted(
@@ -1717,7 +1700,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rational arithmetic only)."""
     from mdio_python_spark.operators.retrieval import bm25_topk
 
-    return bm25_topk(_t(spark, sf_dir, "documents"), _BM25_TERMS, k=_BM25_K)
+    return bm25_topk(load_table(spark, sf_dir, "documents"), _BM25_TERMS, k=_BM25_K)
 
 
 def _hybrid_oracle() -> str:
@@ -1768,9 +1751,9 @@ def q_hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import Window
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     lex = bm25_topk(docs, _BM25_TERMS, k=20)
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     qv = [float(x) for x in emb.where(F.col("vec_id") == 0).head()["embedding"]]
     scored = emb.where(F.col("vec_id") != 0).select(
         F.col("vec_id").alias("doc_id"),
@@ -1836,7 +1819,7 @@ def q_term_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus itself is never exploded."""
     from mdio_python_spark.operators.retrieval import term_stats
 
-    return term_stats(_t(spark, sf_dir, "documents"), _BM25_TERMS)
+    return term_stats(load_table(spark, sf_dir, "documents"), _BM25_TERMS)
 
 
 # ---------------------------------------------------------------------------
@@ -1871,7 +1854,7 @@ def q_temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     join + filter (no corpus shuffle). sqrt is IEEE-correctly-rounded in
     both engines, which is why alpha is pinned to 0.5
     (operators/curation.py:temperature_resample)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return curation.temperature_resample(docs).select("doc_id", "source", "lang")
 
 
@@ -1910,7 +1893,7 @@ def q_dataset_card_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus one partitioned window; the window's per-group sort is the cost
     of an EXACT median — at 100 TB swap in approx_percentile and keep
     this form for audit runs."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     per_doc = docs.select(
         "source", "lang", "doc_id", "n_chars",
@@ -1972,7 +1955,7 @@ def q_document_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle; chunk text crosses as an 8-byte hash
     (operators/text.py:chunk_documents)."""
     return text.chunk_documents(
-        _t(spark, sf_dir, "documents"), chunk_tokens=64, overlap=16
+        load_table(spark, sf_dir, "documents"), chunk_tokens=64, overlap=16
     )
 
 
@@ -2014,7 +1997,7 @@ def q_segment_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     segments cross as 8-byte hashes, frequency is a combinable distinct
     count, join back is hash-co-partitioned — no corpus broadcast
     (operators/dedup.py:segment_dedup_stats)."""
-    return dedup.segment_dedup_stats(_t(spark, sf_dir, "documents"))
+    return dedup.segment_dedup_stats(load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -2089,7 +2072,7 @@ def q_embedding_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_encode,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     books, sub = pq_codebooks(emb, n_subspaces=_PQ_M, n_codes=_PQ_K)
     # query vector = first codeword (already collected: books[m][0] is
     # subspace m of the smallest-id row) — no second driver round-trip
@@ -2296,7 +2279,7 @@ def q_embedding_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from mdio_python_spark.operators.similarity import ivfpq_topk
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return ivfpq_topk(
         emb.where(F.col("vec_id") < 50), emb,
         k=3, n_centroids=16, nprobe=4,
@@ -2316,7 +2299,7 @@ def q_embedding_ivf_fitted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mdio_python_spark.operators.model_store import load_ivf_centroids
     from mdio_python_spark.operators.similarity import ivf_topk
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return ivf_topk(
         emb.where(F.col("vec_id") < 50), emb, k=3, nprobe=4,
         centroids=load_ivf_centroids(),
@@ -2336,7 +2319,7 @@ def q_embedding_pq_fitted(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_encode,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     books, sub = load_pq_codebooks()
     q_vec = [x for m in range(len(books)) for x in books[m][0]]
     codes = pq_encode(emb, books, sub)
@@ -2378,7 +2361,7 @@ def q_quality_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer rank arithmetic, bit-identical across engines."""
     from mdio_python_spark.operators.stats import exact_group_quantiles
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return exact_group_quantiles(
         docs, ["lang"], "n_chars", "doc_id", qs=(0.25, 0.5, 0.75)
     )
@@ -2411,7 +2394,7 @@ def q_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: pure projection + one combinable groupBy."""
     from mdio_python_spark.operators.curation import assign_split
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return assign_split(docs).groupBy("split", "lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").alias("total_chars"),
@@ -2435,10 +2418,10 @@ def q_embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame
     pre-step that makes downstream ANN bucketing/IVF cheaper by the
     dimension ratio. Pure projection: the matrix is plan literals, each
     output one left-fold over the array (the cross-engine determinism
-    contract of ``similarity.l2sq``); no shuffle, no Python."""
+    contract of ``similarity._sql_l2sq``); no shuffle, no Python."""
     from mdio_python_spark.operators.similarity import random_project
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return random_project(emb, out_dim=8, in_dim=64).select(
         "vec_id", *[f"rp_{j}" for j in range(8)]
     )
@@ -2491,7 +2474,7 @@ def q_rp_bucketed_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mdio_python_spark.operators.similarity import random_project, sign_bucket
     from pyspark.sql import Window
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     proj = random_project(emb, out_dim=8, in_dim=64).withColumn(
         "bucket",
         sign_bucket("array(" + ",".join(f"rp_{j}" for j in range(8)) + ")", 8),
@@ -2554,7 +2537,7 @@ def q_similarity_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     one combinable groupBy)."""
     from mdio_python_spark.operators.graph import pagerank
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sig = dedup.minhash_signatures_from_sets(
         shingle_sets_arrow(docs, n=3, unit="word", minhashes=8, emit_sets=False),
         num_hashes=8,
@@ -2594,32 +2577,26 @@ def q_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the 4096-cell table is the only state that crosses tasks."""
     from mdio_python_spark.operators.stats import countmin_cells, countmin_lookup
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("token")
     )
-    from pyspark import StorageLevel
-
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
-
     cells = countmin_cells(toks, "token")
     # the exact top-20 is 20 rows but its lineage is a corpus-sized
     # aggregate, and it feeds BOTH the sketch probe and the final join —
     # persist so that aggregate runs once (AQE identical-subtree reuse is
     # not reliable; same policy as the curation funnel)
-    exact = (
+    exact = persist(
         toks.groupBy("token")
         .agg(F.count(F.lit(1)).alias("n_exact"))
         .orderBy(F.col("n_exact").desc(), "token")
         .limit(20)
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     est = countmin_lookup(exact.select("token"), cells, "token")
     result = exact.join(F.broadcast(est), "token").select(
         "token", "n_exact", "cms_estimate"
     )
-    rotate_scoped("llm.countmin_heavy_hitters", exact)
-    return attach_cached(result, exact)
+    return own(result, "llm.countmin_heavy_hitters", exact)
 
 
 def _digest_oracle() -> str:
@@ -2641,7 +2618,7 @@ def q_corpus_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     concatenates full documents."""
     from mdio_python_spark.operators.stats import table_digest
 
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars",
         F.md5(F.col("text")).alias("text_md5"),
     )
@@ -2682,22 +2659,17 @@ def q_bloom_filter_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a map-only pass. Like the HLL/CMS/digest family, all state is
     integer under order-free reductions, so even the false-positive
     count is bit-identical cross-engine."""
-    from pyspark import StorageLevel
-
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
     from mdio_python_spark.operators.stats import bloom_build, bloom_probe
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # the distinct member set feeds BOTH the word build and the truth
     # join; persist so the corpus distinct runs once (same policy as the
     # countmin exact branch — AQE subtree reuse is not reliable here)
-    build = (
+    build = persist(
         docs.where(F.col("doc_id") % 2 == 0)
         .select(F.md5("text").alias("item"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    rotate_scoped("llm.bloom_filter_probe", build)
     probes = docs.select(F.md5("text").alias("item")).distinct()
     words = bloom_build(build, "item")
     maybe = bloom_probe(probes, words, "item")
@@ -2719,7 +2691,7 @@ def q_bloom_filter_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n_false_negative"),
     )
-    return attach_cached(out, build)
+    return own(out, "llm.bloom_filter_probe", build)
 
 
 def _length_sketch_oracle() -> str:
@@ -2740,7 +2712,7 @@ def q_length_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     register-the-approx-path half)."""
     from mdio_python_spark.operators.stats import histogram_quantiles
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return histogram_quantiles(docs, ["lang"], "n_chars", 64)
 
 
@@ -2762,7 +2734,7 @@ def q_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact histogram shape statsV1 leaves as a placeholder
     (reference ``src/mdio/builder/schemas/v1/stats.py``: histogram
     field), realized as a first-class query."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     bucket = F.least(F.expr("n_chars div 100"), F.lit(19)).cast("long")
     return (
         docs.groupBy(
@@ -2808,7 +2780,7 @@ def q_collocation_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     by chance). Scale shape: two combinable counts over corpus-sized
     explodes; the lift join probes the unigram table with a broadcast
     20-row side; totals are 1-row broadcasts."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     bi = dedup.word_shingles(docs, n=2, distinct=False).withColumnRenamed(
         "shingle", "bigram"
     )
@@ -2893,14 +2865,14 @@ def q_embedding_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame
     double->decimal cast goes through the value's shortest string in
     BOTH engines — DuckDB's native cast multiplies in double and lands
     ulps away from Spark's BigDecimal.valueOf); per-vector squared
-    deviations fold in dim order (the ``l2sq`` left-fold contract —
+    deviations fold in dim order (the ``_sql_l2sq`` left-fold contract —
     dim-bounded, so the collect is 64 structs/vector). Scale shape: one
     posexplode feeding a combinable (label, dim) agg — the centroid
     table is |labels| x dim, broadcast back — and a combinable per-vec
     rollup; top-5 runs per label over the tiny distance table."""
     from pyspark.sql import Window
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     dims = emb.select(
         "vec_id",
         "label",
@@ -2994,7 +2966,7 @@ def q_length_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables are |lang| rows, broadcast back."""
     from mdio_python_spark.operators.ranking import group_ranked
 
-    docs = _t(spark, sf_dir, "documents").select("lang", "n_chars", "doc_id")
+    docs = load_table(spark, sf_dir, "documents").select("lang", "n_chars", "doc_id")
     med = (
         group_ranked(
             docs,
@@ -3076,7 +3048,8 @@ def q_substring_dup_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary-aligned duplication. O(total tokens) 16-byte rows, three
     bounded combinable exchanges, never pairwise
     (operators/dedup.py:window_dup_stats)."""
-    return dedup.window_dup_stats(_t(spark, sf_dir, "documents"), window_tokens=8)
+    docs = load_table(spark, sf_dir, "documents")
+    return dedup.window_dup_stats(docs, window_tokens=8)
 
 
 @register(
@@ -3103,9 +3076,7 @@ def q_cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop. The matrix rollup adds two doc_id-co-partitioned hash joins
     (pairs side is LSH-bounded, tiny vs corpus) and one combinable
     groupBy on top of the shared near-dup pipeline."""
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
-
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sets = _word_shingle_sets(docs)
     sig = dedup.minhash_signatures_from_sets(sets, num_hashes=8)
     pairs = dedup.lsh_candidate_pairs(sig, num_hashes=8, rows_per_band=2)
@@ -3124,8 +3095,7 @@ def q_cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source_a", "source_b")
         .agg(F.count(F.lit(1)).alias("n_pairs"))
     )
-    rotate_scoped("cross_source_dup_matrix", sets)
-    return attach_cached(out, sets)
+    return own(out, "cross_source_dup_matrix", sets)
 
 
 _SEMDEDUP_ORACLE = f"""
@@ -3172,7 +3142,7 @@ def q_semantic_dedup_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mdio_python_spark.operators import vector_arrow
 
     return vector_arrow.semantic_dedup_arrow(
-        _t(spark, sf_dir, "embeddings"), threshold=0.3, n_centroids=16
+        load_table(spark, sf_dir, "embeddings"), threshold=0.3, n_centroids=16
     )
 
 
@@ -3273,7 +3243,7 @@ def q_ann_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical rows) — the leg-exploded broadcast cell join of
     interpreted zip_with folds is gone. Eager: construction collects
     the bounded query sample."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 50)
     return similarity.ivf_recall_curve(
         queries, emb, k=10, n_centroids=16, probes=(1, 2, 4, 8)
@@ -3361,7 +3331,7 @@ def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     window (operators/bpe.py)."""
     from mdio_python_spark.operators import bpe
 
-    wc = bpe.word_counts(_t(spark, sf_dir, "documents"))
+    wc = bpe.word_counts(load_table(spark, sf_dir, "documents"))
     vocab = wc.select(bpe.symbolize(F.col("word")).alias("sym"), "n")
     return (
         bpe.pair_counts(vocab)
@@ -3392,7 +3362,7 @@ def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/bpe.py:train_merges)."""
     from mdio_python_spark.operators import bpe
 
-    wc = bpe.word_counts(_t(spark, sf_dir, "documents"))
+    wc = bpe.word_counts(load_table(spark, sf_dir, "documents"))
     merges, _final = bpe.train_merges(wc, _BPE_STEPS, scope="llm.bpe_train")
     return merges
 
@@ -3428,9 +3398,10 @@ def q_bpe_tokenized_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     trained vocabulary's symbol counts (vocab-bounded build side); the
     rollup is combinable (operators/bpe.py)."""
     from mdio_python_spark.operators import bpe
+    from mdio_python_spark.operators.caching import CACHE_ATTR, attach_cached
     from mdio_python_spark.operators.text import tokens as _tokens
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     wc = bpe.word_counts(docs)
     _merges, final = bpe.train_merges(wc, _BPE_STEPS, scope="llm.bpe_apply")
     occ = docs.select(
@@ -3438,7 +3409,7 @@ def q_bpe_tokenized_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(_tokens(F.lower(F.trim(F.col("text"))))).alias("word"),
     ).where(F.col("word") != "")
     counts = final.select("word", bpe.sym_count(F.col("sym")).alias("_k"))
-    return (
+    out = (
         occ.join(counts, "word")
         .groupBy("doc_id")
         .agg(
@@ -3446,6 +3417,7 @@ def q_bpe_tokenized_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("_k").alias("n_bpe_tokens"),
         )
     )
+    return attach_cached(out, *getattr(final, CACHE_ATTR, []))
 
 
 # ---------------------------------------------------------------------------
@@ -3482,7 +3454,7 @@ def q_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     LREC 2020). Vocab-sized model tables, one persisted per-doc count
     stage feeding both model build and scoring join
     (operators/text.py:bigram_lm_scores)."""
-    return text.bigram_lm_scores(_t(spark, sf_dir, "documents"))
+    return text.bigram_lm_scores(load_table(spark, sf_dir, "documents"))
 
 
 @register(
@@ -3517,7 +3489,7 @@ def q_importance_weights_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     smoothed bucket ratios. 1024-row ratio table broadcasts; one persisted
     (doc, bucket) count stage serves all three consumers
     (operators/curation.py:dsir_importance_weights)."""
-    return curation.dsir_importance_weights(_t(spark, sf_dir, "documents"))
+    return curation.dsir_importance_weights(load_table(spark, sf_dir, "documents"))
 
 
 @register(
@@ -3543,7 +3515,7 @@ def q_vocab_diversity_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the transcendental-free entropy stand-in) — collapsed diversity
     flags a scraper stuck on one template. Two chained combinable
     groupBys, no joins (operators/text.py:vocab_diversity)."""
-    return text.vocab_diversity(_t(spark, sf_dir, "documents"))
+    return text.vocab_diversity(load_table(spark, sf_dir, "documents"))
 
 
 @register(
@@ -3577,7 +3549,7 @@ def q_ngram_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplication signal of Lee et al. (ACL 2022), via two combinable
     passes over one shared repartition(gh) exchange instead of suffix
     arrays (operators/dedup.py:ngram_novelty)."""
-    return dedup.ngram_novelty(_t(spark, sf_dir, "documents"), n=8)
+    return dedup.ngram_novelty(load_table(spark, sf_dir, "documents"), n=8)
 
 
 # ---------------------------------------------------------------------------
@@ -3692,11 +3664,7 @@ def q_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     race a lazily persisted truth has under a multi-leg union job.
     Bucket caps are mirrored in the oracle via rn <= cap over sorted
     ids; outputs and oracle unchanged."""
-    from pyspark import StorageLevel
-
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
-
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # ONE home for the leg tuple (ADVICE r9): the banding call and the
     # legs_lit literal frame below must enumerate the SAME configurations
     # — two separate literals could drift and silently emit phantom
@@ -3714,9 +3682,7 @@ def q_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialization (same barrier-saving rationale as before —
     # cand_all's own plan is joins-free, so it never consults the
     # stage's size estimate).
-    sets = shingle_sets_arrow(docs, n=3, unit="word", minhashes=8).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sets = persist(shingle_sets_arrow(docs, n=3, unit="word", minhashes=8))
     sig = dedup.minhash_signatures_from_sets(sets, num_hashes=8)
     banded = dedup.minhash_band_rows(
         sig, num_hashes=8, rows_per_band_legs=legs
@@ -3729,20 +3695,23 @@ def q_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # n_truth), so no planner decision ever consults cand_all's size
     # estimate. Same relations cached, one fewer serial job in the
     # eager-timed construction window (measured ~0.4 s at sf0.1).
-    cand_all = dedup.bucket_pairs(
-        banded, ["leg", "band_id", "band_hash"], carry_cols=("leg",)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    truth = eager(
-        dedup.jaccard_pairs_arrays(
-            cand_all.where(F.col("leg") == 1).select("doc_a", "doc_b"),
-            None,
-            min_jaccard=0.5,
-            sets=sets,
+    cand_all = persist(
+        dedup.bucket_pairs(
+            banded, ["leg", "band_id", "band_hash"], carry_cols=("leg",)
         )
-        .where(F.col("jaccard") >= 0.5)
-        .select("doc_a", "doc_b")
-        .withColumn("_t", F.lit(1))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    truth = eager(
+        persist(
+            dedup.jaccard_pairs_arrays(
+                cand_all.where(F.col("leg") == 1).select("doc_a", "doc_b"),
+                None,
+                min_jaccard=0.5,
+                sets=sets,
+            )
+            .where(F.col("jaccard") >= 0.5)
+            .select("doc_a", "doc_b")
+            .withColumn("_t", F.lit(1))
+        )
     )
     n_truth = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_truth"))
     legs_lit = spark.createDataFrame([(r,) for r in legs], "leg long")
@@ -3773,8 +3742,7 @@ def q_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("recall"),
         )
     )
-    rotate_scoped("lsh_tuning_curve", sets, cand_all, truth)
-    return attach_cached(out, sets, cand_all, truth)
+    return own(out, "lsh_tuning_curve", sets, cand_all, truth)
 
 
 # ---------------------------------------------------------------------------
@@ -3810,7 +3778,7 @@ def q_training_order_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mdio_python_spark.operators.caching import CACHE_ATTR, attach_cached
     from mdio_python_spark.operators.curation import split_hash
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     m = docs.select(
         "doc_id",
         split_hash(F.col("doc_id"), "shard", 16).alias("shard"),
@@ -3881,7 +3849,7 @@ def q_cluster_best_representative(spark: SparkSession, sf_dir: str) -> DataFrame
     state."""
     from mdio_python_spark.operators.scoring import model_score
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sig = dedup.minhash_signatures_from_sets(
         shingle_sets_arrow(docs, n=3, unit="word", minhashes=8, emit_sets=False),
         num_hashes=8,
@@ -3933,10 +3901,8 @@ def q_nearpair_embedding_agreement(spark: SparkSession, sf_dir: str) -> DataFram
     LSH-bounded (tiny vs corpus), so the two embedding joins are
     pair-side lookups, not corpus shuffles; cosine is the shared
     left-fold dot product (deterministic evaluation order)."""
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
-
-    docs = _t(spark, sf_dir, "documents")
-    emb = _t(spark, sf_dir, "embeddings")
+    docs = load_table(spark, sf_dir, "documents")
+    emb = load_table(spark, sf_dir, "embeddings")
     sets = _word_shingle_sets(docs)
     sig = dedup.minhash_signatures_from_sets(sets, num_hashes=8)
     pairs = dedup.lsh_candidate_pairs(sig, num_hashes=8, rows_per_band=2)
@@ -3955,8 +3921,7 @@ def q_nearpair_embedding_agreement(spark: SparkSession, sf_dir: str) -> DataFram
             similarity.cosine(F.col("_va"), F.col("_vb")).alias("cosine"),
         )
     )
-    rotate_scoped("nearpair_embedding_agreement", sets)
-    return attach_cached(out, sets)
+    return own(out, "nearpair_embedding_agreement", sets)
 
 
 # ---------------------------------------------------------------------------
@@ -4006,7 +3971,7 @@ def q_length_quality_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a fixed IEEE chain both engines evaluate identically."""
     from mdio_python_spark.operators.scoring import model_score
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     ms = model_score(docs).select("doc_id", F.col("weight_sum").alias("y"))
     xy = docs.select("doc_id", F.col("n_chars").alias("x")).join(ms, "doc_id")
 
@@ -4063,17 +4028,11 @@ def q_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides, and exchange reuse across a self-join is not a contract); the
     token-key self-join emits at most |sources|^2 rows per token; sizes
     broadcast into the final |pairs|-row select."""
-    from pyspark import StorageLevel
-
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
-
-    docs = _t(spark, sf_dir, "documents")
-    vocab = (
+    docs = load_table(spark, sf_dir, "documents")
+    vocab = persist(
         docs.select(
             "source", F.explode(text.tokens(F.lower(F.col("text")))).alias("token")
-        )
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ).distinct()
     )
     sizes = vocab.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_vocab")
@@ -4105,8 +4064,7 @@ def q_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("vocab_jaccard"),
         )
     )
-    rotate_scoped("source_vocab_overlap", vocab)
-    return attach_cached(out, vocab)
+    return own(out, "source_vocab_overlap", vocab)
 
 
 # ---------------------------------------------------------------------------
@@ -4217,23 +4175,14 @@ def q_char_shingle_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange collapse into one shuffle-free vectorized-MD5 map pass,
     measured 3.53 -> 0.58 s isolated at sf0.1 (the whole stage was the
     query's wall)."""
-    from pyspark import StorageLevel
-
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
-
-    docs = _t(spark, sf_dir, "documents")
-    sets = eager(
-        shingle_sets_arrow(docs, n=8, unit="char", minhashes=8).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    )
+    docs = load_table(spark, sf_dir, "documents")
+    sets = eager(persist(shingle_sets_arrow(docs, n=8, unit="char", minhashes=8)))
     sig = dedup.minhash_signatures_from_sets(sets, num_hashes=8)
     pairs = dedup.lsh_candidate_pairs(sig, num_hashes=8, rows_per_band=4)
     out = dedup.jaccard_pairs_arrays(
         pairs, None, min_jaccard=0.7, sets=sets
     ).where(F.col("jaccard") >= 0.7)
-    rotate_scoped("char_shingle_near_dup", sets)
-    return attach_cached(out, sets)
+    return own(out, "char_shingle_near_dup", sets)
 
 
 # ---------------------------------------------------------------------------
@@ -4305,7 +4254,7 @@ def q_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_text_arrow.py."""
     from mdio_python_spark.operators import text_arrow
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return text_arrow.winnow_fingerprints_arrow(docs, k=_WIN_K, w=_WIN_W)
 
 
@@ -4369,8 +4318,8 @@ def q_source_centroid_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: scan-side posexplode, one combinable groupBy(source,
     dim) collapsing the corpus to |sources| x dim rows; everything after
     is dimension-table sized (dim-keyed self-join, broadcast norms)."""
-    docs = _t(spark, sf_dir, "documents")
-    emb = _t(spark, sf_dir, "embeddings")
+    docs = load_table(spark, sf_dir, "documents")
+    emb = load_table(spark, sf_dir, "embeddings")
     return similarity.source_centroid_cosine(docs, emb)
 
 
@@ -4414,7 +4363,7 @@ def q_top_ngrams_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     phase 2 sees <= 64k survivors per lang)."""
     from mdio_python_spark.operators.retrieval import grouped_topk
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # round 11 measured-and-rejected: the Arrow multiset kernel was a
     # wash-to-loss here (0.90 -> 1.18 s bench, parity isolated) — the
     # (lang, shingle) partial aggregation already collapses occurrence
@@ -4465,7 +4414,7 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a pure projection — no window, no driver state."""
     from mdio_python_spark.operators.curation import split_hash
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sig = dedup.minhash_signatures_from_sets(
         shingle_sets_arrow(docs, n=3, unit="word", minhashes=8, emit_sets=False),
         num_hashes=8,
@@ -4520,7 +4469,7 @@ def q_dedup_effective_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the shared LSH + connected-components DAG, one left
     join against the clustered subset, one combinable groupBy(source)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sig = dedup.minhash_signatures_from_sets(
         shingle_sets_arrow(docs, n=3, unit="word", minhashes=8, emit_sets=False),
         num_hashes=8,
@@ -4678,7 +4627,7 @@ def q_winnowing_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     efficient. Same aggregation, same oracle, pair sets bit-identical."""
     from mdio_python_spark.operators import text_arrow
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     fps = text_arrow.winnow_fingerprint_set_arrow(
         docs, k=_WIN_K, w=_WIN_W, internal_hash=True
     ).select("doc_id", "wmin")
@@ -4738,7 +4687,7 @@ def q_cluster_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     run on that tiny table."""
     from pyspark.sql import Window
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     keyed = similarity.ivf_cell_assignments(
         emb, n_centroids=16, keep_cols=("label",)
     )
@@ -4834,7 +4783,7 @@ def q_quality_dup_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from mdio_python_spark.operators.scoring import model_score
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     scored = model_score(docs).select("doc_id", "score")
     ranked = distributed_ordinal(
         scored,
@@ -4869,11 +4818,9 @@ def q_quality_dup_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("dup_rate"),
         )
     )
-    from mdio_python_spark.operators.caching import rotate_scoped
-
-    rotate_scoped("llm.quality_dup_deciles.shingles", sets)
     return attach_cached(
-        out, sets, *getattr(ranked, CACHE_ATTR, [])
+        own(out, "llm.quality_dup_deciles.shingles", sets),
+        *getattr(ranked, CACHE_ATTR, []),
     )
 
 
@@ -4923,11 +4870,7 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted before the threshold explode forks it into the pair-count
     and affected-doc aggregates. The x|thresholds| fan-out touches pair
     rows only, never the corpus."""
-    from pyspark import StorageLevel
-
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
-
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sets = _word_shingle_sets(docs)
     sig = dedup.minhash_signatures_from_sets(sets, num_hashes=8)
     pairs = dedup.lsh_candidate_pairs(sig, num_hashes=8, rows_per_band=2)
@@ -4936,12 +4879,10 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the sweep — provably output-identical for every threshold. (The
     # sweep's lowest threshold also guards the arrays-variant n_common=0
     # rows: jaccard 0.0 < min(_THRESHOLDS) never enters any leg.)
-    verified = (
+    verified = persist(
         dedup.jaccard_pairs_arrays(
             pairs, None, min_jaccard=min(_THRESHOLDS), sets=sets
-        )
-        .where(F.col("jaccard") >= min(_THRESHOLDS))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ).where(F.col("jaccard") >= min(_THRESHOLDS))
     )
     # carry an INTEGER threshold index through the explode and join the
     # two aggregates on it — float-equality joins are correct only while
@@ -4970,8 +4911,7 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = per.join(F.broadcast(aff), "t_idx").select(
         "threshold", "n_pairs", "n_docs_affected", "n_docs_dropped"
     )
-    rotate_scoped("llm.dedup_threshold_sweep", sets, verified)
-    return attach_cached(out, sets, verified)
+    return own(out, "llm.dedup_threshold_sweep", sets, verified)
 
 
 _CONTAINMENT_MIN = 0.6
@@ -5015,17 +4955,14 @@ def q_containment_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one extra double divide over the same exact overlap counts
     (operators/dedup.py:containment_pairs), so this adds zero joins and
     zero exchanges to the near-dup DAG."""
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
-
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sets = _word_shingle_sets(docs)
     sig = dedup.minhash_signatures_from_sets(sets, num_hashes=8)
     pairs = dedup.lsh_candidate_pairs(sig, num_hashes=8, rows_per_band=2)
     out = dedup.containment_pairs_arrays(pairs, None, sets=sets).where(
         F.col("containment") >= _CONTAINMENT_MIN
     )
-    rotate_scoped("llm.containment_dup_pairs", sets)
-    return attach_cached(out, sets)
+    return own(out, "llm.containment_dup_pairs", sets)
 
 
 _EDGE_DENSITY_ORACLE = f"""
@@ -5071,16 +5008,10 @@ def q_cluster_edge_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint (eager: the loop runs at construction); edge counts are two
     pair-side joins (LSH-bounded) + combinable groupBys; the shingle
     stage persists once and feeds signatures + the Jaccard verify."""
-    from pyspark import StorageLevel
-
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
-
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sets = _word_shingle_sets(docs)
     sig = dedup.minhash_signatures_from_sets(sets, num_hashes=8)
-    pairs = dedup.lsh_candidate_pairs(sig, num_hashes=8, rows_per_band=2).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    pairs = persist(dedup.lsh_candidate_pairs(sig, num_hashes=8, rows_per_band=2))
     clusters = dedup.connected_components(pairs, assume_distinct=True)
     verified = dedup.jaccard_pairs_arrays(
         pairs, None, min_jaccard=0.5, sets=sets
@@ -5114,8 +5045,7 @@ def q_cluster_edge_density(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("verified_density"),
         )
     )
-    rotate_scoped("llm.cluster_edge_density", sets, pairs)
-    return attach_cached(out, sets, pairs)
+    return own(out, "llm.cluster_edge_density", sets, pairs)
 
 
 # shared oracle fragment for the IVF-QC queries: literal-centroid argmax
@@ -5162,14 +5092,11 @@ def q_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the unpersisted counts->total fork executing the assignment scan
     twice); the total is a broadcast 1-row aggregate over the cached
     |cells| rows."""
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
-
-    emb = _t(spark, sf_dir, "embeddings")
-    counts = (
+    emb = load_table(spark, sf_dir, "embeddings")
+    counts = persist(
         similarity.ivf_cell_assignments(emb, n_centroids=16)
         .groupBy("cell")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_vecs"))
-        .persist()
     )
     tot = counts.agg(
         F.sum("n_vecs").alias("_total"),
@@ -5186,8 +5113,7 @@ def q_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("_total").cast("double")
         ).alias("load_factor"),
     )
-    rotate_scoped("llm.ivf_cell_balance", counts)
-    return attach_cached(out, counts)
+    return own(out, "llm.ivf_cell_balance", counts)
 
 
 _HUBNESS_ORACLE = f"""
@@ -5243,7 +5169,7 @@ def q_knn_graph_hubness(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_vector_arrow.py; oracle unchanged)."""
     from mdio_python_spark.operators import vector_arrow
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     g = vector_arrow.knn_graph_arrow(emb, k=10, n_centroids=16)
     indeg = g.groupBy("candidate_id").agg(F.count(F.lit(1)).alias("_n"))
     deg = (
@@ -5303,7 +5229,7 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded window assigns global ranks. Eager: construction collects
     the bounded query sample (the round-5 rule — build-time distributed
     work sits inside the timed window)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     from mdio_python_spark.operators.vector_arrow import hard_negatives_arrow
 
     return hard_negatives_arrow(
@@ -5343,7 +5269,7 @@ def q_dup_inflation_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: two chained combinable groupBys (text hash -> copy
     count); tokens counted once per doc on the same scan; no joins, no
     windows — all exact integer arithmetic."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     per = docs.select(
         F.md5("text").alias("h"),
         text.token_count(F.col("text")).alias("nt"),
@@ -5389,7 +5315,7 @@ def q_boilerplate_prefix_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: prefix hashes as 8-byte longs from one scan; one
     combinable groupBy; the >= 2 filter prunes the output to actual
     groups."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     prefix = F.array_join(
         F.slice(text.tokens(F.lower(F.trim(F.col("text")))), 1, 8), " "
     )
@@ -5444,7 +5370,7 @@ def q_langid_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one scan (staged marker counts), one combinable
     groupBy(lang, pred_lang) to a |langs|^2 table; margins are exact
     integer differences of hit counts."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     scored = text.language_id(docs, keep_scores=True)
     langs = sorted(text.LANG_MARKERS)
     arr = F.sort_array(F.array(*[F.col(f"s_{lang}") for lang in langs]))
@@ -5508,7 +5434,7 @@ def q_tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame
     from mdio_python_spark.operators import bpe
     from mdio_python_spark.operators.text import tokens as _tokens
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     wc = bpe.word_counts(docs)
     _merges, final = bpe.train_merges(wc, _BPE_STEPS, scope="llm.bpe_fertility")
     occ = docs.select(
@@ -5569,7 +5495,7 @@ def q_embedding_norm_health(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one scan, one combinable groupBy(label); all state is
     integers."""
-    return similarity.norm_health(_t(spark, sf_dir, "embeddings"))
+    return similarity.norm_health(load_table(spark, sf_dir, "embeddings"))
 
 
 _DECON_SIZES = (4, 8, 13)
@@ -5625,19 +5551,17 @@ def q_decontamination_ngram_curve(spark: SparkSession, sf_dir: str) -> DataFrame
     before its only exchange. Measured 22.7 -> 12.9 s at the 100x
     stress corpus; exact at 3 SFs; oracle unchanged. eager=True: the
     builder materializes the persisted gram-array stage."""
-    from pyspark import StorageLevel
-
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
-
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     base = eager(
-        dedup.word_ngram_hash_arrays(
-            docs.select(
-                "doc_id", curation.eval_split_pred().alias("_eval"), "text"
-            ),
-            _DECON_SIZES,
-            extra_cols=("_eval",),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        persist(
+            dedup.word_ngram_hash_arrays(
+                docs.select(
+                    "doc_id", curation.eval_split_pred().alias("_eval"), "text"
+                ),
+                _DECON_SIZES,
+                extra_cols=("_eval",),
+            )
+        )
     )
     legs_arr = F.array(
         *[
@@ -5675,8 +5599,7 @@ def q_decontamination_ngram_curve(spark: SparkSession, sf_dir: str) -> DataFrame
             / F.count(F.lit(1)).cast("double")
         ).alias("contamination_rate"),
     )
-    rotate_scoped("decontamination_ngram_curve", base)
-    return attach_cached(out, base)
+    return own(out, "decontamination_ngram_curve", base)
 
 
 # ---------------------------------------------------------------------------
@@ -5737,7 +5660,7 @@ def q_embedding_anisotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim) collapsing the corpus to |labels| x dim rows; everything after
     is tiny exact-decimal arithmetic (the source_centroid_cosine
     precision ladder: DECIMAL(18,0) sums, (37,0) squares)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     nrm = similarity.norm(F.col("embedding"))
     base = emb.where(nrm > 0).select(
         "label", "embedding", nrm.alias("_n")
@@ -5819,12 +5742,9 @@ def q_zipf_head_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-phase grouped top-k (retrieval.grouped_topk — no single-task
     window even for a dominant language) and the per-lang totals; the
     final join is |langs|-sized and broadcast."""
-    from pyspark import StorageLevel
-
     from mdio_python_spark.operators import retrieval
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # round 11 measured-and-rejected: the n=1 Arrow multiset kernel was
     # 0.42 -> 0.80 s here (single tokens are one codegen explode + a
     # map-side-combined count; the Python boundary costs more than the
@@ -5833,11 +5753,7 @@ def q_zipf_head_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.explode(text.tokens(F.lower(F.trim(F.col("text"))))).alias("token"),
     ).where(F.col("token") != "")
-    counts = (
-        tok.groupBy("lang", "token")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    counts = persist(tok.groupBy("lang", "token").agg(F.count(F.lit(1)).alias("n")))
     top = retrieval.grouped_topk(counts, ["lang"], "n", "token", k=100)
     head = top.groupBy("lang").agg(F.sum("n").cast("bigint").alias("n_top100"))
     tot = counts.groupBy("lang").agg(
@@ -5854,8 +5770,7 @@ def q_zipf_head_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("n_tokens_total").cast("double")
         ).alias("head_share"),
     )
-    rotate_scoped("llm.zipf_head_share", counts)
-    return attach_cached(out, counts)
+    return own(out, "llm.zipf_head_share", counts)
 
 
 _LABEL_MARGIN_ORACLE = """
@@ -5931,7 +5846,7 @@ def q_embedding_label_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     the margin comparisons are bit-identical cross-engine
     (operators/similarity.py:label_margin documents the ladder and the
     broadcast/map-side-combine plan shape)."""
-    return similarity.label_margin(_t(spark, sf_dir, "embeddings"))
+    return similarity.label_margin(load_table(spark, sf_dir, "embeddings"))
 
 
 # ---------------------------------------------------------------------------
@@ -5982,7 +5897,7 @@ def q_packing_boundary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordinal never serializes through one task)."""
     from mdio_python_spark.operators.packing import pack_sequences
 
-    p = pack_sequences(_t(spark, sf_dir, "documents"), 2048)
+    p = pack_sequences(load_table(spark, sf_dir, "documents"), 2048)
     crossing = (F.col("n_seqs_spanned") > 1).cast("int")
     agg = p.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -6048,11 +5963,11 @@ def q_retrieval_leg_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mdio_python_spark.operators.similarity import _lfold_norm, _lit_vec
     from pyspark.sql import Window
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     lex = bm25_topk(docs, _BM25_TERMS, k=20).select(
         "doc_id", F.col("rank").alias("rl")
     )
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     qv = [float(x) for x in emb.where(F.col("vec_id") == 0).head()["embedding"]]
     scored = emb.where(F.col("vec_id") != 0).select(
         F.col("vec_id").alias("doc_id"),
@@ -6116,7 +6031,7 @@ def q_eval_split_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     it (a stratum far from 0.05 means id structure correlates with the
     hash — the split salt must change). One scan, one combinable
     groupBy."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     is_eval = curation.eval_split_pred().cast("int")
     return docs.groupBy("source", "lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -6151,7 +6066,7 @@ def q_simhash_bit_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the candidate generator. The 16-element bit explode touches the
     |docs| x 16 projection of the already-computed signature — one
     combinable groupBy(bit)."""
-    sim = dedup.simhash(_t(spark, sf_dir, "documents"), bits=16)
+    sim = dedup.simhash(load_table(spark, sf_dir, "documents"), bits=16)
     bits = sim.select(
         F.explode(F.sequence(F.lit(0), F.lit(15))).alias("bit"),
         F.col("simhash").alias("_h"),
@@ -6194,11 +6109,10 @@ def q_shard_balance_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
     PERSISTED 16-row table (persist-the-fork: the broadcast total must
     not re-run the corpus scan — round-5 advisor item), one broadcast
     total."""
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
     from mdio_python_spark.operators.curation import split_hash
 
-    docs = _t(spark, sf_dir, "documents")
-    per = (
+    docs = load_table(spark, sf_dir, "documents")
+    per = persist(
         docs.select(
             split_hash(F.col("doc_id"), "shard", 16).alias("shard"),
             text.token_count(F.col("text")).alias("n_tokens"),
@@ -6208,7 +6122,6 @@ def q_shard_balance_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum("n_tokens").cast("bigint").alias("n_tokens"),
         )
-        .persist()
     )
     t = per.agg(F.sum("n_tokens").alias("_total"))
     out = per.crossJoin(F.broadcast(t)).select(
@@ -6220,8 +6133,7 @@ def q_shard_balance_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("_total").cast("double")
         ).alias("token_load_factor"),
     )
-    rotate_scoped("llm.shard_balance_qc", per)
-    return attach_cached(out, per)
+    return own(out, "llm.shard_balance_qc", per)
 
 
 # ---------------------------------------------------------------------------
@@ -6367,23 +6279,19 @@ def q_ann_method_shootout(spark: SparkSession, sf_dir: str) -> DataFrame:
     leg persists once and feeds all four 1-row leg aggregates
     (persist-the-fork — four consumers); each leg join touches
     n_queries x 10 rows per side with the ANN side broadcast."""
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
     from mdio_python_spark.operators.similarity import random_project, sign_bucket
 
     from mdio_python_spark.operators.vector_arrow import cosine_topk_arrow
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     qs = emb.where(F.col("vec_id") < 50)
     # round 10b: exact leg on the vectorized left-fold kernel
     # (bit-identical); eager=True — construction collects the query
     # sample (round-5 rule)
-    exact = (
-        cosine_topk_arrow(qs, emb, k=10)
-        .select("query_id", "candidate_id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    exact = persist(
+        cosine_topk_arrow(qs, emb, k=10).select("query_id", "candidate_id")
     )
 
     sign = similarity.bucketed_topk(qs, emb, k=10, bits=6).select(
@@ -6458,8 +6366,7 @@ def q_ann_method_shootout(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(leg(rp, "rp_bucket"))
         .unionAll(leg(ivf, "ivf_nprobe4"))
     )
-    rotate_scoped("llm.ann_method_shootout", exact)
-    return attach_cached(out, exact)
+    return own(out, "llm.ann_method_shootout", exact)
 
 
 # ---------------------------------------------------------------------------
@@ -6552,7 +6459,7 @@ def q_knn_graph_hubness_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from mdio_python_spark.operators import vector_arrow
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
     k_cells = max(16, int(math.floor(math.sqrt(n))))
     g = vector_arrow.knn_graph_arrow(emb, k=10, n_centroids=k_cells)
@@ -6607,7 +6514,7 @@ def q_semantic_dedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from mdio_python_spark.operators import vector_arrow
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
     k_cells = max(16, int(math.floor(math.sqrt(n))))
     return vector_arrow.semantic_dedup_arrow(

@@ -31,13 +31,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mdio_python_spark.functions.determinism import dec, sql_dsum
+from mdio_python_spark.operators.caching import own, persist
 from mdio_python_spark.plans.llm_queries import _IVF_COS, _TOKS, _ivfpq_serve_oracle
 from mdio_python_spark.plans.registry import register
 from mdio_python_spark.sources.tables import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 _SHORTLIST_K = 10
@@ -130,7 +127,7 @@ def q_pq_shortlist_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector); the exact fold and its window run on |queries| x 10 rows —
     the shortlist join back to embeddings broadcasts the tiny shortlist,
     so the rerank adds one corpus scan and no corpus shuffle."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return _exact_rerank(_fitted_shortlist(emb), emb)
 
 
@@ -186,17 +183,17 @@ def q_rerank_recall_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     |queries| x 10 rows) serves the ADC leg, the rerank leg, and the
     comparison joins; the exact leg is the same broadcast-query corpus
     scan the recall QC family uses."""
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
     from mdio_python_spark.operators.vector_arrow import cosine_topk_arrow
 
-    emb = _t(spark, sf_dir, "embeddings")
-    short = _fitted_shortlist(emb).persist()
+    emb = load_table(spark, sf_dir, "embeddings")
+    short = persist(_fitted_shortlist(emb))
     # round 10b: exact leg on the vectorized left-fold kernel
     # (bit-identical); eager=True — construction collects the query
     # sample (round-5 rule)
-    exact = cosine_topk_arrow(
-        emb.where(F.col("vec_id") < 50), emb, k=_RERANK_K
-    ).select("query_id", "candidate_id").persist()
+    exact = persist(
+        cosine_topk_arrow(emb.where(F.col("vec_id") < 50), emb, k=_RERANK_K)
+        .select("query_id", "candidate_id")
+    )
     adc3 = short.where(F.col("rank") <= _RERANK_K).select(
         "query_id", "candidate_id", F.lit(1).alias("adc_hit")
     )
@@ -221,8 +218,7 @@ def q_rerank_recall_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
             "recall_rerank"
         ),
     )
-    rotate_scoped("rerank_recall_gain", short, exact)
-    return attach_cached(out, short, exact)
+    return own(out, "rerank_recall_gain", short, exact)
 
 
 # int8 quantization: q_i = floor(v_i/scale + 0.5) clamped to [-127, 127],
@@ -282,7 +278,7 @@ def q_int8_quant_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     is broken (advisor r6: documented as expected-0 rather than
     parameterized, to keep the committed oracle and 3-SF sweep rows
     stable)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     v = lambda x: x.cast("double")  # noqa: E731
     sc = (
         F.array_max(F.transform("embedding", lambda x: F.abs(v(x)))) / F.lit(127.0)
@@ -364,17 +360,13 @@ def q_token_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule). The tiny per-source rollup is persisted before the total
     fork so the corpus DAG runs once (the asof_staleness_buckets
     rule)."""
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
-
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    counts = (
-        docs.groupBy("source")
-        .agg(
+    counts = persist(
+        docs.groupBy("source").agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(F.size(toks)).alias("n_tokens"),
         )
-        .persist()
     )
     w = F.sqrt(F.col("n_tokens").cast("double"))
     tot = counts.agg(
@@ -392,8 +384,7 @@ def q_token_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         alloc.cast("bigint").alias("alloc_tokens"),
         (alloc.cast("double") / F.col("n_tokens").cast("double")).alias("epochs"),
     )
-    rotate_scoped("token_budget_allocation", counts)
-    return attach_cached(out, counts)
+    return own(out, "token_budget_allocation", counts)
 
 
 def _pii_oracle() -> str:
@@ -426,7 +417,7 @@ def q_pii_density_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     One combinable groupBy; regex counting happens in the scan stage."""
     from mdio_python_spark.operators.text import EMAIL_RE, PHONE_RE, URL_RE
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     t = F.col("text")
     url = F.regexp_count(t, F.lit(URL_RE)).cast("long")
     email = F.regexp_count(t, F.lit(EMAIL_RE)).cast("long")
@@ -557,7 +548,7 @@ def q_int8_quant_clip_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from mdio_python_spark.operators.ranking import distributed_ordinal
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     el = (
         emb.select(F.explode("embedding").alias("v0"))
         .select(F.col("v0").cast("double").alias("v"))
@@ -701,7 +692,7 @@ def q_knn_graph_hubness_multiprobe(spark: SparkSession, sf_dir: str) -> DataFram
     from mdio_python_spark.operators import vector_arrow
     from mdio_python_spark.operators.model_store import load_ivf_centroids
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     g = vector_arrow.knn_graph_multiprobe_arrow(
         emb, k=10, nprobe=4, centroids=load_ivf_centroids()
     )
@@ -764,10 +755,10 @@ def q_multifile_ingest_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mdio_python_spark.sources.store import open_store
 
     ns = 8
-    nation = _t(spark, sf_dir, "nation").select(
+    nation = load_table(spark, sf_dir, "nation").select(
         (F.col("n_nationkey") + 1).cast("long").alias("inline")
     )
-    region = _t(spark, sf_dir, "region").select(
+    region = load_table(spark, sf_dir, "region").select(
         (F.col("r_regionkey") + 1).cast("long").alias("crossline")
     )
     samples = F.transform(

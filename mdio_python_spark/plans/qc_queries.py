@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from mdio_python_spark.functions.determinism import dsum, sql_dsum
 from mdio_python_spark.operators import dedup
+from mdio_python_spark.operators.caching import own
 from mdio_python_spark.plans.llm_queries import (
     _BANDS_CTE,
     _SHINGLES_CTE,
@@ -50,10 +51,6 @@ from mdio_python_spark.plans.llm_queries import (
 )
 from mdio_python_spark.plans.registry import register
 from mdio_python_spark.sources.tables import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # agree-count per candidate pair (mirror of dedup.minhash_agreement_counts)
@@ -94,7 +91,7 @@ def _gated_candidates(spark: SparkSession, sf_dir: str):
     for shape stability."""
     from mdio_python_spark.plans.llm_queries import _word_shingle_sets
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sets = _word_shingle_sets(docs)
     sig = dedup.minhash_signatures_from_sets(sets, num_hashes=8)
     pairs = dedup.lsh_candidate_pairs(sig, num_hashes=8, rows_per_band=2)
@@ -125,8 +122,6 @@ def q_minhash_gate_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal sum), and how many pairs pass the 0.5 near-dup threshold.
     Reading the table tells you exactly what min_agree=3 costs: every
     n_pass_05 below the cut is a real near-dup the gate drops."""
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
-
     joined, sets = _gated_candidates(spark, sf_dir)
     out = joined.groupBy("agree").agg(
         F.count(F.lit(1)).alias("n_pairs"),
@@ -135,8 +130,7 @@ def q_minhash_gate_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.sum((F.col("jaccard") >= 0.5).cast("long")).alias("n_pass_05"),
     )
-    rotate_scoped("minhash_gate_calibration", sets)
-    return attach_cached(out, sets)
+    return own(out, "minhash_gate_calibration", sets)
 
 
 @register(
@@ -157,8 +151,6 @@ def q_jaccard_bin_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sum(agree)/8K — exact integer sum, one double divide). Bin 0 holds
     the band-collision junk the gate exists to discard; the estimate
     should track bin midpoints upward."""
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
-
     joined, sets = _gated_candidates(spark, sf_dir)
     out = joined.groupBy(
         F.least(F.floor(F.col("jaccard") * 10).cast("int"), F.lit(9)).alias(
@@ -171,8 +163,7 @@ def q_jaccard_bin_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.lit(8.0) * F.count(F.lit(1)).cast("double"))
         ).alias("mean_estimate"),
     )
-    rotate_scoped("jaccard_bin_histogram", sets)
-    return attach_cached(out, sets)
+    return own(out, "jaccard_bin_histogram", sets)
 
 
 @register(
@@ -197,8 +188,6 @@ def q_gate_false_drop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured recall cost — true near-dups the agree >= 3 gate drops
     (n_false_drops; 0 at every tested SF, now continuously declared
     instead of a one-off measurement)."""
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
-
     joined, sets = _gated_candidates(spark, sf_dir)
     out = joined.agg(
         F.count(F.lit(1)).alias("n_candidates"),
@@ -208,8 +197,7 @@ def q_gate_false_drop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ((F.col("agree") < 3) & (F.col("jaccard") >= 0.5)).cast("long")
         ).alias("n_false_drops"),
     )
-    rotate_scoped("gate_false_drop_audit", sets)
-    return attach_cached(out, sets)
+    return own(out, "gate_false_drop_audit", sets)
 
 
 @register(
@@ -231,7 +219,7 @@ def q_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     side is a map-side-combinable hash groupBy plus one join shuffling
     (doc_id, 16-byte hash) — no corpus window sort (the oracle's window
     is DuckDB's idiomatic spelling of the same per-group count)."""
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.md5("text").alias("text_hash")
     )
     counts = docs.groupBy("text_hash").agg(F.count(F.lit(1)).alias("n_dupes"))

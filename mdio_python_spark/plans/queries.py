@@ -22,9 +22,6 @@ from mdio_python_spark.functions.scalars import apply_coordinate_scalar
 from mdio_python_spark.operators import geometry, grid, index_transforms, stats
 from mdio_python_spark.sources.tables import load_table
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
 
 # ---------------------------------------------------------------------------
 # A1 — summary statistics (statsV1, nonzero-masked)
@@ -53,7 +50,7 @@ def q_summary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 (``src/mdio/segy/_workers.py:179-194``): nonzero-only stats with
     automatic partial/final aggregation."""
     return stats.summary_statistics(
-        _t(spark, sf_dir, "lineitem"), "l_extendedprice", nonzero_only=True
+        load_table(spark, sf_dir, "lineitem"), "l_extendedprice", nonzero_only=True
     )
 
 
@@ -76,7 +73,7 @@ GROUP BY l_returnflag, l_linestatus
 
 @register("pricing_summary", _PRICING_ORACLE)
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
     return (
         li.where(F.col("l_shipdate") <= F.lit("1999-09-02").cast("timestamp"))
@@ -109,7 +106,7 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dim_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2 (``index_strategies.py:83-90``): np.unique -> distinct+sort."""
-    return grid.dim_values(_t(spark, sf_dir, "orders"), "o_orderpriority")
+    return grid.dim_values(load_table(spark, sf_dir, "orders"), "o_orderpriority")
 
 
 # ---------------------------------------------------------------------------
@@ -131,7 +128,7 @@ def q_dim_values(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_assign_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1 (``core/grid.py:95-146``): trace->cell via broadcast dim tables —
     zero shuffle of the big table (a dense_rank window would global-sort)."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     return grid.assign_cells(cust, ["c_nationkey", "c_mktsegment"]).select(
         "c_custkey",
         "c_nationkey",
@@ -155,7 +152,7 @@ def q_assign_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_chunk_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C1/C2 analog: chunk-key assignment ``floor(dim_idx/chunk)`` — the
     store partition columns (template chunk shapes, ``builder/templates/*``)."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     cells = grid.assign_cells(cust, ["c_nationkey", "c_mktsegment"])
     return grid.chunk_keys(cells, ["c_nationkey", "c_mktsegment"], [8, 2]).select(
         "c_custkey", "c_nationkey_chunk", "c_mktsegment_chunk"
@@ -177,7 +174,7 @@ def q_chunk_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_coordinate_gather(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2 (``ingestion/coordinates.py:29-77``): reduce coords onto dims."""
     return grid.coordinate_gather(
-        _t(spark, sf_dir, "orders"), ["o_custkey"], ["o_totalprice"]
+        load_table(spark, sf_dir, "orders"), ["o_custkey"], ["o_totalprice"]
     )
 
 
@@ -197,7 +194,9 @@ def q_channel_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 (``header_analysis.py:82-139``) on the driver tables: suppkey as
     cable, partkey as channel."""
     return geometry.channel_ranges(
-        _t(spark, sf_dir, "lineitem"), cable_col="l_suppkey", channel_col="l_partkey"
+        load_table(spark, sf_dir, "lineitem"),
+        cable_col="l_suppkey",
+        channel_col="l_partkey",
     )
 
 
@@ -215,7 +214,7 @@ def q_gun_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4 (``header_analysis.py:142-191``): per (line,gun) distinct-shot
     analysis driving the Type-A/Type-B decision."""
     return geometry.gun_analysis(
-        _t(spark, sf_dir, "lineitem"),
+        load_table(spark, sf_dir, "lineitem"),
         line_col="l_returnflag",
         gun_col="l_linestatus",
         shot_col="l_orderkey",
@@ -245,7 +244,7 @@ def q_line_gun_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     decision: num_guns derived per line (returnflag as line, linestatus as
     gun), broadcast back into the per-(line, gun) distinct-shot agg."""
     return geometry.gun_geometry_analysis(
-        _t(spark, sf_dir, "lineitem"),
+        load_table(spark, sf_dir, "lineitem"),
         line_col="l_returnflag",
         gun_col="l_linestatus",
         shot_col="l_orderkey",
@@ -271,7 +270,8 @@ def q_line_gun_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_sparsity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6 (``ingestion/grid_qc.py:19-69``)."""
-    return stats.grid_sparsity(_t(spark, sf_dir, "lineitem"), ["l_partkey", "l_suppkey"])
+    li = load_table(spark, sf_dir, "lineitem")
+    return stats.grid_sparsity(li, ["l_partkey", "l_suppkey"])
 
 
 @register(
@@ -284,7 +284,8 @@ def q_sparsity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7 (``ingestion/segy/pipeline.py:89-114``): duplicate dim tuples with
     the offending keys (richer than the reference's count mismatch)."""
-    return grid.duplicate_cells(_t(spark, sf_dir, "lineitem"), ["l_partkey", "l_suppkey"])
+    li = load_table(spark, sf_dir, "lineitem")
+    return grid.duplicate_cells(li, ["l_partkey", "l_suppkey"])
 
 
 # ---------------------------------------------------------------------------
@@ -303,7 +304,7 @@ def q_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_channel_wrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2 AutoChannelWrap (``index_strategies.py:206-233``)."""
-    li = _t(spark, sf_dir, "lineitem").withColumnRenamed("l_partkey", "channel")
+    li = load_table(spark, sf_dir, "lineitem").withColumnRenamed("l_partkey", "channel")
     out = index_transforms.wrap_channels(li, cable_col="l_suppkey", channel_col="channel")
     return out.select("l_orderkey", "l_linenumber", "l_suppkey", "channel")
 
@@ -321,7 +322,7 @@ def q_shot_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W3 Type A — CalculateShotIndex via dense_rank
     (``index_strategies.py:267-299``)."""
     out = index_transforms.shot_index_dense(
-        _t(spark, sf_dir, "orders"), ["o_custkey"], shot_col="o_orderdate"
+        load_table(spark, sf_dir, "orders"), ["o_custkey"], shot_col="o_orderdate"
     )
     return out.select("o_orderkey", "o_custkey", "shot_index")
 
@@ -340,7 +341,10 @@ def q_shot_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W3 Type B — AutoShotWrap floor-div variant
     (``index_strategies.py:236-265``)."""
     out = index_transforms.shot_index_floor(
-        _t(spark, sf_dir, "events"), ["user_id"], shot_col="event_id", num_guns=4
+        load_table(spark, sf_dir, "events"),
+        ["user_id"],
+        shot_col="event_id",
+        num_guns=4,
     )
     return out.select("event_id", "user_id", "shot_index")
 
@@ -351,7 +355,7 @@ def q_shot_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W4 ComponentSynthesis (``index_strategies.py:302-328``)."""
-    sup = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return index_transforms.synthesize_component(sup)
 
 
@@ -368,7 +372,7 @@ def q_dup_ordinal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W5 HasDuplicates (``index_strategies.py:116-165``): row_number
     replaces the reference's nested dict tree."""
     out = index_transforms.duplicate_ordinal(
-        _t(spark, sf_dir, "lineitem"),
+        load_table(spark, sf_dir, "lineitem"),
         dim_cols=["l_suppkey", "l_returnflag"],
         order_cols=["l_orderkey", "l_linenumber"],
     )
@@ -393,7 +397,7 @@ def q_nonbinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number assignment across ties is engine-dependent.
     """
     out = index_transforms.nonbinned_collapse(
-        _t(spark, sf_dir, "lineitem"),
+        load_table(spark, sf_dir, "lineitem"),
         kept_dims=["l_returnflag", "l_linestatus"],
         order_cols=["l_orderkey", "l_linenumber", "l_quantity"],
     )
@@ -419,7 +423,7 @@ def q_nonbinned(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_coord_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1 (``src/mdio/segy/scalar.py:20-59``): negative => divide,
     positive => multiply."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     scalar = F.when(F.col("c_custkey") % 2 == 0, F.lit(-100)).otherwise(F.lit(10))
     return cust.select(
         "c_custkey",
@@ -442,7 +446,7 @@ def q_label_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Distinct on the RAW column first (map-side-combinable over a tiny key
     domain), then derive both labels — measured 1.55s -> 0.61s at sf0.1
     vs deduping the two derived columns."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     label_us = F.floor(F.col("l_quantity") * 1000).cast("long")
     return (
         li.select("l_quantity")
@@ -470,9 +474,9 @@ def q_label_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_live_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P3 (``converters/mdio.py:103-130``): selection mask as a semi-join."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     mask = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .where(F.col("o_orderstatus") == "F")
         .select(F.col("o_orderkey").alias("l_orderkey"))
     )
@@ -493,7 +497,8 @@ def q_live_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_bbox(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P3 (``converters/mdio.py:115-126``): live-extent bounding box that
     drives partition pruning before export."""
-    sel = _t(spark, sf_dir, "orders").where(F.col("o_orderpriority") == "1-URGENT")
+    orders = load_table(spark, sf_dir, "orders")
+    sel = orders.where(F.col("o_orderpriority") == "1-URGENT")
     return grid.bounding_box(sel, ["o_custkey", "o_totalprice"])
 
 
@@ -514,7 +519,7 @@ def q_bbox(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ordered_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K3 (``segy/blocked_io.py:214-302``): global trace order; physically a
     repartitionByRange in the SEG-Y writer, logically this row_number."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber")
     return grid.ordered_export(li, ["l_orderkey", "l_linenumber"])
 
 
@@ -541,11 +546,13 @@ def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Star join: lineitem ⨝ orders ⨝ customer ⨝ nation ⨝ region. Dims are
     broadcast (nation/region/customer tiny vs lineitem); only the
     lineitem⨝orders join shuffles, on the natural key."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").where(F.col("r_name").isin("AMERICA", "ASIA"))
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region").where(
+        F.col("r_name").isin("AMERICA", "ASIA")
+    )
     disc_price = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -580,7 +587,7 @@ def q_top_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").desc(), F.col("o_orderkey")
     )
     return (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
         .select("o_custkey", "o_orderkey", "o_totalprice")
@@ -605,7 +612,7 @@ GROUP BY 1, 2
 def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-window agg (batch twin of streaming.events); hour emitted as
     a string to dodge ns-vs-us timestamp hashing."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(
             F.date_format(F.date_trunc("hour", F.col("ts")), "yyyy-MM-dd HH:mm:ss").alias(
@@ -637,8 +644,8 @@ def q_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anti-join: customers with no orders. The customer side streams; the
     orders keys build the hash side — with AQE this plans as a broadcast
     anti join when the distinct key set is small."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").select(
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("c_custkey")
     )
     return cust.join(orders, "c_custkey", "left_anti").select(
@@ -667,7 +674,7 @@ def q_customer_order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     d = F.col("o_orderdate").cast("date")
     return (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .select(
             "o_custkey",
             "o_orderkey",
@@ -712,7 +719,7 @@ def q_events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     gap logic on integer epoch seconds so both engines agree exactly."""
     from pyspark.sql import Window
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "value", F.col("ts").cast("long").alias("sec")
     )
     w = Window.partitionBy("user_id").orderBy("sec", "event_id")
@@ -756,7 +763,7 @@ def q_strided_slice_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's interactive query pattern (SURVEY §3.2,
     ``test_segy_roundtrip_teapot.py:264-283``: strided slice -> mean/std):
     a modulus predicate plus one agg — the stride prunes at the scan."""
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_orderkey") % 75 == 0)
+    li = load_table(spark, sf_dir, "lineitem").where(F.col("l_orderkey") % 75 == 0)
     return stats.summary_statistics(li, "l_extendedprice", nonzero_only=True)
 
 
@@ -775,7 +782,7 @@ def q_revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP grouping sets (SURVEY §2.5: absent from the reference, free in
     Spark): hierarchy totals in one pass — the Expand operator multiplies
     rows by grouping-set count before the single shuffle."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.rollup("o_orderpriority", "o_orderstatus")
         .agg(
@@ -826,7 +833,7 @@ def q_user_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     user-week); the join runs on the per-user table, not raw events.
     Weeks cross as integer epoch-day offsets — no raw timestamps in the
     output (driver-hash convention)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     wk = lambda c: F.to_date(F.date_trunc("week", c))  # noqa: E731
     first = ev.groupBy("user_id").agg(wk(F.min("ts")).alias("cweek"))
     act = ev.select("user_id", wk(F.col("ts")).alias("aweek")).distinct()
@@ -868,7 +875,7 @@ def q_event_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates, each consuming the PREVIOUS stage's per-user table (never
     events x events); stage tables are user-level so the joins AQE to
     broadcast at any corpus size; final combine is three 1-row frames."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.unix_micros("ts").alias("us")
     )
     v = (
@@ -933,7 +940,7 @@ def q_asof_view_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Microsecond longs in/out — no raw timestamps cross the driver hash."""
     from mdio_python_spark.operators.temporal import asof_join
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", F.unix_micros("ts").alias("us")
     )
     purchases = ev.where(F.col("event_type") == "purchase").drop("event_type")
@@ -985,7 +992,7 @@ def q_asof_view_attribution_bucketed(
     proves the salted plan is output-equivalent."""
     from mdio_python_spark.operators.temporal import asof_join
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", F.unix_micros("ts").alias("us")
     )
     purchases = ev.where(F.col("event_type") == "purchase").drop("event_type")
@@ -1035,7 +1042,7 @@ def q_error_click_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     form would force at scale)."""
     from mdio_python_spark.operators.temporal import bucketed_range_join
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", F.unix_micros("ts").alias("us")
     )
     errors = ev.where(F.col("event_type") == "error").drop("event_type")
@@ -1093,7 +1100,7 @@ def q_events_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-agg table, so it costs the same at 100 TB as at sf0.01."""
     from mdio_python_spark.operators.temporal import gap_fill_hours
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     hourly = ev.groupBy(
         F.date_trunc("hour", F.col("ts")).alias("hour_ts"), "event_type"
     ).agg(F.count(F.lit(1)).alias("n_events"))
@@ -1150,7 +1157,7 @@ def q_events_hourly_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the corpus-sized work is one combinable hourly groupBy;
     the per-type stats table is tiny (|event_type| rows) and broadcast
     back. No window over raw events, no second corpus shuffle."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     hourly = ev.groupBy(
         F.date_format(F.date_trunc("hour", F.col("ts")), "yyyy-MM-dd HH:mm:ss").alias(
             "hour"
@@ -1206,13 +1213,13 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; ties broken by l_orderkey for a total order. Revenue uses
     the exact-decimal sum (``functions.determinism``), which also makes
     the top-10 cut deterministic cross-engine."""
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, sf_dir, "lineitem").where(
         F.col("l_shipdate") > F.to_timestamp(F.lit("1997-01-01"))
     )
-    orders = _t(spark, sf_dir, "orders").where(
+    orders = load_table(spark, sf_dir, "orders").where(
         F.col("o_orderdate") < F.to_timestamp(F.lit("1997-01-01"))
     )
-    cust = _t(spark, sf_dir, "customer").where(
+    cust = load_table(spark, sf_dir, "customer").where(
         F.col("c_mktsegment") == "BUILDING"
     )
     disc_price = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
@@ -1278,7 +1285,7 @@ def q_top_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-20 is TakeOrderedAndProject over the tiny per-path counts."""
     from pyspark.sql import Window
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type",
         F.col("ts").cast("long").alias("sec"),
     )
@@ -1342,7 +1349,7 @@ def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row result is unpivoted driver-side via inline(array(struct...)),
     which touches only n_cols rows."""
     cols = ["doc_id", "text", "lang", "source", "n_chars"]
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     aggs = [F.count(F.lit(1)).alias("_n")]
     for c in cols:
         aggs.append(F.count(c).alias(f"_nn_{c}"))
@@ -1386,7 +1393,7 @@ def q_approx_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact branch here exists to expose the error empirically."""
     from mdio_python_spark.operators.stats import hll_distinct
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     est = hll_distinct(ev, ["event_type"], "user_id")
     exact = ev.groupBy("event_type").agg(
         F.count_distinct(F.col("user_id")).alias("n_exact")
@@ -1423,7 +1430,7 @@ def q_events_daily_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     window runs over the tiny daily table."""
     from pyspark.sql import Window
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type",
         F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")).alias(
@@ -1487,8 +1494,8 @@ def q_customer_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         ntile_from_ordinal,
     )
 
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     spend = (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
         .groupBy("c_custkey")
@@ -1583,13 +1590,12 @@ def q_asof_staleness_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the broadcast total — without the persist the full as-of DAG
     # (union + window + carry join over the corpus) executes twice
     # (round-5 advisor item)
-    from mdio_python_spark.operators.caching import attach_cached, rotate_scoped
+    from mdio_python_spark.operators.caching import own, persist
 
-    c = (
+    c = persist(
         j.select(bucket.alias("staleness_bucket"))
         .groupBy("staleness_bucket")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
-        .persist()
     )
     t = c.agg(F.sum("n_events").alias("_total"))
     out = c.crossJoin(F.broadcast(t)).select(
@@ -1599,5 +1605,4 @@ def q_asof_staleness_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             "share"
         ),
     )
-    rotate_scoped("q.asof_staleness_buckets", c)
-    return attach_cached(out, c)
+    return own(out, "q.asof_staleness_buckets", c)

@@ -84,3 +84,53 @@ def test_rotation_bounds_repeat_callers_to_one_generation(spark):
     release_cached(out)
     release_cached(merges)
     assert jvm_ids() == set()
+
+
+def test_persisting_queries_own_their_stages(spark):
+    """Every persisted stage of a declared query is at the one storage
+    level (``caching.persist``) and rides on the query's result,
+    including a size-gated stage passed on from an inner operator. A
+    second build without release still holds one generation per scope."""
+    from pyspark import StorageLevel
+
+    from mdio_python_spark.plans.registry import registry
+    from tests.conftest import SF_SMOKE
+
+    names = [
+        "asof_staleness_buckets",
+        "ivf_cell_balance",
+        "shard_balance_qc",
+        "rerank_recall_gain",
+        "token_budget_allocation",
+        "bigram_lm_score",
+        "bpe_tokenized_docs",
+    ]
+    spark.catalog.clearCache()
+
+    def jvm_ids() -> set[int]:
+        return {
+            int(k)
+            for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()
+        }
+
+    def build_all() -> dict:
+        outs = {}
+        for name in names:
+            out = registry()[name].fn(spark, SF_SMOKE)
+            out.write.format("noop").mode("overwrite").save()
+            outs[name] = out
+        return outs
+
+    for attempt in ("first", "second"):
+        outs = build_all()
+        for name, out in outs.items():
+            levels = [h.storageLevel for h in getattr(out, CACHE_ATTR, [])]
+            assert levels, f"{name}: no stage attached"
+            assert all(lv == StorageLevel.MEMORY_AND_DISK for lv in levels), (
+                f"{name} ({attempt} build): {levels}"
+            )
+        if attempt == "first":
+            held = jvm_ids()
+    assert len(jvm_ids()) <= len(held)
+    for out in outs.values():
+        release_cached(out, blocking=True)

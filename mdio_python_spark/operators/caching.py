@@ -24,22 +24,33 @@ completes:
     release_cached(out)
 
 A caller that never releases (a harness running a declared query in a
-loop) holds at most one generation per scope. A builder that wraps an
+loop) holds at most one generation per scope. An operator that wraps an
 inner result passes that result's handles on with
-:func:`attach_cached`; the inner builder already owns them.
+:func:`attach_cached`; the inner builder already owns them. A declared
+query needs no such step: ``plans.registry.register`` builds it under
+:func:`collect_stages` and attaches every handle recorded during the
+build to its result, so the stages of inner operators whose results the
+query transformed further are released with it.
 ``spark.catalog.clearCache()`` also drops every stage, at the cost of
 every other cached relation in the session.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+from contextvars import ContextVar
 from typing import TypeVar
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 CACHE_ATTR = "_mdio_cached_stages"
+# the lists of the collect_stages() blocks open in this thread (declared
+# queries may nest)
+_COLLECTING: ContextVar[tuple[list[DataFrame], ...]] = ContextVar(
+    "collecting", default=()
+)
 
 
 def persist(df: DataFrame) -> DataFrame:
@@ -69,7 +80,21 @@ def attach_cached(result: DataFrame, *cached: DataFrame) -> DataFrame:
     existing = list(getattr(result, CACHE_ATTR, []))
     new = [h for h in cached if all(h is not e for e in existing)]
     setattr(result, CACHE_ATTR, existing + new)
+    for stages in _COLLECTING.get():
+        stages.extend(new)
     return result
+
+
+@contextmanager
+def collect_stages() -> Iterator[list[DataFrame]]:
+    """Collect every handle :func:`attach_cached` records inside the
+    block, on whichever result, into the yielded list."""
+    stages: list[DataFrame] = []
+    token = _COLLECTING.set((*_COLLECTING.get(), stages))
+    try:
+        yield stages
+    finally:
+        _COLLECTING.reset(token)
 
 
 def release_cached(df: DataFrame, blocking: bool = False) -> None:

@@ -151,12 +151,16 @@ def _literal(spark: SparkSession, df: DataFrame) -> DataFrame:
 
     Later joins against it never re-trigger the source scan, and the rows
     live in JVM driver memory: counting or collecting it runs no Spark job.
-    Broadcast-joining it does not come free: a query that broadcasts such
-    literals runs one extra job of ``defaultParallelism`` tasks (one job
-    for one or for two broadcasts, measured). ``createDataFrame`` from a
-    Python row list would instead ``parallelize`` into a multi-partition
-    ``LogicalRDD``, which every use (count and collect included) scans
-    with jobs of its own."""
+    Broadcast-joining it does not come free: each distinct literal a query
+    broadcasts runs one job of ``defaultParallelism`` tasks, and the jobs
+    are submitted together (4 cores: the bench ingest's two dim tables,
+    256 and 64 rows, ran two 4-task jobs of 25-57 ms each, 5-15 ms apart,
+    and so did a 10 x 9 grid's). Literals with the same rows share one
+    broadcast through Spark's exchange reuse, whatever their column
+    names: a 10 x 10 grid's two dim tables ran one job.
+    ``createDataFrame`` from a Python row list would instead
+    ``parallelize`` into a multi-partition ``LogicalRDD``, which every use
+    (count and collect included) scans with jobs of its own."""
     return spark.createDataFrame(df.toArrow(), schema=df.schema)
 
 
@@ -166,7 +170,7 @@ def _dim_table(
     """A2 dim table (value, 0-based ``<dim>_idx``) from a dim's sorted
     distinct values, as an Arrow ``LocalRelation``: the rows of
     ``grid.dim_values`` built without a Spark job. A broadcast join against
-    it still costs a job (see :func:`_literal`).
+    it still costs a job per distinct table (see :func:`_literal`).
     The value column keeps the header column's type."""
     schema = StructType(
         [dim, StructField(f"{dim.name}_idx", LongType(), nullable=False)]

@@ -3398,7 +3398,6 @@ def q_bpe_tokenized_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     trained vocabulary's symbol counts (vocab-bounded build side); the
     rollup is combinable (operators/bpe.py)."""
     from mdio_python_spark.operators import bpe
-    from mdio_python_spark.operators.caching import CACHE_ATTR, attach_cached
     from mdio_python_spark.operators.text import tokens as _tokens
 
     docs = load_table(spark, sf_dir, "documents")
@@ -3409,7 +3408,7 @@ def q_bpe_tokenized_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(_tokens(F.lower(F.trim(F.col("text"))))).alias("word"),
     ).where(F.col("word") != "")
     counts = final.select("word", bpe.sym_count(F.col("sym")).alias("_k"))
-    out = (
+    return (
         occ.join(counts, "word")
         .groupBy("doc_id")
         .agg(
@@ -3417,7 +3416,6 @@ def q_bpe_tokenized_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("_k").alias("n_bpe_tokens"),
         )
     )
-    return attach_cached(out, *getattr(final, CACHE_ATTR, []))
 
 
 # ---------------------------------------------------------------------------
@@ -3775,7 +3773,6 @@ def q_training_order_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     + broadcast offsets) — never a per-shard window sort, so 16 shards
     does NOT mean 16-way parallelism at 100 TB."""
     from mdio_python_spark.operators import ranking
-    from mdio_python_spark.operators.caching import CACHE_ATTR, attach_cached
     from mdio_python_spark.operators.curation import split_hash
 
     docs = load_table(spark, sf_dir, "documents")
@@ -3793,12 +3790,9 @@ def q_training_order_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         rank_col="position",
         scope="training_order_manifest",
     )
-    out = ranked.select(
+    return ranked.select(
         "doc_id", "shard", F.col("position").cast("bigint").alias("position")
     )
-    # re-attach the ordinal stage's persisted handles (select() drops
-    # them) so release_cached(result) keeps working — the deciles pattern
-    return attach_cached(out, *getattr(ranked, CACHE_ATTR, []))
 
 
 from mdio_python_spark.operators.scoring import sql_token_weight as _sql_qw
@@ -4776,7 +4770,6 @@ def q_quality_dup_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast offsets + int NTILE formula); dup membership is a
     broadcast-able distinct-id left join (LSH-bounded, tiny vs corpus);
     final rollup is one combinable groupBy(decile)."""
-    from mdio_python_spark.operators.caching import CACHE_ATTR, attach_cached
     from mdio_python_spark.operators.ranking import (
         distributed_ordinal,
         ntile_from_ordinal,
@@ -4818,10 +4811,7 @@ def q_quality_dup_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("dup_rate"),
         )
     )
-    return attach_cached(
-        own(out, "llm.quality_dup_deciles.shingles", sets),
-        *getattr(ranked, CACHE_ATTR, []),
-    )
+    return own(out, "llm.quality_dup_deciles.shingles", sets)
 
 
 # ---------------------------------------------------------------------------

@@ -1488,7 +1488,6 @@ def q_customer_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     over n rows: with q = n div k, r = n mod k, the first r tiles take
     q+1 rows and the rest take q — pure int64 arithmetic, so the result
     is bit-identical to the window form (pinned by the NTILE oracle)."""
-    from mdio_python_spark.operators.caching import CACHE_ATTR, attach_cached
     from mdio_python_spark.operators.ranking import (
         distributed_ordinal,
         ntile_from_ordinal,
@@ -1511,12 +1510,11 @@ def q_customer_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         scope="queries.customer_value_deciles",
     )
     tiled = ntile_from_ordinal(ranked, 10, ordinal_col="_rn", out_col="decile")
-    out = tiled.groupBy("decile").agg(
+    return tiled.groupBy("decile").agg(
         F.count(F.lit(1)).alias("n_customers"),
         dsum("total_spend", 6).alias("decile_spend"),
         F.sum("n_orders").alias("decile_orders"),
     )
-    return attach_cached(out, *getattr(ranked, CACHE_ATTR, []))
 
 
 _STALENESS_CASE = """

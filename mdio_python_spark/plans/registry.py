@@ -10,10 +10,13 @@ Conventions (driver contract, see /root/repo/__spark_entry__.py):
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from mdio_python_spark.operators.caching import attach_cached, collect_stages
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -62,9 +65,19 @@ _REGISTRY: dict[str, QuerySpec] = {}
 def register(
     name: str, oracle: str | None, bench: bool = True, eager: bool = False
 ) -> Callable[[QueryFn], QueryFn]:
+    """Declare a query. The builder is wrapped so that every cached stage
+    recorded while it builds (its own and its inner operators') rides on
+    its result: ``caching.release_cached(result)`` frees them all."""
+
     def deco(fn: QueryFn) -> QueryFn:
-        _REGISTRY[name] = QuerySpec(name, fn, oracle, bench, eager)
-        return fn
+        @functools.wraps(fn)
+        def build(*args, **kwargs) -> DataFrame:
+            with collect_stages() as stages:
+                out = fn(*args, **kwargs)
+            return attach_cached(out, *stages) if stages else out
+
+        _REGISTRY[name] = QuerySpec(name, build, oracle, bench, eager)
+        return build
 
     return deco
 

@@ -3,6 +3,7 @@ handles to their result so callers can release them (ADVICE r3)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mdio_python_spark.operators import geometry, grid
@@ -134,3 +135,34 @@ def test_persisting_queries_own_their_stages(spark):
     assert len(jvm_ids()) <= len(held)
     for out in outs.values():
         release_cached(out, blocking=True)
+
+
+LEAKED_BEFORE_INNER_HANDOFF = [
+    "ann_method_shootout",
+    "ann_recall_at_k",
+    "cluster_best_representative",
+    "dedup_effective_tokens",
+    "incremental_dedup_kept",
+    "int8_quant_clip_sweep",
+    "leakage_safe_split",
+    "length_mad_outliers",
+    "pq_shortlist_rerank",
+    "rerank_recall_gain",
+    "similarity_graph_pagerank",
+    "tokenizer_fertility_by_lang",
+]
+
+
+@pytest.mark.parametrize("name", LEAKED_BEFORE_INNER_HANDOFF)
+def test_release_frees_inner_operator_stages(spark, name):
+    """Releasing a declared query's result frees every stage its run
+    persisted, those of the inner operators (a size-gated base, a
+    shingle stage, an ordinal stage) included."""
+    from mdio_python_spark.plans.registry import registry
+    from tests.conftest import SF_SMOKE
+
+    spark.catalog.clearCache()
+    out = registry()[name].fn(spark, SF_SMOKE)
+    out.write.format("noop").mode("overwrite").save()
+    release_cached(out, blocking=True)
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()

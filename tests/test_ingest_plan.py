@@ -156,12 +156,16 @@ def test_trace_pass_single_hash_exchange(tmp_path, spark, poststack_file, monkey
 def test_ingest_job_count(tmp_path, spark, poststack_file):
     """The 10 x 10 ingest launches at most 3 Spark jobs: ONE header job
     (the toArrow of the dim keys, under the trace-count gate; grid QC,
-    the dim tables and the write plan are driver numpy), the one job of
-    ``defaultParallelism`` tasks that the pass-2 broadcast joins against
-    the Arrow dim-table literals add, and the trace write. It launched 20 when QC, duplicates and each dim
-    table were separate jobs over parallelized literals, 9 while each dim
-    table was a Spark write, and 7 while the header cache, the QC/dim
-    aggregate and the write-plan aggregate were Spark jobs."""
+    the dim tables and the write plan are driver numpy), one broadcast
+    job of ``defaultParallelism`` tasks for the pass-2 joins against the
+    Arrow dim-table literals, and the trace write. The broadcast is one
+    job here only because both dim tables hold the rows (1..10, 0..9)
+    and Spark reuses the exchange; grids whose dims differ (10 x 9, the
+    bench cube) run one broadcast job per dim. It launched 20 when QC,
+    duplicates and each dim table were separate jobs over parallelized
+    literals, 9 while each dim table was a Spark write, and 7 while the
+    header cache, the QC/dim aggregate and the write-plan aggregate were
+    Spark jobs."""
     path, _ = poststack_file
     before = next_job_id(spark)
     ing.segy_to_store(

@@ -14,7 +14,11 @@ expose via ``stage_clock``: header scan / strategies / grid QC / dim
 tables / pivot write on ingest, encode / concat (+ concat mode) on
 export. Each leg also records its store's bytes and parquet file count
 (``store_bytes``, ``store_parquet_files``), so the trace encoding's
-footprint shows at scale.
+footprint shows at scale, and a slice leg (``slices``): one inline, one
+crossline and one 50 x 16 ``dense_slice`` rectangle read of the new
+store, each with its latency (build + collect), row count and the path
+that served it (``LocalRelation``: read on the driver under
+``store.SLICE_DRIVER_MAX_BYTES``; ``FileScan``: a Spark scan).
 
 The e2e correctness of this path is pinned by tests/test_segy_roundtrip.py
 (byte-identical roundtrip at small size); this harness re-asserts the
@@ -216,6 +220,42 @@ def _store_size(store_path: str) -> tuple[int, int]:
     return size, files
 
 
+def _slice_leg(spark, store_path: str, n_inline: int) -> dict:
+    """Read the store three ways, the reads of the repository benchmark:
+    the middle inline, the middle crossline and a 50 x 16 rectangle."""
+    from mdio_python_spark.sources import store
+
+    opened = store.open_store(spark, store_path)
+    il, xl = n_inline // 2 + 1, BASE_XL // 2 + 1
+    reads = {
+        "inline": {"inline": (il, il)},
+        "crossline": {"crossline": (xl, xl)},
+        "rect": {
+            "inline": (il, min(il + 49, n_inline)),
+            "crossline": (xl - 8, xl + 7),
+        },
+    }
+    out = {}
+    for kind, pred in reads.items():
+        t0 = time.perf_counter()
+        if kind == "rect":
+            df = store.dense_slice(opened, spark, pred)
+        else:
+            df = store.slice_traces(opened, pred)
+        rows = len(df.collect())
+        latency = time.perf_counter() - t0
+        out[kind] = {"latency_s": round(latency, 3), "rows": rows, "path": _path(df)}
+    return out
+
+
+def _path(df) -> str:
+    """Which path served a slice, from its plan."""
+    qe = df._jdf.queryExecution()
+    if qe.analyzed().toString().startswith("LocalRelation"):
+        return "LocalRelation"
+    return "FileScan" if "FileScan" in qe.executedPlan().toString() else "other"
+
+
 def _run_leg(
     spark, segy_path: str, work: Path, tag: str, hash_verify: bool = False
 ) -> dict:
@@ -258,6 +298,7 @@ def _run_leg(
     else:
         roundtrip_ok = filecmp.cmp(segy_path, out_path, shallow=False)
     verify_s = time.perf_counter() - t0
+    slices = _slice_leg(spark, store_path, n // BASE_XL)
     shutil.rmtree(store_path, ignore_errors=True)
     Path(out_path).unlink(missing_ok=True)
     out = {
@@ -270,6 +311,7 @@ def _run_leg(
         "export_stages": export_stages,
         "roundtrip_byte_identical": roundtrip_ok,
         "roundtrip_verify_s": round(verify_s, 3),
+        "slices": slices,
     }
     if hash_verify:
         out["roundtrip_verify_method"] = "sha256_input_deleted_before_export"

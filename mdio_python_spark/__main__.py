@@ -141,7 +141,7 @@ def main(argv: list[str] | None = None) -> int:
         import os
         import shutil
 
-        from mdio_python_spark.sources.store import open_store, write_dim_table
+        from mdio_python_spark.sources.store import open_store
 
         if os.path.exists(args.dest):
             if not args.overwrite:
@@ -176,8 +176,7 @@ def main(argv: list[str] | None = None) -> int:
         if chunk_cols:
             writer = writer.partitionBy(*chunk_cols)
         writer.parquet(f"{args.dest}/traces")
-        for d in st.dims:
-            write_dim_table(st.dims[d], f"{args.dest}/dims/{d}")
+        shutil.copytree(f"{args.src}/dims", f"{args.dest}/dims")
         with open(f"{args.src}/manifest.json") as f:
             manifest = json.load(f)
         if args.with_traces:

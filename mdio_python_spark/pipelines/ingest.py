@@ -6,24 +6,35 @@ passes mirroring the reference's two passes:
    (A3/A4) + index strategies (W1-W7) as broadcast-pure transforms. The
    trace count, exact from the file sizes before any job, gates the rest:
    - at or under ``HEADER_DRIVER_MAX_TRACES`` it is ONE job: a
-     ``toArrow`` of the strategy-applied dim keys, then driver numpy
+     ``toArrow`` of every header column pass 2 stores, then driver numpy
      (the reference's own shape: ``np.unique`` per index field) for grid
-     QC (A6/A7), the dim sizes, the dim tables (A2, Arrow literals) and
-     the write plan (max chunk keys per scan block);
+     QC (A6/A7), the dim sizes and the dim tables (A2);
    - above it the scan is cached and ONE aggregate (each spatial dim's
      sorted distinct values) yields the dim sizes and the dim tables;
      sparsity is checked against the file-size trace count, one
      duplicate-tuple query names the smallest offender if there is one,
      then the write-plan job.
    Strategy detection aggregates run in Spark on either side, over the
-   cached scan.
-2. trace pass — over the cached header table only: strategies re-applied
-   per-row from the broadcast plan, cell indices via broadcast joins
-   against the literal dim tables, the chunk keys, and (shuffle mode only)
-   the chunk-key repartition of the header rows. ONE ``mapInArrow`` store
-   writer (``store.write_data``) then reads each row's samples and raw
-   header from the SEG-Y files and writes the chunk files with pyarrow;
-   statsV1 folds its per-trace partials via ``observe()`` in the same job.
+   cached scan (cached in driver mode only when they run, and released
+   right after the ``toArrow``).
+2. trace pass — ONE ``mapInArrow`` store writer (``store.write_data``)
+   over header rows sorted by (chunk keys, ``src_trace_idx``) reads each
+   row's samples and raw header from the SEG-Y files and writes the chunk
+   files with pyarrow; statsV1 folds its per-trace partials via
+   ``observe()`` in the same job. Where the rows come from follows the
+   header gate:
+   - driver mode plans them on the driver, the way the reference ships
+     its grid map to the trace workers (``segy/blocked_io.py:101-116``):
+     the cell indices are the grid-QC ``np.unique`` inverses, the chunk
+     keys their floor division, one ``np.lexsort`` orders the rows, and
+     the sorted Arrow table becomes the writer's input
+     (``MapInArrow`` over ``LocalTableScan``): no header cache, no join,
+     no exchange, no sort;
+   - distributed mode runs over the cached header table: strategies
+     re-applied per-row from the broadcast plan, cell indices via
+     broadcast joins against the literal dim tables, the chunk keys,
+     (shuffle mode only) the chunk-key repartition of the header rows,
+     and a sort within partitions.
 
 Scale design: the sample payload never enters the JVM. Round 1 joined the
 full payload to the header-pass assignment on ``src_trace_idx`` (a
@@ -97,30 +108,40 @@ SPARSITY_ERROR = 10.0
 # trace scan broadcast-joins.
 SHOT_DENSE_LITERAL_MAX = 1_000_000
 
-# Pivot-write mode gate: when no scan block's rows span more than this
-# many distinct chunk keys (measured on the cached header pass), the
-# trace write skips the chunk-key exchange and each scan partition writes
-# its own chunk files (see store.write_data). 4 keeps worst-case files
-# per chunk directory at a handful while admitting the block/chunk
-# boundary phase shifts of any genuinely grid-ordered file.
+# Pivot-write mode gate of the distributed pass 2 (above the header gate;
+# the driver-sorted pass 2 needs no exchange whatever the file order):
+# when no scan block's rows span more than this many distinct chunk keys
+# (measured on the cached header pass), the trace write skips the
+# chunk-key exchange and each scan partition writes its own chunk files
+# (see store.write_data). 4 keeps worst-case files per chunk directory at
+# a handful while admitting the block/chunk boundary phase shifts of any
+# genuinely grid-ordered file.
 DIRECT_WRITE_MAX_KEYS_PER_BLOCK = 4
 
 # Header-pass gate on the exact trace count (file sizes, no job): at or
-# under it the header keys are collected with ONE toArrow and grid QC, the
-# dim tables and the write plan run in driver numpy. It is a driver-memory
-# gate, not a speed gate. Header pass to the write plan, driver numpy vs
-# the Spark aggregates (4 cores, 4 GB heap at 1M, 6 GB above, int32 dims):
-#   1M traces, 2 dims:  7.8 vs 14.1 s; driver Python +86 MB
-#   1M traces, 4 dims:  7.7 vs 14.8 s; +132 MB
-#   4M traces, 4 dims: 16.8 vs 32.4 s; +529 MB
-#   10M traces, 2 dims: 20.6 vs 174 s; +866 MB (JVM peak 0.8 vs 4.4 GB)
-# The numpy pass is faster at every size measured, but it holds about
-# 40 + 23 x (spatial dims) bytes per trace on the driver (at 2M traces:
-# 193 MB for 2 dims, 335 MB for 6), while the aggregates hold only the
-# distinct dim values there. 2M keeps a 6-dim pass under 384 MiB, the
-# default floor of spark.driver.memoryOverhead, the non-JVM memory the
-# Python driver gets in cluster mode.
-HEADER_DRIVER_MAX_TRACES = 2_000_000
+# under it the stored header columns are collected with ONE toArrow, and
+# grid QC, the dim tables and the sorted trace-pass rows are driver numpy
+# (see segy_to_store). It is a driver-memory gate, not a speed gate.
+# Header pass to the write plan, driver numpy vs the Spark aggregates,
+# measured while the driver collected only the dim keys (4 cores, 4 GB
+# heap at 1M, 6 GB above, int32 dims):
+#   1M traces, 2 dims:  7.8 vs 14.1 s
+#   1M traces, 4 dims:  7.7 vs 14.8 s
+#   4M traces, 4 dims: 16.8 vs 32.4 s
+#   10M traces, 2 dims: 20.6 vs 174 s (JVM peak 0.8 vs 4.4 GB)
+# The driver now holds every stored header column (8 bytes each, as
+# segy.trace_schema types them), the dim indices and, while the rows are
+# sorted, a sorted copy. Growth of the driver Python RSS over the toArrow,
+# grid QC, sort and createDataFrame (4 cores; long dims, 2 coordinates at
+# 2 dims and 4 at 6, plus src_trace_idx and coordinate_scalar):
+#   1M traces, 2 dims (6 columns):  165 MB; 2M: 328 MB
+#   1M traces, 6 dims (12 columns): 313 MB; 2M: 621 MB
+# 1M keeps a 6-dim pass under 384 MiB, the default floor of
+# spark.driver.memoryOverhead, the non-JVM memory the Python driver gets
+# in cluster mode; 2M no longer does. The sorted rows also pass through
+# the driver JVM heap (192 bytes per trace at 6 dims) on their way to the
+# writer tasks.
+HEADER_DRIVER_MAX_TRACES = 1_000_000
 
 
 @dataclass
@@ -157,31 +178,13 @@ def _literal(spark: SparkSession, df: DataFrame) -> DataFrame:
     256 and 64 rows, ran two 4-task jobs of 25-57 ms each, 5-15 ms apart,
     and so did a 10 x 9 grid's). Literals with the same rows share one
     broadcast through Spark's exchange reuse, whatever their column
-    names: a 10 x 10 grid's two dim tables ran one job.
-    ``createDataFrame`` from a Python row list would instead
-    ``parallelize`` into a multi-partition ``LogicalRDD``, which every use
-    (count and collect included) scans with jobs of its own."""
+    names: a 10 x 10 grid's two dim tables ran one job. Ingest pays such
+    jobs only for the strategy literals and, above the header gate, for
+    the distributed pass 2's dim-table joins; the driver-planned pass 2
+    joins nothing. ``createDataFrame`` from a Python row list would
+    instead ``parallelize`` into a multi-partition ``LogicalRDD``, which
+    every use (count and collect included) scans with jobs of its own."""
     return spark.createDataFrame(df.toArrow(), schema=df.schema)
-
-
-def _dim_table(
-    spark: SparkSession, dim: StructField, values: list | np.ndarray
-) -> DataFrame:
-    """A2 dim table (value, 0-based ``<dim>_idx``) from a dim's sorted
-    distinct values, as an Arrow ``LocalRelation``: the rows of
-    ``grid.dim_values`` built without a Spark job. A broadcast join against
-    it still costs a job per distinct table (see :func:`_literal`).
-    The value column keeps the header column's type."""
-    schema = StructType(
-        [dim, StructField(f"{dim.name}_idx", LongType(), nullable=False)]
-    )
-    table = pa.table(
-        {
-            dim.name: pa.array(values),
-            f"{dim.name}_idx": pa.array(range(len(values)), pa.int64()),
-        }
-    )
-    return spark.createDataFrame(table, schema=schema)
 
 
 def _check_sparsity(grid_cells: int, num_traces: int) -> None:
@@ -267,7 +270,7 @@ def _max_keys_per_block_spark(
 
 def _grid_qc_arrow(
     keys: pa.Table, spatial: list[str]
-) -> tuple[dict[str, np.ndarray], list[np.ndarray]]:
+) -> tuple[dict[str, np.ndarray], dict[str, np.ndarray]]:
     """Grid QC (A6/A7) over the collected header keys in numpy: each dim's
     sorted distinct values (the distributed path's
     ``array_sort(collect_set)``, as in the reference's per-field
@@ -277,13 +280,15 @@ def _grid_qc_arrow(
     index is at most SPARSITY_ERROR x the trace count and fits int64. A
     duplicate is named as the smallest duplicated tuple in dim order."""
     values: dict[str, np.ndarray] = {}
-    idx: list[np.ndarray] = []
+    idx: dict[str, np.ndarray] = {}
     for d in spatial:
         values[d], inv = np.unique(keys.column(d).to_numpy(), return_inverse=True)
-        idx.append(inv.reshape(-1))
+        idx[d] = inv.reshape(-1)
     shape = tuple(len(values[d]) for d in spatial)
     _check_sparsity(math.prod(shape), keys.num_rows)
-    cells, counts = np.unique(np.ravel_multi_index(idx, shape), return_counts=True)
+    cells, counts = np.unique(
+        np.ravel_multi_index(list(idx.values()), shape), return_counts=True
+    )
     if len(cells) != keys.num_rows:
         i = int(np.argmax(counts > 1))
         cell = np.unravel_index(cells[i], shape)
@@ -296,30 +301,39 @@ def _grid_qc_arrow(
     return values, idx
 
 
-def _max_keys_per_block_arrow(
-    keys: pa.Table,
-    dim_idx: list[np.ndarray],
-    chunks: list[int],
-    block_size: int,
-    trace_offsets: list[int] | None,
-) -> int:
-    """The write-plan statistic in numpy: the most distinct chunk keys any
-    scan block's traces fall in. Blocks are per file, by the formula of
-    :func:`_max_keys_per_block_spark`."""
-    if keys.num_rows == 0:
-        return 0
-    chunk_idx = [i // c for i, c in zip(dim_idx, chunks)]
-    chunk_shape = tuple(int(c.max()) + 1 for c in chunk_idx)
-    n_keys = math.prod(chunk_shape)
-    src = keys.column("src_trace_idx").to_numpy()
-    if trace_offsets is not None:
-        file_no = keys.column("source_file").to_numpy().astype(np.int64)
-        local = (src - np.asarray(trace_offsets)[file_no]) // block_size
-        block = file_no * (int(local.max()) + 1) + local
-    else:
-        block = src // block_size
-    cell = np.unique(block * n_keys + np.ravel_multi_index(chunk_idx, chunk_shape))
-    return int(np.unique(cell // n_keys, return_counts=True)[1].max())
+def _pass2_frame(
+    spark: SparkSession,
+    headers: pa.Table,
+    header_schema: StructType,
+    dim_idx: dict[str, np.ndarray],
+    chunks: dict[str, int],
+) -> DataFrame:
+    """The driver-planned trace-pass frame from the sorted header columns
+    and the row-aligned ``<dim>_idx`` arrays, plus the chunk keys
+    ``idx // chunk``. Its columns, types and nullability are those the
+    distributed pass 2 yields (each broadcast join ``on=<dim>`` moves that
+    dim to the front and appends its non-null ``<dim>_idx``, then come the
+    ``<dim>_chunk`` keys), so both header modes store the same chunk-file
+    schema. Columns are shared, not copied; Spark stops reading an Arrow
+    stream at an empty record batch, so the chunks are combined."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    fields = list(header_schema)
+    for d in dim_idx:
+        fields.remove(header_schema[d])
+        fields.insert(0, header_schema[d])
+    schema = StructType(
+        fields
+        + [StructField(f"{d}_idx", LongType(), nullable=False) for d in dim_idx]
+        + [StructField(f"{d}_chunk", LongType()) for d in dim_idx]
+    )
+    cols = {name: headers.column(name) for name in headers.column_names}
+    for d, idx in dim_idx.items():
+        cols[f"{d}_idx"] = idx
+        cols[f"{d}_chunk"] = idx // chunks[d]
+    arrow = to_arrow_schema(schema)
+    table = pa.table([cols[f.name] for f in arrow], schema=arrow).combine_chunks()
+    return spark.createDataFrame(table, schema=schema)
 
 
 def _build_strategy_plan(
@@ -563,40 +577,42 @@ def segy_to_store(
     def scan() -> DataFrame:
         per_file = []
         for i, (fi, off) in enumerate(zip(infos, trace_offsets)):
-            part = segy.read_traces(
-                spark,
-                fi,
-                fields=fields,
-                include_samples=False,
-                block_size=block_size,
-                spec=header_spec,
-            ).withColumn(
-                "src_trace_idx", F.col("src_trace_idx") + F.lit(off)
-            )
+            # one projection per file: the global trace ordinal, the
+            # provenance column and F1, the coordinate scalar (negative =>
+            # divide) on the physical coords
+            cols = {"src_trace_idx": F.col("src_trace_idx") + F.lit(off)}
             if multi:
-                part = part.withColumn("source_file", F.lit(i))
-            per_file.append(part)
+                cols["source_file"] = F.lit(i)
+            for c in scaled_coords:
+                cols[c] = apply_coordinate_scalar(F.col(c), F.col("coordinate_scalar"))
+            per_file.append(
+                segy.read_traces(
+                    spark,
+                    fi,
+                    fields=fields,
+                    include_samples=False,
+                    block_size=block_size,
+                    spec=header_spec,
+                ).withColumns(cols)
+            )
         df = per_file[0]
         for part in per_file[1:]:
             df = df.unionAll(part)
-        # F1: coordinate scalar (negative => divide) on physical coords
-        for c in scaled_coords:
-            df = df.withColumn(
-                c, apply_coordinate_scalar(F.col(c), F.col("coordinate_scalar"))
-            )
         return df
 
     # SEG-Y interleaves headers with samples, so every header-pass job is a
     # full-file read. The trace count is exact from the file sizes, so the
     # gate needs no job: at or under HEADER_DRIVER_MAX_TRACES ONE toArrow
-    # of the dim columns feeds driver numpy for grid QC, the dim tables and
-    # the write plan; above it those are Spark aggregates over the cached
-    # headers. The decoded header table (~2% of payload) is cached in both
-    # modes: pass 2 runs over it, and the store writer reads the samples.
+    # of the stored header columns feeds driver numpy for grid QC, the dim
+    # tables and the sorted pass-2 rows; above it those are Spark
+    # aggregates and joins over the cached headers. The decoded header
+    # table (~2% of payload) is cached only where it is read more than
+    # once: by the strategy detection aggregates, or by the distributed
+    # passes.
     num_traces = sum(fi.num_traces for fi in infos)
     driver_grid = num_traces <= HEADER_DRIVER_MAX_TRACES
     reread = not driver_grid or bool(strategy_fields)
-    headers_raw = scan().persist()
+    headers_raw = scan().persist() if reread else scan()
     if stage_clock is not None:
         stage_clock["header_mode"] = "driver" if driver_grid else "distributed"
     try:
@@ -610,30 +626,27 @@ def segy_to_store(
         plan = _build_strategy_plan(spark, headers_raw, schema, overrides)
         headers = _apply_plan(headers_raw, plan)
         spatial = schema.spatial_dims
-        header_cols = headers.columns
+        header_schema = headers.schema
         t0 = _mark("strategies_s", t0)
 
         if driver_grid:
-            keys = headers.select(
-                *spatial, "src_trace_idx", *(["source_file"] if multi else [])
-            ).toArrow()
-            if not reread:
+            collected = headers.toArrow()
+            if reread:
+                headers_raw.unpersist()
+            else:
                 t0 = _mark("header_scan_s", t0)  # the toArrow is the scan
-            dim_values, dim_idx = _grid_qc_arrow(keys, spatial)
+            dim_values, dim_idx = _grid_qc_arrow(collected, spatial)
         else:
             dim_values = _grid_qc_spark(headers, spatial, num_traces)
         dim_sizes = {d: len(dim_values[d]) for d in spatial}
         t0 = _mark("grid_qc_s", t0)
 
-        # A2: dim tables built on the driver from the sorted values — pass
-        # 2 joins broadcast against these, and the store write re-uses them.
-        dim_tables = {
-            d: _dim_table(spark, headers.schema[d], dim_values[d]) for d in spatial
-        }
-        t0 = _mark("dim_tables_s", t0)
+        # A2: dim tables built on the driver from the sorted values, in
+        # Arrow; the store write stores them as dims/<dim>
+        dims = {d: store.dim_table(header_schema[d], dim_values[d]) for d in spatial}
 
-        # C2 first (needed by the write-mode decision): template chunks
-        # clamped to budget/partition guards (``core/utils_write.py:16-44``)
+        # C2: template chunks clamped to budget/partition guards
+        # (``core/utils_write.py:16-44``)
         template_chunks = {
             d.name: d.chunk
             for d in schema.dimensions
@@ -644,58 +657,70 @@ def segy_to_store(
             {d: template_chunks[d] for d in spatial},
             info.samples_per_trace,
         )
+        chunk_cols = [f"{d}_chunk" for d in spatial]
 
-        # Pivot-write mode decision (VERDICT r7 item 2): measure how many
-        # distinct chunk keys each scan block touches. A grid-ordered file
-        # (the poststack acquisition norm) gives O(1) keys per block, so
-        # each scan task writes its rows straight into the chunk layout. A
-        # shot-scrambled file keeps the chunk-key repartition (file-count
-        # explosion otherwise).
-        chunk_list = [chunks[d] for d in spatial]
-        file_offsets = trace_offsets if multi else None
         if driver_grid:
-            per_block_keys = _max_keys_per_block_arrow(
-                keys, dim_idx, chunk_list, block_size, file_offsets
+            # pass 2 planned on the driver: the rows sorted by (chunk keys,
+            # src_trace_idx) in numpy become an Arrow frame, a
+            # LocalRelation (contiguous defaultParallelism slices) under
+            # spark.sql.execution.arrow.localRelationThreshold and a
+            # LogicalRDD of arrowMaxRecordsPerBatch-row batches above it,
+            # in order either way: each chunk directory gets at most one
+            # file more than the writer-task boundaries inside it, with no
+            # exchange whatever the file order. One np.lexsort orders the
+            # rows by (chunk keys in dim order, src_trace_idx); rebinding
+            # the sorted take frees the unsorted table before the sorted
+            # one ships.
+            order = np.lexsort(
+                [collected.column("src_trace_idx").to_numpy()]
+                + [dim_idx[d] // chunks[d] for d in reversed(spatial)]
             )
-            # free the per-trace arrays before the trace pass
-            del keys, dim_idx
+            collected = collected.take(order)
+            for d in spatial:
+                dim_idx[d] = dim_idx[d][order]
+            del order
+            traces = _pass2_frame(spark, collected, header_schema, dim_idx, chunks)
+            del collected, dim_idx
+            if stage_clock is not None:
+                stage_clock["write_mode"] = "driver"
         else:
+            dim_tables = {d: spark.createDataFrame(t) for d, t in dims.items()}
+            t0 = _mark("dim_tables_s", t0)
+            # Write mode (VERDICT r7 item 2): a grid-ordered file (the
+            # poststack acquisition norm) gives O(1) chunk keys per scan
+            # block, so each scan task writes its rows straight into the
+            # chunk layout; a shot-scrambled file keeps the chunk-key
+            # repartition (file-count explosion otherwise).
+            chunk_list = [chunks[d] for d in spatial]
             per_block_keys = _max_keys_per_block_spark(
-                headers, dim_tables, chunk_list, block_size, file_offsets
+                headers, dim_tables, chunk_list, block_size,
+                trace_offsets if multi else None,
             )
-        direct_write = per_block_keys <= DIRECT_WRITE_MAX_KEYS_PER_BLOCK
-        if stage_clock is not None:
-            stage_clock["write_mode"] = (
-                "direct" if direct_write else "shuffle"
-            )
-            stage_clock["max_chunk_keys_per_block"] = int(per_block_keys)
+            direct_write = per_block_keys <= DIRECT_WRITE_MAX_KEYS_PER_BLOCK
+            if stage_clock is not None:
+                stage_clock["write_mode"] = "direct" if direct_write else "shuffle"
+                stage_clock["max_chunk_keys_per_block"] = int(per_block_keys)
+            # pass 2 over the cached header rows: J1 cell assignment by
+            # broadcast joins against the literal dim tables, the chunk
+            # keys, then (in shuffle mode) the chunk-key repartition, which
+            # moves header rows only. Sorting each partition by (chunk
+            # keys, src_trace_idx) hands the store writer each chunk's
+            # traces as contiguous file runs, whatever the overrides or
+            # the write mode.
+            traces = headers
+            for d in spatial:
+                traces = traces.join(F.broadcast(dim_tables[d]), on=d, how="inner")
+            traces = grid.chunk_keys(traces, spatial, chunk_list)
+            if not direct_write:
+                # an explicit partition count: AQE would coalesce a
+                # by-column repartition of these small header rows into
+                # one writer task
+                n_keys = math.prod(-(-dim_sizes[d] // chunks[d]) for d in spatial)
+                shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+                traces = traces.repartition(min(n_keys, shuffle_parts), *chunk_cols)
+            traces = traces.sortWithinPartitions(*chunk_cols, "src_trace_idx")
         t0 = _mark("write_plan_s", t0)
 
-        # pass 2 runs over the cached header rows only: the strategies
-        # replayed from the broadcast plan, J1 cell assignment by broadcast
-        # joins against the literal dim tables, the chunk keys, then (in
-        # shuffle mode) the chunk-key repartition, which moves header rows
-        # only. Sorting each partition by (chunk keys, src_trace_idx) hands
-        # the store writer each chunk's traces as contiguous file runs,
-        # whatever the overrides or the write mode. The writer tasks read
-        # the samples and raw headers from the SEG-Y files themselves and
-        # return per-trace statsV1 partials, folded below by observe() in
-        # the write job — the Spark analog of the reference accumulating
-        # stats in its trace workers (``segy/_workers.py:179-194``).
-        # scale=7: seismic amplitudes are O(1), so 1e-7 quantization keeps
-        # exact-decimal determinism while matching float64 stats to ~1e-8.
-        traces = headers
-        for d in spatial:
-            traces = traces.join(F.broadcast(dim_tables[d]), on=d, how="inner")
-        traces = grid.chunk_keys(traces, spatial, chunk_list)
-        chunk_cols = [f"{d}_chunk" for d in spatial]
-        if not direct_write:
-            # an explicit partition count: AQE would coalesce a by-column
-            # repartition of these small header rows into one writer task
-            n_keys = math.prod(-(-dim_sizes[d] // chunks[d]) for d in spatial)
-            shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            traces = traces.repartition(min(n_keys, shuffle_parts), *chunk_cols)
-        traces = traces.sortWithinPartitions(*chunk_cols, "src_trace_idx")
         # stored columns: the header columns, with the payload where the
         # scan decodes it (after the decoded fields, segy.trace_schema)
         stored = [c for c in traces.columns if c not in chunk_cols]
@@ -703,10 +728,16 @@ def segy_to_store(
         at = max(i for i, c in enumerate(stored) if c in scanned) + 1
         stored[at:at] = list(store.PAYLOAD_COLUMNS)
 
-        t0 = _time.perf_counter()
+        # the writer tasks read the samples and raw headers from the SEG-Y
+        # files themselves and return per-trace statsV1 partials, folded
+        # by observe() in the write job — the Spark analog of the
+        # reference accumulating stats in its trace workers
+        # (``segy/_workers.py:179-194``). scale=7: seismic amplitudes are
+        # O(1), so 1e-7 quantization keeps exact-decimal determinism while
+        # matching float64 stats to ~1e-8.
         srow = store.write_data(
             traces,
-            dim_tables,
+            dims,
             store_path,
             chunks,
             stored,
@@ -749,7 +780,7 @@ def segy_to_store(
                 unit=UnitInfo(unit=spatial_unit),
             )
             for c in schema.coordinates
-            if c.name in header_cols
+            if c.name in header_schema.fieldNames()
         ],
         variables=[
             Variable(

@@ -37,7 +37,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 from dataclasses import dataclass
 from typing import TYPE_CHECKING
 
@@ -47,7 +47,7 @@ import pyarrow.parquet as pq
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
 from mdio_python_spark.sources import segy, tables, trace_arrow
 
@@ -238,15 +238,16 @@ def trace_writer(
 
 def write_data(
     traces: DataFrame,
-    dim_tables: dict[str, DataFrame],
+    dims: dict[str, pa.Table],
     path: str,
     chunks: dict[str, int],
     columns: list[str],
     sources: list[segy.SegyFileInfo],
     metrics: list[Column],
 ) -> dict:
-    """K1/K2 write leg: the trace table and the dim tables of a store; the
-    manifest is the caller's last step (:func:`write_manifest`).
+    """K1/K2 write leg: the trace table and the dim tables (:func:`dim_table`,
+    one per spatial dim) of a store; the manifest is the caller's last step
+    (:func:`write_manifest`).
 
     ``traces`` holds header rows only — ``src_trace_idx`` (global over
     ``sources``, in argument order), the ``<dim>_chunk`` keys and the
@@ -255,10 +256,18 @@ def write_data(
     their own rows from ``sources`` and write the chunk files with pyarrow
     (zstd level :data:`ZSTD_LEVEL`, no dictionary on the payload columns):
     one ``part-<partition>-<key>.parquet`` per chunk key a partition
-    holds. A grid-ordered file kept in scan partitions therefore gives
-    ~1 + (scan blocks overlapping the chunk) files per chunk directory, a
-    chunk-key repartition exactly one. Absent rows write no file
-    (``write_empty_chunks=False``).
+    holds. Ingest hands it one of three shapes:
+
+    - under its header gate, rows sorted on the driver as an Arrow frame
+      (a ``LocalRelation`` cut into contiguous slices, or past Spark's
+      Arrow local-relation threshold a ``LogicalRDD`` of Arrow batches):
+      each chunk directory gets 1 + (task boundaries inside the chunk)
+      files at most, whatever the file order;
+    - above it, a grid-ordered file kept in scan partitions: ~1 + (scan
+      blocks overlapping the chunk) files per chunk directory;
+    - above it, a chunk-key repartition: exactly one file per chunk.
+
+    Absent rows write no file (``write_empty_chunks=False``).
 
     ``metrics`` are aggregates over the per-trace :data:`STATS_SCHEMA`
     partials, folded by ``observe`` during the one write job and returned.
@@ -283,25 +292,36 @@ def write_data(
         .mode("overwrite")
         .save()
     )
-    for dim, table in dim_tables.items():
+    for dim, table in dims.items():
         write_dim_table(table, os.path.join(path, "dims", dim))
     return obs.get
 
 
-def write_dim_table(table: DataFrame, out_dir: str) -> None:
-    """Write one tiny dim table as ``<out_dir>/part-00000.parquet`` with
-    pyarrow, replacing ``out_dir``. The dim tables ingest builds and
-    ``open_store`` serves are Arrow ``LocalRelation``s, whose ``collect``
-    runs no Spark job; column types and nullability are the table's."""
+def dim_table(field: StructField, values: Sequence | np.ndarray) -> pa.Table:
+    """A2 dim table ``dims/<dim>``, built on the driver from a dim's sorted
+    distinct ``values``: the value column typed and named as the header
+    ``field`` (nullability included), then the 0-based ``<dim>_idx``
+    (non-null long)."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    rows = [r.asDict() for r in table.collect()]
+    schema = to_arrow_schema(
+        StructType([field, StructField(f"{field.name}_idx", LongType(), False)])
+    )
+    return pa.table(
+        [
+            pa.array(values, schema.field(0).type),
+            pa.array(np.arange(len(values)), pa.int64()),
+        ],
+        schema=schema,
+    )
+
+
+def write_dim_table(table: pa.Table, out_dir: str) -> None:
+    """Write one tiny dim table (:func:`dim_table`) as
+    ``<out_dir>/part-00000.parquet`` with pyarrow, replacing ``out_dir``."""
     shutil.rmtree(out_dir, ignore_errors=True)
     os.makedirs(out_dir)
-    pq.write_table(
-        pa.Table.from_pylist(rows, schema=to_arrow_schema(table.schema)),
-        os.path.join(out_dir, "part-00000.parquet"),
-    )
+    pq.write_table(table, os.path.join(out_dir, "part-00000.parquet"))
 
 
 def write_manifest(dataset: Dataset, path: str, chunks: dict[str, int]) -> None:

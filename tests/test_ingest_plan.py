@@ -3,13 +3,17 @@
 The round-1 pipeline joined the payload to the header-pass assignment on
 ``src_trace_idx`` (an equal-cardinality sort-merge join: one full payload
 shuffle) and then shuffled again on the chunk keys. The trace pass now
-runs over header rows only: strategies replay per-row from broadcast
-literals, the ONLY hash exchange is the chunk-key repartition of header
-rows, the store writer reads the samples from the SEG-Y files itself, and
-statsV1 falls out of the same action via observe() (no extra payload job).
+runs over header rows only, the store writer reads the samples from the
+SEG-Y files itself, and statsV1 falls out of the same action via observe()
+(no extra payload job). Under the header gate the rows are sorted on the
+driver and the write plan is the writer over a local Arrow scan; above it
+strategies replay per-row from broadcast literals and the ONLY hash
+exchange is the chunk-key repartition of header rows.
 """
 
 from __future__ import annotations
+
+import os
 
 import numpy as np
 import pytest
@@ -61,18 +65,17 @@ def _node_outputs(node) -> set[str]:
     return names
 
 
-def _capture_write_plan(monkeypatch) -> dict:
-    """Spy on store.trace_writer: records the executed plan of the pass-2
-    write (header rows, chunk keys, the optional exchange and the writer)
-    and the columns its nodes output."""
-    captured = {}
+def _capture_write_plan(monkeypatch) -> list[dict]:
+    """Spy on store.trace_writer: records, per ingest in call order, the
+    executed plan of the pass-2 write (header rows, chunk keys, the
+    optional exchange and the writer) and the columns its nodes output."""
+    captured = []
     orig = store_mod.trace_writer
 
     def spy(*args, **kwargs):
         out = orig(*args, **kwargs)
         plan = out._jdf.queryExecution().executedPlan()
-        captured["plan"] = plan.toString()
-        captured["outputs"] = _node_outputs(plan)
+        captured.append({"plan": plan.toString(), "outputs": _node_outputs(plan)})
         return out
 
     monkeypatch.setattr(store_mod, "trace_writer", spy)
@@ -106,22 +109,47 @@ def _write(path, cells, seed: int = 6) -> str:
     return str(path)
 
 
+def _assert_stats(ds, samples) -> None:
+    """statsV1 folded into the write action: compare to a direct numpy
+    pass."""
+    s = samples.astype(np.float64)
+    nz = s[s != 0.0]
+    st = ds.variables[0].stats
+    assert st.count == nz.size
+    assert st.min == pytest.approx(nz.min(), abs=0)
+    assert st.max == pytest.approx(nz.max(), abs=0)
+    assert st.sum == pytest.approx(nz.sum(), abs=1e-5)
+    assert st.sum_squares == pytest.approx((nz * nz).sum(), abs=1e-5)
+
+
+def _assert_driver_write_plan(plan: str) -> None:
+    """The driver-planned pass 2: the store writer over the local Arrow
+    scan of the driver-sorted rows, with no exchange, join, sort or header
+    cache."""
+    lines = [line.lstrip(" :+-*") for line in plan.splitlines()]
+    kinds = [line.split(" ", 1)[0].split("(", 1)[0] for line in lines if line]
+    assert kinds[-2:] == ["MapInArrow", "LocalTableScan"], plan
+    for node in ("Exchange", "Join", "Sort", "InMemoryTableScan"):
+        assert node not in plan, plan
+
+
 def test_trace_pass_single_hash_exchange(tmp_path, spark, poststack_file, monkeypatch):
-    """The trace-pass plan never sort-merge-joins or windows, no node of
-    it outputs the payload, and it carries AT MOST the one chunk-key hash
-    exchange — ZERO when the header stats prove the file grid-ordered
-    (round-8 direct write: each scan task lands in O(1) chunk dirs, so
-    the consolidation shuffle is skipped; a scrambled file keeps exactly
-    one)."""
+    """Above the header gate (patched to -1), the trace-pass plan never
+    sort-merge-joins or windows, no node of it outputs the payload, and it
+    carries AT MOST the one chunk-key hash exchange — ZERO when the header
+    stats prove the file grid-ordered (round-8 direct write: each scan
+    task lands in O(1) chunk dirs, so the consolidation shuffle is
+    skipped; a scrambled file keeps exactly one)."""
     path, samples = poststack_file
     captured = _capture_write_plan(monkeypatch)
+    monkeypatch.setattr(ing, "HEADER_DRIVER_MAX_TRACES", -1)
     clock: dict = {}
     ds = ing.segy_to_store(
         spark, path, str(tmp_path / "store"), _poststack_template(),
         header_spec=SPEC, stage_clock=clock,
     )
 
-    plan = captured["plan"]
+    plan = captured[0]["plan"]
     # the factory file is inline/crossline-ordered: the measured header
     # stats must pick the direct path and the trace-pass plan must be
     # exchange-free
@@ -140,39 +168,48 @@ def test_trace_pass_single_hash_exchange(tmp_path, spark, poststack_file, monkey
     assert len(build_sides) == 2, plan  # the inline and crossline dims
     assert all(side.startswith("LocalTableScan") for side in build_sides), plan
     assert "ExistingRDD" not in plan and "LogicalRDD" not in plan, plan
-    _assert_header_rows_only(captured["outputs"])
+    _assert_header_rows_only(captured[0]["outputs"])
+    _assert_stats(ds, samples)
 
-    # statsV1 folded into the write action: compare to a direct numpy pass
-    s = samples.astype(np.float64)
-    nz = s[s != 0.0]
-    st = ds.variables[0].stats
-    assert st.count == nz.size
-    assert st.min == pytest.approx(nz.min(), abs=0)
-    assert st.max == pytest.approx(nz.max(), abs=0)
-    assert st.sum == pytest.approx(nz.sum(), abs=1e-5)
-    assert st.sum_squares == pytest.approx((nz * nz).sum(), abs=1e-5)
+
+def test_driver_trace_pass_is_a_local_scan(tmp_path, spark, poststack_file, monkeypatch):
+    """Under the header gate the trace pass is planned on the driver: the
+    write plan is the store writer (``MapInArrow``) over a
+    ``LocalTableScan`` of the sorted header rows, with no exchange, join,
+    sort or cached header scan, and no node of it outputs the payload."""
+    path, samples = poststack_file
+    captured = _capture_write_plan(monkeypatch)
+    clock: dict = {}
+    ds = ing.segy_to_store(
+        spark, path, str(tmp_path / "store"), _poststack_template(),
+        header_spec=SPEC, stage_clock=clock,
+    )
+    assert clock["write_mode"] == "driver"
+    assert "max_chunk_keys_per_block" not in clock
+    _assert_driver_write_plan(captured[0]["plan"])
+    _assert_header_rows_only(captured[0]["outputs"])
+    _assert_stats(ds, samples)
 
 
 def test_ingest_job_count(tmp_path, spark, poststack_file):
-    """The 10 x 10 ingest launches at most 3 Spark jobs: ONE header job
-    (the toArrow of the dim keys, under the trace-count gate; grid QC,
-    the dim tables and the write plan are driver numpy), one broadcast
-    job of ``defaultParallelism`` tasks for the pass-2 joins against the
-    Arrow dim-table literals, and the trace write. The broadcast is one
-    job here only because both dim tables hold the rows (1..10, 0..9)
-    and Spark reuses the exchange; grids whose dims differ (10 x 9, the
-    bench cube) run one broadcast job per dim. It launched 20 when QC,
-    duplicates and each dim table were separate jobs over parallelized
-    literals, 9 while each dim table was a Spark write, and 7 while the
-    header cache, the QC/dim aggregate and the write-plan aggregate were
-    Spark jobs."""
+    """The 10 x 10 ingest launches exactly 2 Spark jobs: ONE header job
+    (the toArrow of the stored header columns, under the trace-count gate;
+    grid QC, the dim tables and the sorted trace-pass rows are driver
+    numpy) and the trace write over the local Arrow scan of those rows.
+    There is no header cache to fill and, since pass 2 joins nothing, no
+    broadcast job. It launched 20 when QC, duplicates and each dim table
+    were separate jobs over parallelized literals, 9 while each dim table
+    was a Spark write, 7 while the header cache, the QC/dim aggregate and
+    the write-plan aggregate were Spark jobs, and 3 while pass 2
+    broadcast-joined the Arrow dim tables (one ``defaultParallelism``-task
+    job per distinct dim table)."""
     path, _ = poststack_file
     before = next_job_id(spark)
     ing.segy_to_store(
         spark, path, str(tmp_path / "store"), _poststack_template(),
         header_spec=SPEC,
     )
-    assert next_job_id(spark) - before <= 3
+    assert next_job_id(spark) - before == 2
 
 
 def test_strategy_literals_are_local_relations(spark):
@@ -292,9 +329,11 @@ def test_shot_dense_paths_identical(spark, monkeypatch):
 
 def test_scrambled_file_keeps_consolidation_shuffle(tmp_path, spark, monkeypatch):
     """A file whose trace order scatters across the chunk grid must keep
-    the chunk-key exchange (direct write would explode file counts) in
-    both header modes, which write the same store with the same
-    keys-per-block statistic. The exchange moves header rows only."""
+    the chunk-key exchange in distributed mode (direct write would explode
+    file counts); the exchange moves header rows only. In driver mode the
+    rows are sorted on the driver instead: no exchange, and each chunk
+    directory holds at most one file per writer task (1 + the task
+    boundaries inside the chunk). Both modes write the same store."""
     # the grid must span > DIRECT_WRITE_MAX_KEYS_PER_BLOCK chunk keys
     # (inline chunk = 128) or even a scrambled file fits one chunk and
     # direct is correctly chosen: 640 inlines = 5 inline chunks
@@ -302,26 +341,40 @@ def test_scrambled_file_keeps_consolidation_shuffle(tmp_path, spark, monkeypatch
     path = _write(tmp_path / "scrambled.sgy", cells)
 
     captured = _capture_write_plan(monkeypatch)
-    driver, _ = ingest_both_header_modes(
+    driver, distributed = ingest_both_header_modes(
         spark, path, str(tmp_path / "store"), _poststack_template(),
         header_spec=SPEC, block_size=10,
     )
-    assert captured["plan"].count("Exchange hashpartitioning") == 1
-    _assert_header_rows_only(captured["outputs"])
-    assert driver["plan"][0] == "shuffle"
-    assert driver["plan"][1] > ing.DIRECT_WRITE_MAX_KEYS_PER_BLOCK
+    shuffled, local = captured  # distributed mode runs first
+    assert shuffled["plan"].count("Exchange hashpartitioning") == 1
+    _assert_header_rows_only(shuffled["outputs"])
+    assert distributed["plan"][0] == "shuffle"
+    assert distributed["plan"][1] > ing.DIRECT_WRITE_MAX_KEYS_PER_BLOCK
     assert len(driver["rows"]) == len(cells)
+
+    _assert_driver_write_plan(local["plan"])
+    _assert_header_rows_only(local["outputs"])
+    writer_tasks = spark.sparkContext.defaultParallelism
+    files = [
+        len(names)
+        for _, dirs, names in os.walk(tmp_path / "store" / "traces")
+        if not dirs
+    ]
+    assert len(files) == 5 * 1  # 5 inline chunks x 1 crossline chunk
+    assert max(files) <= writer_tasks, files
 
 
 def test_header_modes_agree_on_ordered_file(tmp_path, spark, poststack_file):
     """The driver header pass and the Spark aggregates write the same
     store from the 10 x 10 grid-ordered file: manifest (dims, chunks,
-    statsV1), dim tables, write plan and every stored row."""
+    statsV1), dim tables, chunk-file schemas and every stored row; the
+    distributed write plan is the direct one with one chunk key per scan
+    block."""
     path, _ = poststack_file
-    driver, _ = ingest_both_header_modes(
+    driver, distributed = ingest_both_header_modes(
         spark, path, str(tmp_path / "store"), _poststack_template(), header_spec=SPEC
     )
-    assert driver["plan"] == ("direct", 1)
+    assert distributed["plan"] == ("direct", 1)
     assert len(driver["rows"]) == 100
     assert driver["dims"]["inline"] == [(v, v - 1) for v in range(1, 11)]
 
@@ -340,7 +393,7 @@ def test_header_modes_agree_on_two_files(tmp_path, spark):
         _write(tmp_path / "a.sgy", first, seed=7),
         _write(tmp_path / "b.sgy", second, seed=8),
     ]
-    driver, _ = ingest_both_header_modes(
+    driver, distributed = ingest_both_header_modes(
         spark, paths, str(tmp_path / "store"), _poststack_template(),
         header_spec=SPEC, block_size=7,
     )
@@ -356,7 +409,7 @@ def test_header_modes_agree_on_two_files(tmp_path, spark):
         for cells in (first, second)
         for lo in range(0, len(cells), 7)
     )
-    assert driver["plan"][1] == expect
+    assert distributed["plan"][1] == expect
     for i, (src, cells) in enumerate(zip(paths, (first, second))):
         out = str(tmp_path / f"out{i}.sgy")
         assert store_to_segy(spark, str(tmp_path / "store"), out, source_file=i) == len(cells)

@@ -95,9 +95,9 @@ def test_pivot_workers_import_no_pandas_or_pydantic(tmp_path):
         timeout=600,
     )
     assert run.returncode == 0, run.stderr[-4000:]
-    # the run went through the scan, the direct-mode writer and the
-    # chunk-aligned export
-    assert "modes direct chunk_aligned" in run.stdout, run.stdout
+    # the run went through the scan, the writer over the driver-sorted
+    # rows and the chunk-aligned export
+    assert "modes driver chunk_aligned" in run.stdout, run.stdout
     lines = log.read_text().splitlines() if log.exists() else []
     top = sorted({line.split()[1] for line in lines if "." not in line.split()[1]})
     assert not lines, f"Python workers imported {top}"

@@ -132,9 +132,11 @@ def _disk_baseline(work: Path, n_bytes: int = 2 << 30) -> dict:
     only meaningful against a measured device baseline — a concat stage
     running at ~device write speed is DEVICE-BOUND (scales horizontally
     on an object store), while one running well under it is a plan
-    regression. Incompressible data (urandom) + fsync on the write;
-    the read drops the page cache first when the process can (root),
-    and records whether it could — a warm-cache read baseline would
+    regression. Incompressible data (urandom) + fsync on the write; the
+    read is cold because the baseline file's own pages are dropped from
+    the page cache after the fsync (``posix_fadvise(POSIX_FADV_DONTNEED)``,
+    which touches no other file on the host). ``read_cold_cache`` records
+    whether the platform has that call — a warm-cache read baseline would
     overstate the device and make honest stages look slow."""
     import os
 
@@ -148,13 +150,10 @@ def _disk_baseline(work: Path, n_bytes: int = 2 << 30) -> dict:
             written += len(buf)
         f.flush()
         os.fsync(f.fileno())
-    w_s = time.perf_counter() - t0
-    try:
-        with open("/proc/sys/vm/drop_caches", "w") as dc:
-            dc.write("3")
-        cold = True
-    except OSError:
-        cold = False
+        w_s = time.perf_counter() - t0
+        cold = hasattr(os, "posix_fadvise")
+        if cold:
+            os.posix_fadvise(f.fileno(), 0, 0, os.POSIX_FADV_DONTNEED)
     t0 = time.perf_counter()
     with open(p, "rb") as f:
         while f.read(32 << 20):
